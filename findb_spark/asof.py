@@ -15,6 +15,19 @@ Spark-first design notes (100 TB posture):
   produced by :mod:`findb_spark.layout` the scan prunes to the handful of
   files/row-groups covering that asset's date range — the moral equivalent of
   the reference's B+tree descent (file.rs:425-452) at cluster scale.
+- A point read is small, so its cost is per-query driver work, not executor
+  work: each Exchange is a scheduled stage and a global ``orderBy`` adds a
+  range-sampling job. When the planner's size estimate of the filtered scan
+  (the partition-pruned files; without CBO a Filter does not shrink it) is
+  at most ``ONE_TASK_MAX_BYTES``, the filter is ``coalesce(1)``-ed.
+  ``SinglePartition`` satisfies both the aggregate's and the sort's required
+  distribution, so the plan has no Exchange and runs as one job of one task
+  (the reference's short leaf walk, file.rs:508-570). The bound is measured,
+  not borrowed: it is the largest scan one task reads no slower than the
+  distributed plan even when row-group pruning does not help (see the
+  constant). Larger or unknown-size inputs (RDD-backed relations report
+  ``spark.sql.defaultSizeInBytes``) keep the distributed plan below. Both
+  are the same lazy builder; only the input partitioning differs.
 - ``max_by(struct(ts, value), ts)`` gives a *partial-aggregatable* plan: the
   per-(asset,date) "latest revision" combines map-side, so the shuffle moves
   at most one row per (asset, date) per map partition, not every revision.
@@ -42,6 +55,26 @@ def _latest_revision(grouped_keys: list[str], df: DataFrame) -> DataFrame:
     return df.groupBy(*grouped_keys).agg(
         F.max_by(F.struct(F.col("ts"), F.col("value")), F.struct(F.col("ts"), F.col("value"))).alias("_r")
     ).select(*grouped_keys, F.col("_r.ts").alias("ts"), F.col("_r.value").alias("value"))
+
+
+#: Largest planner size estimate (bytes) of a filtered scan that
+#: `asof_range` reads on one task. Measured with
+#: ``scripts/asof_one_task_probe.py`` on a 4-vCPU host (``local[4]``, 16-file
+#: tables with rows in random order, so row-group pruning skips nothing: the
+#: worst case for one task), p50 of one task vs the distributed plan: 23.4 MB
+#: 277 vs 295 ms and 238 vs 249 ms (two runs), 27.2 MB 241 vs 251 ms, 31.1 MB
+#: 290 vs 268 ms and 250 vs 232 ms, 46.5 MB 327 vs 261 ms, 62.0 MB 456 vs
+#: 347 ms. Clustered tables (`findb_spark.layout.write_prices`) prune row
+#: groups and stay faster on one task at 54.5 MB (189 vs 304 ms).
+ONE_TASK_MAX_BYTES = 24 * 1024 * 1024
+
+
+def _fits_one_task(df: DataFrame) -> bool:
+    """True when the planner's size estimate of ``df`` is at most
+    ``ONE_TASK_MAX_BYTES``. Estimating runs the optimizer only: no Spark
+    job."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return size <= ONE_TASK_MAX_BYTES
 
 
 def asof_filter(
@@ -78,9 +111,12 @@ def asof_range(
     """The flagship operator: bitemporal as-of range query (file.rs:425-570).
 
     Returns columns (asset_id, date, ts, value), descending date order,
-    at most one row per date.
+    at most one row per date. A filtered scan small enough for one task is
+    planned on a single partition: one Spark job, no Exchange (module notes).
     """
     filtered = asof_filter(prices, asset_id, start_date, end_date, asof_ts)
+    if _fits_one_task(filtered):
+        filtered = filtered.coalesce(1)
     return (
         _latest_revision(["asset_id", "date"], filtered)
         .orderBy(F.desc("date"))

@@ -308,16 +308,14 @@ def local_relation_df(spark: SparkSession, rows, schema):
     ``schema``: StructType or DDL string.  Oversized payloads degrade to
     an Arrow-batch-backed JVM RDD (still no Python at evaluation).
 
-    BIT-EQUALITY CAVEATS (round-14 advisor): the pandas/Arrow channel is
-    bit-identical to ``createDataFrame(list)`` only for FINITE numerics
-    and None-free numeric columns.  A float ``NaN`` becomes SQL NULL
-    (pyarrow ``from_pandas`` treats NaN as missing), and ``None`` in an
-    int column coerces the pandas column to float64 before conversion —
-    both silently change values vs the py4j path.  No current call site
-    passes NaN or a None-holding numeric column (codebooks, LUTs,
-    centroids, paths, prices are all constructed finite and non-null);
-    a NEW call site that might must pre-clean or keep
-    ``createDataFrame(list)``."""
+    Raises ``ValueError`` where the pandas/Arrow channel would silently
+    change values vs the py4j path: NaN in a floating-point column or
+    inside a floating-point array (pyarrow ``from_pandas`` treats NaN as
+    missing, so it becomes SQL NULL), and None in an integral column
+    (pandas coerces the column to float64, which rounds integers above
+    2**53).  None in a floating-point or decimal column is not lossy: it
+    becomes SQL NULL on both paths.  Callers with such data must pre-clean
+    it or keep ``createDataFrame(list)``."""
     import pandas as pd
 
     from pyspark.sql import types as T
@@ -331,6 +329,22 @@ def local_relation_df(spark: SparkSession, rows, schema):
         n: [r[n] if isinstance(r, dict) else r[i] for r in rows]
         for i, n in enumerate(names)
     }
+    for f in schema.fields:
+        t, col = f.dataType, data[f.name]
+        if isinstance(t, T.IntegralType):
+            lossy = any(v is None for v in col)
+        elif isinstance(t, T.FractionalType):
+            lossy = any(v != v for v in col)
+        elif isinstance(t, T.ArrayType) and isinstance(t.elementType, T.FractionalType):
+            lossy = any(v is not None and any(x != x for x in v) for v in col)
+        else:
+            continue
+        if lossy:
+            raise ValueError(
+                f"local_relation_df: column {f.name!r} holds None (integral) "
+                "or NaN (floating), which the Arrow channel turns into "
+                "float64 or NULL"
+            )
     return spark.createDataFrame(pd.DataFrame(data, columns=names), schema=schema)
 
 

@@ -10,6 +10,15 @@ is REWRITTEN ATOMICALLY (tmp file + os.replace) only after the parquet
 commit (`_SUCCESS`) exists, the same commit-gating discipline as
 streaming/events_stream.py's snapshot reads.
 
+Manifest format: ``{"versions": {"N": data_dir}, "schemas": {"N": schema}}``
+where ``schema`` is the committed DataFrame's ``StructType`` as JSON.
+`read_version` hands it to ``spark.read.schema`` so resolving a version
+runs no parquet footer-inference job.  A version directory is immutable,
+so its recorded schema cannot go stale; it is not a cache.  Manifests
+written before the field existed (or versions without an entry) still
+read, through inference.  Every manifest write goes through
+`_write_manifest`, which keeps exactly the schemas of the listed versions.
+
 Scale: the manifest holds one entry per version (tiny JSON); data files are
 plain parquet, so all layout machinery (partitioning, Z-order, manifests,
 pruning — layout.py) composes with versioned tables unchanged.  Vacuuming
@@ -22,6 +31,7 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _MANIFEST = "_versions.json"
 
@@ -30,45 +40,71 @@ def _manifest_path(table_dir: str) -> str:
     return os.path.join(table_dir, _MANIFEST)
 
 
-def list_versions(table_dir: str) -> dict[int, str]:
-    """Committed versions as {version: data_dir}, empty if none."""
+def _read_manifest(table_dir: str) -> tuple[dict[int, str], dict[int, dict]]:
+    """({version: data_dir}, {version: schema JSON}); both empty if none."""
     path = _manifest_path(table_dir)
     if not os.path.exists(path):
-        return {}
+        return {}, {}
     with open(path) as f:
         raw = json.load(f)
-    return {int(k): v for k, v in raw["versions"].items()}
+    return (
+        {int(k): v for k, v in raw["versions"].items()},
+        {int(k): v for k, v in raw.get("schemas", {}).items()},
+    )
+
+
+def _write_manifest(
+    table_dir: str, versions: dict[int, str], schemas: dict[int, dict]
+) -> None:
+    """Atomically replace the manifest (tmp file + os.replace). Only the
+    schemas of listed versions are written."""
+    tmp = _manifest_path(table_dir) + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(
+            {
+                "versions": {str(k): p for k, p in versions.items()},
+                "schemas": {str(k): schemas[k] for k in versions if k in schemas},
+            },
+            f,
+        )
+    os.replace(tmp, _manifest_path(table_dir))
+
+
+def list_versions(table_dir: str) -> dict[int, str]:
+    """Committed versions as {version: data_dir}, empty if none."""
+    return _read_manifest(table_dir)[0]
 
 
 def write_version(df: DataFrame, table_dir: str) -> int:
     """Commit ``df`` as the next version of the table; returns the version
     number.  The data directory is immutable once committed."""
     os.makedirs(table_dir, exist_ok=True)
-    versions = list_versions(table_dir)
+    versions, schemas = _read_manifest(table_dir)
     v = max(versions) + 1 if versions else 1
     data_dir = os.path.join(table_dir, f"v{v}")
     df.write.mode("overwrite").parquet(data_dir)
     if not os.path.exists(os.path.join(data_dir, "_SUCCESS")):
         raise RuntimeError(f"parquet commit missing _SUCCESS: {data_dir}")
-    versions[v] = data_dir
-    tmp = _manifest_path(table_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"versions": {str(k): p for k, p in versions.items()}}, f)
-    os.replace(tmp, _manifest_path(table_dir))
+    versions[v], schemas[v] = data_dir, df.schema.jsonValue()
+    _write_manifest(table_dir, versions, schemas)
     return v
 
 
 def read_version(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> DataFrame:
-    """Read the table as of ``version`` (default: latest committed)."""
-    versions = list_versions(table_dir)
+    """Read the table as of ``version`` (default: latest committed).  With
+    the version's schema in the manifest this runs no Spark job."""
+    versions, schemas = _read_manifest(table_dir)
     if not versions:
         raise FileNotFoundError(f"no committed versions under {table_dir}")
     v = max(versions) if version is None else version
     if v not in versions:
         raise KeyError(f"version {v} not in {sorted(versions)}")
-    return spark.read.parquet(versions[v])
+    reader = spark.read
+    if v in schemas:
+        reader = reader.schema(StructType.fromJson(schemas[v]))
+    return reader.parquet(versions[v])
 
 
 def vacuum(table_dir: str, keep_last: int = 2) -> list[int]:
@@ -86,18 +122,14 @@ def vacuum(table_dir: str, keep_last: int = 2) -> list[int]:
     versions stay readable, expired versions raise KeyError."""
     import shutil
 
-    versions = list_versions(table_dir)
+    versions, schemas = _read_manifest(table_dir)
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     keep = sorted(versions)[-keep_last:]
     expired = [v for v in sorted(versions) if v not in keep]
     if not expired:
         return []
-    kept = {v: versions[v] for v in keep}
-    tmp = _manifest_path(table_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"versions": {str(k): p for k, p in kept.items()}}, f)
-    os.replace(tmp, _manifest_path(table_dir))
+    _write_manifest(table_dir, {v: versions[v] for v in keep}, schemas)
     for v in expired:
         shutil.rmtree(versions[v], ignore_errors=True)
     return expired
@@ -125,7 +157,7 @@ def commit_version(df: DataFrame, table_dir: str, expected_base: int) -> int:
     import shutil
 
     os.makedirs(table_dir, exist_ok=True)
-    versions = list_versions(table_dir)
+    versions, schemas = _read_manifest(table_dir)
     head = max(versions) if versions else 0
     if head != expected_base:
         raise VersionConflict(
@@ -149,11 +181,8 @@ def commit_version(df: DataFrame, table_dir: str, expected_base: int) -> int:
         shutil.rmtree(data_dir, ignore_errors=True)
         os.unlink(marker)
         raise
-    versions[v] = data_dir
-    tmp = _manifest_path(table_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"versions": {str(k): p for k, p in versions.items()}}, f)
-    os.replace(tmp, _manifest_path(table_dir))
+    versions[v], schemas[v] = data_dir, df.schema.jsonValue()
+    _write_manifest(table_dir, versions, schemas)
     return v
 
 
@@ -170,19 +199,15 @@ def clone_table(src_table: str, dst_table: str) -> int:
     either track cross-table references or deep-copy on vacuum. At library
     scope the contract is documented and tests pin the visible semantics.
     """
-    versions = list_versions(src_table)
+    versions, schemas = _read_manifest(src_table)
     if not versions:
         raise FileNotFoundError(f"no committed versions under {src_table}")
     if list_versions(dst_table):
         raise FileExistsError(f"clone target {dst_table} already has versions")
     os.makedirs(dst_table, exist_ok=True)
-    tmp = _manifest_path(dst_table) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(
-            {"versions": {str(k): os.path.abspath(p) for k, p in versions.items()}},
-            f,
-        )
-    os.replace(tmp, _manifest_path(dst_table))
+    _write_manifest(
+        dst_table, {k: os.path.abspath(p) for k, p in versions.items()}, schemas
+    )
     return max(versions)
 
 

@@ -1,9 +1,9 @@
 #!/usr/bin/env python
 """Capture .explain("formatted") for every bench-flagged query into
-plans/$PLANS_ROUND/<query>_<tag>.txt (per-round optimization evidence;
-PLANS_ROUND defaults to r14).
+plans/$PLANS_ROUND/<query>_<tag>.txt (per-round optimization evidence).
+PLANS_ROUND is required, so a capture never overwrites another round's plans.
 
-Usage: [PLANS_ROUND=rNN] python scripts/capture_plans.py <tag> [sf_dir] [query ...]
+Usage: PLANS_ROUND=rNN python scripts/capture_plans.py <tag> [sf_dir] [query ...]
 """
 
 from __future__ import annotations
@@ -13,10 +13,14 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> int:
+    plans_round = os.environ.get("PLANS_ROUND")
+    if not plans_round:
+        raise SystemExit("set PLANS_ROUND (e.g. PLANS_ROUND=r15)")
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     only = set(sys.argv[3:])
@@ -27,9 +31,7 @@ def main() -> int:
     spark = get_spark(app_name="capture_plans")
     spark.sparkContext.setLogLevel("ERROR")
 
-    out_dir = os.path.join(
-        "/root/repo/plans", os.environ.get("PLANS_ROUND", "r14")
-    )
+    out_dir = os.path.join(REPO, "plans", plans_round)
     os.makedirs(out_dir, exist_ok=True)
 
     specs = [s for s in registration_order_specs().values() if s.bench]

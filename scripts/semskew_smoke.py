@@ -83,6 +83,8 @@ def stage_quantiles(spark, exclude: set) -> dict:
 def main() -> int:
     factor = int(sys.argv[1]) if len(sys.argv) > 1 else 32
     hot_n = int(sys.argv[2]) if len(sys.argv) > 2 else 4096
+    if hot_n < 1:
+        raise SystemExit("hot_n must be >= 1")
 
     from scale_smoke import WORK, replicate_embeddings  # noqa: E402
 
@@ -99,6 +101,8 @@ def main() -> int:
     replicate_embeddings(spark, factor)
     balanced = spark.read.parquet(f"{WORK}/embeddings.parquet")
     n = balanced.count()
+    # a hot set larger than the corpus is the whole corpus (n // hot_n >= 1)
+    hot_n = min(hot_n, n)
     n_cent = max(64, n // TARGET_CLUSTER)
 
     # hot corpus: first hot_n vec_ids become one tight semantic cluster

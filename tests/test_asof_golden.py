@@ -7,6 +7,9 @@ order.
 
 from __future__ import annotations
 
+import contextlib
+import io
+
 import pytest
 
 from findb_spark.asof import asof_batch, asof_point, asof_range, add_revisions
@@ -104,3 +107,85 @@ def test_entry_flagship_bytes_pinned(spark):
         digest
         == "bdc9b22f956e7d09b1c5b142c851edc769094fd2705a3d7b376ba0b38764addb"
     )
+
+
+# ---- plan shape: one single-partition job for small scans ---------------
+
+
+def _explain(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+@contextlib.contextmanager
+def _broadcast_threshold(spark, value: str):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.fixture(scope="module")
+def tables(spark, tmp_path_factory):
+    """The golden fixture, and a revised copy committed as a table version
+    (read back through the manifest, so it is a parquet scan)."""
+    from findb_spark.session import local_relation_df
+    from findb_spark.versioning import commit_version, read_version
+
+    golden = golden_prices(spark)
+    rev = local_relation_df(
+        spark,
+        [(0, 20200131, 30, 99.0), (0, 20200331, 25, 121.0), (1, 20200401, 22, 7.5)],
+        "asset_id BIGINT, date INT, ts BIGINT, value DOUBLE",
+    )
+    t = str(tmp_path_factory.mktemp("revised"))
+    commit_version(add_revisions(golden, rev), t, expected_base=0)
+    return {"golden": golden, "revised": read_version(spark, t)}
+
+
+REVISED_QUERIES = [q[:4] for q in GOLDEN_QUERIES] + [
+    (0, 20200101, 20200430, 30),
+    (0, 20200331, 20200331, 24),
+    (1, 20200101, 20201231, 100),
+]
+
+
+def test_small_asof_range_is_one_job_without_exchange(tables, count_jobs):
+    q = asof_range(tables["revised"], 0, 20200115, 20200405, 20)
+    rows, jobs = count_jobs(q.collect)
+    assert [r.value for r in rows] == [120.0, 12.0, 3.0]
+    assert jobs == 1
+    plan = _explain(q)
+    assert "Exchange" not in plan
+    assert "PushedFilters: [IsNotNull(asset_id)" in plan and "EqualTo(asset_id,0)" in plan
+
+
+@pytest.mark.parametrize("name", ["golden", "revised"])
+def test_unbounded_asof_range_keeps_shuffle_plan_and_rows(spark, tables, name, monkeypatch):
+    """With the one-task bound below every size estimate the distributed
+    plan (map-side ``max_by`` + Exchange) runs, and it answers exactly as
+    the single-partition plan does."""
+    from findb_spark import asof
+
+    prices = tables[name]
+    small = [asof_range(prices, *q) for q in REVISED_QUERIES]
+    assert all("Exchange" not in _explain(df) for df in small)
+    want = [df.collect() for df in small]
+    monkeypatch.setattr(asof, "ONE_TASK_MAX_BYTES", -1)
+    big = [asof_range(prices, *q) for q in REVISED_QUERIES]
+    plan = _explain(big[0])
+    assert "partial_max_by" in plan and "Exchange" in plan
+    assert [df.collect() for df in big] == want
+    assert any(want)
+
+
+def test_one_task_plan_ignores_broadcast_threshold(spark, tables):
+    """Turning broadcast joins off does not turn the one-job path off."""
+    with _broadcast_threshold(spark, "-1"):
+        plan = _explain(asof_range(tables["revised"], 0, 20200115, 20200405, 20))
+    assert "Exchange" not in plan

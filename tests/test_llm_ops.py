@@ -891,3 +891,35 @@ def test_jpeg_spark_features_match_codec(spark, sf_dir):
         assert (r.width, r.height) == (src.shape[1], src.shape[0])
         assert r.sum_decoded == int(dec.sum())
         assert r.sum_abs_err == int(np.abs(dec - src).sum())
+
+
+@pytest.mark.parametrize(
+    "rows,schema",
+    [
+        ([(1, float("nan"))], "id bigint, x double"),
+        ([(1, 2.0), (None, 3.0)], "id bigint, x double"),
+        ([(1, [0.5, float("nan")])], "id bigint, v array<float>"),
+    ],
+)
+def test_local_relation_df_rejects_lossy_numerics(spark, rows, schema):
+    """NaN in a floating column (or inside a float array) would silently
+    become NULL, and None in an integral column float64, through the
+    Arrow channel."""
+    from findb_spark.session import local_relation_df
+
+    with pytest.raises(ValueError, match="None \\(integral\\) or NaN"):
+        local_relation_df(spark, rows, schema)
+
+
+def test_local_relation_df_keeps_null_floats_and_big_ints(spark):
+    """None in floating and decimal columns is not lossy: SQL NULL on both
+    paths. Integers above 2**53 in a None-free column stay exact."""
+    from decimal import Decimal
+
+    from findb_spark.session import local_relation_df
+
+    rows = [(2**60 + 1, None, None), (2, 2.5, Decimal("1.25"))]
+    schema = "id bigint, x double, d decimal(10,2)"
+    got = local_relation_df(spark, rows, schema).collect()
+    assert got == spark.createDataFrame(rows, schema).collect()
+    assert got[0].id == 2**60 + 1 and got[0].x is None and got[0].d is None

@@ -232,3 +232,60 @@ def test_shallow_clone_zero_copy_and_divergence(spark, tmp_path):
     # cloning onto an existing table refuses
     with _pt.raises(FileExistsError):
         clone_table(src, dst)
+
+
+# ---- the committed schema in the manifest --------------------------------
+
+
+def _manifest(table):
+    import json
+    import os
+
+    with open(os.path.join(table, "_versions.json")) as f:
+        return json.load(f)
+
+
+def test_read_version_runs_no_job(spark, tmp_path, count_jobs):
+    from findb_spark.versioning import commit_version
+
+    t = str(tmp_path / "t")
+    write_version(_df(spark, [(1, "a")]), t)
+    commit_version(_df(spark, [(1, "a"), (2, "b")]), t, expected_base=1)
+    for v in (1, 2, None):
+        df, jobs = count_jobs(lambda: read_version(spark, t, v))
+        assert jobs == 0, v
+        # the recorded schema is the one inference would find
+        assert df.schema == spark.read.parquet(list_versions(t)[v or 2]).schema
+    assert sorted(r.k for r in read_version(spark, t).collect()) == [1, 2]
+
+
+def test_old_format_manifest_still_reads(spark, tmp_path):
+    """A manifest without the schemas field reads through inference, and
+    the next commit records a schema for its own version only."""
+    import json
+
+    t = tmp_path / "t"
+    data = str(t / "v1")
+    _df(spark, [(1, "a"), (2, "b")]).write.parquet(data)
+    (t / "_versions.json").write_text(json.dumps({"versions": {"1": data}}))
+    assert sorted(r.v for r in read_version(spark, str(t)).collect()) == ["a", "b"]
+    assert write_version(_df(spark, [(3, "c")]), str(t)) == 2
+    assert sorted(_manifest(str(t))["schemas"]) == ["2"]
+    assert sorted(r.v for r in read_version(spark, str(t), 1).collect()) == ["a", "b"]
+    assert [r.k for r in read_version(spark, str(t)).collect()] == [3]
+
+
+def test_vacuum_and_clone_keep_retained_schemas(spark, tmp_path, count_jobs):
+    from findb_spark.versioning import clone_table, vacuum
+
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    for i in range(1, 5):
+        write_version(_df(spark, [(i, f"v{i}")]), src)
+    before = _manifest(src)["schemas"]
+    assert sorted(before) == ["1", "2", "3", "4"]
+    assert vacuum(src, keep_last=2) == [1, 2]
+    assert _manifest(src)["schemas"] == {k: before[k] for k in ("3", "4")}
+    clone_table(src, dst)
+    assert _manifest(dst)["schemas"] == _manifest(src)["schemas"]
+    df, jobs = count_jobs(lambda: read_version(spark, dst, 3))
+    assert jobs == 0 and [r.v for r in df.collect()] == ["v3"]
