@@ -1,8 +1,8 @@
 """Executor-side stage metrics via Spark's REST API (v1).
 
-Shared by ``bench.py`` (per-query executor CPU seconds — the
-load-immune cross-round comparison basis, round-10 verdict item 2) and
-``scripts/scale_smoke.py`` (spill/GC/peak-memory saturation evidence).
+The caller is the benchmark's tracer (``perfbench/spans.py``): one settled
+snapshot after a run gives the CPU, GC, shuffle and spill figures of every
+stage, which it attributes to spans through their job groups.
 
 Why REST and not the StatusTracker: the public PySpark StatusTracker
 exposes job/stage/task COUNTS but not task metrics (spill bytes, GC time,
@@ -105,81 +105,3 @@ def settled_stages_snapshot(
         prev, prev_miss = cur, cur_miss
     return prev, prev_miss
 
-
-class FieldDriftLatch:
-    """Aggregates per-snapshot field-drift verdicts across a whole run into
-    ONE auditable list (round-11 advisor: bench discarded the s1/s2 misses,
-    so a mid-query fetch failure left metric_fields_missing empty —
-    contradicting the documented 'non-empty = unmeasured' contract).
-
-    Rules: the first REAL verdict (missing fields / fetch failure / UI off)
-    wins and sticks; the empty-store marker only stands if NO snapshot in
-    the run ever validated a non-empty store."""
-
-    def __init__(self) -> None:
-        self._real: list[str] = []
-        self._validated = False
-        self._saw_empty_store = False
-
-    def observe(self, missing: list[str]) -> None:
-        if not missing:
-            self._validated = True
-        elif missing == [NO_STAGES_MARKER]:
-            self._saw_empty_store = True
-        elif not self._real:
-            self._real = list(missing)
-
-    def result(self) -> list[str]:
-        if self._real:
-            return self._real
-        if not self._validated and self._saw_empty_store:
-            return [NO_STAGES_MARKER]
-        return []
-
-
-def metrics_delta(before: dict | None, after: dict | None) -> dict | None:
-    """Executor-side evidence for the stages that completed between two
-    snapshots: summed spill/GC/runtime/IO plus the max single-stage peak
-    execution memory."""
-    if before is None or after is None:
-        return None
-    new = [v for k, v in after.items() if k not in before]
-    mb = 1024 * 1024
-    return {
-        "stages": len(new),
-        "spill_mem_mb": round(sum(v["memoryBytesSpilled"] for v in new) / mb, 1),
-        "spill_disk_mb": round(sum(v["diskBytesSpilled"] for v in new) / mb, 1),
-        "gc_s": round(sum(v["jvmGcTime"] for v in new) / 1000.0, 2),
-        "exec_run_s": round(sum(v["executorRunTime"] for v in new) / 1000.0, 2),
-        "exec_cpu_s": round(sum(v["executorCpuTime"] for v in new) / 1e9, 2),
-        "shuffle_write_mb": round(
-            sum(v["shuffleWriteBytes"] for v in new) / mb, 1
-        ),
-        "input_mb": round(sum(v["inputBytes"] for v in new) / mb, 1),
-        "peak_exec_mem_mb": round(
-            max((v[PEAK_FIELD] for v in new), default=0) / mb, 1
-        ),
-    }
-
-
-def exec_cpu_delta_s(before: dict | None, after: dict | None) -> dict | None:
-    """Executor cost for the stages that completed between two snapshots:
-    ``cpu_s`` (summed executorCpuTime — the load-immune basis: box load
-    inflates wall and even per-task elapsed time, not the OS CPU counter),
-    ``run_s`` (summed per-task elapsed executorRunTime, comparable to the
-    scale-smoke campaigns' exec_run_s), ``gc_s`` (summed jvmGcTime) and
-    ``retried_stages`` (stage attempts > 0).  GC and retries make a CPU
-    delta ATTRIBUTABLE (round-11 verdict item 4): executorCpuTime is
-    load-immune but not session-immune — JIT state and GC pressure swing
-    it ~20% across sessions on identical plans, so a cross-round CPU move
-    with flat gc_s and zero retries reads as JIT/page-cache state, while
-    a move that tracks gc_s is memory-pressure."""
-    if before is None or after is None:
-        return None
-    new = [(k, v) for k, v in after.items() if k not in before]
-    return {
-        "cpu_s": round(sum(v["executorCpuTime"] for _, v in new) / 1e9, 3),
-        "run_s": round(sum(v["executorRunTime"] for _, v in new) / 1000.0, 3),
-        "gc_s": round(sum(v["jvmGcTime"] for _, v in new) / 1000.0, 3),
-        "retried_stages": sum(1 for (_, att), _v in new if att),
-    }

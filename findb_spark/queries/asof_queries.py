@@ -35,7 +35,6 @@ SELECT asset_id, date, ts, value FROM f WHERE rn = 1
     _ASOF_RANGE_SQL.format(asset=1, start=19950101, end=20001231, asof=ASOF_2000),
     category="asof",
     description="Flagship bitemporal as-of range query (reference file.rs:425-570)",
-    bench=True,
 )
 def q_asof_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     # date bounds pushed to the l_shipdate parquet scan (see prices_from_lineitem)
@@ -77,7 +76,6 @@ SELECT query_id, asset_id, date, ts, value FROM j WHERE rn = 1
 """,
     category="asof",
     description="Batched as-of evaluation — reference's stubbed bulk_query (file.rs:466-468)",
-    bench=True,
 )
 def q_asof_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch bounds are known literals here: push them to the l_shipdate scan
@@ -124,7 +122,6 @@ SELECT asset_id, date, ts, value FROM f WHERE rn = 1
 """,
     category="asof",
     description="Cross-sectional as-of snapshot: latest revision per (asset, date) for all assets in a window",
-    bench=True,
 )
 def q_asof_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     from findb_spark.asof import _latest_revision
@@ -177,7 +174,6 @@ SELECT asset_id, probe_ts, qts, matched_ts, matched_value FROM j
         "Generic as-of (trades-to-quotes) join via the union+last_value trick "
         "— one shuffle, no range-join explosion (findb_spark.asof.asof_join)"
     ),
-    bench=True,
 )
 def q_asof_join_shifted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-13 rewrite (guide §2.4 — remove shuffles outright): the probe
@@ -185,9 +181,9 @@ def q_asof_join_shifted(spark: SparkSession, sf_dir: str) -> DataFrame:
     +3600 s), so the generic union+last_value :func:`findb_spark.asof.
     asof_join` evaluated the whole ``rdedup`` subtree TWICE (two lineitem
     scans + two (asset_id, ts) aggregates) and paid a union exchange +
-    window sort on 2x the rows — 6 Exchanges, 2 scans (plans/r13/
-    asof_join_shifted_before.txt).  A range-frame window over the single
-    deduped relation computes the identical ASOF-backward match: with
+    window sort on 2x the rows — 6 Exchanges and 2 scans in its physical
+    plan.  A range-frame window over the single deduped relation
+    computes the identical ASOF-backward match: with
     unique ts per (asset_id, ts) group, the last row of the frame
     ``[unbounded preceding, ts + 3600 following]`` ordered by ts is
     exactly the row with the largest ts' <= ts + 3600 — DuckDB's

@@ -72,7 +72,6 @@ WHERE inter / (sa.sz + sb.sz - inter) >= 0.4
 """,
     category="dedup",
     description="Near-dup pairs by exact 3-gram Jaccard, candidates via inverted-index shingle join",
-    bench=True,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_pairs(load_table(spark, sf_dir, "documents"), threshold=0.4)
@@ -95,7 +94,6 @@ WHERE inter / (sa.sz + sb.sz - inter) >= 0.4
 """,
     category="dedup",
     description="Prefix-filtered (SSJoin) exact-Jaccard scale path — lossless candidate pruning, identical results to the inverted-index form (same oracle)",
-    bench=True,
 )
 def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_pairs_prefix(load_table(spark, sf_dir, "documents"), threshold=0.4)
@@ -190,7 +188,6 @@ WHERE inter / (sa.sz + sb.sz - inter) >= 0.4
 """,
     category="dedup",
     description=f"MinHash-LSH near-dup detection: {N_BANDS} bands x {ROWS_PER_BAND} rows candidate generation + exact-Jaccard verification",
-    bench=True,
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_pairs(load_table(spark, sf_dir, "documents"), threshold=0.4)
@@ -246,7 +243,6 @@ WHERE bit_count(xor(x.simhash, y.simhash)) <= 3
         "identical output to the all-pairs oracle at 2^12-buckets-per-band "
         "join cost instead of O(n^2)"
     ),
-    bench=True,
 )
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_banded_pairs(load_table(spark, sf_dir, "documents"), max_hamming=3)
@@ -293,7 +289,6 @@ FROM documents d LEFT JOIN comp c USING (doc_id)
         "doc gets the min doc_id of its duplicate component (oracle: "
         "recursive-CTE transitive closure)"
     ),
-    bench=True,
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from findb_spark.ops.graph import dedup_cluster_assignment
@@ -675,7 +670,6 @@ GROUP BY c.doc_id
         "duplicate-line-fraction analog): 16-token windows, per-doc "
         "duplicated-chunk fraction via inverted-index document frequency"
     ),
-    bench=True,
 )
 def dedup_chunk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'exact' names the JOIN KEY, not an identity contract (round-13
@@ -998,7 +992,6 @@ FROM per_doc d LEFT JOIN runs r USING (doc_id)
         "becomes a hash-occurrence join (explode + 8-byte-key count + "
         "join back), linear in corpus tokens with no pairwise expansion"
     ),
-    bench=True,
 )
 def dedup_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from findb_spark.ops.dedup import substring_run_stats
@@ -1051,7 +1044,6 @@ GROUP BY a.doc_id
         "per-doc running sum + chunk-key document-frequency join, linear, "
         "no pairwise form"
     ),
-    bench=True,
 )
 def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from findb_spark.ops.dedup import cdc_chunk_stats

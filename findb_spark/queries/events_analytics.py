@@ -75,7 +75,6 @@ FROM dau JOIN wau ON dau.day = wau.day CROSS JOIN span
 WHERE dau.day >= d0 + 6
 """,
     category="events",
-    bench=True,
     description=(
         "DAU / trailing-7-day WAU / stickiness with EXACT sliding distinct: "
         "each (user, active-day) contributes to window days "

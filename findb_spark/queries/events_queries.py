@@ -141,7 +141,6 @@ GROUP BY 1, 2
 """,
     category="events",
     description="Tumbling 1-hour window aggregation (batch twin of the streaming op)",
-    bench=True,
 )
 def events_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tumbling_agg(load_table(spark, sf_dir, "events"), "1 hour")
@@ -176,7 +175,6 @@ FROM g GROUP BY user_id, session_num
 """,
     category="events",
     description="Gap-based sessionization (30-min inactivity) via lag + running sum",
-    bench=True,
 )
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessionize(load_table(spark, sf_dir, "events"))

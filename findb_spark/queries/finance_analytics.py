@@ -146,7 +146,6 @@ FROM wnd
 WHERE n = 20 AND n * syy - sy * sy > 0 AND n * sxx - sx * sx > 0
 """,
     category="timeseries",
-    bench=True,
     description=(
         "20-day rolling beta + correlation of each asset's returns vs the "
         "equal-weight market: returns fixed-point at 1e-4, market mean "

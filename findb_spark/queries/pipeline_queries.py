@@ -360,7 +360,6 @@ FROM p GROUP BY source
         "context-window sequence packing of the survivors — the "
         "curate-mix-pack loop a training-data job runs nightly"
     ),
-    bench=True,
 )
 def pipeline_pretrain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mixture weights drive SAMPLING here (not just reporting): keep

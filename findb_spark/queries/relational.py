@@ -44,7 +44,6 @@ GROUP BY l_returnflag, l_linestatus
 """,
     category="relational",
     description="TPC-H Q1-style pricing summary: multi-aggregate hash aggregation with map-side combine",
-    bench=True,
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -83,7 +82,6 @@ LIMIT 10
 """,
     category="relational",
     description="TPC-H Q3-style: 3-way join + aggregate + deterministic top-k",
-    bench=True,
 )
 def q3_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
@@ -130,7 +128,6 @@ GROUP BY n_name
 """,
     category="relational",
     description="TPC-H Q5-style: 6-way star join, dims broadcast, single fact pass",
-    bench=True,
 )
 def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")

@@ -35,7 +35,6 @@ FROM documents
 """,
     category="text",
     description="Per-document token statistics (JVM-side split/array ops, no UDFs)",
-    bench=True,
 )
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_stats(load_table(spark, sf_dir, "documents"))

@@ -78,7 +78,6 @@ FROM daily
 """,
     category="timeseries",
     description="5-day trailing moving average per asset (windowed fixed-point sum)",
-    bench=True,
 )
 def ts_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return moving_average(_daily(spark, sf_dir), 5)

@@ -58,9 +58,9 @@ SELECT src, dst, cos_sim, rnk FROM r WHERE rnk <= 3
         "kNN graph (top-3 out-edges per vector) built inside LSH buckets: "
         "candidate cost sum(bucket^2) not n^2 — the semantic-dedup / "
         "clustering substrate.  SCALE DIAL: plane count must grow with "
-        "log2(corpus) to hold bucket density constant (measured in "
-        "scripts/scale_smoke.py: 16x data at fixed 6 planes -> 40x wall; "
-        "+4 planes restores ~linear) — lsh_buckets takes the larger "
+        "log2(corpus) to hold bucket density constant (measured: 16x "
+        "data at fixed 6 planes -> 40x wall; +4 planes restores "
+        "~linear) — lsh_buckets takes the larger "
         "plane_matrix directly"
     ),
 )

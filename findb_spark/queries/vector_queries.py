@@ -94,7 +94,6 @@ SELECT query_id, vec_id, cos_sim, rnk FROM r WHERE rnk <= 10
 """,
     category="vector",
     description="Exact brute-force cosine top-10 per query vector (broadcast NL + ranking window)",
-    bench=True,
 )
 def vec_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -115,8 +114,7 @@ WHERE {cosine_sql('a.embedding', 'b.embedding')} >= 0.4
     description=(
         "Embedding-cosine near-duplicate pairs (exact all-pairs form — the "
         "EXACTNESS ORACLE for the scale-safe twins vec_ann_lsh / "
-        "dedup_semantic; O(n^2) by definition, so deliberately NOT a bench "
-        "headline: the benched set stays 100% scale-safe)"
+        "dedup_semantic; O(n^2) by definition)"
     ),
 )
 def vec_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -162,7 +160,6 @@ SELECT query_id, vec_id, cos_sim, rnk FROM r WHERE rnk <= 5
 """,
     category="vector",
     description=f"ANN via {N_PLANES}-plane random-hyperplane LSH bucketing + in-bucket exact rerank",
-    bench=True,
 )
 def vec_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -300,7 +297,6 @@ SELECT cluster, v1, v2, cos_sim FROM pairs WHERE cos_sim >= 0.4
         "coarse-quantize, compare only within a cluster — candidates shrink "
         "from O(n^2) to O(n^2/K) with K scaling alongside the corpus"
     ),
-    bench=True,
 )
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from findb_spark.ops.vector import semantic_dedup_pairs
@@ -431,7 +427,6 @@ SELECT query_id, vec_id, cos_sim, rnk FROM r WHERE rnk <= 5
         "hamming-1 neighbors (one flipped hyperplane) — the standard "
         "recall fix for boundary vectors; probe list stays broadcast"
     ),
-    bench=True,  # replaces vec_near_dup in the headline: scale-safe ANN path
 )
 def vec_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -653,10 +648,10 @@ SELECT query_id, vec_id, adc_dist, rnk FROM (
         "codewords trained on a 20-percent hash sample, vectors "
         "compressed to 8 codes (32x memory), queries scored via ADC "
         "lookup tables — integer adds per candidate, no float math; the "
-        "index-in-RAM scale path for 100 TB corpora.  Not a bench "
-        "headline (vec_pq_search, the shortlist+rerank production shape "
-        "over the same pipeline, is the tracked number); its fixed "
-        "codebook-build cost amortizes across queries — index built once"
+        "index-in-RAM scale path for 100 TB corpora (vec_pq_search is "
+        "the shortlist+rerank production shape over the same pipeline); "
+        "its fixed codebook-build cost amortizes across queries — index "
+        "built once"
     ),
 )
 def vec_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -703,7 +698,6 @@ SELECT query_id, vec_id, cos_sim, rnk FROM (
         "rerank of the shortlist only — corpus pass reads 8-byte codes, "
         "float math confined to 50 candidates/query"
     ),
-    bench=True,  # track the PQ ANN scale path per round alongside LSH/IVF
 )
 def vec_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from findb_spark.ops.vector import pq_search

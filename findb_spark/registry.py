@@ -5,7 +5,7 @@ a PySpark callable ``(spark, sf_dir) -> DataFrame`` plus (where the
 semantics are SQL-expressible) a DuckDB oracle SQL string computing the
 same result over the same parquet tables. ``__spark_entry__.queries()`` /
 ``oracle_sql()`` are thin views over this registry, so the two dicts can
-never drift apart.
+never drift apart; :func:`all_specs` fixes their key order.
 
 Parity rules (driver compares row count + schema + order-insensitive value
 hash, CORRECTNESS_r{N}.json):
@@ -32,7 +32,7 @@ hash, CORRECTNESS_r{N}.json):
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -46,190 +46,13 @@ class QuerySpec:
     sql: str | None
     category: str
     description: str = ""
-    #: queries worth timing in bench.py
-    bench: bool = field(default=False)
 
 
 _SPECS: dict[str, QuerySpec] = {}
 
 #: Names surfaced FIRST by :func:`all_specs` (then the rest in registration
-#: order).  The external correctness harness checks a bounded prefix of the
-#: spec dict per round, so the prefix should hold the queries whose hard
-#: verification signal is most valuable right now: the LLM-data-pipeline
-#: operators (dedup / vector / text / events / multimodal / UDF), the
-#: remaining unverified time-series tail, the two queries whose oracles were
-#: reworked for canonicalizer compatibility (pivot_status / array_agg_orders),
-#: and the start of the TPC-H completion suite.  Core as-of / relational /
-#: window queries already carry green rows from the previous round and rotate
-#: behind.  Names not yet registered are ignored, so this list never breaks
-#: registration.
-#:
-#: ROUND-6 WINDOW (50 slots): the two round-5 defect fixes lead (the
-#: repaired vec_binary_hamming_topk oracle and the ppm-integer
-#: stats_benford re-certification), then every never-driver-checked query
-#: that gates a distinct ENGINE MECHANISM (14 storage/streaming/versioning
-#: roundtrips: IVM delta repair, watermark late-drop, stateful recovery,
-#: Bloom + incremental manifests, vacuum, Hive pruning, dynamic overwrite,
-#: stream restart, OCC commit, shallow clone, change feed, stream-versioned
-#: sink, parquet codecs; skew salting, BPE training, PIT interval join,
-#: split-leakage audit, the four multimodal Arrow stages, PIVOT/LATERAL
-#: SQL grammar, power iteration, label propagation, BFS, Markov stationary,
-#: nearest as-of), and the 19 oldest pending analytics.  The ~36-query
-#: remainder (pure analytics: CVaR, t-closeness, turnover, migration,
-#: ANOVA, MAE, HHI, ARI, dwell, L28, ushape, pairs-spread, CUSUM,
-#: momentum, Mann-Whitney, histogram-quantiles, sweep-peak, modularity,
-#: clustering-coeff, seasonal-MAE, dup-orders, ref-integrity,
-#: Kendall/Spearman/Theil-Sen, Cramer's V, ABC/XYZ, centroid drift,
-#: repeat-purchase, sim-histogram, cluster-purity, open-backlog,
-#: weekend-rate, lead-time, order-intervals, langid... see backlog) rolls
-#: to round 7, after which every registered query carries a driver row.
-#: Registry growth is FROZEN until that backlog clears (round-5 verdict).
-#:
-#: ROUND-7 WINDOW (50 slots, executing the plan pre-written in round 6):
-#: the 38 never-driver-checked queries lead — sql_recursive_bfs (the one
-#: freeze-exempt round-6 addition: the CYCLIC-graph fixpoint mode of
-#: Spark 4's recursive-CTE executor; sql_recursive_rollup covers only the
-#: acyclic hierarchy mode; cross-checked against the DataFrame BFS by
-#: test) plus the 37 remaining analytics.  The 12 spare slots re-certify
-#: the 12 queries whose ROUND(double, k) ratio outputs were converted to
-#: exact fixed-point int64 THIS round (the class that turned
-#: stats_benford red in r5; all 12 re-verified bit-exact locally at
-#: sf0.001 + sf0.01 after conversion).  After this window lands green,
-#: EVERY registered query carries a driver row and the certification
-#: backlog is zero.  The two by-design rows-only sketches
-#: (events_approx_distinct / events_hll_rollup, ROWS_ONLY below) are
-#: permanently excluded from windows: their hash can never match by
-#: design, and their cardinality signal is carried by the hash-green
-#: events_hll_exact_registers.  Registry growth stays FROZEN: new
-#: queries only for genuinely new engine mechanisms, each entering the
-#: next window immediately.
-#: ROUND-8 WINDOW PLAN (build _CHECK_FIRST from this when round 7's
-#: correctness lands green): with the backlog at zero, windows become a
-#: ROLLING RE-CERTIFICATION of the stalest driver rows.  Policy: take the
-#: 50 hash-verifiable queries whose newest driver row is oldest (sort by
-#: (latest-row round, name); exclude ROWS_ONLY), so every row's age is
-#: bounded at ~5 rounds.  Computed against CORRECTNESS_r01..r07, the
-#: round-8 window is the 46 r1-vintage rows (above_group_avg,
-#: agg_filtered_bools, agg_having, asof_batch, asof_point, asof_range,
-#: asof_snapshot_all_assets, case_expr_bands, cube_agg, distinct_agg,
-#: global_topn, grouping_sets_agg, join_anti, join_full_outer,
-#: join_left_outer, join_semi, orders_month_over_month, percentiles,
-#: point_lookup, q14_promo_revenue, q18_big_orders,
-#: q19_disjunctive_predicates, q1_pricing_summary, q3_top_orders,
-#: q5_region_revenue, range_join_quarters, range_scan, regexp_funcs,
-#: revision_stats, rollup_agg, scalar_date_funcs, scalar_string_funcs,
-#: scalar_subquery_above_avg, set_ops_bag, set_ops_nations,
-#: sql_q6_forecast_revenue, topk_per_group, ts_cumulative, ts_first_last,
-#: ts_lag_returns, ts_ntile_pct_rank, ts_range_frame, ts_resample_ffill,
-#: ts_vwap, unnest_top_tokens, window_navigation) + the first 4 r2-vintage
-#: by name (array_agg_orders, dedup_clusters, dedup_clusters_apply,
-#: dedup_exact) — dedup_clusters also re-certifies this round's
-#: connected-components rewrite under the driver hash.  Any query whose
-#: implementation changes in round 8 preempts a slot.  ONE freeze
-#: exemption is pre-approved for round 8 (the judge's single 'weak'
-#: item, O15 introspection, currently pytest-pinned only): a
-#: `roundtrip_footer_stats` query exposing the engine's parquet
-#: footer-statistics manifest (per-file rowcount/min/max, manifest.py)
-#: as a queryable relation, oracled against DuckDB's
-#: parquet_metadata()/parquet_file_metadata() over the same files —
-#: giving the introspection surface a real driver hash row; it takes
-#: the first window slot, displacing above_group_avg to round 9.
-#: STATUS: built and registered late in round 7 under that pre-approval
-#: (roundtrip_queries.py).  The driver oracle recomputes the stats from
-#: the DATA over a deterministic one-file-per-bucket layout — roundtrip
-#: oracles never read scratch state, so the row certifies manifest ==
-#: data — while the literal DuckDB parquet_metadata() footer-bytes
-#: cross-check lives in tests/test_manifest_introspection.py.  Validated
-#: locally at sf0.001 + sf0.01; NOT in the round-7 _CHECK_FIRST below
-#: (that window was pre-declared and stays fixed), MUST lead round 8's.
-
-
-#: Queries whose implementation was MATERIALLY rewritten this round —
-#: they preempt rolling-window slots so the re-certification happens
-#: under the driver hash in the same round as the rewrite (policy in
-#: scripts/rotate_window.py).  Round 11: events_hll_rollup's self-
-#: certification restructured to a SINGLE events scan — both the sketch
-#: branch and the exact branch now derive from one persisted distinct
-#: (user, day, type) relation (round-10 verdict item 6), a real change
-#: to what feeds the sketch aggregate (distinct rows instead of raw
-#: events; HLL is duplicate-insensitive, so the result is provably
-#: identical — re-certify anyway).  NOT listed (r10 physical-only
-#: precedent): events_approx_distinct's estimator-seam refactor for the
-#: mutation pin — the built expression tree is unchanged.
-#: Also listed: the three defects the round-11 full sf0.1 sweep exposed
-#: on the freshly regenerated testdata (latent since birth, surfaced by
-#: new data magnitudes) — corr_matrix_assets recalibrated from per-day
-#: to per-month alignment (daily exact-date pairing went structurally
-#: EMPTY as assets outgrew per-asset observations, the r9
-#: ts_zscore_xsection sparsity class), and stats_welch_ttest /
-#: stats_anova_f restructured to overflow-safe double-tree variance
-#: forms (n*sq and s*s overflow int64 once a ~30k-row dollar cohort
-#: appears).  All three re-verified bit-exact at sf0.001/0.01/0.1.
-#: NEXT-ROUND RITUAL: replace this tuple with the queries rewritten in
-#: THAT round (empty tuple if none), then `python scripts/rotate_window.py
-#: --write` — it regenerates _CHECK_FIRST and WINDOW_r{N}.json from the
-#: latest CORRECTNESS files; tests/test_rotate_window.py re-pins both.
-#: (--write refuses stale entries: a CHANGED name whose latest driver row
-#: is already from the round being built aborts the rotation.)
-CHANGED_THIS_ROUND: tuple[str, ...] = (
-    # round-13 optimization rewrites that landed AFTER the round-13 window
-    # rotation and so were never driver-certified on their NEW
-    # implementations (round-13 verdict item 1; the builder's own 3-SF
-    # bit-exact sweeps attest them, but independent certification is
-    # pending until they enter a window):
-    "asof_join_shifted",          # union+last_value -> one range-frame window
-    "dedup_substring_runs",       # two-consumer stitch -> single-pass window
-    "dedup_cdc_chunks",           # token explode+window -> in-row array assembly
-    "vec_pq_search",              # driver-side ADC LUTs + LocalRelation codebooks
-    "vec_pq_adc",                 # same rewrite, direct ADC surface
-    "dedup_semantic",             # cluster-grain repartition of the scoring stage
-    "ts_rolling_beta",            # shared ri lag subtree persisted once (lazy)
-    "asof_batch",                 # prune_bounds=False for the static batch
-    "dedup_clusters",             # adjacency persist -> lazy localCheckpoint
-    # LocalRelation migration consumers without a post-change driver row
-    # (driver-built relations now cross via the Arrow channel as true
-    # LocalRelations instead of pickled Python-RDD slices):
-    "range_join_quarters",        # quarter table
-    "stats_histogram_quantiles",  # quantile probes
-    "roundtrip_footer_stats",     # manifest path lists (_harvest_files)
-    "text_bpe_train_rounds",      # merge-round output (r13 row exists but the
-                                  # judge asked for an explicit re-cert slot)
-    "vec_pq_recall",              # PQ codebook/LUT path
-    "vec_ivf_pq",                 # IVF-PQ centroids + codebooks
-    "vec_ann_ivf",                # IVF centroid relation
-    "vec_ivf_kmeans",             # k-means centroid relation
-    # connected-components checkpoint rewrite consumers (batch-2 gates):
-    "dedup_clusters_apply",
-    "dedup_select_canonical",
-    "dedup_cluster_stats",
-    "dedup_clusters_semantic",
-    # round-14 arithmetic-yyyymmdd rewrite (functions/dates.py: the
-    # date_format string derivation replaced by integer field arithmetic
-    # — value-equivalence proven 0-diff on the full lineitem/orders
-    # domain plus 327/327 sweeps).  The change touches every
-    # prices_from_lineitem / daily_series consumer; window slots carry
-    # one REPRESENTATIVE per rewritten call site (the remaining
-    # consumers are certified by the builder's 3-SF sweeps and rotate in
-    # by staleness as usual):
-    "asof_range",                 # prices_from_lineitem date column
-    "asof_snapshot_all_assets",   # same derivation, snapshot path
-    "ts_moving_avg",              # daily_series (ops/finance.py) date
-    "ts_vwap",                    # direct lineitem-site rewrite
-    "q3_top_orders",              # orderdate site (relational.py)
-    "orders_month_over_month",    # yyyyMM groupBy site
-    "dq_duplicate_orders",        # order_date bigint site
-    "orders_abc_xyz",             # yyyyMM month site (stats_queries.py)
-    # round-14 driver-latency rewrite of the signature builders (the
-    # Column-DSL construction replaced by server-parsed SQL strings —
-    # bit-equal, 0-diff pinned; plan trees identical modulo literal
-    # casts).  dedup_clusters/apply/... already hold slots above:
-    "dedup_minhash_lsh",          # minhash_signatures expr-string form
-    "dedup_simhash_pairs",        # simhash_signatures expr-string form
-)
-
-# --- BEGIN AUTO-GENERATED WINDOW (scripts/rotate_window.py) ---
-#: Round-14 window, computed by `python scripts/rotate_window.py --write`
-#: from CORRECTNESS_r01..r13 + CHANGED_THIS_ROUND (policy above).
+#: order).  The order is frozen: the external correctness driver checks a
+#: bounded prefix of ``queries()``, so this prefix must not move.
 _CHECK_FIRST: tuple[str, ...] = (
     "asof_join_shifted",
     "dedup_substring_runs",
@@ -282,15 +105,6 @@ _CHECK_FIRST: tuple[str, ...] = (
     "part_supplier_hhi",
     "pii_tcloseness",
 )
-# --- END AUTO-GENERATED WINDOW ---
-
-#: Rows-only by design (no oracle SQL can hash-match): never spend a
-#: certification-window slot on these — the driver records a weaker
-#: rows-only check and any hash row would be red forever.  EMPTY since
-#: round 10: the two HLL sketches (the only members) became hash-
-#: certifiable by emitting exact counts + an in-plan bound verdict
-#: instead of the raw engine-specific estimate.
-ROWS_ONLY: frozenset[str] = frozenset()
 
 
 def register(
@@ -298,12 +112,11 @@ def register(
     sql: str | None,
     category: str,
     description: str = "",
-    bench: bool = False,
 ) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
         if name in _SPECS:
             raise ValueError(f"duplicate query spec: {name}")
-        _SPECS[name] = QuerySpec(name, fn, sql, category, description, bench)
+        _SPECS[name] = QuerySpec(name, fn, sql, category, description)
         return fn
 
     return deco
@@ -320,15 +133,3 @@ def all_specs() -> dict[str, QuerySpec]:
     out.update(_SPECS)
     return out
 
-
-def registration_order_specs() -> dict[str, QuerySpec]:
-    """All registered specs in pure REGISTRATION order (no ``_CHECK_FIRST``
-    reordering).  This is the bench-stable ordering: it never shifts when
-    the per-round certification window rotates, and within each module
-    pipeline primitives register before their consumers (e.g.
-    ``dedup_minhash_lsh`` before ``dedup_clusters``), so shared-pipeline
-    first-evaluation costs attribute to the query that owns the pipeline,
-    not to whichever consumer happens to sort first alphabetically."""
-    import findb_spark.queries  # noqa: F401  (registers everything)
-
-    return dict(_SPECS)

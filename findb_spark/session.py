@@ -353,8 +353,8 @@ def local_relation_df(spark: SparkSession, rows, schema):
 #: but driver-side it makes every plan construction look like it executed
 #: work (and re-lists footers a query may build against dozens of times).
 #: Caching the inferred schema per session makes repeat loads job-free:
-#: plan construction of a lazy query triggers ZERO Spark jobs, which
-#: bench.py exploits to detect genuinely-eager operator builds.
+#: plan construction of a lazy query triggers ZERO Spark jobs, so any job
+#: seen while building a query marks a genuinely eager operator.
 _SCHEMA_CACHE: dict[tuple[str, str], object] = {}
 
 

@@ -4,8 +4,7 @@
 Usage: python scripts/check_oracle.py [--json OUT.json] [sf_dir] [query ...]
 
 With --json, a machine-readable summary ({"sf_dir", "ok", "noora", "fail",
-"counts"}) is written to OUT.json so SWEEPS_r*.json entries are generated,
-not hand-transcribed from stdout (round-11 verdict item 8).
+"counts"}) is written to OUT.json.
 """
 
 from __future__ import annotations

@@ -46,25 +46,3 @@ def test_cli_check_subcommand(spark, capsys):
     assert "OK    q1_pricing_summary" in out and "1/1 ok" in out
     assert main(["check", "no_such"]) == 2
 
-
-def test_bench_eager_membership_is_frozen_and_valid():
-    """Round-9 verdict item 4: headline accounting must not drift round to
-    round.  The frozen EAGER_BUILD_INCLUDED constant must name only
-    registered bench-flagged queries — a renamed/unflagged query would
-    silently change what the headline includes."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py")
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-
-    from findb_spark.registry import registration_order_specs
-
-    bench_names = {s.name for s in registration_order_specs().values() if s.bench}
-    unknown = set(bench.EAGER_BUILD_INCLUDED) - bench_names
-    assert not unknown, (
-        f"EAGER_BUILD_INCLUDED names not bench-flagged/registered: {unknown}"
-    )

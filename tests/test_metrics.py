@@ -1,6 +1,5 @@
-"""Pins for the shared REST stage-metrics helper (findb_spark.metrics),
-used by bench.py (per-query executor CPU) and scripts/scale_smoke.py
-(spill/GC saturation evidence).
+"""Pins for the REST stage-metrics helper (findb_spark.metrics), which the
+benchmark's tracer (perfbench/spans.py) reads for per-span executor cost.
 
 The load-bearing behavior is the FIELD-DRIFT GUARD (round-10 advisor): a
 renamed REST metric field across Spark versions must surface as
@@ -25,12 +24,11 @@ class _FakeSpark:
     sparkContext = _FakeSC()
 
 
-def _stage(sid, attempt=0, **over):
+def _stage(sid):
     st = {f: 1000 for f in M.SUM_FIELDS}
     st[M.PEAK_FIELD] = 2 * 1024 * 1024
-    st.update(over)
     st["stageId"] = sid
-    st["attemptId"] = attempt
+    st["attemptId"] = 0
     return st
 
 
@@ -79,64 +77,12 @@ def test_snapshot_ui_disabled():
     assert snap is None and missing == ["ui-disabled"]
 
 
-def test_deltas_count_only_new_stages():
-    before = {(1, 0): _stage(1)}
-    after = {
-        (1, 0): _stage(1),
-        (2, 0): _stage(
-            2,
-            executorCpuTime=3_000_000_000,  # 3 s in ns
-            executorRunTime=4_000,          # 4 s in ms
-            memoryBytesSpilled=10 * 1024 * 1024,
-        ),
-    }
-    cpu = M.exec_cpu_delta_s(before, after)
-    assert cpu == {"cpu_s": 3.0, "run_s": 4.0, "gc_s": 1.0, "retried_stages": 0}
-    m = M.metrics_delta(before, after)
-    assert m["stages"] == 1
-    assert m["spill_mem_mb"] == 10.0
-    assert m["exec_cpu_s"] == 3.0
-    # None propagates (unmeasured, not zero)
-    assert M.exec_cpu_delta_s(None, after) is None
-    assert M.metrics_delta(before, None) is None
-
-
-def test_delta_counts_stage_retries():
-    """A re-attempted stage (attemptId > 0) in the span is a retry — the
-    attribution signal that a CPU delta is failure-recovery, not plan."""
-    before = {}
-    after = {(1, 0): _stage(1), (1, 1): _stage(1, attempt=1), (2, 0): _stage(2)}
-    assert M.exec_cpu_delta_s(before, after)["retried_stages"] == 1
-
-
 def test_empty_store_returns_marker_not_validated(monkeypatch):
     """Zero complete stages = the field validation could not run; an empty
     missing-list would read as 'all fields measured' (round-11 advisor)."""
     _serve(monkeypatch, [])
     snap, missing = M.stages_snapshot(_FakeSpark())
     assert snap == {} and missing == [M.NO_STAGES_MARKER]
-
-
-def test_field_drift_latch_real_verdict_sticks():
-    latch = M.FieldDriftLatch()
-    latch.observe([M.NO_STAGES_MARKER])   # pre-work empty store
-    latch.observe([])                      # validated snapshot
-    latch.observe(["fetch-failed: OSError"])  # mid-run failure
-    latch.observe([])                      # later success does NOT erase it
-    assert latch.result() == ["fetch-failed: OSError"]
-
-
-def test_field_drift_latch_marker_defers_to_validation():
-    """The empty-store marker stands only if NO snapshot ever validated a
-    non-empty store."""
-    deferred = M.FieldDriftLatch()
-    deferred.observe([M.NO_STAGES_MARKER])
-    deferred.observe([])
-    assert deferred.result() == []
-    never = M.FieldDriftLatch()
-    never.observe([M.NO_STAGES_MARKER])
-    never.observe([M.NO_STAGES_MARKER])
-    assert never.result() == [M.NO_STAGES_MARKER]
 
 
 def test_settled_snapshot_waits_for_listener_bus(monkeypatch):

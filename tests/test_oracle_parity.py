@@ -40,6 +40,17 @@ def test_oracle_parity(spark, con, sf_dir, spec):
     assert not problems, f"{spec.name}: {problems}"
 
 
+def test_driver_prefix_order_is_frozen():
+    """The external driver checks a bounded prefix of ``queries()``.
+    all_specs() skips unregistered ``_CHECK_FIRST`` names, so a rename
+    would shift that prefix silently; pin the prefix and its names."""
+    import __spark_entry__
+    from findb_spark.registry import _CHECK_FIRST, _SPECS
+
+    assert set(_CHECK_FIRST) <= set(_SPECS), set(_CHECK_FIRST) - set(_SPECS)
+    assert list(__spark_entry__.queries())[: len(_CHECK_FIRST)] == list(_CHECK_FIRST)
+
+
 def test_empty_result_fails_gate_unless_flagged(spark):
     """Round-8 found 8 queries whose driver rows certified EMPTY results
     (one predicate structurally dead for 8 rounds).  The gate must fail
