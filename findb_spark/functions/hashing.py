@@ -50,12 +50,6 @@ def hexparse_duck(expr: str, start: str | int, length: int) -> str:
     )
 
 
-def perm_hash(h48: Column, a: int, b: int) -> Column:
-    """The i-th MinHash permutation: ``(a * (h % P) + b) % P`` with
-    P = 2^31-1. Exact in signed 64-bit on both engines."""
-    return (F.lit(a) * (h48 % F.lit(MERSENNE31)) + F.lit(b)) % F.lit(MERSENNE31)
-
-
 def perm_hash_duck(h48_expr: str, a: int, b: int) -> str:
     return f"(({a} * (({h48_expr}) % {MERSENNE31}) + {b}) % {MERSENNE31})"
 

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from findb_spark.asof import PRICE_COLUMNS
+from findb_spark.session import read_parquet
 
 
 def cluster_prices(prices: DataFrame, num_partitions: int | None = None) -> DataFrame:
@@ -188,19 +189,13 @@ def write_zorder(
 def read_prices(spark: SparkSession, path: str) -> DataFrame:
     """Open a clustered prices table (keeps the ``date_month`` partition
     column when present — findb_spark.asof derives partition predicates
-    from it)."""
-    df = spark.read.parquet(path)
+    from it).  The schema comes from ``session._SCHEMA_MEMO``, so reopening
+    an unchanged table runs no Spark job."""
+    df = read_parquet(spark, path)
     cols = list(PRICE_COLUMNS) + (
         ["date_month"] if "date_month" in df.columns else []
     )
     return df.select(*cols)
-
-
-def files_scanned(df: DataFrame) -> int:
-    """Number of files backing the relation (NOT filter-aware —
-    ``Dataset.inputFiles`` lists the whole FileIndex). Use `scan_metrics`
-    for pruning evidence."""
-    return len(df.inputFiles())
 
 
 def scan_metrics(df: DataFrame) -> list[dict[str, int]]:

@@ -176,24 +176,6 @@ def hashed_shingle_arrays(docs: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def doc_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, shingle) with per-doc distinct shingles — the inverted
-    index in STRING form.
-
-    PERFORMANCE WARNING (measured round 6): exploding the raw
-    string-shingle array straight out of its computing projection is
-    pathological — 7.7s vs 0.9s over the sf0.1 corpus — because the
-    generator's unmaterialized wide string-array input is re-touched per
-    emitted element.  Every production consumer in this package explodes
-    ``transform(sharr, hash48)`` instead (narrow int64 generator input);
-    use this form only when the literal shingle text is required, and
-    materialize (checkpoint/persist) ``shingle_arrays`` first if the
-    corpus is large."""
-    return shingle_arrays(docs, n).select(
-        "doc_id", F.explode(F.col("sharr")).alias("shingle")
-    )
-
-
 def _jaccard_from_inter(inter: DataFrame, sizes: DataFrame, threshold: float) -> DataFrame:
     """(doc1, doc2, inter) + per-doc sizes -> thresholded Jaccard pairs."""
     sa, sb = sizes.alias("sa"), sizes.alias("sb")

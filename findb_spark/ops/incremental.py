@@ -42,12 +42,7 @@ def update_monthly_bars(
     if not months:
         return 0
     affected = prices_all.where(F.expr("date div 100").cast("int").isin(months))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        monthly_ohlc_bars(affected).write.mode("overwrite").partitionBy(
-            "month"
-        ).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    monthly_ohlc_bars(affected).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("month").parquet(path)
     return len(months)

@@ -127,16 +127,6 @@ def sample_frames(with_payload: DataFrame, every_n: int = 2) -> DataFrame:
     )
 
 
-def sample_video_frames(with_payload: DataFrame, every_n: int) -> DataFrame:
-    """STUB: real video frame sampling requires ffmpeg bindings absent from
-    this container; `sample_frames` above is the real-plumbing synthetic
-    form to swap a decoder into."""
-    raise NotImplementedError(
-        "video frame sampling requires ffmpeg (not in container); "
-        "see sample_frames for the mapInPandas shape to wire a decoder into"
-    )
-
-
 # --- REAL codecs: PPM images / WAV audio (no media libs required) ---------
 #
 # The fake-decode paths above keep the original contract; the operators

@@ -632,22 +632,6 @@ PQ_K = 64  # codewords per subspace (production PQ uses 256; 64 keeps the
 PQ_TRAIN_CAP = 1 << 14
 
 
-def unit_vector(v: Column) -> Column:
-    """L2-normalize a float array to exact doubles: each element divided
-    by the fixed-point norm (one IEEE divide per element — bit-identical
-    cross-engine).  PQ quantizes NORMALIZED vectors so that squared L2
-    distance is rank-equivalent to cosine (||a-b||² = 2 - 2·cos on unit
-    vectors) — the metric every other search op here uses; quantizing raw
-    vectors would make ADC rank by magnitude, not direction.
-
-    NOTE: the norm subtree (a 64-term fixed-point dot) is embedded in the
-    transform lambda and re-evaluated per ELEMENT; prefer the two-phase
-    projection in :func:`_normalized` (norm into its own column first) on
-    any hot path — 64x less work per row and a far smaller plan."""
-    n = norm(v)
-    return F.transform(v, lambda x: x.cast("double") / n)
-
-
 def _normalized(emb: DataFrame) -> DataFrame:
     """(vec_id, nv): the corpus unit-normalized (exact doubles) — norm
     materialized into its own column first so each element's divide

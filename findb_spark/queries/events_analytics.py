@@ -17,24 +17,17 @@ differently at window edges (see events_attribution's interval note).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from findb_spark.registry import register
-from findb_spark.session import BoundedDFMemo, load_table
+from findb_spark.session import Memo, load_table, table_path
 
 #: Checkpointed (user_id, active-day) relation, memoized per (session,
-#: corpus): it feeds three consumers inside events_dau_wau, and a fresh
-#: fn() call otherwise re-materializes the checkpoint every time — the
-#: round-9 bench drift (0.13 -> 0.56-0.70 s steady state, one extra AQE
-#: stage) was exactly this non-amortizing rebuild.  Shared
-#: BoundedDFMemo contract (round 13): applicationId-keyed, capacity 4,
-#: NO unpersist on evict — the localCheckpoint contract (eviction drops
-#: the last Python reference; the ContextCleaner reclaims the blocks
-#: after GC, bounded by one cycle x 4 tiny relations), and
-#: release_caches clears it via the registry.
-_UD_MEMO = BoundedDFMemo(capacity=4)
+#: events content): it feeds three consumers inside events_dau_wau, and a
+#: fresh fn() call otherwise re-materializes the checkpoint every time —
+#: the round-9 bench drift (0.13 -> 0.56-0.70 s steady state, one extra
+#: AQE stage) was exactly this non-amortizing rebuild.
+_UD_MEMO = Memo(capacity=4)
 
 
 def _active_days(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -45,7 +38,7 @@ def _active_days(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).distinct()
         return ud.localCheckpoint(eager=False)
 
-    return _UD_MEMO.get_or_build(spark, os.path.realpath(sf_dir), build)
+    return _UD_MEMO.get_or_build(spark, table_path(sf_dir, "events"), build)
 
 
 @register(

@@ -4,15 +4,13 @@ batch semantics here, streaming twins in findb_spark.streaming)."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from findb_spark.functions.hashing import hash48_duck
 from findb_spark.ops.events import event_type_pivot, sessionize, tumbling_agg
 from findb_spark.registry import register
-from findb_spark.session import BoundedDFMemo, load_table
+from findb_spark.session import Memo, load_table, table_path
 
 # --- sketch self-certification (round-9 verdict item 6, hardened r11) -------
 #
@@ -403,13 +401,9 @@ def events_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Persisted distinct (user, day, type) relation per (session, corpus):
-#: feeds both branches of events_hll_rollup.  Shared BoundedDFMemo
-#: contract (round 13, unifying with _UD_MEMO in events_analytics.py):
-#: applicationId-keyed, capacity 4, and — unlike the localCheckpoint
-#: memo — eviction unpersists explicitly (persist-backed blocks can and
-#: should drop immediately); release_caches clears it via the registry.
-_HLL_DU_MEMO = BoundedDFMemo(capacity=4, unpersist_on_evict=True)
+#: Persisted distinct (user, day, type) relation per (session, events
+#: content): feeds both branches of events_hll_rollup.
+_HLL_DU_MEMO = Memo(capacity=4)
 _HLL_DU_MEMO_MAX = _HLL_DU_MEMO.capacity
 
 
@@ -424,7 +418,7 @@ def _hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         # state must degrade to disk, never recompute-on-eviction
         return du.persist(StorageLevel.MEMORY_AND_DISK)
 
-    return _HLL_DU_MEMO.get_or_build(spark, os.path.realpath(sf_dir), build)
+    return _HLL_DU_MEMO.get_or_build(spark, table_path(sf_dir, "events"), build)
 
 
 @register(

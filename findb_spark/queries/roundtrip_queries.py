@@ -1661,12 +1661,9 @@ def roundtrip_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     patched = src.where(F.col("month") == bounds.hi).withColumn(
         "cents", F.col("cents") * 2
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        patched.write.mode("overwrite").partitionBy("month").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    patched.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("month").parquet(path)
     after = sorted(
         os.path.basename(p) for p in glob.glob(f"{path}/month={bounds.lo}/part-*")
     )

@@ -16,8 +16,9 @@ large cluster reading ~100 TB:
 from __future__ import annotations
 
 import os
+import threading
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -191,59 +192,97 @@ def table_input_bytes(sf_dir: str, name: str) -> int:
     Driver-side filesystem walk — no Spark job, same numbers the
     footer-stats manifest (manifest.py) sees per file; used to feed
     :func:`auto_initial_partitions` without reading any data pages."""
-    path = table_path(sf_dir, name)
-    # driver testdata ships single-file tables; engine writers produce
-    # directories of part files — handle both
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
+    return sum(size for _f, _mtime, size in files_fingerprint(table_path(sf_dir, name)))
 
 
-class BoundedDFMemo:
-    """Bounded per-(session, key) DataFrame memo with a single shared
-    eviction/release contract (round 13, unifying the two hand-rolled
-    copies that release_caches previously had to know by name).
+def files_fingerprint(path: str) -> tuple:
+    """``(file, st_mtime_ns, st_size)`` of every data file of a parquet
+    table, sorted by file name.
 
-    Keys always lead with ``spark.sparkContext.applicationId`` so a
-    stopped session's dead RDD is never resurrected.  At ``capacity``
-    the oldest entry is evicted: with ``unpersist_on_evict`` its blocks
-    drop immediately (the persist-backed contract), without it eviction
-    merely drops the last Python reference and the ContextCleaner
-    reclaims the blocks after GC (the localCheckpoint contract — there
-    is no public unpersist for a checkpoint's backing RDD, and the
-    DataFrame's derived RDDs would not touch the checkpoint blocks).
+    ``path`` is a single parquet file (driver testdata) or a directory of
+    part files (engine writers); files whose name starts with ``_`` or
+    ``.`` (``_SUCCESS``, checksums) are not data and are skipped.  Any
+    rewrite — Spark's new part-file names, or an in-place overwrite's new
+    mtime and size — changes the fingerprint, so it is the content half
+    of every :class:`Memo` key.  Driver-side stat calls only, no Spark
+    job."""
+    p = os.path.realpath(path)
+    if os.path.isdir(p):
+        files = sorted(
+            os.path.join(r, f)
+            for r, _, fs in os.walk(p)
+            for f in fs
+            if not f.startswith((".", "_"))
+        )
+    else:
+        files = [p]
+    stats = [(f, os.stat(f)) for f in files]
+    return tuple((f, st.st_mtime_ns, st.st_size) for f, st in stats)
 
-    Every instance self-registers, and :func:`release_caches` clears
-    them ALL — a new persist site gets the between-sweeps release for
-    free by building on this class instead of a bare dict.  Dict-like
-    introspection (``in`` / ``len`` / truthiness) is provided for the
-    id-stability and release pins."""
 
-    _instances: "list[BoundedDFMemo]" = []
+class Memo:
+    """Bounded memo of values derived from one parquet table: the one
+    cache abstraction of the engine.
 
-    def __init__(self, capacity: int = 4, unpersist_on_evict: bool = False):
-        self._store: dict[tuple, object] = {}
+    **Key.** :meth:`key` builds ``(applicationId, files_fingerprint(path),
+    *extra)`` from the caller's source parquet ``path``; callers never
+    build keys themselves.  The application id keeps a stopped session's
+    dead RDDs from being resurrected; the fingerprint makes a rewritten
+    table a miss, so no entry can outlive the content it was built from.
+    ``extra`` carries the build's other inputs (e.g. the PQ geometry).
+
+    **Eviction.** At ``capacity`` the oldest entry goes, and an evicted
+    DataFrame is ``unpersist()``-ed: persist-backed blocks drop at once,
+    and for a ``localCheckpoint``-backed DataFrame the call does nothing
+    (its blocks are reclaimed by the ContextCleaner once unreferenced).
+    Building an entry for a table's new content first evicts the entries
+    of its older content: Spark's cache matches plans, not file
+    contents, so a persisted relation over the old files left cached
+    would be matched by the rebuilt plan and serve the old rows.
+
+    **Release.** Every instance registers itself, and
+    :func:`release_caches` drops every entry whose value is a DataFrame
+    (``clearCache`` invalidates those) while keeping driver-side values
+    such as schemas and codebook rows, which a content-keyed entry keeps
+    correct.  ``in`` / ``len`` / truthiness expose the store to tests."""
+
+    _instances: "list[Memo]" = []
+
+    def __init__(self, capacity: int = 4):
+        #: key -> (realpath of the source table, value)
+        self._store: dict[tuple, tuple[str, object]] = {}
+        self._lock = threading.Lock()
         self.capacity = capacity
-        self.unpersist_on_evict = unpersist_on_evict
-        BoundedDFMemo._instances.append(self)
+        Memo._instances.append(self)
 
-    def get_or_build(self, spark: SparkSession, key, build):
-        k = (spark.sparkContext.applicationId, key)
-        if k not in self._store:
-            while len(self._store) >= self.capacity:
-                old = self._store.pop(next(iter(self._store)))
-                if self.unpersist_on_evict:
-                    old.unpersist()
-            self._store[k] = build()
-        return self._store[k]
+    def key(self, spark: SparkSession, path: str, *extra) -> tuple:
+        return (spark.sparkContext.applicationId, files_fingerprint(path), *extra)
 
-    def clear(self) -> None:
-        self._store.clear()
+    def get_or_build(self, spark: SparkSession, path: str, build, *extra):
+        """The memoized ``build()`` for ``path``'s current content."""
+        k = self.key(spark, path, *extra)
+        src = os.path.realpath(path)
+        with self._lock:
+            if k not in self._store:
+                stale = [o for o, (s, _) in self._store.items() if s == src and o[1] != k[1]]
+                for old in stale:
+                    self._evict(old)
+                while len(self._store) >= self.capacity:
+                    self._evict(next(iter(self._store)))
+                self._store[k] = (src, build())
+            return self._store[k][1]
+
+    def _evict(self, k: tuple) -> None:
+        _src, value = self._store.pop(k)
+        if isinstance(value, DataFrame):
+            value.unpersist()
+
+    def release(self) -> None:
+        """Drop every DataFrame entry (see the class docstring)."""
+        with self._lock:
+            self._store = {
+                k: e for k, e in self._store.items() if not isinstance(e[1], DataFrame)
+            }
 
     def __contains__(self, k) -> bool:
         return k in self._store
@@ -268,13 +307,15 @@ def release_caches(spark: SparkSession) -> None:
     corpora / sf_dirs those MEMORY_AND_DISK blocks accumulate unboundedly
     (disk blocks are not LRU-evicted): call this between sweeps.  Inside
     one sweep the persists are bounded by design — each is keyed by the
-    corpus plan, orders of magnitude smaller than its source table."""
-    # memos hold persist/checkpoint-backed DataFrames: after clearCache
-    # those entries would silently hand out UNcached plans (breaking the
-    # one-scan contracts), so every registered memo empties with the
-    # cache — no per-site imports to forget (round 13)
-    for memo in BoundedDFMemo._instances:
-        memo.clear()
+    corpus plan, orders of magnitude smaller than its source table.
+
+    Every :class:`Memo` drops its DataFrame entries, which would otherwise
+    hand out uncached plans after ``clearCache``; memoized schemas and
+    PQ codebooks stay, because their content-fingerprint keys cannot go
+    stale and dropping them would only repeat the footer reads and the
+    training."""
+    for memo in Memo._instances:
+        memo.release()
     spark.catalog.clearCache()
 
 
@@ -348,21 +389,21 @@ def local_relation_df(spark: SparkSession, rows, schema):
     return spark.createDataFrame(pd.DataFrame(data, columns=names), schema=schema)
 
 
-#: (session id, path) -> schema.  spark.read.parquet without a schema fires
-#: a footer-read job per call; at 100 TB that is harmless metadata traffic,
-#: but driver-side it makes every plan construction look like it executed
-#: work (and re-lists footers a query may build against dozens of times).
-#: Caching the inferred schema per session makes repeat loads job-free:
-#: plan construction of a lazy query triggers ZERO Spark jobs, so any job
-#: seen while building a query marks a genuinely eager operator.
-_SCHEMA_CACHE: dict[tuple[str, str], object] = {}
+#: Inferred schema per table content.  ``spark.read.parquet`` without a
+#: schema runs a footer-read job on every call; with the memoized schema
+#: a repeat open runs none, so plan construction of a lazy query triggers
+#: zero Spark jobs and any job seen while building a query marks a
+#: genuinely eager operator.  64 entries hold the ten registry tables of
+#: several sf_dirs without evicting inside a sweep.
+_SCHEMA_MEMO = Memo(capacity=64)
 
 
-def _cached_schema(spark: SparkSession, path: str):
-    key = (spark.sparkContext.applicationId, path)
-    if key not in _SCHEMA_CACHE:
-        _SCHEMA_CACHE[key] = spark.read.parquet(path).schema
-    return _SCHEMA_CACHE[key]
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema taken from
+    :data:`_SCHEMA_MEMO`: only the first open of a table's current
+    content infers it."""
+    schema = _SCHEMA_MEMO.get_or_build(spark, path, lambda: spark.read.parquet(path).schema)
+    return spark.read.schema(schema).parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str):
@@ -379,11 +420,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     """
     path = table_path(sf_dir, name)
     if name != "events":
-        return spark.read.schema(_cached_schema(spark, path)).parquet(path)
+        return read_parquet(spark, path)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return normalize_events_ts(
-        spark.read.schema(_cached_schema(spark, path)).parquet(path)
-    )
+    return normalize_events_ts(read_parquet(spark, path))
 
 
 def normalize_events_ts(df):

@@ -41,12 +41,10 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema from a footer-only batch read of the same file and normalize
     the same way the batch path does (session tz is UTC, so the NTZ->LTZ
     cast preserves epoch micros)."""
-    import os
-
-    from findb_spark.session import _cached_schema, normalize_events_ts
+    from findb_spark.session import normalize_events_ts, read_parquet, table_path
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_schema = _cached_schema(spark, os.path.join(sf_dir, "events.parquet"))
+    batch_schema = read_parquet(spark, table_path(sf_dir, "events")).schema
     raw = (
         spark.readStream.schema(batch_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -212,19 +210,6 @@ def view_click_join_stream(
             f"AND click_ts <= view_ts + interval {within}"
         ),
     ).select("user_id", "view_id", "click_id", "view_ts", "click_ts")
-
-
-def run_to_memory(stream_df: DataFrame, name: str, mode: str = "complete") -> None:
-    """Replay all available input into an in-memory sink (test/verification
-    harness; production sinks are parquet/kafka via writeStream)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def stream_to_parquet(

@@ -493,7 +493,7 @@ def test_session_paths_gap_free_bot_stream(spark):
 
 def test_release_caches_clears_all_registered_memos(spark):
     """Round-13 verdict item 7: release_caches must clear EVERY
-    BoundedDFMemo via the registry — including the localCheckpoint memo
+    DataFrame Memo via the registry — including the localCheckpoint memo
     it previously did not know about — so a new persist site gets the
     between-sweeps release for free."""
     import findb_spark.queries.events_analytics as ea
@@ -507,24 +507,26 @@ def test_release_caches_clears_all_registered_memos(spark):
     assert not ea._UD_MEMO and not eq._HLL_DU_MEMO
 
 
-def test_memo_eviction_is_bounded_and_unpersists(spark):
+def test_memo_eviction_is_bounded_and_unpersists(spark, tmp_path):
     """The shared memo honors its capacity and the persist contract:
-    filling past capacity evicts the oldest entry, and an
-    unpersist_on_evict memo drops the evicted blocks immediately."""
-    from findb_spark.session import BoundedDFMemo
+    filling past capacity evicts the oldest entry, and an evicted
+    DataFrame's blocks drop immediately."""
+    from findb_spark.session import Memo
 
-    memo = BoundedDFMemo(capacity=2, unpersist_on_evict=True)
+    src = tmp_path / "src.parquet"
+    src.write_bytes(b"")
+    memo = Memo(capacity=2)
     try:
         dfs = []
         for i in range(3):
             df = spark.range(10 + i).persist()
             dfs.append(df)
-            memo.get_or_build(spark, i, lambda d=df: d)
+            memo.get_or_build(spark, str(src), lambda d=df: d, i)
         assert len(memo) == 2
-        assert (spark.sparkContext.applicationId, 0) not in memo
+        assert memo.key(spark, str(src), 0) not in memo
         assert dfs[0].storageLevel.useMemory is False  # evicted + unpersisted
         assert dfs[2].storageLevel.useMemory is True
     finally:
-        BoundedDFMemo._instances.remove(memo)
+        Memo._instances.remove(memo)
         for df in dfs:
             df.unpersist()

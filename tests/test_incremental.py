@@ -90,3 +90,31 @@ def test_ivm_empty_delta_noop(spark, tmp_path):
         spark, path, empty, keys=["g", "p"], measures=["s"], part_col="p"
     ) == 0
     assert spark.read.parquet(path).count() == 1
+
+
+def test_partition_overwrites_leave_session_conf_alone(spark, sf_dir, tmp_path, monkeypatch):
+    """Dynamic overwrite is a per-write option: a session-wide flip would
+    leak dynamic mode into writes from other threads during the window."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from findb_spark.ops.ivm import apply_agg_delta
+
+    keys_set = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, key, value):
+        keys_set.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    prices = prices_from_lineitem(spark, sf_dir)
+    bars = str(tmp_path / "bars")
+    write_monthly_bars(prices.where(F.col("date") < 19970101), bars)
+    assert update_monthly_bars(spark, prices, prices.where(F.col("date") >= 19970101), bars) > 0
+
+    agg = str(tmp_path / "agg")
+    rows = spark.createDataFrame([(1, 10, 2, 100), (3, 20, 3, 300)], "g int, p int, n bigint, s bigint")
+    rows.write.mode("overwrite").partitionBy("p").parquet(agg)
+    assert apply_agg_delta(spark, agg, rows.where("p = 10"), keys=["g", "p"], measures=["s"], part_col="p") == 1
+    assert spark.read.parquet(agg).where("p = 20").count() == 1  # untouched partition kept
+    assert "spark.sql.sources.partitionOverwriteMode" not in keys_set

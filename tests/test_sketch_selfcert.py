@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_DIR
 
 import findb_spark.queries.events_queries as eq
+from findb_spark.session import table_path
 
 
 def test_approx_distinct_bound_flips_on_corrupt_estimate(spark, monkeypatch):
@@ -74,7 +75,7 @@ def test_hll_rollup_memoizes_one_cached_relation(spark):
     eq.events_hll_rollup(spark, SF_DIR)
     du2 = eq._hll_distinct_users(spark, SF_DIR)
     assert du1 is du2, "memo returned a fresh relation on a repeat call"
-    key = (spark.sparkContext.applicationId, __import__("os").path.realpath(SF_DIR))
+    key = eq._HLL_DU_MEMO.key(spark, table_path(SF_DIR, "events"))
     assert key in eq._HLL_DU_MEMO and len(eq._HLL_DU_MEMO) <= eq._HLL_DU_MEMO_MAX
     sl = du1.storageLevel
     assert sl.useMemory and sl.useDisk, f"storage level {sl} not MEMORY_AND_DISK"
