@@ -10,8 +10,7 @@ banding and sketch permutations.
 
 Spark-side cost note: md5 is a JVM intrinsic evaluated inside codegen —
 slower than xxhash64 but still vectorized-friendly and entirely JVM-side
-(no Python boundary). Operators that don't need oracle parity (pure
-library use) can pass ``fast=True`` to use xxhash64 instead.
+(no Python boundary).
 """
 
 from __future__ import annotations
@@ -24,10 +23,8 @@ from pyspark.sql import Column, functions as F
 MERSENNE31 = (1 << 31) - 1
 
 
-def hash48(col: Column, fast: bool = False) -> Column:
+def hash48(col: Column) -> Column:
     """48-bit deterministic hash of a string column (oracle-parity form)."""
-    if fast:
-        return F.pmod(F.xxhash64(col), F.lit(1 << 48)).cast("bigint")
     return F.conv(F.substring(F.md5(col), 1, 12), 16, 10).cast("bigint")
 
 

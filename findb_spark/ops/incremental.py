@@ -13,7 +13,7 @@ untouched — cost proportional to affected months, not table size.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from findb_spark.ops.finance import monthly_ohlc_bars
 
@@ -23,9 +23,7 @@ def write_monthly_bars(prices: DataFrame, path: str) -> None:
     monthly_ohlc_bars(prices).write.mode("overwrite").partitionBy("month").parquet(path)
 
 
-def update_monthly_bars(
-    spark: SparkSession, prices_all: DataFrame, new_rows: DataFrame, path: str
-) -> int:
+def update_monthly_bars(prices_all: DataFrame, new_rows: DataFrame, path: str) -> int:
     """Repair the bars table after ``new_rows`` (late revisions) landed in
     ``prices_all``: recompute bars only for the affected (small) set of
     months and dynamically overwrite those partitions. Returns the number

@@ -654,10 +654,9 @@ def fxp_l2_sub(a: Column, sw: Column, sub: int) -> Column:
     :func:`fxp_dot` to stay inside whole-stage codegen.
 
     This Column form is the executable SPECIFICATION of the PQ distance
-    arithmetic: the literal-codebook SQL kernels (:func:`_enc_code_sql`,
-    :func:`_lut_sql`) and the Arrow kernel (:func:`pq_encode_arrow`)
-    must produce bit-equal values — tests/test_llm_ops.py pins all three
-    against this formulation."""
+    arithmetic: the literal-codebook SQL kernel (:func:`_lut_sql`) and
+    the Arrow kernel (:func:`pq_encode_arrow`) must produce bit-equal
+    values — tests/test_llm_ops.py pins both against this formulation."""
     base = sub * PQ_SUBDIM
     terms = []
     for i in range(1, PQ_SUBDIM + 1):
@@ -789,20 +788,6 @@ def _fxp_l2_terms_sql(m: int, col: str) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def _enc_code_sql(m: int, col: str = "nv") -> str:
-    """SQL for subspace ``m``'s code against the joined ``_cb`` codebook
-    column: min over the codeword array of the composite
-    ``fxp_dist * 128 + code`` (identical arithmetic and tie-break —
-    smallest code on equal distance — as the fixed-point crossJoin+min
-    formulation this replaced; FLOOR(double) is BIGINT, the inline
-    integer adds are associative, so values are bit-equal)."""
-    comp = (
-        f"array_min(transform(element_at(_cb, {m + 1}), "
-        f"(cw, c0) -> {_fxp_l2_terms_sql(m, col)} * 128 + c0 + 1))"
-    )
-    return f"CAST({comp} % 128 AS INT)"
-
-
 def _lut_sql(m: int, col: str = "qv") -> str:
     """SQL for a query's subspace-``m`` ADC table against the joined
     ``_cb`` codebook column: fixed-point distance to each of the k
@@ -857,54 +842,24 @@ def _luts_driver(
     return out
 
 
-def pq_encode(nv: DataFrame, cbw: DataFrame | list) -> DataFrame:
+def pq_encode_arrow(
+    nv: DataFrame, cbw: DataFrame | list, normalize: bool = False
+) -> DataFrame:
     """Quantize every normalized vector: per subspace, the code of the
     L2-nearest codeword (ties to the smallest code).  Returns
     (vec_id, c0..c{PQ_M-1}).
 
-    The codebook (bounded at PQ_K rows by construction) rides along as a
-    broadcast ONE-ROW nested array (:func:`_cb_onerow`), so the corpus
-    pass is one scan + a 1-row broadcast join + a projection — zero
-    shuffles of the corpus, zero row fan-out.  The previous formulation
-    (crossJoin against the 64-row broadcast codebook + 8-way min
-    aggregate) shuffled a 64x fan-out and cost ~8 AQE jobs of pure
-    scheduling overhead per encode; this form is the plan you want at
-    100 TB: encode streams at scan speed and writes one row per vector.
-    Distances fold in one fixed-point composite ``dist*128 + code``
-    (codes 1..64 < 128 preserve lexicographic order), exactly as before
-    — values are bit-identical.  For extreme per-row throughput the same
-    narrow shape can swap this HOF kernel for the vectorized Arrow
-    kernel (:func:`pq_encode_arrow`), pinned bit-equal by test."""
-    cw = _cb_lists(cbw)
-    cbdf = _cb_onerow(nv.sparkSession, cw)
-    return nv.crossJoin(F.broadcast(cbdf)).select(
-        "vec_id",
-        *[F.expr(_enc_code_sql(m)).alias(f"c{m}") for m in range(PQ_M)],
-    )
-
-
-def pq_encode_arrow(
-    nv: DataFrame, cbw: DataFrame | list, normalize: bool = False
-) -> DataFrame:
-    """Vectorized twin of :func:`pq_encode`: same narrow one-scan shape,
-    kernel swapped for numpy over Arrow batches (``mapInPandas``), the
-    SAME fixed-point composite (``floor(d*d*1e12 + 0.5)`` summed in
-    int64, ``*128 + code`` min) — np.floor/multiply are the identical
-    IEEE-754 double ops the JVM executes, so codes are bit-equal (pinned
-    by tests/test_llm_ops.py).  Distances are computed per subspace
-    ((n, K, SUBDIM) slices) rather than as one (n, M, K, SUBDIM) tensor:
-    the elementwise fixed-point floor rules out a BLAS matmul, so memory
-    locality is what decides throughput, and the 4-D form thrashed cache
-    badly enough to lose to the JVM kernel by 10x at 128k vectors.
-
-    NOTE ON KERNEL CHOICE (re-measured round 6, local[32], forced
-    evaluation): this Arrow kernel beats the inline-SQL kernel at the
-    benched 2k-vector scale (2.4s vs 4.9s on identical pre-normalized
-    input; the SQL kernel's transform() lambdas are interpreted per
-    row), while the SQL kernel wins at 128k vectors where memory
-    bandwidth amortizes its constants (playbook numbers 11s vs 17s) —
-    so "arrow" is the default and "sql" the documented large-corpus
-    dial.
+    One narrow scan with no shuffle: numpy over Arrow batches
+    (``mapInPandas``) evaluates the fixed-point composite of
+    :func:`fxp_l2_sub` (``floor(d*d*1e12 + 0.5)`` summed in int64,
+    ``*128 + code`` min) — np.floor/multiply are the identical IEEE-754
+    double ops the JVM executes, so codes are bit-equal to the Column
+    spec (pinned by tests/test_llm_ops.py).  Distances are computed per
+    subspace ((n, K, SUBDIM) slices) rather than as one (n, M, K, SUBDIM)
+    tensor: the elementwise fixed-point floor rules out a BLAS matmul, so
+    memory locality is what decides throughput, and the 4-D form
+    thrashed cache badly enough to lose to a JVM kernel by 10x at 128k
+    vectors.
 
     ``normalize=True`` takes RAW ``embedding`` input and unit-normalizes
     inside the kernel with the identical fxp arithmetic as the Column
@@ -949,7 +904,7 @@ def pq_encode_arrow(
             # 1.6x warm).  Bit-equality unchanged: the per-element
             # floor/multiply/subtract ops and the per-row int64 sums are
             # identical regardless of block boundaries (pinned by
-            # test_pq_adc_kernels_agree_end_to_end and the oracle gate).
+            # test_pq_encode_kernels_bit_equal and the oracle gate).
             for m in range(PQ_M):
                 seg = v[:, m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]
                 for s in range(0, n, 256):
@@ -994,7 +949,7 @@ def pq_train(nv: DataFrame, cbw: DataFrame | list) -> DataFrame:
     ``(sum/MEAN_SCALE)/count`` in IEEE doubles — the identical op
     sequence the DuckDB oracle executes (queries/vector_queries.py
     ``mu{m}`` CTEs).  Assignment uses the same composite
-    ``dist*128+code`` min as :func:`pq_encode`.
+    ``dist*128+code`` min as :func:`pq_encode_arrow`.
 
     Sampled codewords land where single vectors happen to fall;
     per-subspace means drop quantization error the way full k-means does
@@ -1105,7 +1060,6 @@ def pq_adc_topk(
     emb: DataFrame,
     k: int = 5,
     train: bool = True,
-    kernel: str = "arrow",
     codebook: list | None = None,
     q_rows: list | None = None,
 ) -> DataFrame:
@@ -1123,20 +1077,9 @@ def pq_adc_topk(
     coarse clustering (ivf_assign) to also shrink the candidate set, and
     exact-rerank the ADC shortlist where final ordering matters.
 
-    ``kernel`` picks the corpus-encode implementation — both pinned
-    BIT-EQUAL by tests/test_llm_ops.py and re-measured this round with
-    FORCED evaluation (a bare ``count()`` over the SQL kernel lets
-    Catalyst prune the encode expressions away entirely — an earlier
-    comparison fell into exactly that trap): "arrow" (default,
-    :func:`pq_encode_arrow`) wins at the benched corpus scale (1.9s vs
-    4.2s warm at 2k vectors — the SQL kernel's transform() lambdas are
-    interpreted per row, ~8M floor ops here); "sql" (:func:`pq_encode`)
-    wins once the corpus amortizes the ~2s Python-worker/Arrow constant
-    AND memory bandwidth saturates the numpy side (11s vs 17s at 128k
-    vectors, 32 concurrent tasks).  Neither is orders-of-magnitude:
-    both execute the same ~4k fixed-point ops/vector, interpreted
-    JVM-side or vectorized-but-memory-bound Python-side.  Pick per
-    deployment; the narrow one-scan plan shape is identical."""
+    The corpus encode is :func:`pq_encode_arrow` on the raw embeddings,
+    with normalization fused into the numpy kernel (bit-equal, pinned) —
+    it skips the interpreted ``transform()`` normalization lambda."""
     # codebooks are PQ_K rows by construction (bounded, corpus-size-
     # independent): collected ONCE here (two tiny jobs — init sample +
     # one Lloyd round) and re-shipped as the 1-row broadcast _cb array.
@@ -1148,7 +1091,6 @@ def pq_adc_topk(
     # and amortizes across every query against the same corpus — see
     # queries/vector_queries.py's per-corpus memo), making this function
     # fully lazy: zero eager jobs, one action end-to-end.
-    nv = _normalized(emb)
     if codebook is not None:
         cb_rows = list(codebook)
     else:
@@ -1159,14 +1101,7 @@ def pq_adc_topk(
             # expression out of the training job
             cb_rows = pq_train(emb, cb_rows).collect()
     cw = _cb_lists(cb_rows)
-    if kernel == "arrow":
-        # raw-embedding input, normalization fused into the numpy kernel
-        # (bit-equal, pinned) — skips the interpreted transform() lambda
-        codes = pq_encode_arrow(
-            emb.select("vec_id", "embedding"), cb_rows, normalize=True
-        )
-    else:
-        codes = pq_encode(nv, cb_rows)
+    codes = pq_encode_arrow(emb.select("vec_id", "embedding"), cb_rows, normalize=True)
     # Round-13: the per-query ADC tables are computed DRIVER-SIDE (guide
     # §1.2 — the distributed form was two serial BroadcastNestedLoopJoin
     # stages whose only input is queries x codebook, both bounded by
@@ -1210,8 +1145,6 @@ def pq_search(
     emb: DataFrame,
     k: int = 5,
     shortlist: int = 50,
-    train: bool = True,
-    kernel: str = "arrow",
     codebook: list | None = None,
 ) -> DataFrame:
     """Production PQ search shape: ADC shortlist (integer lookups over the
@@ -1235,8 +1168,7 @@ def pq_search(
         emb.where(F.col("vec_id") < 3).select("vec_id", "embedding").collect()
     )
     sl = pq_adc_topk(
-        emb, k=shortlist, train=train, kernel=kernel, codebook=codebook,
-        q_rows=q_rows,
+        emb, k=shortlist, codebook=codebook, q_rows=q_rows
     ).select("query_id", "vec_id")
     base = emb.select("vec_id", "embedding").withColumn(
         "_nrm", norm_expr("embedding")
@@ -1266,9 +1198,7 @@ def pq_search(
     )
 
 
-def ivf_pq_topk(
-    emb: DataFrame, k: int = 5, train: bool = True, kernel: str = "arrow"
-) -> DataFrame:
+def ivf_pq_topk(emb: DataFrame, k: int = 5) -> DataFrame:
     """IVF-PQ (the FAISS IVFPQ architecture, Jegou TPAMI'11 §V): coarse
     IVF clustering bounds WHICH candidates are scored (the query's
     assigned cluster only, nprobe=1), product quantization bounds WHAT is
@@ -1286,19 +1216,14 @@ def ivf_pq_topk(
     cents = local_relation_df(spark, _c.collect(), _c.schema)
     clusters = assign_to_centroids(emb, cents).select("vec_id", "cluster")
 
+    # raw input: pq_train normalizes its sample driver-side (bit-equal)
+    cb_rows = pq_train(emb, pq_codebook(emb).collect()).collect()
+    cbdf = _cb_onerow(spark, _cb_lists(cb_rows))
+    codes = pq_encode_arrow(
+        emb.select("vec_id", "embedding"), cb_rows, normalize=True
+    ).join(clusters, "vec_id")
+
     nv = _normalized(emb)
-    cb_rows = pq_codebook(emb).collect()
-    if train:
-        # raw input: sample normalized driver-side (bit-equal)
-        cb_rows = pq_train(emb, cb_rows).collect()
-    cw = _cb_lists(cb_rows)
-    cbdf = _cb_onerow(emb.sparkSession, cw)
-    if kernel == "arrow":
-        codes = pq_encode_arrow(
-            emb.select("vec_id", "embedding"), cb_rows, normalize=True
-        ).join(clusters, "vec_id")
-    else:
-        codes = pq_encode(nv, cb_rows).join(clusters, "vec_id")
 
     q = nv.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("nv").alias("qv")

@@ -381,7 +381,7 @@ def roundtrip_incremental_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     late = src.where(F.col("date") >= 19970101)
     path = _scratch(sf_dir, "bars_incremental")
     write_monthly_bars(initial, path)
-    update_monthly_bars(spark, src, late, path)
+    update_monthly_bars(src, late, path)
     bars = spark.read.parquet(path)
     return bars.select(
         "asset_id",
@@ -799,7 +799,7 @@ FROM v2
         "Table-level time travel hard signal (versioning.py): v1 and a "
         "mutated v2 are committed through the versioned sink, then BOTH "
         "'VERSION AS OF 1' and the latest version are read back through "
-        "the manifest and aggregated — green means committed versions stay "
+        "the version log and aggregated — green means committed versions stay "
         "immutable and version resolution is exact while the table moves on"
     ),
 )
@@ -837,7 +837,7 @@ def roundtrip_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(F.lit(version).alias("version"), "*")
 
     as_of_1 = read_version(spark, table_dir, version=1)
-    latest = read_version(spark, table_dir)  # resolves to v2 via manifest
+    latest = read_version(spark, table_dir)  # resolves to v2 via the log
     return agg(as_of_1, 1).unionAll(agg(latest, 2))
 
 
@@ -908,8 +908,8 @@ FROM events GROUP BY event_type
         "Streaming -> versioned-sink hard signal: every availableNow "
         "micro-batch commits as a new immutable version (foreachBatch -> "
         "versioning.write_version), then ALL committed versions are read "
-        "back through the manifest and unioned — green means the "
-        "streaming commit protocol loses nothing and the manifest "
+        "back through the version log and unioned — green means the "
+        "streaming commit protocol loses nothing and the log "
         "enumerates exactly the committed data regardless of how the "
         "source split batches"
     ),
@@ -1214,7 +1214,7 @@ FROM orders
     category="roundtrip",
     description=(
         "Version-retention (vacuum) hard signal: three committed table "
-        "versions, vacuum keep_last=2 — the manifest must stop resolving "
+        "versions, vacuum keep_last=2 — the log must stop resolving "
         "the expired version BEFORE its bytes disappear, retained "
         "versions stay readable, and the surviving latest version must "
         "aggregate identically to the oracle over the full source"
@@ -1222,8 +1222,8 @@ FROM orders
 )
 def roundtrip_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The storage-lifecycle half of the versioning layer (write/time
-    travel are certified by roundtrip_time_travel): vacuum's atomic
-    manifest-first contract, exercised end to end and reduced to an
+    travel are certified by roundtrip_time_travel): vacuum's
+    log-entry-first contract, exercised end to end and reduced to an
     oracle-checkable aggregate."""
     import shutil
 

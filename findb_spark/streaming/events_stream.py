@@ -11,6 +11,12 @@ Scale: watermarks bound state (late rows beyond the watermark are dropped
 instead of growing state forever); session windows and the stateful
 operator shuffle once on user_id. File-source streaming here stands in for
 Kafka — swap ``readStream.format("kafka")`` and the plan is unchanged.
+
+Sinks: ``stream_to_parquet`` keeps Spark's own file-sink log.  The
+merge-snapshot sink is a versioned table: each epoch commits as one
+version through findb_spark.versioning's put-if-absent log (epoch e is
+version e+1), so it shares that module's one format, commit path and
+reader, and needs the same local or mounted file system for ``link``.
 """
 
 from __future__ import annotations
@@ -232,29 +238,6 @@ def stream_to_parquet(
     q.awaitTermination()
 
 
-def _list_versions(snapshot_dir: str) -> list[int]:
-    """Sorted COMMITTED epoch versions in a merge-snapshot directory (the
-    one directory-listing parse shared by the writer's baseline pick and
-    the reader's time travel).
-
-    Committed = the directory holds the Hadoop committer's ``_SUCCESS``
-    marker, written only after every task output is moved into place.  A
-    crash mid-write leaves a v=N directory without the marker; surfacing
-    it would hand readers a torn snapshot (and hand the replaying writer
-    a torn baseline).  Overwrite-on-replay deletes the partial directory
-    before rewriting, so filtering on the marker is crash-consistent."""
-    import os
-
-    if not os.path.isdir(snapshot_dir):
-        return []
-    return sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(snapshot_dir)
-        if d.startswith("v=")
-        and os.path.exists(os.path.join(snapshot_dir, d, "_SUCCESS"))
-    )
-
-
 def stream_merge_snapshot(
     stream_df: DataFrame,
     snapshot_dir: str,
@@ -264,40 +247,45 @@ def stream_merge_snapshot(
 ) -> None:
     """Streaming upsert: maintain a latest-row-per-key snapshot table from
     an append stream via ``foreachBatch`` + :func:`ops.merge.merge_into` —
-    the pattern behind every "streaming MERGE INTO" sink (Delta/Iceberg
-    wire the same per-batch merge into a table-format commit; here each
-    epoch writes a full versioned snapshot directory, the local-FS stand-in
-    for that commit, and replaying an epoch overwrites the same directory,
-    so restarts stay idempotent).
+    the pattern behind every "streaming MERGE INTO" sink.  The snapshot is
+    a versioned table (findb_spark.versioning): epoch e commits its full
+    merged snapshot as version e+1 on base e, through the table's
+    put-if-absent log, and ``versioning.read_version`` reads any epoch's
+    state back (every version is retained until vacuumed).
 
     Per micro-batch: reduce the batch to its latest row per key (window
     rank — late/duplicate rows within a batch collapse), then merge into
-    the previous snapshot (update on match, insert on miss).
+    the previous snapshot, version e (update on match, insert on miss).
 
-    Replay safety: the merge BASELINE for epoch N is the newest version
-    STRICTLY BELOW N. A crash between writing v=N and committing batch N
-    to the checkpoint replays epoch N; baselining on "newest" would then
-    read v=N while overwriting v=N (Spark refuses: cannot overwrite a
-    path being read) — or worse, merge against a partially-written v=N."""
+    Replay safety: a crash between committing version e+1 and committing
+    batch e to the checkpoint replays epoch e.  Version e+1 is then
+    already in the log, so the replay is skipped and a committed snapshot
+    is never rewritten; a crash before the commit leaves only an
+    unreferenced data directory, never a torn version.  An epoch that
+    does not follow the table's head (a gap) raises."""
     from pyspark.sql import Window
 
     from findb_spark.ops.merge import merge_into
+    from findb_spark.versioning import commit_version, head_version, read_version
 
     def _apply(batch: DataFrame, epoch: int) -> None:
-        spark = batch.sparkSession
+        head = head_version(snapshot_dir)
+        if head > epoch:
+            return  # replay: the epoch is committed as version epoch+1
+        if head < epoch:
+            raise RuntimeError(
+                f"epoch {epoch} does not follow version {head} of {snapshot_dir}"
+            )
         w = Window.partitionBy(key).orderBy(*[F.desc(c) for c in order_cols])
         src = (
             batch.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
             .drop("_rn")
         )
-        vs = [v for v in _list_versions(snapshot_dir) if v < epoch]
-        target = (
-            spark.read.parquet(f"{snapshot_dir}/v={vs[-1]}") if vs else None
-        )
-        if target is None:
+        if epoch == 0:
             merged = src
         else:
+            target = read_version(batch.sparkSession, snapshot_dir, epoch)
             merged = merge_into(
                 target,
                 src,
@@ -305,7 +293,7 @@ def stream_merge_snapshot(
                 update={c: F.col(f"s.{c}") for c in target.columns},
                 insert=True,
             )
-        merged.write.mode("overwrite").parquet(f"{snapshot_dir}/v={epoch}")
+        commit_version(merged, snapshot_dir, expected_base=epoch)
 
     q = (
         stream_df.writeStream.foreachBatch(_apply)
@@ -314,21 +302,6 @@ def stream_merge_snapshot(
         .start()
     )
     q.awaitTermination()
-
-
-def read_merge_snapshot(
-    spark: SparkSession, snapshot_dir: str, version: int | None = None
-) -> DataFrame:
-    """Read a snapshot version written by :func:`stream_merge_snapshot` —
-    newest by default, or a specific epoch for time travel (every epoch's
-    full snapshot is retained, so any historical state can be queried or
-    diffed; a table format would expose the same thing as VERSION AS OF)."""
-    vs = _list_versions(snapshot_dir)
-    if version is not None:
-        if version not in vs:
-            raise ValueError(f"version {version} not in {vs}")
-        return spark.read.parquet(f"{snapshot_dir}/v={version}")
-    return spark.read.parquet(f"{snapshot_dir}/v={vs[-1]}")
 
 
 TRANS_STATE_SCHEMA = StructType([StructField("last_type", StringType())])

@@ -1,142 +1,137 @@
-"""Minimal versioned-table layer (time travel) over parquet directories.
+"""Versioned tables (time travel) over parquet directories, committed
+through one put-if-absent log.
 
 The reference's bitemporal model gives *row-level* knowledge-time history
 (file.rs:508-570); this module adds the complementary *table-level* history
-a lakehouse exposes as `VERSION AS OF`: every write lands in a fresh
-immutable `v{N}/` subdirectory and a `_versions.json` manifest records the
-commit order.  Readers resolve a version (or latest) through the manifest,
-so concurrent readers never observe a half-written directory — the manifest
-is REWRITTEN ATOMICALLY (tmp file + os.replace) only after the parquet
-commit (`_SUCCESS`) exists, the same commit-gating discipline as
-streaming/events_stream.py's snapshot reads.
+a lakehouse exposes as `VERSION AS OF`.  Layout:
 
-Manifest format: ``{"versions": {"N": data_dir}, "schemas": {"N": schema}}``
-where ``schema`` is the committed DataFrame's ``StructType`` as JSON.
-`read_version` hands it to ``spark.read.schema`` so resolving a version
-runs no parquet footer-inference job.  A version directory is immutable,
-so its recorded schema cannot go stale; it is not a cache.  Manifests
-written before the field existed (or versions without an entry) still
-read, through inference.  Every manifest write goes through
-`_write_manifest`, which keeps exactly the schemas of the listed versions.
+- ``table_dir/_log/{N}.json`` is version N's entry,
+  ``{"data": data_dir, "schema": StructType JSON}``;
+- ``table_dir/v{N}-{8 hex}/`` holds the version's parquet files.
 
-Scale: the manifest holds one entry per version (tiny JSON); data files are
-plain parquet, so all layout machinery (partitioning, Z-order, manifests,
-pruning — layout.py) composes with versioned tables unchanged.  Vacuuming
-old versions is directory removal.
+Commit (the Delta Lake log protocol): a writer first writes its data to a
+fresh directory of its own, then publishes the entry by hard-linking a
+fully written temporary file to ``_log/{N}.json``.  ``link`` fails when
+the name exists, so exactly one writer gets each version and an entry
+appears whole or not at all: the entry IS the commit.  A loser removes
+its data directory and raises :class:`VersionConflict`.  A writer killed
+before the link leaves only an unreferenced data directory, which
+:func:`vacuum` removes; one killed after it has committed.  Nothing is
+ever rewritten in place, so no reader sees a half commit.  The commit
+relies on POSIX ``link`` semantics, so the table must live on a local or
+mounted file system, not on an object store.
+
+Readers list ``_log/`` and parse only the entry they resolve.  The
+recorded schema goes to ``spark.read.schema``, so resolving a version
+runs no Spark job; an entry without one reads through inference.
+
+Tables written before the log (a rewritten ``_versions.json`` manifest)
+still read.  The first write to one (a commit, a vacuum, or cloning it)
+converts the manifest into log entries, put-if-absent, and deletes it;
+only the log is ever written.
+
+Scale: one tiny entry per version; data files are plain parquet, so all
+layout machinery (partitioning, Z-order, manifests, pruning — layout.py)
+composes with versioned tables unchanged.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import re
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-_MANIFEST = "_versions.json"
-
-
-def _manifest_path(table_dir: str) -> str:
-    return os.path.join(table_dir, _MANIFEST)
-
-
-def _read_manifest(table_dir: str) -> tuple[dict[int, str], dict[int, dict]]:
-    """({version: data_dir}, {version: schema JSON}); both empty if none."""
-    path = _manifest_path(table_dir)
-    if not os.path.exists(path):
-        return {}, {}
-    with open(path) as f:
-        raw = json.load(f)
-    return (
-        {int(k): v for k, v in raw["versions"].items()},
-        {int(k): v for k, v in raw.get("schemas", {}).items()},
-    )
-
-
-def _write_manifest(
-    table_dir: str, versions: dict[int, str], schemas: dict[int, dict]
-) -> None:
-    """Atomically replace the manifest (tmp file + os.replace). Only the
-    schemas of listed versions are written."""
-    tmp = _manifest_path(table_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "versions": {str(k): p for k, p in versions.items()},
-                "schemas": {str(k): schemas[k] for k in versions if k in schemas},
-            },
-            f,
-        )
-    os.replace(tmp, _manifest_path(table_dir))
-
-
-def list_versions(table_dir: str) -> dict[int, str]:
-    """Committed versions as {version: data_dir}, empty if none."""
-    return _read_manifest(table_dir)[0]
-
-
-def write_version(df: DataFrame, table_dir: str) -> int:
-    """Commit ``df`` as the next version of the table; returns the version
-    number.  The data directory is immutable once committed."""
-    os.makedirs(table_dir, exist_ok=True)
-    versions, schemas = _read_manifest(table_dir)
-    v = max(versions) + 1 if versions else 1
-    data_dir = os.path.join(table_dir, f"v{v}")
-    df.write.mode("overwrite").parquet(data_dir)
-    if not os.path.exists(os.path.join(data_dir, "_SUCCESS")):
-        raise RuntimeError(f"parquet commit missing _SUCCESS: {data_dir}")
-    versions[v], schemas[v] = data_dir, df.schema.jsonValue()
-    _write_manifest(table_dir, versions, schemas)
-    return v
-
-
-def read_version(
-    spark: SparkSession, table_dir: str, version: int | None = None
-) -> DataFrame:
-    """Read the table as of ``version`` (default: latest committed).  With
-    the version's schema in the manifest this runs no Spark job."""
-    versions, schemas = _read_manifest(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no committed versions under {table_dir}")
-    v = max(versions) if version is None else version
-    if v not in versions:
-        raise KeyError(f"version {v} not in {sorted(versions)}")
-    reader = spark.read
-    if v in schemas:
-        reader = reader.schema(StructType.fromJson(schemas[v]))
-    return reader.parquet(versions[v])
-
-
-def vacuum(table_dir: str, keep_last: int = 2) -> list[int]:
-    """Expire all but the newest ``keep_last`` versions: the manifest is
-    atomically rewritten FIRST (so readers stop resolving the expired
-    versions before any bytes disappear), then the orphaned ``v{N}``
-    directories are removed.  Returns the expired version numbers.
-
-    The order matters for the same reason streaming snapshot reads gate
-    on _SUCCESS: a reader holding the old manifest may still be scanning
-    an expired directory, so production deployments put a grace period
-    between the manifest rewrite and the directory removal (the
-    lakehouse-format vacuum contract); at library scope the two steps
-    run back-to-back and tests pin the visible semantics — retained
-    versions stay readable, expired versions raise KeyError."""
-    import shutil
-
-    versions, schemas = _read_manifest(table_dir)
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    keep = sorted(versions)[-keep_last:]
-    expired = [v for v in sorted(versions) if v not in keep]
-    if not expired:
-        return []
-    _write_manifest(table_dir, {v: versions[v] for v in keep}, schemas)
-    for v in expired:
-        shutil.rmtree(versions[v], ignore_errors=True)
-    return expired
+_LOG = "_log"
+_LEGACY = "_versions.json"
+_DATA_DIR = re.compile(r"v(\d+)-[0-9a-f]{8}")
 
 
 class VersionConflict(RuntimeError):
     """Another writer committed first; rebase on the new head and retry."""
+
+
+def _entry_path(table_dir: str, v: int) -> str:
+    return os.path.join(table_dir, _LOG, f"{v}.json")
+
+
+def _legacy_entries(table_dir: str) -> dict[int, dict]:
+    """A pre-log ``_versions.json`` manifest as log entries; empty if none."""
+    try:
+        with open(os.path.join(table_dir, _LEGACY)) as f:
+            raw = json.load(f)
+    except FileNotFoundError:
+        return {}
+    schemas = raw.get("schemas", {})
+    return {
+        int(k): {"data": d, **({"schema": schemas[k]} if k in schemas else {})}
+        for k, d in raw["versions"].items()
+    }
+
+
+def _versions(table_dir: str) -> list[int]:
+    """Sorted committed version numbers."""
+    try:
+        names = os.listdir(os.path.join(table_dir, _LOG))
+    except FileNotFoundError:
+        names = []
+    logged = {int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit()}
+    return sorted(logged | set(_legacy_entries(table_dir)))
+
+
+def _entry(table_dir: str, v: int) -> dict:
+    try:
+        with open(_entry_path(table_dir, v)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        legacy = _legacy_entries(table_dir)
+        if v in legacy:
+            return legacy[v]
+        versions = _versions(table_dir)
+        if not versions:
+            raise FileNotFoundError(f"no committed versions under {table_dir}") from None
+        raise KeyError(f"version {v} not in {versions}") from None
+
+
+def _put_if_absent(path: str, entry: dict) -> bool:
+    """Create ``path`` holding ``entry`` unless it exists; True if created."""
+    tmp = os.path.join(os.path.dirname(path), f".{os.urandom(8).hex()}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(entry, f)
+    try:
+        os.link(tmp, path)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+
+
+def _convert_legacy(table_dir: str) -> None:
+    """Turn a ``_versions.json`` table into log entries, then delete the
+    manifest.  Put-if-absent, so a rerun after a crash, or a second
+    writer converting at the same time, is harmless."""
+    legacy = _legacy_entries(table_dir)
+    if legacy:
+        os.makedirs(os.path.join(table_dir, _LOG), exist_ok=True)
+        for v, entry in legacy.items():
+            _put_if_absent(_entry_path(table_dir, v), entry)
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(os.path.join(table_dir, _LEGACY))
+
+
+def head_version(table_dir: str) -> int:
+    """The newest committed version, 0 for a table with none."""
+    return max(_versions(table_dir), default=0)
+
+
+def list_versions(table_dir: str) -> dict[int, str]:
+    """Committed versions as {version: data_dir}, empty if none."""
+    return {v: _entry(table_dir, v)["data"] for v in _versions(table_dir)}
 
 
 def commit_version(df: DataFrame, table_dir: str, expected_base: int) -> int:
@@ -145,70 +140,122 @@ def commit_version(df: DataFrame, table_dir: str, expected_base: int) -> int:
     writer got there first; otherwise raise :class:`VersionConflict` so
     the caller re-reads the new head, rebases its change, and retries.
 
-    Atomicity comes from a put-if-absent commit marker: version N+1 is
-    claimed by creating ``_commit_v{N+1}`` with O_CREAT|O_EXCL, which the
-    filesystem guarantees exactly one writer wins (the same primitive
-    Delta Lake uses for its log-entry put-if-absent). The stale-base fast
-    path (head already moved) is checked first so losers usually fail
-    before writing any data; a loser that wrote data discards its orphan
-    directory. The manifest rewrite stays atomic (tmp + os.replace), so
-    readers still never observe a half-commit.
-    """
-    import shutil
-
-    os.makedirs(table_dir, exist_ok=True)
-    versions, schemas = _read_manifest(table_dir)
-    head = max(versions) if versions else 0
+    The stale-base check runs first, so losers usually fail before
+    writing any data.  The data goes to a fresh directory, then the log
+    entry is put-if-absent (module docstring); a writer that loses the
+    put, or whose write fails, removes its own directory."""
+    os.makedirs(os.path.join(table_dir, _LOG), exist_ok=True)
+    _convert_legacy(table_dir)
+    head = head_version(table_dir)
     if head != expected_base:
         raise VersionConflict(
             f"expected base {expected_base}, head is {head}: rebase and retry"
         )
     v = expected_base + 1
-    marker = os.path.join(table_dir, f"_commit_v{v}")
+    data_dir = os.path.join(table_dir, f"v{v}-{os.urandom(4).hex()}")
+    committed = False
     try:
-        fd = os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise VersionConflict(
-            f"version {v} already claimed by another writer: rebase and retry"
-        ) from None
-    os.close(fd)
-    data_dir = os.path.join(table_dir, f"v{v}")
-    try:
-        df.write.mode("overwrite").parquet(data_dir)
+        df.write.parquet(data_dir)
         if not os.path.exists(os.path.join(data_dir, "_SUCCESS")):
             raise RuntimeError(f"parquet commit missing _SUCCESS: {data_dir}")
-    except BaseException:
-        shutil.rmtree(data_dir, ignore_errors=True)
-        os.unlink(marker)
-        raise
-    versions[v], schemas[v] = data_dir, df.schema.jsonValue()
-    _write_manifest(table_dir, versions, schemas)
+        committed = _put_if_absent(
+            _entry_path(table_dir, v), {"data": data_dir, "schema": df.schema.jsonValue()}
+        )
+    finally:
+        if not committed:
+            shutil.rmtree(data_dir, ignore_errors=True)
+    if not committed:
+        raise VersionConflict(
+            f"version {v} committed by another writer: rebase and retry"
+        )
     return v
+
+
+def write_version(df: DataFrame, table_dir: str) -> int:
+    """Commit ``df`` as the next version of the table; returns the version
+    number.  A writer that commits that version first makes this raise
+    :class:`VersionConflict`; a committed version is never replaced."""
+    return commit_version(df, table_dir, head_version(table_dir))
+
+
+def read_version(
+    spark: SparkSession, table_dir: str, version: int | None = None
+) -> DataFrame:
+    """Read the table as of ``version`` (default: latest committed).  With
+    the version's schema in its entry this runs no Spark job."""
+    if version is None:
+        version = head_version(table_dir)
+        if not version:
+            raise FileNotFoundError(f"no committed versions under {table_dir}")
+    entry = _entry(table_dir, version)
+    reader = spark.read
+    if "schema" in entry:
+        reader = reader.schema(StructType.fromJson(entry["schema"]))
+    return reader.parquet(entry["data"])
+
+
+def vacuum(table_dir: str, keep_last: int = 2) -> list[int]:
+    """Expire all but the newest ``keep_last`` versions: their entries are
+    unlinked FIRST (so readers stop resolving them before any bytes
+    disappear), then their directories are removed.  Also removes the
+    ``v{N}-*`` directories with N at or below the head that no entry
+    references: they belong to writers that lost or died, and can never
+    commit.  A directory above the head may belong to a writer still in
+    flight, so it stays.  Returns the expired version numbers.
+
+    A reader that resolved an expired version may still be scanning it,
+    so production deployments put a grace period between the unlink and
+    the directory removal (the lakehouse-format vacuum contract); at
+    library scope the two steps run back-to-back and tests pin the
+    visible semantics — retained versions stay readable, expired versions
+    raise KeyError."""
+    if keep_last < 1:
+        raise ValueError("keep_last must be >= 1")
+    _convert_legacy(table_dir)
+    versions = _versions(table_dir)
+    if not versions:
+        return []
+    expired, kept = versions[:-keep_last], versions[-keep_last:]
+    dead = [_entry(table_dir, v)["data"] for v in expired]
+    for v in expired:
+        os.unlink(_entry_path(table_dir, v))
+    live = {os.path.realpath(_entry(table_dir, v)["data"]) for v in kept}
+    for name in os.listdir(table_dir):
+        m = _DATA_DIR.fullmatch(name)
+        if m and int(m.group(1)) <= kept[-1]:
+            dead.append(os.path.join(table_dir, name))
+    for d in dead:
+        if os.path.realpath(d) not in live:
+            shutil.rmtree(d, ignore_errors=True)
+    return expired
 
 
 def clone_table(src_table: str, dst_table: str) -> int:
     """Zero-copy shallow clone (Delta SHALLOW CLONE semantics): the clone's
-    manifest REFERENCES the source's immutable version directories — no
-    data bytes are copied, so cloning a petabyte table is one JSON write.
-    After the clone, commits to either table diverge independently (each
-    table's new versions land under its own directory; the shared history
-    stays shared).
+    entries REFERENCE the source's immutable version directories — no
+    data bytes are copied, so cloning a petabyte table writes one small
+    entry per version.  After the clone, commits to either table diverge
+    independently (each table's new versions land under its own
+    directory; the shared history stays shared).
 
     Caveat (same as the lakehouse formats'): vacuuming the SOURCE can
     remove directories the clone still references — production deployments
     either track cross-table references or deep-copy on vacuum. At library
     scope the contract is documented and tests pin the visible semantics.
     """
-    versions, schemas = _read_manifest(src_table)
+    _convert_legacy(src_table)
+    versions = _versions(src_table)
     if not versions:
         raise FileNotFoundError(f"no committed versions under {src_table}")
-    if list_versions(dst_table):
+    if _versions(dst_table):
         raise FileExistsError(f"clone target {dst_table} already has versions")
-    os.makedirs(dst_table, exist_ok=True)
-    _write_manifest(
-        dst_table, {k: os.path.abspath(p) for k, p in versions.items()}, schemas
-    )
-    return max(versions)
+    os.makedirs(os.path.join(dst_table, _LOG), exist_ok=True)
+    for v in versions:
+        entry = _entry(src_table, v)
+        entry["data"] = os.path.abspath(entry["data"])
+        if not _put_if_absent(_entry_path(dst_table, v), entry):
+            raise FileExistsError(f"clone target {dst_table} already has versions")
+    return versions[-1]
 
 
 def read_changes(

@@ -28,7 +28,7 @@ def test_incremental_update_matches_full_rebuild(spark, sf_dir, tmp_path):
     write_monthly_bars(old, path)
     before = {r.month for r in spark.read.parquet(path).select("month").distinct().collect()}
 
-    n = update_monthly_bars(spark, prices, late, path)
+    n = update_monthly_bars(prices, late, path)
     assert n == n_late_months
 
     got = spark.read.parquet(path)
@@ -110,7 +110,7 @@ def test_partition_overwrites_leave_session_conf_alone(spark, sf_dir, tmp_path, 
     prices = prices_from_lineitem(spark, sf_dir)
     bars = str(tmp_path / "bars")
     write_monthly_bars(prices.where(F.col("date") < 19970101), bars)
-    assert update_monthly_bars(spark, prices, prices.where(F.col("date") >= 19970101), bars) > 0
+    assert update_monthly_bars(prices, prices.where(F.col("date") >= 19970101), bars) > 0
 
     agg = str(tmp_path / "agg")
     rows = spark.createDataFrame([(1, 10, 2, 100), (3, 20, 3, 300)], "g int, p int, n bigint, s bigint")

@@ -265,7 +265,7 @@ def test_pq_codes_dense_and_complete(spark, sf_dir):
         PQ_M,
         _normalized,
         pq_codebook,
-        pq_encode,
+        pq_encode_arrow,
         pq_train,
     )
     from findb_spark.session import load_table
@@ -274,7 +274,7 @@ def test_pq_codes_dense_and_complete(spark, sf_dir):
     nv = _normalized(emb)
     cbw = pq_train(nv, pq_codebook(emb))
     assert cbw.count() == PQ_K
-    codes = pq_encode(nv, cbw)
+    codes = pq_encode_arrow(nv, cbw)
     assert codes.count() == emb.count()
     bounds = codes.agg(
         *[F.min(f"c{m}").alias(f"lo{m}") for m in range(PQ_M)],
@@ -392,12 +392,11 @@ def test_pq_train_raw_and_normalized_inputs_bit_equal(spark, sf_dir):
 
 
 def test_pq_encode_kernels_bit_equal(spark, sf_dir):
-    """The three PQ encode formulations must agree BIT-FOR-BIT: the
-    fxp_l2_sub Column form (the executable spec — crossJoin against the
-    broadcast codebook + composite min aggregate), the literal-codebook
-    SQL kernel (pq_encode, the narrow zero-shuffle default), and the
-    numpy-over-Arrow kernel (pq_encode_arrow, the high-throughput path).
-    Same IEEE-754 double ops + exact int64 sums on all three, so any
+    """The numpy-over-Arrow encode kernel (pq_encode_arrow) must agree
+    BIT-FOR-BIT with the fxp_l2_sub Column form (the executable spec —
+    crossJoin against the broadcast codebook + composite min aggregate),
+    both on normalized input and with normalization fused into the
+    kernel.  Same IEEE-754 double ops + exact int64 sums on both, so any
     divergence is a kernel bug, not noise."""
     from pyspark.sql import functions as F
 
@@ -406,7 +405,6 @@ def test_pq_encode_kernels_bit_equal(spark, sf_dir):
         _normalized,
         fxp_l2_sub,
         pq_codebook,
-        pq_encode,
         pq_encode_arrow,
         pq_train,
     )
@@ -434,10 +432,6 @@ def test_pq_encode_kernels_bit_equal(spark, sf_dir):
         r["vec_id"]: tuple(r[f"d{m}"] % 128 for m in range(PQ_M))
         for r in agg.collect()
     }
-    sql_k = {
-        r["vec_id"]: tuple(r[f"c{m}"] for m in range(PQ_M))
-        for r in pq_encode(nv, cb_rows).collect()
-    }
     arrow_k = {
         r["vec_id"]: tuple(r[f"c{m}"] for m in range(PQ_M))
         for r in pq_encode_arrow(nv, cb_rows).collect()
@@ -451,7 +445,6 @@ def test_pq_encode_kernels_bit_equal(spark, sf_dir):
             emb.select("vec_id", "embedding"), cb_rows, normalize=True
         ).collect()
     }
-    assert spec == sql_k
     assert spec == arrow_k
     assert spec == arrow_fused
 
@@ -496,19 +489,6 @@ def test_string_built_fxp_kernels_bit_equal_to_dsl(spark, sf_dir):
     assert rows.dot == 0
     assert rows.nrm == 0.0
     assert rows.cos == 0.0
-
-
-def test_pq_adc_kernels_agree_end_to_end(spark, sf_dir):
-    """The full ADC top-k must be IDENTICAL under both corpus-encode
-    kernels (kernel='arrow' default vs kernel='sql') — same codes, same
-    integer ADC distances, same ranking."""
-    from findb_spark.ops.vector import pq_adc_topk
-    from findb_spark.session import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    a = sorted(map(tuple, pq_adc_topk(emb, k=20, kernel="arrow").collect()))
-    s = sorted(map(tuple, pq_adc_topk(emb, k=20, kernel="sql").collect()))
-    assert a == s
 
 
 def test_local_relation_df(spark):

@@ -235,9 +235,9 @@ def test_stream_merge_snapshot_matches_batch_latest(spark, sf_dir, tmp_path):
 
     from findb_spark.streaming.events_stream import (
         read_events_stream,
-        read_merge_snapshot,
         stream_merge_snapshot,
     )
+    from findb_spark.versioning import read_version
 
     snap, ckpt = str(tmp_path / "snap"), str(tmp_path / "ckpt")
     cols = ["event_id", "ts", "user_id", "event_type", "value"]
@@ -255,7 +255,7 @@ def test_stream_merge_snapshot_matches_batch_latest(spark, sf_dir, tmp_path):
         .drop("_rn")
         .collect()
     }
-    got = {tuple(r) for r in read_merge_snapshot(spark, snap).collect()}
+    got = {tuple(r) for r in read_version(spark, snap).collect()}
     assert got == want and len(got) > 0
 
     versions_before = sorted(os.listdir(snap))
@@ -265,24 +265,88 @@ def test_stream_merge_snapshot_matches_batch_latest(spark, sf_dir, tmp_path):
 
 
 def test_merge_snapshot_time_travel(spark, sf_dir, tmp_path):
-    """Every epoch's snapshot is retained: reading version 0 must reproduce
-    the historical state, and an unknown version must raise."""
+    """Every epoch's snapshot is retained: reading epoch 0's version (1)
+    must reproduce the historical state, and an unknown version must
+    raise."""
     import pytest
 
     from findb_spark.streaming.events_stream import (
         read_events_stream,
-        read_merge_snapshot,
         stream_merge_snapshot,
     )
+    from findb_spark.versioning import read_version
 
     snap, ckpt = str(tmp_path / "snap"), str(tmp_path / "ckpt")
     stream = read_events_stream(spark, sf_dir).select("event_id", "user_id", "value")
     stream_merge_snapshot(stream, snap, ckpt, order_cols=("event_id",))
-    latest = read_merge_snapshot(spark, snap)
-    v0 = read_merge_snapshot(spark, snap, version=0)
+    latest = read_version(spark, snap)
+    v0 = read_version(spark, snap, version=1)
     assert v0.count() == latest.count() > 0
-    with pytest.raises(ValueError):
-        read_merge_snapshot(spark, snap, version=99)
+    with pytest.raises(KeyError):
+        read_version(spark, snap, version=99)
+
+
+def test_merge_snapshot_replayed_epoch_is_not_rewritten(spark, sf_dir, tmp_path):
+    """A crash after an epoch's snapshot commit but before the checkpoint's
+    commit replays the epoch.  The replay must add no version and leave
+    the committed snapshot's files untouched (same names, same mtimes)."""
+    import os
+
+    from findb_spark.streaming.events_stream import (
+        read_events_stream,
+        stream_merge_snapshot,
+    )
+    from findb_spark.versioning import list_versions
+
+    def files(root):
+        return {
+            os.path.relpath(os.path.join(d, n), root): os.stat(os.path.join(d, n)).st_mtime_ns
+            for d, _, names in os.walk(root)
+            for n in names
+        }
+
+    snap, ckpt = str(tmp_path / "snap"), str(tmp_path / "ckpt")
+    cols = ["event_id", "user_id", "value"]
+    stream_merge_snapshot(
+        read_events_stream(spark, sf_dir).select(*cols), snap, ckpt,
+        order_cols=("event_id",),
+    )
+    before, versions = files(snap), list_versions(snap)
+    commits = os.path.join(ckpt, "commits")
+    last = max((n for n in os.listdir(commits) if n.isdigit()), key=int)
+    for name in (last, f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    stream_merge_snapshot(
+        read_events_stream(spark, sf_dir).select(*cols), snap, ckpt,
+        order_cols=("event_id",),
+    )
+    assert files(snap) == before
+    assert list_versions(snap) == versions and versions
+
+
+def test_merge_snapshot_epoch_gap_raises(spark, tmp_path):
+    """An epoch that does not follow the snapshot table's head (here a
+    checkpoint at epoch 1 against an empty table) must raise instead of
+    committing a snapshot merged against a missing baseline."""
+    import pytest
+
+    from findb_spark.streaming.events_stream import stream_merge_snapshot
+    from findb_spark.versioning import list_versions
+
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    schema = "user_id bigint, ts bigint, event_id bigint"
+    spark.createDataFrame([(1, 10, 1)], schema).write.parquet(f"{src}/b0")
+    stream_merge_snapshot(
+        spark.readStream.schema(schema).parquet(f"{src}/*"), str(tmp_path / "a"), ckpt
+    )
+    assert sorted(list_versions(str(tmp_path / "a"))) == [1]
+    spark.createDataFrame([(1, 20, 2)], schema).write.parquet(f"{src}/b1")
+    with pytest.raises(Exception, match="does not follow version 0"):
+        stream_merge_snapshot(
+            spark.readStream.schema(schema).parquet(f"{src}/*"), str(tmp_path / "b"), ckpt
+        )
+    assert list_versions(str(tmp_path / "b")) == {}
 
 
 def test_stateful_transition_stream_matches_batch(spark, stream, batch_events):
@@ -360,35 +424,35 @@ def test_stream_dq_monitor_reconciles_with_batch(spark, sf_dir, tmp_path):
 
 
 def test_merge_snapshot_ignores_torn_uncommitted_version(spark, sf_dir, tmp_path):
-    """A v=N directory without the committer's _SUCCESS marker (crash
-    mid-write) must be invisible to both the reader and the writer's
-    baseline pick — readers never observe a torn snapshot."""
+    """A version data directory without a log entry (crash mid-write)
+    must be invisible to both the reader and the writer's baseline pick
+    — readers never observe a torn snapshot."""
     import os
 
     import pytest
 
     from findb_spark.streaming.events_stream import (
         read_events_stream,
-        read_merge_snapshot,
         stream_merge_snapshot,
     )
+    from findb_spark.versioning import read_version
 
     snap, ckpt = str(tmp_path / "snap"), str(tmp_path / "ckpt")
     stream = read_events_stream(spark, sf_dir).select(
         "event_id", "user_id", "event_type", "ts"
     )
     stream_merge_snapshot(stream, snap, ckpt, order_cols=("event_id",))
-    committed = read_merge_snapshot(spark, snap).count()
+    committed = read_version(spark, snap).count()
     assert committed > 0
 
     # simulate a crash mid-write: a newer version dir with data but no marker
-    torn = os.path.join(snap, "v=999")
+    torn = os.path.join(snap, "v999-0badc0de")
     os.makedirs(torn)
     with open(os.path.join(torn, "part-00000.parquet"), "wb") as f:
         f.write(b"\x00not a complete parquet file")
-    assert read_merge_snapshot(spark, snap).count() == committed
-    with pytest.raises(ValueError):
-        read_merge_snapshot(spark, snap, version=999)
+    assert read_version(spark, snap).count() == committed
+    with pytest.raises(KeyError):
+        read_version(spark, snap, version=999)
 
 
 def test_watermark_replay_drops_late_rows(spark, sf_dir):

@@ -157,27 +157,29 @@ def test_occ_stale_base_conflicts_then_rebases(spark, tmp_path):
     assert sorted(r.id for r in read_version(spark, table, 2).collect()) == [1, 2]
 
 
-def test_occ_marker_claim_is_put_if_absent(spark, tmp_path):
-    """Even with a matching manifest head, a pre-existing commit marker
-    (a racer that claimed the slot but hasn't published yet) must lose
-    the CAS — the O_EXCL guarantee the whole contract rests on."""
-    import os
-
+def test_occ_marker_claim_is_put_if_absent(spark, tmp_path, monkeypatch):
+    """Even with a matching head when it started, a commit must lose the
+    CAS when a racer publishes the same version first — the put-if-absent
+    guarantee the whole contract rests on."""
     import pytest as _pt
 
     from findb_spark.versioning import VersionConflict, commit_version, write_version
 
     table = str(tmp_path / "t")
-    df = spark.createDataFrame([(1,)], "id bigint")
-    write_version(df, table)
-    open(os.path.join(table, "_commit_v2"), "w").close()  # racer's claim
+    write_version(_df(spark, [(1, "a")]), table)
+    finish = _paused_commit(
+        monkeypatch, lambda: commit_version(_df(spark, [(2, "ours")]), table, 1)
+    )
+    # the racer publishes v2 after our head read
+    assert commit_version(_df(spark, [(3, "racer")]), table, expected_base=1) == 2
     with _pt.raises(VersionConflict):
-        commit_version(df, table, expected_base=1)
+        finish()
+    assert [r.v for r in read_version(spark, table, 2).collect()] == ["racer"]
 
 
 def test_occ_failed_write_releases_claim(spark, tmp_path, monkeypatch):
-    """If the data write blows up after the marker is claimed, the marker
-    and orphan directory are cleaned up so a retry can claim the slot."""
+    """If the data write blows up, no entry is published and the partial
+    directory is removed, so a retry gets the version."""
     import os
 
     import pytest as _pt
@@ -195,13 +197,16 @@ def test_occ_failed_write_releases_claim(spark, tmp_path, monkeypatch):
     orig = type(bad.write).parquet
 
     def explode(self, path):
+        os.makedirs(path)
+        open(os.path.join(path, "part-00000.parquet"), "wb").close()
         raise Boom()
 
     monkeypatch.setattr(type(bad.write), "parquet", explode)
     with _pt.raises(Boom):
         commit_version(bad, table, expected_base=1)
     monkeypatch.setattr(type(bad.write), "parquet", orig)
-    assert not os.path.exists(os.path.join(table, "_commit_v2"))
+    assert not os.path.exists(os.path.join(table, "_log", "2.json"))
+    assert not [d for d in os.listdir(table) if d.startswith("v2")]
     assert commit_version(bad, table, expected_base=1) == 2
 
 
@@ -234,15 +239,21 @@ def test_shallow_clone_zero_copy_and_divergence(spark, tmp_path):
         clone_table(src, dst)
 
 
-# ---- the committed schema in the manifest --------------------------------
+# ---- the committed schema in the log entry -------------------------------
 
 
 def _manifest(table):
+    """{version: log entry} of a versioned table."""
     import json
     import os
 
-    with open(os.path.join(table, "_versions.json")) as f:
-        return json.load(f)
+    log = os.path.join(table, "_log")
+    out = {}
+    for name in os.listdir(log):
+        if name.endswith(".json"):
+            with open(os.path.join(log, name)) as f:
+                out[int(name[:-5])] = json.load(f)
+    return out
 
 
 def test_read_version_runs_no_job(spark, tmp_path, count_jobs):
@@ -260,8 +271,10 @@ def test_read_version_runs_no_job(spark, tmp_path, count_jobs):
 
 
 def test_old_format_manifest_still_reads(spark, tmp_path):
-    """A manifest without the schemas field reads through inference, and
-    the next commit records a schema for its own version only."""
+    """A pre-log ``_versions.json`` manifest without the schemas field
+    reads through inference; the next commit converts it into log
+    entries, records a schema for its own version only, and deletes the
+    old manifest."""
     import json
 
     t = tmp_path / "t"
@@ -270,7 +283,9 @@ def test_old_format_manifest_still_reads(spark, tmp_path):
     (t / "_versions.json").write_text(json.dumps({"versions": {"1": data}}))
     assert sorted(r.v for r in read_version(spark, str(t)).collect()) == ["a", "b"]
     assert write_version(_df(spark, [(3, "c")]), str(t)) == 2
-    assert sorted(_manifest(str(t))["schemas"]) == ["2"]
+    m = _manifest(str(t))
+    assert sorted(m) == [1, 2] and "schema" not in m[1] and "schema" in m[2]
+    assert not (t / "_versions.json").exists()
     assert sorted(r.v for r in read_version(spark, str(t), 1).collect()) == ["a", "b"]
     assert [r.k for r in read_version(spark, str(t)).collect()] == [3]
 
@@ -281,11 +296,177 @@ def test_vacuum_and_clone_keep_retained_schemas(spark, tmp_path, count_jobs):
     src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
     for i in range(1, 5):
         write_version(_df(spark, [(i, f"v{i}")]), src)
-    before = _manifest(src)["schemas"]
-    assert sorted(before) == ["1", "2", "3", "4"]
+    def schemas(t):
+        return {v: e["schema"] for v, e in _manifest(t).items()}
+
+    before = schemas(src)
+    assert sorted(before) == [1, 2, 3, 4]
     assert vacuum(src, keep_last=2) == [1, 2]
-    assert _manifest(src)["schemas"] == {k: before[k] for k in ("3", "4")}
+    assert schemas(src) == {k: before[k] for k in (3, 4)}
     clone_table(src, dst)
-    assert _manifest(dst)["schemas"] == _manifest(src)["schemas"]
+    assert schemas(dst) == schemas(src)
     df, jobs = count_jobs(lambda: read_version(spark, dst, 3))
     assert jobs == 0 and [r.v for r in df.collect()] == ["v3"]
+
+
+# ---- one put-if-absent log: killed and racing writers ---------------------
+
+
+def _paused_commit(monkeypatch, fn):
+    """Run ``fn`` on a thread that pauses once its parquet data write is
+    done, before it can commit.  Returns ``finish()``, which lets the
+    thread go on and returns ``fn``'s result or raises its error."""
+    import threading
+
+    from pyspark.sql import DataFrameWriter
+
+    write = DataFrameWriter.parquet
+    written, go, out = threading.Event(), threading.Event(), {}
+
+    def parquet(self, path, *args, **kwargs):
+        write(self, path, *args, **kwargs)
+        if threading.current_thread() is worker:
+            written.set()
+            go.wait(60)
+
+    def run():
+        try:
+            out["result"] = fn()
+        except Exception as e:
+            out["error"] = e
+        finally:
+            written.set()
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    worker = threading.Thread(target=run)
+    worker.start()
+    assert written.wait(60)
+
+    def finish():
+        go.set()
+        worker.join(60)
+        assert not worker.is_alive()
+        if "error" in out:
+            raise out["error"]
+        return out["result"]
+
+    return finish
+
+
+def test_killed_writer_does_not_wedge_the_table(spark, tmp_path, monkeypatch):
+    """A writer killed inside its data write runs no cleanup.  The table
+    must stay writable on the same base, and vacuum removes the dead
+    writer's directory."""
+    import os
+    import shutil
+
+    from pyspark.sql import DataFrameWriter
+
+    from findb_spark.versioning import commit_version, vacuum
+
+    class Killed(BaseException):
+        pass
+
+    def die(self, path, *args, **kwargs):
+        os.makedirs(path)
+        open(os.path.join(path, "part-00000.parquet"), "wb").close()
+        raise Killed()
+
+    t = str(tmp_path / "t")
+    write_version(_df(spark, [(1, "a")]), t)
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", die)
+        m.setattr(os, "unlink", lambda *a, **k: None)
+        m.setattr(shutil, "rmtree", lambda *a, **k: None)
+        with pytest.raises(Killed):
+            commit_version(_df(spark, [(2, "b")]), t, expected_base=1)
+    assert commit_version(_df(spark, [(2, "b")]), t, expected_base=1) == 2
+    assert [r.v for r in read_version(spark, t).collect()] == ["b"]
+    assert vacuum(t, keep_last=2) == []
+    data = sorted(os.path.basename(p) for p in list_versions(t).values())
+    assert sorted(os.listdir(t)) == ["_log", *data]
+
+
+def test_write_version_racing_a_commit_cannot_both_win(spark, tmp_path, monkeypatch):
+    """write_version and commit_version racing for version 2: exactly one
+    gets it, the other raises, and version 2 holds the winner's rows."""
+    from findb_spark.versioning import VersionConflict, commit_version
+
+    t = str(tmp_path / "t")
+    write_version(_df(spark, [(1, "a")]), t)
+    finish = _paused_commit(
+        monkeypatch, lambda: commit_version(_df(spark, [(2, "paused")]), t, 1)
+    )
+    outcome = {}
+    for name, call in (
+        ("racer", lambda: write_version(_df(spark, [(3, "racer")]), t)),
+        ("paused", finish),
+    ):
+        try:
+            outcome[name] = call()
+        except VersionConflict:
+            outcome[name] = None
+    winners = [name for name, v in outcome.items() if v == 2]
+    assert len(winners) == 1 and None in outcome.values(), outcome
+    assert [r.v for r in read_version(spark, t, 2).collect()] == winners
+    assert sorted(list_versions(t)) == [1, 2]
+
+
+def test_vacuum_during_a_commit_loses_neither(spark, tmp_path, monkeypatch):
+    """vacuum while a commit on base 3 has written its data but not yet
+    committed: the expired version stays gone, the commit lands, and every
+    listed version reads."""
+    from findb_spark.versioning import commit_version, vacuum
+
+    t = str(tmp_path / "t")
+    for i in range(1, 4):
+        write_version(_df(spark, [(i, f"v{i}")]), t)
+    finish = _paused_commit(
+        monkeypatch, lambda: commit_version(_df(spark, [(4, "v4")]), t, 3)
+    )
+    assert vacuum(t, keep_last=2) == [1]
+    assert finish() == 4
+    assert sorted(list_versions(t)) == [2, 3, 4]
+    for v in (2, 3, 4):
+        assert [r.v for r in read_version(spark, t, v).collect()] == [f"v{v}"]
+
+
+def test_concurrent_writers_each_commit_exactly_once(spark, tmp_path):
+    """More writers than cores, each calling write_version and retrying on
+    VersionConflict until it commits: every writer lands in exactly one
+    version, and no version is lost or shared."""
+    import sys
+    import threading
+
+    from findb_spark.versioning import VersionConflict
+
+    t = str(tmp_path / "t")
+    n = 5
+    won, errors = {}, []
+
+    def writer(i):
+        try:
+            while True:
+                try:
+                    won[i] = write_version(_df(spark, [(i, f"w{i}")]), t)
+                    return
+                except VersionConflict:
+                    pass
+        except Exception as e:
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=writer, args=(i,)) for i in range(n)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not errors and not any(th.is_alive() for th in threads)
+    assert sorted(won.values()) == list(range(1, n + 1))
+    assert sorted(list_versions(t)) == list(range(1, n + 1))
+    for i, v in won.items():
+        assert [r.k for r in read_version(spark, t, v).collect()] == [i]
