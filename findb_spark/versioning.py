@@ -17,9 +17,12 @@ appears whole or not at all: the entry IS the commit.  A loser removes
 its data directory and raises :class:`VersionConflict`.  A writer killed
 before the link leaves only an unreferenced data directory, which
 :func:`vacuum` removes; one killed after it has committed.  Nothing is
-ever rewritten in place, so no reader sees a half commit.  The commit
-relies on POSIX ``link`` semantics, so the table must live on a local or
-mounted file system, not on an object store.
+ever rewritten in place, so no reader sees a half commit, and no name is
+ever freed: :func:`vacuum` replaces an expired entry with the tombstone
+``{"expired": true}``, so no version number is committed twice, not even
+by a writer that passed its stale-base check before the version expired.
+The commit relies on POSIX ``link`` semantics, so the table must live on
+a local or mounted file system, not on an object store.
 
 Readers list ``_log/`` and parse only the entry they resolve.  The
 recorded schema goes to ``spark.read.schema``, so resolving a version
@@ -49,6 +52,7 @@ from pyspark.sql.types import StructType
 _LOG = "_log"
 _LEGACY = "_versions.json"
 _DATA_DIR = re.compile(r"v(\d+)-[0-9a-f]{8}")
+_EXPIRED = {"expired": True}
 
 
 class VersionConflict(RuntimeError):
@@ -73,35 +77,58 @@ def _legacy_entries(table_dir: str) -> dict[int, dict]:
     }
 
 
-def _versions(table_dir: str) -> list[int]:
-    """Sorted committed version numbers."""
+def _taken(table_dir: str) -> tuple[dict[int, dict], list[int]]:
+    """The legacy manifest's entries, and every version number ever
+    committed, expired ones included.  The manifest is read before the log
+    is listed: conversion links the entries before it deletes the
+    manifest, so each version shows up in one of the two."""
+    legacy = _legacy_entries(table_dir)
     try:
         names = os.listdir(os.path.join(table_dir, _LOG))
     except FileNotFoundError:
         names = []
     logged = {int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit()}
-    return sorted(logged | set(_legacy_entries(table_dir)))
+    return legacy, sorted(logged | set(legacy))
+
+
+def _read(table_dir: str, v: int, legacy: dict[int, dict]) -> dict | None:
+    """Version ``v``'s entry; None if it was never committed or has expired."""
+    try:
+        with open(_entry_path(table_dir, v)) as f:
+            entry = json.load(f)
+    except FileNotFoundError:
+        entry = legacy.get(v)
+    return None if entry is None or entry.get("expired") else entry
+
+
+def _live(table_dir: str) -> dict[int, dict]:
+    """{version: entry} of the committed versions that have not expired."""
+    legacy, taken = _taken(table_dir)
+    entries = {v: _read(table_dir, v, legacy) for v in taken}
+    return {v: e for v, e in entries.items() if e is not None}
 
 
 def _entry(table_dir: str, v: int) -> dict:
-    try:
-        with open(_entry_path(table_dir, v)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        legacy = _legacy_entries(table_dir)
-        if v in legacy:
-            return legacy[v]
-        versions = _versions(table_dir)
-        if not versions:
-            raise FileNotFoundError(f"no committed versions under {table_dir}") from None
-        raise KeyError(f"version {v} not in {versions}") from None
+    entry = _read(table_dir, v, _legacy_entries(table_dir))
+    if entry is None:
+        live = sorted(_live(table_dir))
+        if not live:
+            raise FileNotFoundError(f"no committed versions under {table_dir}")
+        raise KeyError(f"version {v} not in {live}")
+    return entry
+
+
+def _staged(path: str, entry: dict) -> str:
+    """Write ``entry`` to a fresh temporary file beside ``path``."""
+    tmp = os.path.join(os.path.dirname(path), f".{os.urandom(8).hex()}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(entry, f)
+    return tmp
 
 
 def _put_if_absent(path: str, entry: dict) -> bool:
     """Create ``path`` holding ``entry`` unless it exists; True if created."""
-    tmp = os.path.join(os.path.dirname(path), f".{os.urandom(8).hex()}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(entry, f)
+    tmp = _staged(path, entry)
     try:
         os.link(tmp, path)
         return True
@@ -126,12 +153,12 @@ def _convert_legacy(table_dir: str) -> None:
 
 def head_version(table_dir: str) -> int:
     """The newest committed version, 0 for a table with none."""
-    return max(_versions(table_dir), default=0)
+    return max(_taken(table_dir)[1], default=0)
 
 
 def list_versions(table_dir: str) -> dict[int, str]:
     """Committed versions as {version: data_dir}, empty if none."""
-    return {v: _entry(table_dir, v)["data"] for v in _versions(table_dir)}
+    return {v: e["data"] for v, e in _live(table_dir).items()}
 
 
 def commit_version(df: DataFrame, table_dir: str, expected_base: int) -> int:
@@ -143,7 +170,9 @@ def commit_version(df: DataFrame, table_dir: str, expected_base: int) -> int:
     The stale-base check runs first, so losers usually fail before
     writing any data.  The data goes to a fresh directory, then the log
     entry is put-if-absent (module docstring); a writer that loses the
-    put, or whose write fails, removes its own directory."""
+    put, or whose write fails, removes its own directory.  A write that
+    fails after another writer took the version is a lost race: vacuum
+    may have removed the directory under it."""
     os.makedirs(os.path.join(table_dir, _LOG), exist_ok=True)
     _convert_legacy(table_dir)
     head = head_version(table_dir)
@@ -152,15 +181,17 @@ def commit_version(df: DataFrame, table_dir: str, expected_base: int) -> int:
             f"expected base {expected_base}, head is {head}: rebase and retry"
         )
     v = expected_base + 1
+    path = _entry_path(table_dir, v)
     data_dir = os.path.join(table_dir, f"v{v}-{os.urandom(4).hex()}")
     committed = False
     try:
         df.write.parquet(data_dir)
         if not os.path.exists(os.path.join(data_dir, "_SUCCESS")):
             raise RuntimeError(f"parquet commit missing _SUCCESS: {data_dir}")
-        committed = _put_if_absent(
-            _entry_path(table_dir, v), {"data": data_dir, "schema": df.schema.jsonValue()}
-        )
+        committed = _put_if_absent(path, {"data": data_dir, "schema": df.schema.jsonValue()})
+    except Exception:
+        if not os.path.exists(path):
+            raise
     finally:
         if not committed:
             shutil.rmtree(data_dir, ignore_errors=True)
@@ -195,37 +226,41 @@ def read_version(
 
 
 def vacuum(table_dir: str, keep_last: int = 2) -> list[int]:
-    """Expire all but the newest ``keep_last`` versions: their entries are
-    unlinked FIRST (so readers stop resolving them before any bytes
-    disappear), then their directories are removed.  Also removes the
-    ``v{N}-*`` directories with N at or below the head that no entry
-    references: they belong to writers that lost or died, and can never
-    commit.  A directory above the head may belong to a writer still in
-    flight, so it stays.  Returns the expired version numbers.
+    """Expire all but the newest ``keep_last`` versions: each expired
+    entry is replaced by a tombstone FIRST (so readers stop resolving it
+    before any bytes disappear, and its number stays taken: a writer whose
+    base went stale mid-write still loses the put), then its directory is
+    removed.  Also removes the ``v{N}-*`` directories with N at or below
+    the head that no entry references: they belong to writers that lost
+    or died, and can never commit.  A directory above the head may belong
+    to a writer still in flight, so it stays.  Returns the expired version
+    numbers.
 
     A reader that resolved an expired version may still be scanning it,
-    so production deployments put a grace period between the unlink and
-    the directory removal (the lakehouse-format vacuum contract); at
+    so production deployments put a grace period between the tombstone
+    and the directory removal (the lakehouse-format vacuum contract); at
     library scope the two steps run back-to-back and tests pin the
     visible semantics — retained versions stay readable, expired versions
     raise KeyError."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     _convert_legacy(table_dir)
-    versions = _versions(table_dir)
-    if not versions:
+    live = _live(table_dir)
+    if not live:
         return []
+    versions = sorted(live)
     expired, kept = versions[:-keep_last], versions[-keep_last:]
-    dead = [_entry(table_dir, v)["data"] for v in expired]
     for v in expired:
-        os.unlink(_entry_path(table_dir, v))
-    live = {os.path.realpath(_entry(table_dir, v)["data"]) for v in kept}
+        path = _entry_path(table_dir, v)
+        os.replace(_staged(path, _EXPIRED), path)
+    keep = {os.path.realpath(live[v]["data"]) for v in kept}
+    dead = [live[v]["data"] for v in expired]
     for name in os.listdir(table_dir):
         m = _DATA_DIR.fullmatch(name)
         if m and int(m.group(1)) <= kept[-1]:
             dead.append(os.path.join(table_dir, name))
     for d in dead:
-        if os.path.realpath(d) not in live:
+        if os.path.realpath(d) not in keep:
             shutil.rmtree(d, ignore_errors=True)
     return expired
 
@@ -234,9 +269,11 @@ def clone_table(src_table: str, dst_table: str) -> int:
     """Zero-copy shallow clone (Delta SHALLOW CLONE semantics): the clone's
     entries REFERENCE the source's immutable version directories — no
     data bytes are copied, so cloning a petabyte table writes one small
-    entry per version.  After the clone, commits to either table diverge
-    independently (each table's new versions land under its own
-    directory; the shared history stays shared).
+    entry per version.  Expired versions are cloned as tombstones, so the
+    clone's numbers are taken exactly as the source's are.  After the
+    clone, commits to either table diverge independently (each table's new
+    versions land under its own directory; the shared history stays
+    shared).
 
     Caveat (same as the lakehouse formats'): vacuuming the SOURCE can
     remove directories the clone still references — production deployments
@@ -244,18 +281,19 @@ def clone_table(src_table: str, dst_table: str) -> int:
     scope the contract is documented and tests pin the visible semantics.
     """
     _convert_legacy(src_table)
-    versions = _versions(src_table)
-    if not versions:
+    live = _live(src_table)
+    if not live:
         raise FileNotFoundError(f"no committed versions under {src_table}")
-    if _versions(dst_table):
+    if _taken(dst_table)[1]:
         raise FileExistsError(f"clone target {dst_table} already has versions")
     os.makedirs(os.path.join(dst_table, _LOG), exist_ok=True)
-    for v in versions:
-        entry = _entry(src_table, v)
-        entry["data"] = os.path.abspath(entry["data"])
+    for v in range(1, max(live) + 1):
+        entry = _EXPIRED
+        if v in live:
+            entry = {**live[v], "data": os.path.abspath(live[v]["data"])}
         if not _put_if_absent(_entry_path(dst_table, v), entry):
             raise FileExistsError(f"clone target {dst_table} already has versions")
-    return versions[-1]
+    return max(live)
 
 
 def read_changes(

@@ -243,7 +243,7 @@ def test_shallow_clone_zero_copy_and_divergence(spark, tmp_path):
 
 
 def _manifest(table):
-    """{version: log entry} of a versioned table."""
+    """{version: log entry} of a versioned table's unexpired versions."""
     import json
     import os
 
@@ -252,7 +252,9 @@ def _manifest(table):
     for name in os.listdir(log):
         if name.endswith(".json"):
             with open(os.path.join(log, name)) as f:
-                out[int(name[:-5])] = json.load(f)
+                entry = json.load(f)
+            if not entry.get("expired"):
+                out[int(name[:-5])] = entry
     return out
 
 
@@ -312,22 +314,25 @@ def test_vacuum_and_clone_keep_retained_schemas(spark, tmp_path, count_jobs):
 # ---- one put-if-absent log: killed and racing writers ---------------------
 
 
-def _paused_commit(monkeypatch, fn):
-    """Run ``fn`` on a thread that pauses once its parquet data write is
-    done, before it can commit.  Returns ``finish()``, which lets the
-    thread go on and returns ``fn``'s result or raises its error."""
+def _paused_commit(monkeypatch, fn, where=None):
+    """Run ``fn`` on a thread that pauses once ``where`` (an owner and an
+    attribute name; by default its parquet data write) returns, before it
+    can commit.  Returns ``finish()``, which lets the thread go on and
+    returns ``fn``'s result or raises its error."""
     import threading
 
     from pyspark.sql import DataFrameWriter
 
-    write = DataFrameWriter.parquet
+    owner, name = where or (DataFrameWriter, "parquet")
+    call = getattr(owner, name)
     written, go, out = threading.Event(), threading.Event(), {}
 
-    def parquet(self, path, *args, **kwargs):
-        write(self, path, *args, **kwargs)
+    def paused(*args, **kwargs):
+        result = call(*args, **kwargs)
         if threading.current_thread() is worker:
             written.set()
             go.wait(60)
+        return result
 
     def run():
         try:
@@ -337,7 +342,7 @@ def _paused_commit(monkeypatch, fn):
         finally:
             written.set()
 
-    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    monkeypatch.setattr(owner, name, paused)
     worker = threading.Thread(target=run)
     worker.start()
     assert written.wait(60)
@@ -431,6 +436,64 @@ def test_vacuum_during_a_commit_loses_neither(spark, tmp_path, monkeypatch):
         assert [r.v for r in read_version(spark, t, v).collect()] == [f"v{v}"]
 
 
+@pytest.mark.parametrize("pause", ["data_write", "entry_staged"])
+def test_vacuum_keeps_an_expired_version_number_taken(
+    spark, tmp_path, monkeypatch, pause
+):
+    """A commit on base 1 pauses after its data write, or with its entry
+    staged just before the put, while a racer commits v2..v4 and vacuum
+    expires v1 and v2.  The paused commit must lose: an expired version
+    number is never committed again."""
+    import json
+    import os
+
+    import pytest as _pt
+
+    from findb_spark.versioning import VersionConflict, commit_version, vacuum
+
+    t = str(tmp_path / "t")
+    write_version(_df(spark, [(1, "v1")]), t)
+    finish = _paused_commit(
+        monkeypatch,
+        lambda: commit_version(_df(spark, [(2, "paused")]), t, 1),
+        (json, "dump") if pause == "entry_staged" else None,
+    )
+    for i in range(2, 5):
+        assert commit_version(_df(spark, [(i, f"v{i}")]), t, i - 1) == i
+    assert vacuum(t, keep_last=2) == [1, 2]
+    with _pt.raises(VersionConflict):
+        finish()
+    assert sorted(list_versions(t)) == [3, 4]
+    for v in (3, 4):
+        assert [r.v for r in read_version(spark, t, v).collect()] == [f"v{v}"]
+    with _pt.raises(KeyError):
+        read_version(spark, t, 2)
+    data = sorted(os.path.basename(p) for p in list_versions(t).values())
+    assert sorted(os.listdir(t)) == ["_log", *data]
+
+
+def test_concurrent_vacuums_both_finish(spark, tmp_path, monkeypatch):
+    """A second vacuum that expires versions between the first vacuum's
+    listing and its own expiry makes neither of them fail."""
+    import findb_spark.versioning as ver
+
+    t = str(tmp_path / "t")
+    for i in range(1, 5):
+        write_version(_df(spark, [(i, f"v{i}")]), t)
+    live = ver._live
+
+    def listing_then_other_vacuum(table_dir):
+        out = live(table_dir)
+        monkeypatch.setattr(ver, "_live", live)
+        assert ver.vacuum(table_dir, keep_last=1) == [1, 2, 3]
+        return out
+
+    monkeypatch.setattr(ver, "_live", listing_then_other_vacuum)
+    assert ver.vacuum(t, keep_last=2) == [1, 2]
+    assert sorted(list_versions(t)) == [4]
+    assert [r.v for r in read_version(spark, t).collect()] == ["v4"]
+
+
 def test_concurrent_writers_each_commit_exactly_once(spark, tmp_path):
     """More writers than cores, each calling write_version and retrying on
     VersionConflict until it commits: every writer lands in exactly one
@@ -446,19 +509,22 @@ def test_concurrent_writers_each_commit_exactly_once(spark, tmp_path):
 
     def writer(i):
         try:
-            while True:
+            for _ in range(50):
                 try:
                     won[i] = write_version(_df(spark, [(i, f"w{i}")]), t)
                     return
                 except VersionConflict:
                     pass
+            errors.append(f"writer {i} lost 50 times")
         except Exception as e:
             errors.append(e)
 
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-5)
     try:
-        threads = [threading.Thread(target=writer, args=(i,)) for i in range(n)]
+        threads = [
+            threading.Thread(target=writer, args=(i,), daemon=True) for i in range(n)
+        ]
         for th in threads:
             th.start()
         for th in threads:
