@@ -45,9 +45,9 @@ def write_prices(
     path: str,
     num_partitions: int | None = None,
     date_bucket: str | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Bulk load: cluster and persist a bitemporal prices table.
+    """Bulk load: cluster and persist a bitemporal prices table,
+    replacing whatever ``path`` held.
 
     ``date_bucket``: optional coarse hive partition — "month" adds a
     ``date_month`` directory level (yyyymm) for partition pruning on date
@@ -60,7 +60,7 @@ def write_prices(
         out = out.withColumn("date_month", (F.col("date") / 100).cast("int"))
         writer_cols = ["date_month"]
     out = cluster_prices(out, num_partitions)
-    w = out.write.mode(mode)
+    w = out.write.mode("overwrite")
     if writer_cols:
         w = w.partitionBy(*writer_cols)
     w.parquet(path)
@@ -73,7 +73,6 @@ def write_bucketed(
     n_buckets: int = 8,
     key: str = "asset_id",
     sort_cols: tuple[str, ...] = ("asset_id", "date", "ts"),
-    mode: str = "overwrite",
 ) -> None:
     """Bucketed layout: pre-shuffle ONCE at write time so every later join
     or aggregation on ``key`` runs with NO exchange (co-located joins).
@@ -84,7 +83,7 @@ def write_bucketed(
     is a layout contract — pick it for target-scale task sizing (buckets ~=
     cluster cores at the largest join), not per-query."""
     (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
         .bucketBy(n_buckets, key)
         .sortBy(*sort_cols)
         .option("path", path)
@@ -139,7 +138,6 @@ def write_zorder(
     prices: DataFrame,
     path: str,
     num_partitions: int,
-    mode: str = "overwrite",
     bits: int = 16,
 ) -> None:
     """Bulk load with **Z-order clustering** on (asset_id, date).
@@ -183,7 +181,7 @@ def write_zorder(
         .sortWithinPartitions("_z", "ts")
         .drop("_z", "_dc")
     )
-    out.write.mode(mode).parquet(path)
+    out.write.mode("overwrite").parquet(path)
 
 
 def read_prices(spark: SparkSession, path: str) -> DataFrame:

@@ -54,17 +54,6 @@ N_BANDS = 4
 ROWS_PER_BAND = N_PERM // N_BANDS
 PERM_PARAMS = permutation_params(N_PERM)
 
-#: Measured on-disk -> shuffle-bytes multiplier for the shingle pipelines,
-#: feeding ``session.auto_initial_partitions`` (round-10 verdict item 3).
-#: Derivation (PARTITION_DIAL_r10): the 256x ngram-Jaccard corpus is
-#: ~150 MB of parquet on disk (256 x 594 KB sf0.1 documents, slightly
-#: inflated by per-copy token prefixes) and feeds ~3.5 GB into the
-#: exploded-shingle shuffles — parquet dictionary/zstd compresses text
-#: hard AND the explode emits one (doc_id, hash, pos) row per token
-#: window, so the multiplier is ~23x; 24 errs on the safe (high) side,
-#: since AQE coalesces an over-fine grain for free.
-SHINGLE_EXPLODE_BYTES_PER_INPUT_BYTE = 24
-
 
 def exact_dedup_stats(docs: DataFrame) -> DataFrame:
     """Corpus-level exact-duplicate profile via text-digest groupBy.

@@ -25,7 +25,6 @@ def interval_join(
     start_col: str,
     end_col: str,
     bin_days: int = 92,
-    broadcast_intervals: bool | None = None,
     by: list[str] | None = None,
 ) -> DataFrame:
     """Join point rows (``point_col``: DateType) to interval rows
@@ -33,12 +32,11 @@ def interval_join(
     equi-join + exact post-filter. Output: all point columns + all
     interval columns, one row per containment.
 
-    ``broadcast_intervals``: ``None`` (default) leaves the join strategy
-    to Catalyst/AQE — the exploded interval side broadcasts only if its
-    size estimate clears ``spark.sql.autoBroadcastJoinThreshold``, else
-    both sides hash-shuffle on ``_bin``. Pass ``True``/``False`` to force.
-    An unconditional broadcast would OOM the executors once the interval
-    table stops being dimension-sized."""
+    The join strategy is left to Catalyst/AQE: the exploded interval side
+    broadcasts only if its size estimate clears
+    ``spark.sql.autoBroadcastJoinThreshold``, else both sides hash-shuffle
+    on ``_bin``.  An unconditional broadcast would OOM the executors once
+    the interval table stops being dimension-sized."""
     pb = points.withColumn(
         "_bin", F.floor(F.unix_date(F.col(point_col)) / bin_days).cast("bigint")
     )
@@ -56,10 +54,6 @@ def interval_join(
             )
         ),
     )
-    if broadcast_intervals is True:
-        ib = F.broadcast(ib)
-    elif broadcast_intervals is False:
-        ib = ib.hint("shuffle_hash")
     # optional equi-keys (``by``) join WITH the bin, so e.g. a per-asset
     # validity-interval probe shuffles on (asset, bin) and never fans out
     # across unrelated keys sharing a calendar bin

@@ -77,15 +77,6 @@ def decode_metadata(with_payload: DataFrame) -> DataFrame:
     )
 
 
-def resize_images(with_payload: DataFrame, width: int, height: int) -> DataFrame:
-    """STUB: real resize requires an image library absent from this
-    container. The Spark plumbing (signature, schema) is the contract."""
-    raise NotImplementedError(
-        "image resize requires PIL/opencv (not in container); "
-        "wire through mapInPandas like decode_metadata"
-    )
-
-
 #: schema of the frame-sampling step: one output row per sampled frame
 FRAMES_SCHEMA = "doc_id BIGINT, frame_index INT, frame_key BIGINT"
 

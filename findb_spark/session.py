@@ -28,46 +28,21 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    initial_partitions: int | None = None,
-    auto_grain_for: tuple[str, str, str | float] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
 
     On a real cluster ``master`` comes from spark-submit; locally we default
     to ``local[$SPARK_GRAFT_CPUS]``.
 
-    ``initial_partitions`` sets AQE's ``coalescePartitions.
-    initialPartitionNum`` — THE dial for data ≫ memory-per-core.  Shuffles
-    start at this grain and AQE coalesces them back to the 64 MB advisory
-    size, so a high value is safe for big inputs while small inputs
-    converge to the same post-coalesce plan.  Measured on the 256x n-gram
-    Jaccard corpus (3.5 GB exploded input, JIT-warm, same session/data):
-    initial grain 32 → 322 s wall / 10,130 s executor CPU / 13.3% GC
-    (giant per-task sorts thrash cache and heap); 128 → 57 s / 1,469 s /
-    1.5% GC; 512 over-fragments (GC back to 14%).  Rule of thumb:
-    ``input_bytes_after_explode / 64 MB``.  It is NOT defaulted globally:
-    iterative operators (connected components, k-means) run dozens of
-    tiny shuffles per round whose fixed per-bucket overhead costs ~8% of
-    headline bench wall at sf0.1 — size it per deployment, not per box.
-
-    ``auto_grain_for=(sf_dir, table, family)`` is the production
-    one-liner for that sizing (round-11 verdict item 6): it feeds
-    :func:`auto_initial_partitions` from the driving table's on-disk
-    bytes (:func:`table_input_bytes`) times the operator family's
-    measured shuffle multiplier (:func:`explode_factor_for` — a family
-    name like ``"shingle"`` or a numeric factor).  E.g. a shingle-dedup
-    deployment: ``get_spark(auto_grain_for=(corpus_dir, "documents",
-    "shingle"))``.  sf<=0.1 inputs degenerate to the core-count floor
-    (pinned in tests/test_auto_grain.py), so the bench headline cannot
-    regress.  An explicit ``initial_partitions`` wins over the rule.
+    ``extra_conf`` is applied last, over these defaults.  For inputs much
+    larger than memory per core, set AQE's initial shuffle grain there:
+    ``extra_conf={"spark.sql.adaptive.coalescePartitions.initialPartitionNum":
+    str(n)}`` with ``n`` about the bytes entering the shuffle / 64 MB,
+    rounded up (the measured rule in SURVEY.md §6).  It is not a default:
+    iterative operators run many tiny shuffles per round, and a fine grain
+    costs each of them a fixed per-bucket overhead.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if auto_grain_for is not None and initial_partitions is None:
-        grain_dir, grain_table, grain_family = auto_grain_for
-        initial_partitions = auto_initial_partitions(
-            table_input_bytes(grain_dir, grain_table),
-            explode_factor_for(grain_family),
-        )
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
@@ -103,11 +78,6 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.codegen.wholeStage", "true")
     )
-    if initial_partitions is not None:
-        builder = builder.config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(initial_partitions),
-        )
     if master is None and "SPARK_MASTER" not in os.environ:
         master = f"local[{cpus}]"
     if master:
@@ -115,84 +85,6 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-#: AQE's advisory post-shuffle partition size — the coalesce target the
-#: initial grain is sized against (Spark default for
-#: spark.sql.adaptive.advisoryPartitionSizeInBytes).
-ADVISORY_PARTITION_BYTES = 64 * 1024 * 1024
-
-
-def auto_initial_partitions(
-    input_bytes: int,
-    explode_factor: float = 1.0,
-    cpus: int | None = None,
-) -> int:
-    """Size AQE's ``coalescePartitions.initialPartitionNum`` from the
-    measured rule (PARTITION_DIAL_r10, round-10 verdict item 3):
-    optimal grain ~= bytes-entering-the-shuffle / 64 MB.  On the 256x
-    n-gram Jaccard corpus (3.5 GB exploded) grain 128 beat grain 32 by
-    5.6x wall / 6.9x CPU; 512 over-fragmented (GC back to 14%).
-
-    ``input_bytes`` is the ON-DISK table size (see
-    :func:`table_input_bytes`); ``explode_factor`` is the operator
-    family's measured on-disk -> shuffle-bytes multiplier (e.g.
-    ``ops.dedup.SHINGLE_EXPLODE_BYTES_PER_INPUT_BYTE`` for the shingle
-    pipelines — parquet compresses text hard AND the explode multiplies
-    rows, so the multiplier is large).
-
-    Rounded UP to a power of two: AQE coalesces an over-fine grain back
-    to the 64 MB advisory size for free, but cannot split an over-coarse
-    one — so err high.  Floored at the core count: below that the grain
-    is not the bottleneck, and small inputs (every sf<=0.1 table) get
-    today's default — iterative operators' per-round fixed cost per
-    bucket (~8% of headline wall at sf0.1, measured) is why this is a
-    per-workload dial, never a global default."""
-    import math
-
-    cpus = cpus or DEFAULT_SHUFFLE_PARTITIONS
-    raw = (input_bytes * explode_factor) / ADVISORY_PARTITION_BYTES
-    if raw <= cpus:
-        return cpus
-    return 1 << math.ceil(math.log2(raw))
-
-
-def explode_factor_for(family: str | float) -> float:
-    """Measured on-disk -> shuffle-bytes multiplier per operator family,
-    feeding :func:`auto_initial_partitions`.
-
-    ``"scan"``/``"join"``/``"agg"`` shuffle roughly what they read
-    (parquet decompression and row widening cancel against projection
-    pruning within the rule's one-octave tolerance — pow2-ceil absorbs
-    it).  ``"shingle"`` covers the explode-heavy text-dedup family
-    (shingle/Jaccard/containment/MinHash): parquet compresses text hard
-    AND the explode multiplies rows, measured 24x
-    (``ops.dedup.SHINGLE_EXPLODE_BYTES_PER_INPUT_BYTE``, calibrated on
-    the 256x corpus — AUTO_GRAIN_r11).  A numeric argument passes
-    through for families measured by the deployment itself."""
-    if isinstance(family, (int, float)) and not isinstance(family, bool):
-        return float(family)
-    if family in ("scan", "join", "agg"):
-        return 1.0
-    if family in ("shingle", "jaccard", "minhash", "dedup-text"):
-        # local import: ops.dedup imports from session at module level
-        from findb_spark.ops.dedup import SHINGLE_EXPLODE_BYTES_PER_INPUT_BYTE
-
-        return float(SHINGLE_EXPLODE_BYTES_PER_INPUT_BYTE)
-    raise ValueError(
-        f"unknown operator family {family!r}: pass one of "
-        "scan/join/agg/shingle/jaccard/minhash/dedup-text or a numeric "
-        "on-disk->shuffle multiplier measured for your workload"
-    )
-
-
-def table_input_bytes(sf_dir: str, name: str) -> int:
-    """On-disk bytes of one parquet table: summed data-file sizes.
-
-    Driver-side filesystem walk — no Spark job, same numbers the
-    footer-stats manifest (manifest.py) sees per file; used to feed
-    :func:`auto_initial_partitions` without reading any data pages."""
-    return sum(size for _f, _mtime, size in files_fingerprint(table_path(sf_dir, name)))
 
 
 def files_fingerprint(path: str) -> tuple:

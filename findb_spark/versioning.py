@@ -24,14 +24,10 @@ by a writer that passed its stale-base check before the version expired.
 The commit relies on POSIX ``link`` semantics, so the table must live on
 a local or mounted file system, not on an object store.
 
-Readers list ``_log/`` and parse only the entry they resolve.  The
-recorded schema goes to ``spark.read.schema``, so resolving a version
-runs no Spark job; an entry without one reads through inference.
-
-Tables written before the log (a rewritten ``_versions.json`` manifest)
-still read.  The first write to one (a commit, a vacuum, or cloning it)
-converts the manifest into log entries, put-if-absent, and deletes it;
-only the log is ever written.
+Readers list ``_log/`` and parse only the entry they resolve.  Every
+entry carries its version's schema (a clone copies entries as they are),
+and it goes to ``spark.read.schema``, so resolving a version runs no
+Spark job.
 
 Scale: one tiny entry per version; data files are plain parquet, so all
 layout machinery (partitioning, Z-order, manifests, pruning — layout.py)
@@ -40,7 +36,6 @@ composes with versioned tables unchanged.
 
 from __future__ import annotations
 
-import contextlib
 import json
 import os
 import re
@@ -50,7 +45,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 _LOG = "_log"
-_LEGACY = "_versions.json"
 _DATA_DIR = re.compile(r"v(\d+)-[0-9a-f]{8}")
 _EXPIRED = {"expired": True}
 
@@ -63,53 +57,33 @@ def _entry_path(table_dir: str, v: int) -> str:
     return os.path.join(table_dir, _LOG, f"{v}.json")
 
 
-def _legacy_entries(table_dir: str) -> dict[int, dict]:
-    """A pre-log ``_versions.json`` manifest as log entries; empty if none."""
-    try:
-        with open(os.path.join(table_dir, _LEGACY)) as f:
-            raw = json.load(f)
-    except FileNotFoundError:
-        return {}
-    schemas = raw.get("schemas", {})
-    return {
-        int(k): {"data": d, **({"schema": schemas[k]} if k in schemas else {})}
-        for k, d in raw["versions"].items()
-    }
-
-
-def _taken(table_dir: str) -> tuple[dict[int, dict], list[int]]:
-    """The legacy manifest's entries, and every version number ever
-    committed, expired ones included.  The manifest is read before the log
-    is listed: conversion links the entries before it deletes the
-    manifest, so each version shows up in one of the two."""
-    legacy = _legacy_entries(table_dir)
+def _taken(table_dir: str) -> list[int]:
+    """Every version number ever committed, expired ones included."""
     try:
         names = os.listdir(os.path.join(table_dir, _LOG))
     except FileNotFoundError:
-        names = []
-    logged = {int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit()}
-    return legacy, sorted(logged | set(legacy))
+        return []
+    return sorted(int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit())
 
 
-def _read(table_dir: str, v: int, legacy: dict[int, dict]) -> dict | None:
+def _read(table_dir: str, v: int) -> dict | None:
     """Version ``v``'s entry; None if it was never committed or has expired."""
     try:
         with open(_entry_path(table_dir, v)) as f:
             entry = json.load(f)
     except FileNotFoundError:
-        entry = legacy.get(v)
-    return None if entry is None or entry.get("expired") else entry
+        return None
+    return None if entry.get("expired") else entry
 
 
 def _live(table_dir: str) -> dict[int, dict]:
     """{version: entry} of the committed versions that have not expired."""
-    legacy, taken = _taken(table_dir)
-    entries = {v: _read(table_dir, v, legacy) for v in taken}
+    entries = {v: _read(table_dir, v) for v in _taken(table_dir)}
     return {v: e for v, e in entries.items() if e is not None}
 
 
 def _entry(table_dir: str, v: int) -> dict:
-    entry = _read(table_dir, v, _legacy_entries(table_dir))
+    entry = _read(table_dir, v)
     if entry is None:
         live = sorted(_live(table_dir))
         if not live:
@@ -138,22 +112,9 @@ def _put_if_absent(path: str, entry: dict) -> bool:
         os.unlink(tmp)
 
 
-def _convert_legacy(table_dir: str) -> None:
-    """Turn a ``_versions.json`` table into log entries, then delete the
-    manifest.  Put-if-absent, so a rerun after a crash, or a second
-    writer converting at the same time, is harmless."""
-    legacy = _legacy_entries(table_dir)
-    if legacy:
-        os.makedirs(os.path.join(table_dir, _LOG), exist_ok=True)
-        for v, entry in legacy.items():
-            _put_if_absent(_entry_path(table_dir, v), entry)
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(os.path.join(table_dir, _LEGACY))
-
-
 def head_version(table_dir: str) -> int:
     """The newest committed version, 0 for a table with none."""
-    return max(_taken(table_dir)[1], default=0)
+    return max(_taken(table_dir), default=0)
 
 
 def list_versions(table_dir: str) -> dict[int, str]:
@@ -174,7 +135,6 @@ def commit_version(df: DataFrame, table_dir: str, expected_base: int) -> int:
     fails after another writer took the version is a lost race: vacuum
     may have removed the directory under it."""
     os.makedirs(os.path.join(table_dir, _LOG), exist_ok=True)
-    _convert_legacy(table_dir)
     head = head_version(table_dir)
     if head != expected_base:
         raise VersionConflict(
@@ -212,17 +172,14 @@ def write_version(df: DataFrame, table_dir: str) -> int:
 def read_version(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> DataFrame:
-    """Read the table as of ``version`` (default: latest committed).  With
-    the version's schema in its entry this runs no Spark job."""
+    """Read the table as of ``version`` (default: latest committed).  The
+    entry's recorded schema means this runs no Spark job."""
     if version is None:
         version = head_version(table_dir)
         if not version:
             raise FileNotFoundError(f"no committed versions under {table_dir}")
     entry = _entry(table_dir, version)
-    reader = spark.read
-    if "schema" in entry:
-        reader = reader.schema(StructType.fromJson(entry["schema"]))
-    return reader.parquet(entry["data"])
+    return spark.read.schema(StructType.fromJson(entry["schema"])).parquet(entry["data"])
 
 
 def vacuum(table_dir: str, keep_last: int = 2) -> list[int]:
@@ -244,7 +201,6 @@ def vacuum(table_dir: str, keep_last: int = 2) -> list[int]:
     raise KeyError."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    _convert_legacy(table_dir)
     live = _live(table_dir)
     if not live:
         return []
@@ -280,11 +236,10 @@ def clone_table(src_table: str, dst_table: str) -> int:
     either track cross-table references or deep-copy on vacuum. At library
     scope the contract is documented and tests pin the visible semantics.
     """
-    _convert_legacy(src_table)
     live = _live(src_table)
     if not live:
         raise FileNotFoundError(f"no committed versions under {src_table}")
-    if _taken(dst_table)[1]:
+    if _taken(dst_table):
         raise FileExistsError(f"clone target {dst_table} already has versions")
     os.makedirs(os.path.join(dst_table, _LOG), exist_ok=True)
     for v in range(1, max(live) + 1):

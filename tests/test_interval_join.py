@@ -76,13 +76,20 @@ def test_inverted_interval_yields_nothing_without_explosion(spark):
 
 
 def test_join_strategy_is_conditional_not_forced_broadcast(spark):
-    """Default leaves strategy to Catalyst; broadcast_intervals=False must
-    produce a non-broadcast equi-join on _bin (the 100 TB shape when the
-    interval side outgrows the broadcast threshold)."""
+    """The strategy is left to Catalyst: with Spark's broadcast threshold
+    off, the join on _bin must plan as a non-broadcast equi-join (the
+    100 TB shape when the interval side outgrows the broadcast threshold)
+    and return what the default plan returns."""
     pts = _points(spark, list(range(0, 30)))
     ivs = _intervals(spark, [(0, 10), (5, 20)])
-    forced = interval_join(pts, ivs, "pd", "ws", "we", broadcast_intervals=False)
-    plan = forced._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" not in plan and "BroadcastNestedLoop" not in plan
-    bcast = interval_join(pts, ivs, "pd", "ws", "we", broadcast_intervals=True)
-    assert forced.count() == bcast.count()
+    expect = interval_join(pts, ivs, "pd", "ws", "we").count()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        shuffled = interval_join(pts, ivs, "pd", "ws", "we")
+        plan = shuffled._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" not in plan and "BroadcastNestedLoop" not in plan
+        assert shuffled.count() == expect
+    finally:
+        spark.conf.set(key, old)

@@ -12,7 +12,7 @@ from findb_spark.ops.dedup import (
     simhash_banded_pairs,
     simhash_pairs,
 )
-from findb_spark.ops.multimodal import attach_payload, decode_metadata, resize_images
+from findb_spark.ops.multimodal import attach_payload, decode_metadata
 from findb_spark.ops.vector import ann_lsh_topk, cosine_topk
 from findb_spark.session import load_table
 
@@ -90,12 +90,6 @@ def test_multimodal_decode_shape(spark, sf_dir):
     assert all(r.n_bytes == 16 for r in rows)  # md5 payload
     assert all(16 <= r.width < 656 and 16 <= r.height < 496 for r in rows)
     assert all(1 <= r.channels <= 3 for r in rows)
-
-
-def test_multimodal_stub_is_marked(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(1)
-    with pytest.raises(NotImplementedError):
-        resize_images(attach_payload(docs), 64, 64)
 
 
 def test_jaccard_prefix_equals_inverted_index(docs):

@@ -124,7 +124,7 @@ def test_tolerant_compare_no_rounding_boundary_flake():
     assert compare_rows_tolerant(cols, key, o_rows) != []
 
 
-def test_minhash_pairs_relation_is_persisted():
+def test_minhash_pairs_relation_is_persisted(spark):
     """The verified pair set is the dedup suite's shared build artifact:
     minhash_lsh_pairs must mark it for caching so Spark's cache manager
     (which matches canonicalized plans across calls) serves clustering /
@@ -133,9 +133,6 @@ def test_minhash_pairs_relation_is_persisted():
 
     from findb_spark.ops.dedup import minhash_lsh_pairs
 
-    from findb_spark.session import get_spark
-
-    spark = get_spark(shuffle_partitions=4)
     docs = spark.createDataFrame(
         [(1, "a", "the quick brown fox jumps over the dog"),
          (2, "a", "the quick brown fox jumps over the cat")],

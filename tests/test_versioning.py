@@ -272,24 +272,27 @@ def test_read_version_runs_no_job(spark, tmp_path, count_jobs):
     assert sorted(r.k for r in read_version(spark, t).collect()) == [1, 2]
 
 
-def test_old_format_manifest_still_reads(spark, tmp_path):
-    """A pre-log ``_versions.json`` manifest without the schemas field
-    reads through inference; the next commit converts it into log
-    entries, records a schema for its own version only, and deletes the
-    old manifest."""
-    import json
+def test_log_is_the_only_format(spark, tmp_path):
+    """Commits, a vacuum and a clone leave only ``_log/`` and version data
+    directories (no other manifest), and every entry that is not a
+    tombstone records its version's schema."""
+    import os
+    import re
 
-    t = tmp_path / "t"
-    data = str(t / "v1")
-    _df(spark, [(1, "a"), (2, "b")]).write.parquet(data)
-    (t / "_versions.json").write_text(json.dumps({"versions": {"1": data}}))
-    assert sorted(r.v for r in read_version(spark, str(t)).collect()) == ["a", "b"]
-    assert write_version(_df(spark, [(3, "c")]), str(t)) == 2
-    m = _manifest(str(t))
-    assert sorted(m) == [1, 2] and "schema" not in m[1] and "schema" in m[2]
-    assert not (t / "_versions.json").exists()
-    assert sorted(r.v for r in read_version(spark, str(t), 1).collect()) == ["a", "b"]
-    assert [r.k for r in read_version(spark, str(t)).collect()] == [3]
+    from findb_spark.versioning import clone_table, commit_version, vacuum
+
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    for i in range(1, 4):
+        write_version(_df(spark, [(i, f"v{i}")]), src)
+    assert vacuum(src, keep_last=2) == [1]
+    clone_table(src, dst)
+    assert commit_version(_df(spark, [(4, "v4")]), dst, expected_base=3) == 4
+    for t, live in ((src, [2, 3]), (dst, [2, 3, 4])):
+        names = os.listdir(t)
+        assert all(n == "_log" or re.fullmatch(r"v\d+-[0-9a-f]{8}", n) for n in names), names
+        m = _manifest(t)
+        assert sorted(m) == live
+        assert all("schema" in e for e in m.values()), t
 
 
 def test_vacuum_and_clone_keep_retained_schemas(spark, tmp_path, count_jobs):
