@@ -79,9 +79,16 @@ def _harvest_files(spark: SparkSession, files: list[str], cols: list[str]) -> Da
                 + [f"{c}_{s}" for c in cols for s in ("min", "max")],
             )
 
+    return _map_files(spark, files, harvest, _schema(cols))
+
+
+def _map_files(spark: SparkSession, files: list[str], fn, schema: str) -> DataFrame:
+    """``mapInPandas(fn, schema)`` over a ``file`` column listing
+    ``files``: the list ships as a LocalRelation, spread over at most
+    ``defaultParallelism`` tasks."""
     paths = local_relation_df(spark, [(f,) for f in files], "file string")
     n_tasks = max(1, min(len(files), spark.sparkContext.defaultParallelism))
-    return paths.repartition(n_tasks).mapInPandas(harvest, _schema(cols))
+    return paths.repartition(n_tasks).mapInPandas(fn, schema)
 
 
 def build_manifest(spark: SparkSession, path: str, cols: list[str]) -> DataFrame:
@@ -131,26 +138,25 @@ def pruned_read(
     ``date_month=`` directories) — an explicit leaf-file read performs no
     partition discovery, so without the basePath option the partition
     columns would silently vanish from the returned schema."""
-
-    def _read(*fs: str) -> DataFrame:
-        r = spark.read
-        if base_path is not None:
-            r = r.option("basePath", base_path)
-        return r.parquet(*fs)
-
-    files = [r.file for r in manifest.where(_overlap_cond(ranges)).select("file").collect()]
-    if not files:
-        # preserve schema on empty selection
-        any_file = manifest.select("file").limit(1).collect()
-        base = _read(any_file[0].file) if any_file else None
-        if base is None:
-            raise ValueError("empty manifest")
-        out = base.limit(0)
-    else:
-        out = _read(*files)
+    out = _read_selected(spark, manifest, _overlap_cond(ranges), base_path)
     for c, (lo, hi) in ranges.items():
         out = out.where(F.col(c).between(lo, hi))
     return out
+
+
+def _read_selected(
+    spark: SparkSession, manifest: DataFrame, cond, base_path: str | None = None
+) -> DataFrame:
+    """The files of ``manifest`` whose row satisfies ``cond``; an empty
+    selection keeps the table's schema (read from any one file)."""
+    r = spark.read if base_path is None else spark.read.option("basePath", base_path)
+    files = [row.file for row in manifest.where(cond).select("file").collect()]
+    if files:
+        return r.parquet(*files)
+    any_file = manifest.select("file").limit(1).collect()
+    if not any_file:
+        raise ValueError("empty manifest")
+    return r.parquet(any_file[0].file).limit(0)
 
 
 def update_manifest(
@@ -197,7 +203,7 @@ BLOOM_BITS = 1 << 20  # 1M bits = 16k int64 words per file (~128 KB)
 BLOOM_HASHES = 4
 
 
-def _bloom_positions(value, bits: int = BLOOM_BITS, k: int = BLOOM_HASHES):
+def _bloom_positions(value, k: int = BLOOM_HASHES):
     """The k bit positions for a value — hashlib-based, so build (executor
     Python) and probe (driver Python) always agree; only internal
     consistency matters, nothing here must match a SQL engine."""
@@ -207,23 +213,21 @@ def _bloom_positions(value, bits: int = BLOOM_BITS, k: int = BLOOM_HASHES):
         int.from_bytes(
             hashlib.md5(f"{value}:{i}".encode()).digest()[:8], "little"
         )
-        % bits
+        % BLOOM_BITS
         for i in range(k)
     ]
 
 
-def build_bloom_manifest(
-    spark: SparkSession, path: str, col: str, bits: int = BLOOM_BITS
-) -> DataFrame:
+def build_bloom_manifest(spark: SparkSession, path: str, col: str) -> DataFrame:
     """Per-file Bloom bitsets over ``col``: one distributed pass that reads
     ONLY that column's pages per file (the price of a value index — still
     no full-row materialization). Returns (file, num_rows, words:
-    array<bigint> of bits/64 words)."""
+    array<bigint> of BLOOM_BITS/64 words)."""
 
     def harvest(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pyarrow.parquet as pq
 
-        nwords = bits // 64
+        nwords = BLOOM_BITS // 64
         for b in batches:
             rows = []
             for f in b["file"]:
@@ -231,7 +235,7 @@ def build_bloom_manifest(
                 words = [0] * nwords
                 vals = t.column(col).to_pylist()
                 for v in set(vals):
-                    for p in _bloom_positions(v, bits):
+                    for p in _bloom_positions(v):
                         words[p // 64] |= 1 << (p % 64)
                 # int64 domain: keep the sign bit arithmetic exact by
                 # wrapping to signed 64-bit
@@ -240,17 +244,13 @@ def build_bloom_manifest(
             yield pd.DataFrame(rows, columns=["file", "num_rows", "words"])
 
     files = [_local(f) for f in spark.read.parquet(path).inputFiles()]
-    paths = local_relation_df(spark, [(f,) for f in files], "file string")
-    n_tasks = max(1, min(len(files), spark.sparkContext.defaultParallelism))
-    return paths.repartition(n_tasks).mapInPandas(
-        harvest, "file string, num_rows bigint, words array<bigint>"
-    )
+    return _map_files(spark, files, harvest, "file string, num_rows bigint, words array<bigint>")
 
 
-def _bloom_hit_cond(value, bits: int = BLOOM_BITS):
+def _bloom_hit_cond(value):
     """Manifest predicate: every one of the value's k bit positions set."""
     cond = F.lit(True)
-    for p in _bloom_positions(value, bits):
+    for p in _bloom_positions(value):
         word, bit = p // 64, p % 64
         cond = cond & (
             F.expr(f"(element_at(words, {word + 1}) >> {bit}) & 1") == 1
@@ -258,38 +258,15 @@ def _bloom_hit_cond(value, bits: int = BLOOM_BITS):
     return cond
 
 
-def bloom_files_selected(manifest: DataFrame, value, bits: int = BLOOM_BITS) -> int:
+def bloom_files_selected(manifest: DataFrame, value) -> int:
     """How many files a bloom probe for ``value`` would open."""
-    return manifest.where(_bloom_hit_cond(value, bits)).count()
+    return manifest.where(_bloom_hit_cond(value)).count()
 
 
-def bloom_pruned_read(
-    spark: SparkSession,
-    manifest: DataFrame,
-    col: str,
-    value,
-    bits: int = BLOOM_BITS,
-    base_path: str | None = None,
-) -> DataFrame:
+def bloom_pruned_read(spark: SparkSession, manifest: DataFrame, col: str, value) -> DataFrame:
     """Point-lookup read through the Bloom manifest: open only files whose
     bitset claims ``value``, then re-apply the exact equality (false
     positives are filtered, never returned)."""
-
-    def _read(*fs: str) -> DataFrame:
-        r = spark.read
-        if base_path is not None:
-            r = r.option("basePath", base_path)
-        return r.parquet(*fs)
-
-    files = [
-        r.file
-        for r in manifest.where(_bloom_hit_cond(value, bits)).select("file").collect()
-    ]
-    if not files:
-        any_file = manifest.select("file").limit(1).collect()
-        if not any_file:
-            raise ValueError("empty manifest")
-        out = _read(any_file[0].file).limit(0)
-    else:
-        out = _read(*files)
-    return out.where(F.col(col) == F.lit(value))
+    return _read_selected(spark, manifest, _bloom_hit_cond(value)).where(
+        F.col(col) == F.lit(value)
+    )

@@ -31,13 +31,13 @@ md5-derived, so the DuckDB oracle reproduces every signature
 bit-for-bit.
 
 Persist lifetime: these operators persist small reused intermediates
-(doc_id + ints) and return LAZY DataFrames, so they cannot unpersist
-before the caller executes — an eager unpersist would reintroduce the
-multi-evaluation the persist exists to prevent. The blocks live until
-session end (or ``spark.catalog.clearCache()``); they are MEMORY_AND_DISK,
-so under pressure Spark's LRU eviction degrades them to disk/recompute
-rather than OOM. Long-lived sessions sweeping many corpora should call
-:func:`findb_spark.session.release_caches` between sweeps.
+(doc_id + ints, MEMORY_AND_DISK) and return LAZY DataFrames, so they
+cannot unpersist before the caller executes — an eager unpersist would
+reintroduce the multi-evaluation the persist exists to prevent.  The
+cached blocks follow the engine's one rule, stated in
+:func:`findb_spark.session.release_caches`: a rewritten ``documents``
+table refreshes them on its next read, and ``release_caches`` drops them
+between sweeps.
 """
 
 from __future__ import annotations
@@ -151,9 +151,7 @@ def hashed_shingle_arrays(docs: DataFrame, n: int = 3) -> DataFrame:
     parquet — reads the cached fixed-width int64 arrays, orders of
     magnitude smaller than the text. Sizes come free as ``F.size(harr)``
     (``transform`` preserves length), so no consumer needs the string
-    form. Release path for long-lived drivers sweeping many corpora:
-    :func:`findb_spark.session.release_caches` between sweeps (module
-    convention, see header note)."""
+    form."""
     from pyspark.storagelevel import StorageLevel
 
     return (
@@ -223,19 +221,16 @@ def _verify_pairs(cand: DataFrame, arrs: DataFrame, threshold: float) -> DataFra
     ).where(F.col("jaccard") >= threshold)
 
 
-def jaccard_pairs(docs: DataFrame, threshold: float = 0.4, n: int = 3) -> DataFrame:
-    """Near-duplicate pairs by exact n-gram Jaccard similarity, candidates
-    generated via the shared-shingle inverted-index join. The right form
-    while sum(df^2) over shingles stays manageable; `jaccard_pairs_prefix`
-    is the lossless prefix-filtered form for corpora where common shingles
-    make this quadratic."""
+def _shingle_intersections(docs: DataFrame, n: int) -> tuple[DataFrame, DataFrame]:
+    """``(inter, sizes)``: ``inter`` (doc1, doc2, inter) counts the
+    shingles every pair doc1 < doc2 shares, through the shared-shingle
+    inverted-index self-join; ``sizes`` (doc_id, sz) is each document's
+    distinct-shingle count."""
     # join/aggregate on 48-bit shingle hashes, not ~20-char strings: smaller
     # shuffle rows and integer hash tables (the oracle joins on the same
     # hash, so any collision affects both engines identically). The hashed
     # arrays are the suite-shared persisted relation — the md5-per-shingle
     # pass runs once per session, not once per dedup query.
-    from pyspark.storagelevel import StorageLevel
-
     arrs = hashed_shingle_arrays(docs, n)
     sh = arrs.select("doc_id", F.explode(F.col("harr")).alias("shingle"))
     sizes = arrs.select("doc_id", F.size("harr").alias("sz"))
@@ -252,6 +247,18 @@ def jaccard_pairs(docs: DataFrame, threshold: float = 0.4, n: int = 3) -> DataFr
         .groupBy(F.col("a.doc_id").alias("doc1"), F.col("b.doc_id").alias("doc2"))
         .agg(F.count("*").alias("inter"))
     )
+    return inter, sizes
+
+
+def jaccard_pairs(docs: DataFrame, threshold: float = 0.4, n: int = 3) -> DataFrame:
+    """Near-duplicate pairs by exact n-gram Jaccard similarity, candidates
+    generated via the shared-shingle inverted-index join. The right form
+    while sum(df^2) over shingles stays manageable; `jaccard_pairs_prefix`
+    is the lossless prefix-filtered form for corpora where common shingles
+    make this quadratic."""
+    from pyspark.storagelevel import StorageLevel
+
+    inter, sizes = _shingle_intersections(docs, n)
     # the verified pair relation persists (module convention, same
     # rationale as minhash_lsh_pairs): it is the smallest relation in the
     # pipeline and the most re-consumed — split-leakage checks, curation
@@ -403,17 +410,7 @@ def containment_pairs(docs: DataFrame, threshold: float = 0.5, n: int = 3) -> Da
     sum(df^2) over shingles — bounded by stop-shingle capping at corpus
     scale); the asymmetric scores are pure projection on the counted
     intersection, so the plan is identical to the Jaccard form."""
-    arrs = hashed_shingle_arrays(docs, n)
-    sh = arrs.select("doc_id", F.explode(F.col("harr")).alias("shingle"))
-    sizes = arrs.select("doc_id", F.size("harr").alias("sz"))
-    # same shuffle-hash pin as jaccard_pairs: never broadcast the
-    # corpus-proportional exploded-shingle side (256x-smoke finding)
-    a, b = sh.transform(never_broadcast).alias("a"), sh.transform(never_broadcast).alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc1"), F.col("b.doc_id").alias("doc2"))
-        .agg(F.count("*").alias("inter"))
-    )
+    inter, sizes = _shingle_intersections(docs, n)
     sa, sb = sizes.alias("sa"), sizes.alias("sb")
     return (
         inter.join(sa, F.col("doc1") == F.col("sa.doc_id"))
@@ -531,8 +528,7 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     exact + banded pair queries share it, so without a persist the
     explode + 48-conditional-sum aggregation over the corpus text runs
     once PER SIDE PER CONSUMER.  The relation is one int64 per document
-    — orders of magnitude smaller than the text.  Release:
-    :func:`findb_spark.session.release_caches`."""
+    — orders of magnitude smaller than the text."""
     from pyspark.storagelevel import StorageLevel
 
     toks = docs.select(

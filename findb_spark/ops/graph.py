@@ -58,8 +58,7 @@ def connected_components(
     # of plan nodes driver-side just to hit the cache.  The checkpoint
     # truncates adj to a LogicalRDD once, making every round's plan a
     # join of two tiny RDD-backed relations (blocks are reclaimed by the
-    # ContextCleaner when the DataFrame goes out of scope, as for the
-    # localCheckpoint values of session.Memo).
+    # ContextCleaner when the DataFrame goes out of scope).
     #
     # FAULT-TOLERANCE TRADE (round-14 advisor): localCheckpoint is
     # NON-RELIABLE — it truncates lineage, so on a multi-executor cluster
@@ -129,7 +128,7 @@ def connected_components(
 
     # no explicit adj cleanup: checkpoint blocks are reclaimed by the
     # ContextCleaner once adj goes out of scope (there is no public
-    # unpersist for a checkpoint's backing RDD — see session.Memo)
+    # unpersist for a checkpoint's backing RDD)
     return labels
 
 

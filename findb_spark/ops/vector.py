@@ -654,8 +654,8 @@ def fxp_l2_sub(a: Column, sw: Column, sub: int) -> Column:
     :func:`fxp_dot` to stay inside whole-stage codegen.
 
     This Column form is the executable SPECIFICATION of the PQ distance
-    arithmetic: the literal-codebook SQL kernel (:func:`_lut_sql`) and
-    the Arrow kernel (:func:`pq_encode_arrow`) must produce bit-equal
+    arithmetic: the ADC-table kernel (:func:`_luts_driver`) and the
+    Arrow encode kernel (:func:`pq_encode_arrow`) must produce bit-equal
     values — tests/test_llm_ops.py pins both against this formulation."""
     base = sub * PQ_SUBDIM
     terms = []
@@ -747,64 +747,13 @@ def _cb_lists(cbw: DataFrame | list) -> list[list[list[float]]]:
     return [[list(r[f"sw{m}"]) for r in rows] for m in range(PQ_M)]
 
 
-def _cb_onerow(spark, cw: list[list[list[float]]]) -> DataFrame:
-    """The whole codebook as ONE broadcastable row holding a
-    ``_cb[m][code][i]`` nested array (~PQ_M*PQ_K*PQ_SUBDIM doubles =
-    32 KB).  Joining this single row in (BroadcastNestedLoopJoin of a
-    1-row build side — no shuffle of the probe side) lets the encode /
-    ADC-table expressions reference the codewords as a plain column.
-    Doubles travel as binary values (py4j -> java.lang.Double), so
-    codewords stay bit-identical to the collected training output.
-    (Embedding them as SQL literal text instead costs ~4600 expression
-    nodes per subspace that the analyzer re-walks on every Dataset
-    construction — measured ~5s of pure driver latency per query.)"""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField(
-                "_cb",
-                T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType()))),
-                False,
-            )
-        ]
-    )
-    return local_relation_df(spark, [(cw,)], schema)
-
-
-def _fxp_l2_terms_sql(m: int, col: str) -> str:
-    """The fixed-point squared-L2 sum of :func:`fxp_l2_sub` as inline SQL
-    with compile-time element indices — no inner ``aggregate(sequence)``
-    fold (its per-element array allocation + fold machinery is ~2-3x the
-    arithmetic itself when interpreted).  Integer addition is
-    associative, so the inline left-to-right sum is bit-equal to both the
-    fold and the Column form's balanced tree.  ``cw`` is the lambda var
-    bound to one codeword by the enclosing ``transform``."""
-    base = m * PQ_SUBDIM
-    terms = []
-    for i in range(1, PQ_SUBDIM + 1):
-        d = f"(element_at({col}, {base + i}) - element_at(cw, {i}))"
-        terms.append(f"FLOOR(({d} * {d}) * {FXP_SCALE} + 0.5D)")
-    return "(" + " + ".join(terms) + ")"
-
-
-def _lut_sql(m: int, col: str = "qv") -> str:
-    """SQL for a query's subspace-``m`` ADC table against the joined
-    ``_cb`` codebook column: fixed-point distance to each of the k
-    codewords, array-ordered by code 1..k (the order the scoring
-    ``element_at(l{m}, c{m})`` lookups assume)."""
-    return (
-        f"transform(element_at(_cb, {m + 1}), "
-        f"cw -> {_fxp_l2_terms_sql(m, col)})"
-    )
-
-
 def _luts_driver(
     q_rows: list, cw: list[list[list[float]]]
 ) -> list[tuple]:
-    """Driver-side twin of the :func:`_lut_sql` projection: per RAW query
-    row (vec_id, embedding), the PQ_M ADC tables — each an array of the
-    fixed-point distances to the k codewords, ordered by code 1..k.
+    """The ADC-table kernel: per RAW query row (vec_id, embedding), the
+    PQ_M ADC tables — each an array of the fixed-point distances
+    (:func:`fxp_l2_sub`) to the k codewords, ordered by code 1..k (the
+    order the scoring ``element_at(l{m}, c{m})`` lookups assume).
 
     Bit-equality contract (same as the pinned Arrow encode kernel, which
     runs this exact op sequence): the query vector is unit-normalized
@@ -818,8 +767,8 @@ def _luts_driver(
     multiply / subtract are the identical IEEE-754 double ops the JVM
     executes, and the resulting entries are pure int64 — nothing float
     re-crosses py4j, so the literal luts relation is bit-identical to
-    the Column-form ``crossJoin(_cb) + _lut_sql`` projection it
-    replaces (pinned in tests/test_llm_ops.py)."""
+    the Column-form :func:`fxp_l2_sub` over ``_normalized`` queries
+    (pinned in tests/test_llm_ops.py)."""
     import numpy as np
 
     cb = np.array(cw, dtype=np.float64)  # (PQ_M, PQ_K, PQ_SUBDIM)
@@ -1082,7 +1031,7 @@ def pq_adc_topk(
     it skips the interpreted ``transform()`` normalization lambda."""
     # codebooks are PQ_K rows by construction (bounded, corpus-size-
     # independent): collected ONCE here (two tiny jobs — init sample +
-    # one Lloyd round) and re-shipped as the 1-row broadcast _cb array.
+    # one Lloyd round) and turned into driver-side ADC tables.
     # As lazy plans their corpus-scan subtrees would be RE-EXECUTED by
     # every consumer (measured 108 parquet scans / 23k plan nodes in the
     # unmaterialized pq_search plan); binary py4j doubles keep every
@@ -1218,19 +1167,16 @@ def ivf_pq_topk(emb: DataFrame, k: int = 5) -> DataFrame:
 
     # raw input: pq_train normalizes its sample driver-side (bit-equal)
     cb_rows = pq_train(emb, pq_codebook(emb).collect()).collect()
-    cbdf = _cb_onerow(spark, _cb_lists(cb_rows))
     codes = pq_encode_arrow(
         emb.select("vec_id", "embedding"), cb_rows, normalize=True
     ).join(clusters, "vec_id")
 
-    nv = _normalized(emb)
-
-    q = nv.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("nv").alias("qv")
-    )
-    luts = q.crossJoin(F.broadcast(cbdf)).select(
-        "query_id",
-        *[F.expr(_lut_sql(m, "qv")).alias(f"l{m}") for m in range(PQ_M)],
+    # the ADC tables are built driver-side, as in pq_adc_topk
+    q_rows = emb.where(F.col("vec_id") < 3).select("vec_id", "embedding").collect()
+    luts = local_relation_df(
+        spark,
+        _luts_driver(q_rows, _cb_lists(cb_rows)),
+        "query_id bigint, " + ", ".join(f"l{m} array<bigint>" for m in range(PQ_M)),
     )
     qprobe = luts.join(
         clusters.where(F.col("vec_id") < 3).select(

@@ -17,28 +17,20 @@ differently at window edges (see events_attribution's interval note).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from findb_spark.registry import register
-from findb_spark.session import Memo, load_table, table_path
-
-#: Checkpointed (user_id, active-day) relation, memoized per (session,
-#: events content): it feeds three consumers inside events_dau_wau, and a
-#: fresh fn() call otherwise re-materializes the checkpoint every time —
-#: the round-9 bench drift (0.13 -> 0.56-0.70 s steady state, one extra
-#: AQE stage) was exactly this non-amortizing rebuild.
-_UD_MEMO = Memo(capacity=4)
+from findb_spark.session import load_table
 
 
 def _active_days(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build() -> DataFrame:
-        ev = load_table(spark, sf_dir, "events")
-        ud = ev.select(
-            "user_id", F.col("ts").cast("date").alias("day")
-        ).distinct()
-        return ud.localCheckpoint(eager=False)
-
-    return _UD_MEMO.get_or_build(spark, table_path(sf_dir, "events"), build)
+    """The persisted (user_id, active-day) relation.  It feeds three
+    consumers inside events_dau_wau, and a repeat call's equal plan is
+    served from the same cached blocks."""
+    ev = load_table(spark, sf_dir, "events")
+    ud = ev.select("user_id", F.col("ts").cast("date").alias("day")).distinct()
+    return ud.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 @register(
@@ -77,9 +69,9 @@ WHERE dau.day >= d0 + 6
 )
 def events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ud feeds the interval decomposition (WAU), the DAU aggregate AND
-    # the span aggregate; without truncation the events scan + distinct
+    # the span aggregate; without a persist the events scan + distinct
     # shuffle runs three times.  ud is |users x active days| — bounded
-    # far under the event count.  Memoized checkpoint: see _active_days.
+    # far under the event count.
     ud = _active_days(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("day")
     nxt = ud.select("user_id", "day", F.lead("day").over(w).alias("next_day"))

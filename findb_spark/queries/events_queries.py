@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from findb_spark.functions.hashing import hash48_duck
 from findb_spark.ops.events import event_type_pivot, sessionize, tumbling_agg
 from findb_spark.registry import register
-from findb_spark.session import Memo, load_table, table_path
+from findb_spark.session import load_table
 
 # --- sketch self-certification (round-9 verdict item 6, hardened r11) -------
 #
@@ -401,24 +401,14 @@ def events_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Persisted distinct (user, day, type) relation per (session, events
-#: content): feeds both branches of events_hll_rollup.
-_HLL_DU_MEMO = Memo(capacity=4)
-_HLL_DU_MEMO_MAX = _HLL_DU_MEMO.capacity
-
-
 def _hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build() -> DataFrame:
-        ev = load_table(spark, sf_dir, "events")
-        du = ev.select(
-            "user_id", F.date_trunc("day", "ts").alias("day"), "event_type"
-        ).distinct()
-        # MEMORY_AND_DISK pinned explicitly — the repo convention for
-        # deliberate persists (timeseries.py, relational.py): bounded
-        # state must degrade to disk, never recompute-on-eviction
-        return du.persist(StorageLevel.MEMORY_AND_DISK)
-
-    return _HLL_DU_MEMO.get_or_build(spark, table_path(sf_dir, "events"), build)
+    """The persisted distinct (user, day, type) relation: it feeds both
+    branches of events_hll_rollup."""
+    ev = load_table(spark, sf_dir, "events")
+    du = ev.select(
+        "user_id", F.date_trunc("day", "ts").alias("day"), "event_type"
+    ).distinct()
+    return du.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 @register(

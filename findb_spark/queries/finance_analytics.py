@@ -175,9 +175,8 @@ def ts_rolling_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # upstream shuffle stages eagerly under AQE, silently moving real
     # compute into the bench's (unbilled) build phase.  InMemoryRelation
     # preserves the child's (asset_id) partitioning/ordering, so the
-    # rolling window below still pipelines with no new exchange.  Block
-    # lifetime: module persist convention (release_caches between sweeps);
-    # ri is one narrow row per (asset, day).
+    # rolling window below still pipelines with no new exchange; ri is one
+    # narrow row per (asset, day).
     from pyspark.storagelevel import StorageLevel
 
     ri = ri.persist(StorageLevel.MEMORY_AND_DISK)

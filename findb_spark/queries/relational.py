@@ -1441,9 +1441,6 @@ def stats_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         # freq feeds two consumers (the count/sum/max aggregate and the
         # ranked percentile pass): persist the key-cardinality-sized
         # relation so the wide fact scan runs ONCE per profiled key.
-        # Lifetime: lazy return forbids an eager unpersist (it would
-        # reintroduce the double scan); long-lived drivers sweeping many
-        # sf_dirs release via findb_spark.session.release_caches()
         freq = (
             load_table(spark, sf_dir, table)
             .groupBy(key)

@@ -53,8 +53,7 @@ def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     separate calls — whichever query runs first materializes the daily
     series once (bounded: <= 50 assets x calendar days at any SF) and
     every later consumer reads the cached rows instead of re-running
-    the full scan + window.  Release path for long-lived drivers:
-    :func:`findb_spark.session.release_caches` between sweeps."""
+    the full scan + window."""
     from pyspark.storagelevel import StorageLevel
 
     return daily_series(

@@ -113,39 +113,23 @@ def files_fingerprint(path: str) -> tuple:
 
 
 class Memo:
-    """Bounded memo of values derived from one parquet table: the one
-    cache abstraction of the engine.
+    """Bounded memo of driver-side values derived from one parquet table
+    (schemas, PQ codebook rows).  Relations are not kept here: Spark's
+    cache holds them (see :func:`release_caches`).
 
     **Key.** :meth:`key` builds ``(applicationId, files_fingerprint(path),
     *extra)`` from the caller's source parquet ``path``; callers never
-    build keys themselves.  The application id keeps a stopped session's
-    dead RDDs from being resurrected; the fingerprint makes a rewritten
-    table a miss, so no entry can outlive the content it was built from.
-    ``extra`` carries the build's other inputs (e.g. the PQ geometry).
-
-    **Eviction.** At ``capacity`` the oldest entry goes, and an evicted
-    DataFrame is ``unpersist()``-ed: persist-backed blocks drop at once,
-    and for a ``localCheckpoint``-backed DataFrame the call does nothing
-    (its blocks are reclaimed by the ContextCleaner once unreferenced).
-    Building an entry for a table's new content first evicts the entries
-    of its older content: Spark's cache matches plans, not file
-    contents, so a persisted relation over the old files left cached
-    would be matched by the rebuilt plan and serve the old rows.
-
-    **Release.** Every instance registers itself, and
-    :func:`release_caches` drops every entry whose value is a DataFrame
-    (``clearCache`` invalidates those) while keeping driver-side values
-    such as schemas and codebook rows, which a content-keyed entry keeps
-    correct.  ``in`` / ``len`` / truthiness expose the store to tests."""
-
-    _instances: "list[Memo]" = []
+    build keys themselves.  The fingerprint makes a rewritten table a
+    miss, so no value outlives the content it was built from, and the
+    application id scopes values to one session.  ``extra`` carries the
+    build's other inputs (e.g. the PQ geometry).  At ``capacity`` the
+    oldest entry goes.  ``in`` / ``len`` / truthiness expose the store to
+    tests."""
 
     def __init__(self, capacity: int = 4):
-        #: key -> (realpath of the source table, value)
-        self._store: dict[tuple, tuple[str, object]] = {}
+        self._store: dict[tuple, object] = {}
         self._lock = threading.Lock()
         self.capacity = capacity
-        Memo._instances.append(self)
 
     def key(self, spark: SparkSession, path: str, *extra) -> tuple:
         return (spark.sparkContext.applicationId, files_fingerprint(path), *extra)
@@ -153,28 +137,12 @@ class Memo:
     def get_or_build(self, spark: SparkSession, path: str, build, *extra):
         """The memoized ``build()`` for ``path``'s current content."""
         k = self.key(spark, path, *extra)
-        src = os.path.realpath(path)
         with self._lock:
             if k not in self._store:
-                stale = [o for o, (s, _) in self._store.items() if s == src and o[1] != k[1]]
-                for old in stale:
-                    self._evict(old)
                 while len(self._store) >= self.capacity:
-                    self._evict(next(iter(self._store)))
-                self._store[k] = (src, build())
-            return self._store[k][1]
-
-    def _evict(self, k: tuple) -> None:
-        _src, value = self._store.pop(k)
-        if isinstance(value, DataFrame):
-            value.unpersist()
-
-    def release(self) -> None:
-        """Drop every DataFrame entry (see the class docstring)."""
-        with self._lock:
-            self._store = {
-                k: e for k, e in self._store.items() if not isinstance(e[1], DataFrame)
-            }
+                    del self._store[next(iter(self._store))]
+                self._store[k] = build()
+            return self._store[k]
 
     def __contains__(self, k) -> bool:
         return k in self._store
@@ -182,32 +150,26 @@ class Memo:
     def __len__(self) -> int:
         return len(self._store)
 
-    def __bool__(self) -> bool:
-        return bool(self._store)
-
 
 def release_caches(spark: SparkSession) -> None:
-    """Drop every deliberately-persisted intermediate relation.
+    """Drop every relation the engine's operators persisted.
 
-    The engine's operators persist small reused intermediates — hashed
-    shingle arrays and verified pair relations (``ops/dedup.py``), MinHash
-    signatures, per-key frequency profiles (``stats_key_skew``), the
-    shared PIT daily price series (``queries/timeseries.py:_daily``) — and
+    Spark's cache is the only holder of reused relations.  Operators
+    persist small reused intermediates (hashed shingle arrays and pair
+    relations in ``ops/dedup.py``, the daily price series
+    ``queries/timeseries.py:_daily``, per-key frequency profiles) and
     return LAZY DataFrames, so they cannot unpersist before the caller
-    executes (an eager unpersist would reintroduce the multi-evaluation
-    the persist exists to prevent).  In a long-lived driver sweeping many
-    corpora / sf_dirs those MEMORY_AND_DISK blocks accumulate unboundedly
-    (disk blocks are not LRU-evicted): call this between sweeps.  Inside
-    one sweep the persists are bounded by design — each is keyed by the
-    corpus plan, orders of magnitude smaller than its source table.
+    executes.  Spark substitutes a cached relation into any later plan
+    equal to it, and plans compare paths, not file contents; so
+    :func:`read_parquet`, the engine's read path, calls
+    ``spark.catalog.refreshByPath`` the first time it opens a table's
+    new content, and every cached relation over a rewritten table is
+    rebuilt from the new files.  That is the one invalidation rule.
 
-    Every :class:`Memo` drops its DataFrame entries, which would otherwise
-    hand out uncached plans after ``clearCache``; memoized schemas and
-    PQ codebooks stay, because their content-fingerprint keys cannot go
-    stale and dropping them would only repeat the footer reads and the
-    training."""
-    for memo in Memo._instances:
-        memo.release()
+    In a long-lived driver sweeping many corpora / sf_dirs the
+    MEMORY_AND_DISK blocks accumulate (disk blocks are not LRU-evicted):
+    call this between sweeps.  :class:`Memo` values (schemas, PQ
+    codebooks) stay; their content keys cannot go stale."""
     spark.catalog.clearCache()
 
 
@@ -292,9 +254,16 @@ _SCHEMA_MEMO = Memo(capacity=64)
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` with the schema taken from
-    :data:`_SCHEMA_MEMO`: only the first open of a table's current
-    content infers it."""
-    schema = _SCHEMA_MEMO.get_or_build(spark, path, lambda: spark.read.parquet(path).schema)
+    :data:`_SCHEMA_MEMO`.  Only the first open of a table's current
+    content infers it, and that open also refreshes Spark's cached
+    relations over ``path`` (see :func:`release_caches`)."""
+
+    def build():
+        schema = spark.read.parquet(path).schema
+        spark.catalog.refreshByPath(path)
+        return schema
+
+    schema = _SCHEMA_MEMO.get_or_build(spark, path, build)
     return spark.read.schema(schema).parquet(path)
 
 

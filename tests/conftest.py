@@ -9,6 +9,16 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 
+def cache_entry(spark, df):
+    """Identity of the cached relation Spark's cache serves ``df``'s plan
+    from, or None when the plan is not cached: equal values mean two
+    DataFrames read the same cached blocks."""
+    found = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    if not found.isDefined():
+        return None
+    return spark._jvm.System.identityHashCode(found.get().cachedRepresentation())
+
+
 @pytest.fixture(scope="session")
 def spark():
     from findb_spark.session import get_spark

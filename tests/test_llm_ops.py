@@ -521,49 +521,46 @@ def test_local_relation_df(spark):
 
 
 def test_pq_luts_driver_matches_column_form(spark, sf_dir):
-    """The driver-side ADC-table kernel (_luts_driver — what pq_adc_topk
-    ships as a literal broadcast relation since round 13) must be
-    BIT-IDENTICAL to the Column-form specification it replaced:
-    JVM-normalized queries crossJoined with the one-row _cb codebook and
-    projected through _lut_sql (integer entries, so equality is exact)."""
+    """The ADC-table kernel (_luts_driver — what pq_adc_topk and
+    ivf_pq_topk ship as a literal broadcast relation) must be
+    BIT-IDENTICAL to the Column-form specification: fxp_l2_sub between
+    JVM-normalized queries and every codeword (integer entries, so
+    equality is exact)."""
     from pyspark.sql import functions as F
 
     from findb_spark.ops.vector import (
         PQ_M,
         _cb_lists,
-        _cb_onerow,
-        _lut_sql,
         _luts_driver,
         _normalized,
+        fxp_l2_sub,
         pq_codebook,
         pq_train,
     )
-    from findb_spark.session import load_table
+    from findb_spark.session import load_table, local_relation_df
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cw = _cb_lists(pq_train(emb, pq_codebook(emb).collect()).collect())
+    cbw = pq_train(emb, pq_codebook(emb).collect())
+    cb_rows = cbw.collect()
     q_rows = (
         emb.where(F.col("vec_id") < 3).select("vec_id", "embedding").collect()
     )
-    got = sorted(_luts_driver(q_rows, cw))
+    got = sorted(_luts_driver(q_rows, _cb_lists(cb_rows)))
     q = _normalized(emb).where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("nv").alias("qv")
     )
-    spec_rows = (
-        q.crossJoin(F.broadcast(_cb_onerow(spark, cw)))
-        .select(
-            "query_id",
-            *[F.expr(_lut_sql(m, "qv")).alias(f"l{m}") for m in range(PQ_M)],
-        )
-        .collect()
+    cb = local_relation_df(spark, cb_rows, cbw.schema)
+    dists = q.crossJoin(F.broadcast(cb)).select(
+        "query_id",
+        "code",
+        *[fxp_l2_sub(F.col("qv"), F.col(f"sw{m}"), m).alias(f"d{m}") for m in range(PQ_M)],
     )
-    spec = sorted(
-        (
-            int(r["query_id"]),
-            *[[int(x) for x in r[f"l{m}"]] for m in range(PQ_M)],
-        )
-        for r in spec_rows
-    )
+    tables: dict[int, list[list[int]]] = {}
+    for r in sorted(dists.collect(), key=lambda r: (r["query_id"], r["code"])):
+        t = tables.setdefault(int(r["query_id"]), [[] for _ in range(PQ_M)])
+        for m in range(PQ_M):
+            t[m].append(int(r[f"d{m}"]))
+    spec = sorted((qid, *t) for qid, t in tables.items())
     assert len(got) == 3
     assert got == spec
 

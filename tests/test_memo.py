@@ -1,9 +1,11 @@
-"""session.Memo: every engine cache is keyed by its source table's content,
-so a rewritten table is never served stale, and release_caches drops only
-the DataFrame entries that clearCache invalidates."""
+"""Reuse is keyed to the data it was built from: session.Memo keys driver
+values (schemas, PQ codebooks) by their source table's content, Spark's
+cache holds the persisted relations and is refreshed when a table is
+rewritten, and release_caches drops the relations but keeps the values."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pyarrow as pa
@@ -13,7 +15,7 @@ import findb_spark.queries.events_analytics as ea
 import findb_spark.queries.events_queries as eq
 import findb_spark.queries.vector_queries as vq
 from findb_spark.session import load_table, release_caches, table_path
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, cache_entry
 
 
 def _events_copy(tmp_path) -> str:
@@ -60,19 +62,47 @@ def test_events_rewrite_rebuilds_memoized_relations(spark, tmp_path):
     assert _memo_counts(spark, sf_dir) == fresh
 
 
+def test_rewrite_refreshes_persisted_relations(spark, tmp_path):
+    """Relations an operator persists (``timeseries._daily``, the
+    ``ops/dedup.py`` shingle and pair relations) are served by plan
+    matching, which compares paths, not files: after an in-place rewrite
+    the specs must answer from the new rows."""
+    from findb_spark.oracle import compare_query, duck_connection
+    from findb_spark.registry import all_specs
+
+    d = tmp_path / "sf"
+    d.mkdir()
+    for f in os.listdir(SF_DIR):
+        shutil.copy(os.path.join(SF_DIR, f), d / f)
+    sf_dir = str(d)
+    specs = [all_specs()[n] for n in ("ts_moving_avg", "dedup_ngram_jaccard")]
+    con = duck_connection(sf_dir)
+    try:
+        for s in specs:
+            assert compare_query(spark, con, s.fn, s.sql, sf_dir, name=s.name) == []
+        for name in ("lineitem", "documents"):
+            path = table_path(sf_dir, name)
+            t = pq.read_table(path)
+            pq.write_table(t.slice(0, t.num_rows // 2), path)
+        stale = {s.name: compare_query(spark, con, s.fn, s.sql, sf_dir, name=s.name) for s in specs}
+        assert stale == {s.name: [] for s in specs}
+    finally:
+        con.close()
+
+
 def test_release_caches_keeps_driver_side_values(spark, tmp_path, count_jobs):
     from findb_spark.session import _SCHEMA_MEMO
 
     sf_dir = _events_copy(tmp_path)
     cb = vq._trained_pq_codebook(spark, SF_DIR)
     cols = load_table(spark, sf_dir, "events").columns
-    ea._active_days(spark, sf_dir)
-    eq._hll_distinct_users(spark, sf_dir)
+    rels = [ea._active_days(spark, sf_dir), eq._hll_distinct_users(spark, sf_dir)]
     schema_key = _SCHEMA_MEMO.key(spark, table_path(sf_dir, "events"))
-    assert ea._UD_MEMO and eq._HLL_DU_MEMO and schema_key in _SCHEMA_MEMO
+    assert all(cache_entry(spark, r) is not None for r in rels)
+    assert schema_key in _SCHEMA_MEMO
 
     release_caches(spark)
-    assert not ea._UD_MEMO and not eq._HLL_DU_MEMO
+    assert all(cache_entry(spark, r) is None for r in rels)
     assert vq._PQ_CB_MEMO and schema_key in _SCHEMA_MEMO
 
     again, jobs = count_jobs(lambda: vq._trained_pq_codebook(spark, SF_DIR))

@@ -21,10 +21,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, cache_entry
 
 import findb_spark.queries.events_queries as eq
-from findb_spark.session import table_path
 
 
 def test_approx_distinct_bound_flips_on_corrupt_estimate(spark, monkeypatch):
@@ -67,31 +66,31 @@ def test_hll_rollup_bound_flips_on_corrupt_estimate(spark, monkeypatch):
 
 def test_hll_rollup_memoizes_one_cached_relation(spark):
     """Round-11 verdict item 5: repeated invocations in a long-lived
-    session must reuse ONE persisted distinct relation (the bounded
-    _UD_MEMO pattern), not accumulate a fresh persist per call — and the
-    storage level is pinned to the repo's MEMORY_AND_DISK convention."""
+    session must reuse ONE persisted distinct relation, not accumulate a
+    fresh persist per call — and the storage level is pinned to the
+    repo's MEMORY_AND_DISK convention."""
     eq.events_hll_rollup(spark, SF_DIR)
     du1 = eq._hll_distinct_users(spark, SF_DIR)
     eq.events_hll_rollup(spark, SF_DIR)
     du2 = eq._hll_distinct_users(spark, SF_DIR)
-    assert du1 is du2, "memo returned a fresh relation on a repeat call"
-    key = eq._HLL_DU_MEMO.key(spark, table_path(SF_DIR, "events"))
-    assert key in eq._HLL_DU_MEMO and len(eq._HLL_DU_MEMO) <= eq._HLL_DU_MEMO_MAX
+    assert cache_entry(spark, du1) is not None
+    assert cache_entry(spark, du2) == cache_entry(spark, du1), (
+        "a repeat call persisted a second relation"
+    )
     sl = du1.storageLevel
     assert sl.useMemory and sl.useDisk, f"storage level {sl} not MEMORY_AND_DISK"
 
 
 def test_release_caches_drops_hll_memo(spark):
-    """findb_spark.session.release_caches clears the JVM cache; a memo
-    entry surviving it would hand out an UNcached plan (silently breaking
-    the one-scan contract) — the memo must empty with the cache."""
+    """findb_spark.session.release_caches drops the persisted relation,
+    and the next call persists it afresh rather than handing out an
+    uncached plan (which would silently break the one-scan contract)."""
     from findb_spark.session import release_caches
 
-    eq._hll_distinct_users(spark, SF_DIR)
-    assert eq._HLL_DU_MEMO
+    du = eq._hll_distinct_users(spark, SF_DIR)
+    assert cache_entry(spark, du) is not None
     release_caches(spark)
-    assert not eq._HLL_DU_MEMO
-    # and the next call re-memoizes a freshly persisted relation
+    assert cache_entry(spark, du) is None
     du = eq._hll_distinct_users(spark, SF_DIR)
     assert du.storageLevel.useMemory and du.storageLevel.useDisk
 
