@@ -16,17 +16,41 @@ Spark-first design notes (100 TB posture):
   files/row-groups covering that asset's date range — the moral equivalent of
   the reference's B+tree descent (file.rs:425-452) at cluster scale.
 - A point read is small, so its cost is per-query driver work, not executor
-  work: each Exchange is a scheduled stage and a global ``orderBy`` adds a
-  range-sampling job. When the planner's size estimate of the filtered scan
-  (the partition-pruned files; without CBO a Filter does not shrink it) is
-  at most ``ONE_TASK_MAX_BYTES``, the filter is ``coalesce(1)``-ed.
-  ``SinglePartition`` satisfies both the aggregate's and the sort's required
-  distribution, so the plan has no Exchange and runs as one job of one task
-  (the reference's short leaf walk, file.rs:508-570). The bound is measured,
-  not borrowed: it is the largest scan one task reads no slower than the
-  distributed plan even when row-group pruning does not help (see the
-  constant). Larger or unknown-size inputs (RDD-backed relations report
-  ``spark.sql.defaultSizeInBytes``) keep the distributed plan below. Both
+  work: planning, and each scheduled job and stage.  When the input is a
+  *bare parquet scan* (the analyzed plan is a parquet ``LogicalRelation``,
+  optionally under a ``Project`` of plain attribute references: what
+  ``versioning.read_version`` and ``layout.read_prices`` return), the
+  driver answers the query itself and builds no Spark plan at all.  It
+  lists the relation's files, drops ``date_month=`` directories outside
+  the range, and, when the remaining files' bytes (the planner's
+  ``sizeInBytes`` of a file relation) are at most ``ONE_TASK_MAX_BYTES``,
+  reads them with ``pyarrow.dataset`` under the same asset/date/ts
+  predicates, skipping row groups by their min/max statistics (the
+  reference's 1-3 leaf pages, file.rs:508-570).  It keeps the max-``(ts,
+  value)`` row per date, the tie rule of :func:`_latest_revision`, and
+  returns the rows, date descending, as a ``LocalRelation`` whose
+  ``collect`` runs no Spark job.  The answer is computed when
+  ``asof_range`` is called.  That is sound because a version directory
+  (``v{N}-{hex}/``) is never rewritten, and a table rewritten in place
+  after the call is also one the Spark plan could not read any more: its
+  listed files are gone.  Every other input keeps the Spark plan below:
+  RDD, local and Python-data-source relations, renaming or derived
+  projections, files that are not local, column types other than integral
+  keys and a floating ``value``, query bounds outside a column's type,
+  files that lack a column, more bytes than the bound, and any candidate
+  row whose ``value`` is NULL or NaN (pyarrow and Spark order those
+  differently, and ``session.local_relation_df`` cannot carry NaN).
+- On the Spark plan, each Exchange is a scheduled stage and a global
+  ``orderBy`` adds a range-sampling job.  When the planner's size estimate
+  of the filtered scan (the partition-pruned files; without CBO a Filter
+  does not shrink it) is at most ``ONE_TASK_MAX_BYTES``, the filter is
+  ``coalesce(1)``-ed.  ``SinglePartition`` satisfies both the aggregate's
+  and the sort's required distribution, so the plan has no Exchange and
+  runs as one job of one task.  The bound is measured, not borrowed: it is
+  the largest scan one task reads no slower than the distributed plan even
+  when row-group pruning does not help (see the constant).  Larger or
+  unknown-size inputs (RDD-backed relations report
+  ``spark.sql.defaultSizeInBytes``) keep the distributed plan below.  Both
   are the same lazy builder; only the input partitioning differs.
 - ``max_by(struct(ts, value), ts)`` gives a *partial-aggregatable* plan: the
   per-(asset,date) "latest revision" combines map-side, so the shuffle moves
@@ -41,7 +65,12 @@ Spark-first design notes (100 TB posture):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+import os
+import re
+from urllib.parse import unquote, urlparse
+
+import numpy as np
+from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
 #: canonical column order of a bitemporal prices table (FIXTURES.md §A1)
 PRICE_COLUMNS = ("asset_id", "date", "ts", "value")
@@ -57,15 +86,19 @@ def _latest_revision(grouped_keys: list[str], df: DataFrame) -> DataFrame:
     ).select(*grouped_keys, F.col("_r.ts").alias("ts"), F.col("_r.value").alias("value"))
 
 
-#: Largest planner size estimate (bytes) of a filtered scan that
-#: `asof_range` reads on one task. Measured with
-#: ``scripts/asof_one_task_probe.py`` on a 4-vCPU host (``local[4]``, 16-file
-#: tables with rows in random order, so row-group pruning skips nothing: the
-#: worst case for one task), p50 of one task vs the distributed plan: 23.4 MB
-#: 277 vs 295 ms and 238 vs 249 ms (two runs), 27.2 MB 241 vs 251 ms, 31.1 MB
-#: 290 vs 268 ms and 250 vs 232 ms, 46.5 MB 327 vs 261 ms, 62.0 MB 456 vs
-#: 347 ms. Clustered tables (`findb_spark.layout.write_prices`) prune row
-#: groups and stay faster on one task at 54.5 MB (189 vs 304 ms).
+#: Largest scan (bytes) that `asof_range` answers without distributing it.
+#: It gates both small-read paths: the driver path on the bytes of a bare
+#: parquet scan's pruned files, and, for every other input, the one-task
+#: Spark plan on the planner's size estimate of the filtered scan.  It was
+#: measured for the second, with ``scripts/asof_one_task_probe.py`` on a
+#: 4-vCPU host (``local[4]``, 16-file tables with rows in random order, so
+#: row-group pruning skips nothing: the worst case for one task), p50 of one
+#: task vs the distributed plan: 23.4 MB 277 vs 295 ms and 238 vs 249 ms (two
+#: runs), 27.2 MB 241 vs 251 ms, 31.1 MB 290 vs 268 ms and 250 vs 232 ms,
+#: 46.5 MB 327 vs 261 ms, 62.0 MB 456 vs 347 ms.  Clustered tables
+#: (`findb_spark.layout.write_prices`) prune row groups and stay faster on
+#: one task at 54.5 MB (189 vs 304 ms).  The probe times the driver path as
+#: a third column.
 ONE_TASK_MAX_BYTES = 24 * 1024 * 1024
 
 
@@ -75,6 +108,130 @@ def _fits_one_task(df: DataFrame) -> bool:
     job."""
     size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     return size <= ONE_TASK_MAX_BYTES
+
+
+#: the column each `asof_range` bound is compared with
+_BOUND_COLUMNS = ("asset_id", "date", "date", "ts")
+
+#: hive partition directory of `layout.write_prices(date_bucket="month")`
+_DATE_MONTH_DIR = re.compile(r"/date_month=([^/]*)/")
+
+
+def _bare_parquet_relation(prices: DataFrame):
+    """The ``HadoopFsRelation`` under ``prices`` when its analyzed plan is a
+    parquet ``LogicalRelation``, optionally under a ``Project`` of plain
+    attribute references (no alias, so no renaming and no derived column);
+    else None.  Reading the analyzed plan runs neither optimizer nor job."""
+    plan = prices._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "Project":
+        items = plan.projectList()
+        if any(
+            items.apply(i).getClass().getSimpleName() != "AttributeReference"
+            for i in range(items.size())
+        ):
+            return None
+        plan = plan.child()
+    if plan.getClass().getSimpleName() != "LogicalRelation" or plan.isStreaming():
+        return None
+    rel = plan.relation()
+    if (
+        rel.getClass().getSimpleName() != "HadoopFsRelation"
+        or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
+    ):
+        return None
+    return rel
+
+
+def _driver_scan(prices: DataFrame, asset_id, start_date, end_date, asof_ts):
+    """The parquet row groups the driver path of `asof_range` reads, as
+    pyarrow fragments, with the row filter and the arrow schema of
+    `PRICE_COLUMNS`; None when the driver path does not apply (module
+    notes).  Row groups whose min/max statistics exclude the filter are
+    already dropped, so ``len`` of the fragments is the row groups read."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    bounds = (asset_id, start_date, end_date, asof_ts)
+    if not all(isinstance(v, int) and not isinstance(v, bool) for v in bounds):
+        return None
+    fields = {f.name: f.dataType for f in prices.schema.fields}
+    if not all(isinstance(fields.get(c), T.IntegralType) for c in PRICE_COLUMNS[:3]):
+        return None
+    if not isinstance(fields.get("value"), T.DoubleType | T.FloatType):
+        return None
+    arrow = {c: to_arrow_type(fields[c]) for c in PRICE_COLUMNS}
+    for c, v in zip(_BOUND_COLUMNS, bounds):
+        info = np.iinfo(arrow[c].to_pandas_dtype())
+        if not info.min <= v <= info.max:
+            return None
+    rel = _bare_parquet_relation(prices)
+    if rel is None:
+        return None
+    # asof_filter's partition predicate, on the directory names
+    by_month = "date_month" in fields
+    if by_month and "date_month" not in rel.partitionSchema().fieldNames():
+        return None
+    paths = []
+    for uri in rel.inputFiles():
+        u = urlparse(uri)
+        if u.scheme != "file":
+            return None
+        path = unquote(u.path)
+        if by_month:
+            month = _DATE_MONTH_DIR.search(path).group(1)
+            if not (month.isdigit() and start_date // 100 <= int(month) <= end_date // 100):
+                continue
+        paths.append(path)
+    if sum(os.path.getsize(p) for p in paths) > ONE_TASK_MAX_BYTES:
+        return None
+    asset, start, end, ts = (pa.scalar(v, arrow[c]) for c, v in zip(_BOUND_COLUMNS, bounds))
+    row_filter = (
+        (ds.field("asset_id") == asset)
+        & (ds.field("date") >= start)
+        & (ds.field("date") <= end)
+        & (ds.field("ts") <= ts)
+    )
+    arrow_schema = pa.schema(list(arrow.items()))
+    row_groups = []
+    for frag in ds.dataset(paths, schema=arrow_schema, format="parquet").get_fragments():
+        if not set(PRICE_COLUMNS) <= set(frag.physical_schema.names):
+            return None
+        row_groups.extend(frag.split_by_row_group(row_filter))
+    return row_groups, row_filter, arrow_schema
+
+
+def _driver_asof_range(prices: DataFrame, asset_id, start_date, end_date, asof_ts):
+    """`asof_range` answered on the driver as a ``LocalRelation``, or None
+    when the driver path does not apply (module notes)."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    from findb_spark.session import local_relation_df
+
+    scan = _driver_scan(prices, asset_id, start_date, end_date, asof_ts)
+    if scan is None:
+        return None
+    row_groups, row_filter, arrow_schema = scan
+    table = ds.FileSystemDataset(row_groups, arrow_schema, ds.ParquetFileFormat()).to_table(
+        filter=row_filter
+    )
+    value = table["value"]
+    if value.null_count or pc.any(pc.is_nan(value)).as_py():
+        return None
+    table = table.sort_by([(c, "descending") for c in ("date", "ts", "value")])
+    dates = table["date"].to_numpy()
+    first = np.ones(len(dates), dtype=bool)
+    first[1:] = dates[1:] != dates[:-1]
+    table = table.filter(first)
+    fields = {f.name: f for f in prices.schema.fields}
+    # max_by's result is nullable whatever its input: so are ts and value
+    schema = T.StructType(
+        [fields["asset_id"], fields["date"]]
+        + [T.StructField(c, fields[c].dataType, True) for c in ("ts", "value")]
+    )
+    rows = list(zip(*(table[c].to_pylist() for c in PRICE_COLUMNS)))
+    return local_relation_df(prices.sparkSession, rows, schema)
 
 
 def asof_filter(
@@ -111,9 +268,14 @@ def asof_range(
     """The flagship operator: bitemporal as-of range query (file.rs:425-570).
 
     Returns columns (asset_id, date, ts, value), descending date order,
-    at most one row per date. A filtered scan small enough for one task is
-    planned on a single partition: one Spark job, no Exchange (module notes).
+    at most one row per date.  A small bare parquet scan is answered on the
+    driver, as a relation whose ``collect`` runs no Spark job; any other
+    filtered scan small enough for one task is planned on a single
+    partition: one Spark job, no Exchange (module notes).
     """
+    answer = _driver_asof_range(prices, asset_id, start_date, end_date, asof_ts)
+    if answer is not None:
+        return answer
     filtered = asof_filter(prices, asset_id, start_date, end_date, asof_ts)
     if _fits_one_task(filtered):
         filtered = filtered.coalesce(1)

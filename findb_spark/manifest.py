@@ -203,8 +203,8 @@ BLOOM_BITS = 1 << 20  # 1M bits = 16k int64 words per file (~128 KB)
 BLOOM_HASHES = 4
 
 
-def _bloom_positions(value, k: int = BLOOM_HASHES):
-    """The k bit positions for a value — hashlib-based, so build (executor
+def _bloom_positions(value):
+    """The ``BLOOM_HASHES`` bit positions for a value — hashlib-based, so build (executor
     Python) and probe (driver Python) always agree; only internal
     consistency matters, nothing here must match a SQL engine."""
     import hashlib
@@ -214,7 +214,7 @@ def _bloom_positions(value, k: int = BLOOM_HASHES):
             hashlib.md5(f"{value}:{i}".encode()).digest()[:8], "little"
         )
         % BLOOM_BITS
-        for i in range(k)
+        for i in range(BLOOM_HASHES)
     ]
 
 

@@ -77,6 +77,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.codegen.wholeStage", "true")
+        # events ``ts`` may be TIMESTAMP(NANOS), which Spark reads only as
+        # a long (see load_table)
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     if master is None and "SPARK_MASTER" not in os.environ:
         master = f"local[{cpus}]"
@@ -199,7 +202,8 @@ def local_relation_df(spark: SparkSession, rows, schema):
     py4j path this replaces — pinned by the oracle gate over every
     migrated call site and by test_local_relation_df.
 
-    ``rows``: list of tuples/Rows (positional) or dicts (by name).
+    ``rows``: list of tuples/Rows (positional) or dicts (by name); an empty
+    list gives an empty ``LocalRelation`` built in the JVM.
     ``schema``: StructType or DDL string.  Oversized payloads degrade to
     an Arrow-batch-backed JVM RDD (still no Python at evaluation).
 
@@ -218,7 +222,11 @@ def local_relation_df(spark: SparkSession, rows, schema):
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
     if not rows:
-        return spark.createDataFrame([], schema)
+        # ``createDataFrame([])`` would be RDD-backed: jobs on every collect
+        jdf = spark._jsparkSession.createDataFrame(
+            spark._jvm.java.util.ArrayList(), spark._jsparkSession.parseDataType(schema.json())
+        )
+        return DataFrame(jdf, spark)
     names = schema.fieldNames()
     data = {
         n: [r[n] if isinstance(r, dict) else r[i] for r in rows]
@@ -272,7 +280,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
 
     The events table's ``ts`` has shipped in two physical flavors across
     testdata generations — TIMESTAMP(NANOS) (which Spark's parquet reader
-    rejects by default; read nanos as long, truncate to micros) and
+    rejects by default; ``get_spark`` sets nanosAsLong to read nanos as
+    long, then this truncates to micros) and
     TIMESTAMP(MICROS, isAdjustedToUTC=false) (which Spark reads as
     TIMESTAMP_NTZ). Normalize both to a session-tz TimestampType: the
     session timezone is pinned to UTC, so the NTZ->LTZ cast preserves the
@@ -282,7 +291,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     path = table_path(sf_dir, name)
     if name != "events":
         return read_parquet(spark, path)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return normalize_events_ts(read_parquet(spark, path))
 
 

@@ -41,15 +41,14 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     session-tz microsecond timestamp, matching findb_spark.session.load_table).
 
     A file-source stream needs an explicit schema; the events parquet has
-    shipped ``ts`` as both TIMESTAMP(NANOS) (reads as long under
-    nanosAsLong) and TIMESTAMP(MICROS, isAdjustedToUTC=false) (reads as
-    TIMESTAMP_NTZ) across testdata generations, so take the authoritative
-    schema from a footer-only batch read of the same file and normalize
-    the same way the batch path does (session tz is UTC, so the NTZ->LTZ
-    cast preserves epoch micros)."""
+    shipped ``ts`` as both TIMESTAMP(NANOS) (reads as long under the
+    nanosAsLong setting of ``get_spark``) and TIMESTAMP(MICROS,
+    isAdjustedToUTC=false) (reads as TIMESTAMP_NTZ) across testdata
+    generations, so take the authoritative schema from a footer-only batch
+    read of the same file and normalize the same way the batch path does
+    (session tz is UTC, so the NTZ->LTZ cast preserves epoch micros)."""
     from findb_spark.session import normalize_events_ts, read_parquet, table_path
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     batch_schema = read_parquet(spark, table_path(sf_dir, "events")).schema
     raw = (
         spark.readStream.schema(batch_schema)

@@ -1,11 +1,17 @@
 #!/usr/bin/env python
 """Where does a one-task as-of read stop paying off?
 
-Times ``asof_range(...).collect()`` on the single-partition plan
-(``coalesce(1)``, no Exchange) against the distributed plan
-(``partial_max_by`` + shuffle + range-sampled sort) on generated price
-tables of growing size.  ``findb_spark.asof.ONE_TASK_MAX_BYTES`` is the
-largest size at which the one-task plan was measured no slower.
+Times ``asof_range(...).collect()`` three ways on generated price tables of
+growing size: the single-partition Spark plan (``coalesce(1)``, no
+Exchange), the distributed Spark plan (``partial_max_by`` + shuffle +
+range-sampled sort), and the driver path (pyarrow read of the pruned row
+groups, no Spark job).  The two Spark plans read the table through
+``where(lit(True))``, which is not a bare scan, so they stay on Spark.
+``findb_spark.asof.ONE_TASK_MAX_BYTES`` gates both small-read paths: the
+driver path for bare parquet scans, the one-task plan for every other
+input.  It is the largest size at which the one-task plan was measured no
+slower than the distributed one; the driver column shows how the driver
+path compares at the same sizes.
 
 Layouts: ``random`` writes rows in random order, so min/max row-group
 pruning skips nothing and the one task must decode every row group (the
@@ -15,7 +21,8 @@ worst case for one task); ``clustered`` writes through
 Usage: ``python scripts/asof_one_task_probe.py WORKDIR [rows,...]
 [layout,...] [reps]``.  Each (rows, layout) pair prints one JSON line with
 the parquet bytes, the planner's size estimate and the median latency of
-both plans over ``reps`` alternating runs (the first two are warm-up).
+the three paths over ``reps`` runs in rotating order (the first two are
+warm-up).
 Runs on ``local[$SPARK_GRAFT_CPUS]``.
 """
 
@@ -58,7 +65,8 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     n_assets = 300
     query = (7, 20000101, 20091231, 10**9)  # one asset, every date, every revision
-    plans = {"one_task": 1 << 62, "distributed": -1}  # ONE_TASK_MAX_BYTES per plan
+    # (bare scan?, ONE_TASK_MAX_BYTES) per path
+    plans = {"one_task": (False, 1 << 62), "distributed": (False, -1), "driver": (True, 1 << 62)}
     bound = asof.ONE_TASK_MAX_BYTES
     try:
         for rows in sizes:
@@ -78,16 +86,23 @@ def main() -> int:
                     else:
                         df.orderBy(F.rand(3)).repartition(16).write.parquet(path)
                 table = read_prices(spark, path)
+                inputs = {True: table, False: table.where(F.lit(True))}
                 estimate = table._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
                 lat = {name: [] for name in plans}
+                answers = {}
                 for rep in range(reps):
-                    order = list(plans) if rep % 2 == 0 else list(plans)[::-1]
-                    for name in order:
-                        asof.ONE_TASK_MAX_BYTES = plans[name]
+                    names = list(plans)
+                    for name in names[rep % 3:] + names[: rep % 3]:
+                        bare, asof.ONE_TASK_MAX_BYTES = plans[name]
                         t0 = time.perf_counter()
-                        n = len(asof.asof_range(table, *query).collect())
+                        answers[name] = asof.asof_range(inputs[bare], *query).collect()
                         if rep >= 2:
                             lat[name].append((time.perf_counter() - t0) * 1e3)
+                if len({repr(a) for a in answers.values()}) != 1:
+                    raise SystemExit(f"paths disagree on {path}")
+                if asof._driver_scan(table, *query) is None:
+                    raise SystemExit(f"the driver path does not apply to {path}")
+                n = len(answers["driver"])
                 print(
                     json.dumps(
                         {

@@ -11,9 +11,12 @@ import contextlib
 import io
 
 import pytest
+from pyspark.sql import functions as F
 
-from findb_spark.asof import asof_batch, asof_point, asof_range, add_revisions
+from findb_spark.asof import PRICE_COLUMNS, asof_batch, asof_point, asof_range, add_revisions
 from findb_spark.prices import golden_prices
+
+SCHEMA = "asset_id BIGINT, date INT, ts BIGINT, value DOUBLE"
 
 # (asset_id, start_date, end_date, asof_ts, expected values desc-date)
 GOLDEN_QUERIES = [
@@ -109,7 +112,8 @@ def test_entry_flagship_bytes_pinned(spark):
     )
 
 
-# ---- plan shape: one single-partition job for small scans ---------------
+# ---- plan shape: no job on the driver path, one single-partition job ----
+# ---- for other small inputs -----------------------------------------------
 
 
 def _explain(df) -> str:
@@ -156,7 +160,14 @@ REVISED_QUERIES = [q[:4] for q in GOLDEN_QUERIES] + [
 
 
 def test_small_asof_range_is_one_job_without_exchange(tables, count_jobs):
-    q = asof_range(tables["revised"], 0, 20200115, 20200405, 20)
+    """A small read of a bare version scan runs no job (driver path).  An
+    input that is not a bare scan keeps the one-job plan: no Exchange, the
+    asset predicate pushed into the parquet scan."""
+    bare = asof_range(tables["revised"], 0, 20200115, 20200405, 20)
+    rows, jobs = count_jobs(bare.collect)
+    assert [r.value for r in rows] == [120.0, 12.0, 3.0]
+    assert jobs == 0
+    q = asof_range(tables["revised"].where(F.lit(True)), 0, 20200115, 20200405, 20)
     rows, jobs = count_jobs(q.collect)
     assert [r.value for r in rows] == [120.0, 12.0, 3.0]
     assert jobs == 1
@@ -186,6 +197,81 @@ def test_unbounded_asof_range_keeps_shuffle_plan_and_rows(spark, tables, name, m
 
 def test_one_task_plan_ignores_broadcast_threshold(spark, tables):
     """Turning broadcast joins off does not turn the one-job path off."""
+    on_spark = tables["revised"].where(F.lit(True))
     with _broadcast_threshold(spark, "-1"):
-        plan = _explain(asof_range(tables["revised"], 0, 20200115, 20200405, 20))
+        plan = _explain(asof_range(on_spark, 0, 20200115, 20200405, 20))
+    assert "Scan parquet" in plan
     assert "Exchange" not in plan
+
+
+# ---- driver path: where it applies, where it falls back -------------------
+
+
+def _write_rows(tmp_path, name, rows):
+    """``rows`` as one parquet file written by pyarrow (no Spark job)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = list(zip(*rows))
+    types = (pa.int64(), pa.int32(), pa.int64(), pa.float64())
+    path = str(tmp_path / f"{name}.parquet")
+    pq.write_table(
+        pa.table([pa.array(c, t) for c, t in zip(cols, types)], names=list(PRICE_COLUMNS)),
+        path,
+    )
+    return path
+
+
+@pytest.mark.parametrize("bad", [float("nan"), None])
+@pytest.mark.parametrize("picked", [True, False])
+def test_driver_path_falls_back_on_nan_or_null_value(spark, tmp_path, count_jobs, bad, picked):
+    """A candidate row whose value is NaN or NULL, whether it is the
+    latest revision or an older one, sends the read to Spark, which
+    answers as it does on a plan that is not a bare scan."""
+    rows = [(0, 20200131, 1, 3.0), (0, 20200131, 2 if picked else 0, bad), (0, 20200229, 1, 5.0)]
+    df = spark.read.schema(SCHEMA).parquet(_write_rows(tmp_path, "bad", rows))
+    got, jobs = count_jobs(asof_range(df, 0, 20200101, 20200331, 5).collect)
+    want = asof_range(df.where(F.lit(True)), 0, 20200101, 20200331, 5).collect()
+    assert jobs >= 1
+    assert repr(got) == repr(want)
+    assert [r.date for r in got] == [20200229, 20200131]
+
+
+def test_driver_path_breaks_ts_ties_by_max_value(spark, tmp_path, count_jobs):
+    """Revisions sharing ``(asset_id, date, ts)`` (not well-formed, but
+    possible) resolve to the larger value on the driver path, as
+    ``_latest_revision``'s ``max_by(struct(ts, value))`` does."""
+    rows = [(0, 20200131, 7, 2.0), (0, 20200131, 7, 9.0), (0, 20200131, 7, -1.0), (0, 20200229, 3, 1.0)]
+    df = spark.read.schema(SCHEMA).parquet(_write_rows(tmp_path, "ties", rows))
+    got, jobs = count_jobs(asof_range(df, 0, 20200101, 20200331, 10).collect)
+    assert jobs == 0
+    assert got == asof_range(df.where(F.lit(True)), 0, 20200101, 20200331, 10).collect()
+    assert [(r.date, r.value) for r in got] == [(20200229, 1.0), (20200131, 9.0)]
+
+
+def test_renaming_or_derived_projection_stays_on_spark(spark, sf_dir, tables, count_jobs):
+    """Only unaliased attribute projections are bare scans: a renaming
+    projection (``prices_from_lineitem``) and a derived column both keep
+    the Spark plan, and the derived one answers on its own values."""
+    from findb_spark.asof import _driver_scan
+    from findb_spark.prices import prices_from_lineitem
+
+    renamed = prices_from_lineitem(spark, sf_dir)
+    assert _driver_scan(renamed, 1, 19950101, 20001231, 10**10) is None
+    rows, jobs = count_jobs(asof_range(renamed, 1, 19950101, 20001231, 10**10).collect)
+    assert rows and jobs >= 1
+    doubled = tables["revised"].select("asset_id", "date", "ts", (F.col("value") * 2).alias("value"))
+    assert _driver_scan(doubled, 0, 20200115, 20200405, 20) is None
+    got = [r.value for r in asof_range(doubled, 0, 20200115, 20200405, 20).collect()]
+    assert got == [240.0, 24.0, 6.0]
+
+
+def test_driver_path_schema_equals_spark_path(spark, tables):
+    """The driver path's schema, nullability included, is the Spark
+    plan's, for answers with rows and without."""
+    for q in REVISED_QUERIES + [(99, 20200101, 20201231, 100)]:
+        on_driver = asof_range(tables["revised"], *q)
+        on_spark = asof_range(tables["revised"].where(F.lit(True)), *q)
+        assert "LocalTableScan" in _explain(on_driver)
+        assert on_driver.schema == on_spark.schema
+        assert on_driver.collect() == on_spark.collect()

@@ -47,14 +47,32 @@ def pandas_asof(rows, asset, start, end, asof_ts):
     derandomize=True,
 )
 @given(rows=ROWS, query=QUERY)
-def test_asof_matches_pandas_model(spark, rows, query):
+def test_asof_matches_pandas_model(spark, tmp_path, rows, query):
+    """Both paths of `asof_range` against the model: the driver path over
+    the rows written as parquet (small row groups, so statistics prune),
+    and the Spark plan over the same rows as an RDD-backed relation."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from findb_spark.asof import _driver_scan
+
     asset, start, end, asof_ts = query
-    prices = spark.createDataFrame(
-        [(a, d, t, float(v)) for a, d, t, v in rows],
-        schema="asset_id BIGINT, date INT, ts BIGINT, value DOUBLE",
+    schema = "asset_id BIGINT, date INT, ts BIGINT, value DOUBLE"
+    want = pandas_asof(rows, asset, start, end, asof_ts)
+    path = str(tmp_path / uuid.uuid4().hex)
+    table = pa.table(
+        [pa.array(c, t) for c, t in zip(zip(*rows), (pa.int64(), pa.int32(), pa.int64(), pa.float64()))],
+        names=["asset_id", "date", "ts", "value"],
     )
-    got = [(r.date, r.value) for r in asof_range(prices, asset, start, end, asof_ts).collect()]
-    assert got == pandas_asof(rows, asset, start, end, asof_ts)
+    pq.write_table(table, path + ".parquet", row_group_size=4)
+    on_disk = spark.read.schema(schema).parquet(path + ".parquet")
+    assert _driver_scan(on_disk, asset, start, end, asof_ts) is not None
+    prices = spark.createDataFrame([(a, d, t, float(v)) for a, d, t, v in rows], schema=schema)
+    for df in (on_disk, prices):
+        got = [(r.date, r.value) for r in asof_range(df, asset, start, end, asof_ts).collect()]
+        assert got == want
 
 
 RIGHT_ROWS = st.lists(

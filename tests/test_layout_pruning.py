@@ -37,14 +37,47 @@ def test_predicate_pushdown_shrinks_rows(spark, clustered):
 
 
 def test_asof_query_prunes(spark, clustered):
-    """The flagship query's scan must not read the whole table."""
+    """The flagship query's scan must not read the whole table.  A bare
+    scan is answered on the driver (see the next test), so the Spark
+    plan's scan is pinned on an input that is not one."""
+    from pyspark.sql import functions as F
+
     from findb_spark.asof import asof_range
 
-    q = asof_range(clustered, 1, 19960101, 19961231, 10**10)
+    q = asof_range(clustered.where(F.lit(True)), 1, 19960101, 19961231, 10**10)
     m = scan_metrics(q)[0]
     full = scan_metrics(clustered)[0]
     assert m["numFiles"] < full["numFiles"]
     assert m["numOutputRows"] < full["numOutputRows"]
+
+
+def test_driver_asof_prunes_months_and_row_groups(spark, clustered, count_jobs):
+    """The driver path reads only the ``date_month`` directories of the
+    range, and of those only the row groups whose statistics admit the
+    asset; it answers as the Spark plan does, with no job.  ``scan_metrics``
+    sees no file scan on this path, so the row groups are counted."""
+    import os
+    from urllib.parse import urlparse
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from findb_spark.asof import _driver_scan, asof_range
+
+    q = (1, 19960101, 19961231, 10**10)
+    row_groups, _, _ = _driver_scan(clustered, *q)
+    months = {os.path.basename(os.path.dirname(rg.path)) for rg in row_groups}
+    assert months and all(m.startswith("date_month=1996") for m in months)
+    per_file = {
+        f: pq.ParquetFile(f).num_row_groups
+        for f in (urlparse(u).path for u in clustered.inputFiles())
+    }
+    in_range = sum(n for f, n in per_file.items() if "/date_month=1996" in f)
+    assert 0 < len(row_groups) < in_range < sum(per_file.values())
+    rows, jobs = count_jobs(asof_range(clustered, *q).collect)
+    assert jobs == 0
+    assert rows == asof_range(clustered.where(F.lit(True)), *q).collect()
+    assert len(rows) > 0
 
 
 def test_month_partition_pruning_on_date_month(spark, clustered):

@@ -516,8 +516,22 @@ def test_local_relation_df(spark):
         "code int, w array<double>",
     )
     assert sorted(map(tuple, d2.collect())) == [(1, [-2.5]), (2, [1.5])]
-    # empty degrades to a plain empty relation
+    # empty is an empty relation of the same schema
     assert local_relation_df(spark, [], "x bigint").count() == 0
+
+
+def test_local_relation_df_empty_runs_no_job(spark, count_jobs):
+    """An empty ``local_relation_df`` is a ``LocalRelation`` too: its
+    collect runs no Spark job.  ``createDataFrame([], schema)`` is an
+    RDD scan whose collect ran jobs and took over a second."""
+    from pyspark.sql.types import StructType
+
+    from findb_spark.session import local_relation_df
+
+    schema = "asset_id bigint, date int, ts bigint, value double"
+    df = local_relation_df(spark, [], schema)
+    assert df.schema == StructType.fromDDL(schema)
+    assert count_jobs(df.collect) == ([], 0)
 
 
 def test_pq_luts_driver_matches_column_form(spark, sf_dir):
