@@ -87,39 +87,19 @@ def main(argv: list[str] | None = None) -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     if args.cmd == "check":
-        from findb_spark.oracle import (
-            compare_query,
-            duck_connection,
-            lint_oracle_types,
-        )
+        from findb_spark.oracle import check_specs, duck_connection
 
         specs = all_specs()
-        names = args.names or list(specs)
-        unknown = [n for n in names if n not in specs]
+        unknown = [n for n in args.names if n not in specs]
         if unknown:
             print(f"unknown query name(s): {unknown}", file=sys.stderr)
             return 2
-        con = duck_connection(args.sf_dir)
-        failures = 0
-        lint = lint_oracle_types(
-            con, {n: specs[n].sql for n in names if specs[n].sql}
-        )
-        for p in lint:
-            print(f"LINT  {p}")
-        failures += len(lint)
-        for n in names:
-            s = specs[n]
-            if s.sql is None:
-                print(f"NOORA {n}: {s.fn(spark, args.sf_dir).count()} rows")
-                continue
-            problems = compare_query(spark, con, s.fn, s.sql, args.sf_dir, name=n)
-            if problems:
-                failures += 1
-                print(f"FAIL  {n}: {'; '.join(problems)[:300]}")
-            else:
-                print(f"OK    {n}")
-        print(f"{len(names) - failures}/{len(names)} ok")
-        return 1 if failures else 0
+        todo = {n: (specs[n].fn, specs[n].sql) for n in args.names or specs}
+        res = check_specs(spark, duck_connection(args.sf_dir), args.sf_dir, todo)
+        if res is None:
+            return 1
+        print(f"{len(todo) - len(res['fail'])}/{len(todo)} ok")
+        return 1 if res["fail"] else 0
 
     if args.cmd == "query":
         specs = all_specs()

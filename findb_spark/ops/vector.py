@@ -6,8 +6,10 @@ Numeric determinism: dot products and norms are fixed-point integer sums
 (per-element ``floor(x*y*1e12 + 0.5)`` — identical IEEE-754 ops on any
 engine, then exact integer accumulation), so cosine values are
 bit-identical between Spark and the DuckDB oracle regardless of
-partitioning. All array math is JVM-side (``zip_with``/``aggregate``
-inside codegen) — no Python boundary.
+partitioning. Column expressions are the specification; the numpy
+kernels (near-dup tiles, the PQ codebook, encode and ADC tables) run the
+same ops through :func:`_fxp_norm` and :func:`_fxp_l2`, pinned bit-equal
+by tests.
 
 Scale:
 - brute-force top-k against a bounded query set is a broadcast
@@ -24,6 +26,8 @@ from __future__ import annotations
 
 import hashlib
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from findb_spark.functions.hashing import hash48
@@ -202,9 +206,6 @@ def near_dup_pairs(
     )
 
     def compute(pdfs):
-        import numpy as np
-        import pandas as pd
-
         scale = float(FXP_SCALE)
 
         def unpack(rows):
@@ -219,12 +220,8 @@ def near_dup_pairs(
             ):
                 ids1, m1 = unpack(rows1)
                 ids2, m2 = unpack(rows2)
-                n1 = np.sqrt(
-                    np.floor(m1 * m1 * scale + 0.5).astype(np.int64).sum(1) / scale
-                )
-                n2 = np.sqrt(
-                    np.floor(m2 * m2 * scale + 0.5).astype(np.int64).sum(1) / scale
-                )
+                n1 = _fxp_norm(m1)
+                n2 = _fxp_norm(m2)
                 # whole tile in one 3-D broadcast (b x b x dim ~ 33 MB at 256):
                 # identical per-element fixed-point ops as the row loop / SQL
                 dots = (
@@ -635,7 +632,9 @@ PQ_TRAIN_CAP = 1 << 14
 def _normalized(emb: DataFrame) -> DataFrame:
     """(vec_id, nv): the corpus unit-normalized (exact doubles) — norm
     materialized into its own column first so each element's divide
-    references an attribute, not a re-evaluated 64-term dot subtree."""
+    references an attribute, not a re-evaluated 64-term dot subtree.
+    The Column-form specification the numpy normalization
+    (:func:`_fxp_norm`, then one divide per element) is pinned against."""
     return emb.select(
         "vec_id", norm_expr("embedding").alias("_n"), "embedding"
     ).select(
@@ -654,9 +653,9 @@ def fxp_l2_sub(a: Column, sw: Column, sub: int) -> Column:
     :func:`fxp_dot` to stay inside whole-stage codegen.
 
     This Column form is the executable SPECIFICATION of the PQ distance
-    arithmetic: the ADC-table kernel (:func:`_luts_driver`) and the
-    Arrow encode kernel (:func:`pq_encode_arrow`) must produce bit-equal
-    values — tests/test_llm_ops.py pins both against this formulation."""
+    arithmetic: its numpy twin :func:`_fxp_l2`, which every PQ kernel
+    runs, must produce bit-equal values — tests/test_llm_ops.py pins the
+    ADC tables and the corpus codes against this formulation."""
     base = sub * PQ_SUBDIM
     terms = []
     for i in range(1, PQ_SUBDIM + 1):
@@ -673,410 +672,221 @@ def fxp_l2_sub(a: Column, sw: Column, sub: int) -> Column:
     return terms[0].cast("bigint")
 
 
-def pq_codebook(emb: DataFrame, k: int = PQ_K) -> DataFrame:
-    """Deterministic PQ init codebook in WIDE form: the ``k`` normalized
-    corpus vectors minimal under hash order (same RNG-free sampling
-    contract as :func:`ivf_centroids`), re-indexed to dense codes 1..k and
-    split into per-subspace codewords ``sw0..sw{PQ_M-1}`` so ADC tables
-    are array-indexable.  k is corpus-size-independent — the broadcast
-    stays tiny at any scale.
+def _fxp_norm(v: np.ndarray) -> np.ndarray:
+    """Fixed-point L2 norm of each row of ``v``: ``sqrt(sum(floor(x*x*
+    FXP_SCALE + 0.5)) / FXP_SCALE)`` — the numpy twin of :func:`norm_expr`.
+    np.floor/multiply are the IEEE-754 double ops the JVM executes, and
+    the floor terms are summed in int64 (exact, order-free).
+
+    Bit-equality bound: norm_expr sums the same floor terms as float64
+    and casts the total to BIGINT once.  The two agree exactly while
+    every partial sum stays below 2^53 (where float64 addition is exact
+    and order-free): terms are x_i^2 * FXP_SCALE, so the self-dot bound
+    is |x|^2 * DIM * 1e12 < 2^53, i.e. per-element |x| <= ~11.8 at
+    DIM=64.  The embeddings table stores O(1)-magnitude components
+    (|x| < 2), three orders inside the bound — and no summation-order fix
+    could extend it: beyond 2^53 numpy's pairwise float64 sum and the
+    JVM's left-associated chain diverge from EACH OTHER, so int64 is the
+    more defensible side to keep."""
+    sq = np.floor(v * v * float(FXP_SCALE) + 0.5).astype(np.int64).sum(axis=-1)
+    return np.sqrt(sq.astype(np.float64) / float(FXP_SCALE))
+
+
+def _fxp_l2(seg: np.ndarray, cw: np.ndarray) -> np.ndarray:
+    """(n, K) int64 fixed-point squared-L2 distances from each row of
+    ``seg`` (n, PQ_SUBDIM) to each codeword of ``cw`` (K, PQ_SUBDIM) —
+    the numpy twin of :func:`fxp_l2_sub` (same per-element IEEE ops, floor
+    terms summed in int64, so the sum order is immaterial)."""
+    d = seg[:, None, :] - cw[None, :, :]
+    return np.floor(d * d * float(FXP_SCALE) + 0.5).astype(np.int64).sum(axis=2)
+
+
+def _nearest_codes(seg: np.ndarray, cw: np.ndarray) -> np.ndarray:
+    """Per row of ``seg``, the 1-based code of the nearest codeword in
+    ``cw``, ties to the smallest code: the min of the exact composite
+    ``dist*128 + code`` (the oracle's ``MIN_BY(code, d*128 + code)``),
+    valid while codes stay below 128.  The code range is the codebook's
+    own size, which is below PQ_K on a corpus of fewer than PQ_K vectors.
+
+    Rows go in 256-row blocks: the full (n, K, PQ_SUBDIM) distance tensor
+    spills L2 and its ~1 MB temporaries dominate the kernel — blocking
+    keeps every intermediate cache-resident (measured 386 -> 70 ms at
+    n=2000).  The per-element ops and per-row int64 sums do not depend on
+    block boundaries, so the codes do not either."""
+    k = len(cw)
+    if k >= 128:
+        raise ValueError(f"{k} codewords overflow the dist*128+code composite")
+    kcode = np.arange(1, k + 1, dtype=np.int64)
+    out = np.empty(len(seg), dtype=np.int32)
+    for s in range(0, len(seg), 256):
+        comp = _fxp_l2(seg[s : s + 256], cw) * 128 + kcode
+        out[s : s + 256] = comp.min(axis=1) % 128
+    return out
+
+
+def _unit_rows(vecs) -> np.ndarray:
+    """The raw vectors ``vecs`` as an (n, DIM) float64 matrix, each row
+    divided by its :func:`_fxp_norm` — one IEEE divide per element, the
+    op sequence :func:`_normalized` runs JVM-side."""
+    v = np.array([np.asarray(x, dtype=np.float64) for x in vecs]).reshape(-1, DIM)
+    return v / _fxp_norm(v)[:, None]
+
+
+def _subspace(v: np.ndarray, m: int) -> np.ndarray:
+    return v[:, m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]
+
+
+def pq_codebook(emb: DataFrame) -> np.ndarray:
+    """Deterministic PQ init codebook: the PQ_K normalized corpus vectors
+    minimal under hash order (same RNG-free sampling contract as
+    :func:`ivf_centroids`), as an array of shape (PQ_M, k, PQ_SUBDIM) —
+    ``codebook[m, code - 1]`` is subspace ``m``'s codeword for dense code
+    ``code``.  k is PQ_K, or the corpus size on a smaller corpus; it does
+    not grow with the corpus, so the codebook stays tiny at any scale.
 
     The distributed half is ONE TakeOrderedAndProject job (the k winners
-    under the cheap hash key); normalization and re-indexing of those k
-    rows run driver-side in numpy with the identical fixed-point
-    arithmetic (``sqrt(sum(floor(x*x*1e12+0.5))/1e12)`` then one IEEE
-    divide per element — bit-equal to the Column form, which a
-    window+transform plan previously spent 4 jobs / 7 stages on)."""
-    import numpy as np
-
-    from pyspark.sql import types as T
-
+    under the cheap hash key); their normalization runs driver-side with
+    the fixed-point arithmetic of :func:`_fxp_norm`."""
     hk = hash48(F.col("vec_id").cast("string"))
     rows = (
         emb.select(hk.alias("_hk"), "vec_id", "embedding")
         .orderBy("_hk", "vec_id")
-        .limit(k)
+        .limit(PQ_K)
         .collect()
     )
     rows.sort(key=lambda r: (r["_hk"], r["vec_id"]))
-    out = []
-    for code0, r in enumerate(rows):
-        v = np.array(list(r["embedding"]), dtype=np.float64)
-        n = float(
-            np.sqrt(
-                float(
-                    np.floor(v * v * float(FXP_SCALE) + 0.5)
-                    .astype(np.int64)
-                    .sum()
-                )
-                / float(FXP_SCALE)
-            )
-        )
-        cwv = v / n
-        out.append(
-            {
-                "code": code0 + 1,
-                **{
-                    f"sw{m}": [
-                        float(x)
-                        for x in cwv[m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]
-                    ]
-                    for m in range(PQ_M)
-                },
-            }
-        )
-    schema = T.StructType(
-        [T.StructField("code", T.IntegerType(), False)]
-        + [
-            T.StructField(f"sw{m}", T.ArrayType(T.DoubleType()), False)
-            for m in range(PQ_M)
-        ]
-    )
-    # LocalRelation, not a Python-RDD plan (round 13): every evaluation
-    # of a createDataFrame(list) relation re-runs pickled slices through
-    # Python workers — see session.local_relation_df
-    return local_relation_df(emb.sparkSession, out, schema)
+    cw = _unit_rows([r["embedding"] for r in rows])
+    return np.ascontiguousarray(cw.reshape(-1, PQ_M, PQ_SUBDIM).transpose(1, 0, 2))
 
 
-def _cb_lists(cbw: DataFrame | list) -> list[list[list[float]]]:
-    """Collect a codebook relation (bounded at PQ_K rows by construction)
-    into per-subspace codeword lists ordered by dense code 1..k —
-    ``result[m][code-1]`` is subspace ``m``'s codeword."""
-    rows = cbw.collect() if isinstance(cbw, DataFrame) else list(cbw)
-    rows.sort(key=lambda r: r["code"])
-    return [[list(r[f"sw{m}"]) for r in rows] for m in range(PQ_M)]
-
-
-def _luts_driver(
-    q_rows: list, cw: list[list[list[float]]]
-) -> list[tuple]:
+def _luts_driver(q_rows: list, codebook: np.ndarray) -> list[tuple]:
     """The ADC-table kernel: per RAW query row (vec_id, embedding), the
-    PQ_M ADC tables — each an array of the fixed-point distances
-    (:func:`fxp_l2_sub`) to the k codewords, ordered by code 1..k (the
+    PQ_M ADC tables — each a list of the fixed-point distances
+    (:func:`fxp_l2_sub`) to the codewords, ordered by code 1..k (the
     order the scoring ``element_at(l{m}, c{m})`` lookups assume).
 
-    Bit-equality contract (same as the pinned Arrow encode kernel, which
-    runs this exact op sequence): the query vector is unit-normalized
-    with the exact int64 self-dot (``floor(x*x*FXP_SCALE + 0.5)`` summed
-    in int64 — order-free), one IEEE sqrt, one IEEE divide per element —
-    identical to what ``norm_expr``/``_normalized`` computes JVM-side
-    within the 2^53 bound documented at :func:`pq_train`; each table
-    entry is ``sum_i floor((q_i - cw_i)^2 * FXP_SCALE + 0.5)`` with the
-    floor terms accumulated in int64 (associative, so numpy's sum order
-    is bit-equal to the JVM's left-to-right inline sum).  np.floor /
-    multiply / subtract are the identical IEEE-754 double ops the JVM
-    executes, and the resulting entries are pure int64 — nothing float
-    re-crosses py4j, so the literal luts relation is bit-identical to
-    the Column-form :func:`fxp_l2_sub` over ``_normalized`` queries
-    (pinned in tests/test_llm_ops.py)."""
-    import numpy as np
-
-    cb = np.array(cw, dtype=np.float64)  # (PQ_M, PQ_K, PQ_SUBDIM)
-    out = []
-    for r in sorted(q_rows, key=lambda r: r["vec_id"]):
-        v = np.asarray(r["embedding"], dtype=np.float64)
-        sq = (
-            np.floor(v * v * float(FXP_SCALE) + 0.5)
-            .astype(np.int64)
-            .sum()
-        )
-        v = v / np.sqrt(float(sq) / float(FXP_SCALE))
-        luts = []
-        for m in range(PQ_M):
-            seg = v[m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]
-            d = seg[None, :] - cb[m]  # (K, SUBDIM)
-            terms = np.floor(d * d * float(FXP_SCALE) + 0.5).astype(np.int64)
-            luts.append([int(x) for x in terms.sum(axis=1)])
-        out.append((int(r["vec_id"]), *luts))
-    return out
+    The query is unit-normalized by :func:`_unit_rows` and the entries
+    come from :func:`_fxp_l2` — the same op sequence as the corpus encode
+    kernel.  The entries are pure int64, so nothing float re-crosses
+    py4j: the literal luts relation is bit-identical to the Column-form
+    :func:`fxp_l2_sub` over ``_normalized`` queries (pinned in
+    tests/test_llm_ops.py)."""
+    rows = sorted(q_rows, key=lambda r: r["vec_id"])
+    v = _unit_rows([r["embedding"] for r in rows])
+    tables = [_fxp_l2(_subspace(v, m), codebook[m]).tolist() for m in range(PQ_M)]
+    return [
+        (int(r["vec_id"]), *(t[i] for t in tables)) for i, r in enumerate(rows)
+    ]
 
 
-def pq_encode_arrow(
-    nv: DataFrame, cbw: DataFrame | list, normalize: bool = False
-) -> DataFrame:
-    """Quantize every normalized vector: per subspace, the code of the
-    L2-nearest codeword (ties to the smallest code).  Returns
+def pq_encode_arrow(emb: DataFrame, codebook: np.ndarray) -> DataFrame:
+    """Quantize every corpus vector against ``codebook`` (the
+    :func:`pq_codebook` array): per subspace, the code of the L2-nearest
+    codeword (ties to the smallest code).  Returns
     (vec_id, c0..c{PQ_M-1}).
 
     One narrow scan with no shuffle: numpy over Arrow batches
-    (``mapInPandas``) evaluates the fixed-point composite of
-    :func:`fxp_l2_sub` (``floor(d*d*1e12 + 0.5)`` summed in int64,
-    ``*128 + code`` min) — np.floor/multiply are the identical IEEE-754
-    double ops the JVM executes, so codes are bit-equal to the Column
-    spec (pinned by tests/test_llm_ops.py).  Distances are computed per
-    subspace ((n, K, SUBDIM) slices) rather than as one (n, M, K, SUBDIM)
-    tensor: the elementwise fixed-point floor rules out a BLAS matmul, so
-    memory locality is what decides throughput, and the 4-D form
-    thrashed cache badly enough to lose to a JVM kernel by 10x at 128k
-    vectors.
-
-    ``normalize=True`` takes RAW ``embedding`` input and unit-normalizes
-    inside the kernel with the identical fxp arithmetic as the Column
-    form (``sqrt(sum(floor(x*x*1e12+0.5))/1e12)`` then one IEEE divide
-    per element — the same numpy sequence :func:`pq_codebook` runs
-    driver-side, so codes stay bit-equal; pinned by test).  This skips
-    the JVM ``transform()`` normalization lambda entirely — interpreted
-    per element, it costs more than the whole encode at bench scale
-    (measured 1.6s for 2000x64 vs 0.9s for this full kernel with
-    normalization fused) — and is the corpus path :func:`pq_adc_topk`
-    uses."""
-    import numpy as np
-    import pandas as pd
-
-    cw = _cb_lists(cbw)
-    cb = np.array(cw, dtype=np.float64)  # (PQ_M, PQ_K, PQ_SUBDIM)
+    (``mapInPandas``) takes the RAW embeddings, unit-normalizes them
+    (:func:`_unit_rows`) and picks codes with :func:`_nearest_codes`.
+    np.floor/multiply are the identical IEEE-754 double ops the JVM
+    executes, so codes are bit-equal to the Column spec (pinned by
+    tests/test_llm_ops.py).  Normalizing in the kernel skips the JVM
+    ``transform()`` normalization lambda — interpreted per element, it
+    costs more than the whole encode at bench scale (measured 1.6s for
+    2000x64 vs 0.9s for this kernel).  Distances are computed per
+    subspace rather than as one (n, M, K, SUBDIM) tensor: the
+    elementwise fixed-point floor rules out a BLAS matmul, so memory
+    locality decides throughput, and the 4-D form lost to a JVM kernel by
+    10x at 128k vectors."""
     out_schema = "vec_id bigint, " + ", ".join(f"c{m} int" for m in range(PQ_M))
-    in_col = "embedding" if normalize else "nv"
 
     def encode(batches):
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            v = np.stack(
-                [np.asarray(x, dtype=np.float64) for x in pdf[in_col]]
-            )  # (n, DIM)
-            if normalize:
-                q = (
-                    np.floor(v * v * float(FXP_SCALE) + 0.5)
-                    .astype(np.int64)
-                    .sum(axis=1)
-                )
-                nrm = np.sqrt(q.astype(np.float64) / float(FXP_SCALE))
-                v = v / nrm[:, None]
-            codes = np.empty((n, PQ_M), dtype=np.int32)
-            kcode = np.arange(PQ_K, dtype=np.int64) + 1
-            # 256-row blocks (round 13): the full (n, K, SUBDIM) distance
-            # tensor spills L2 and its ~1 MB temporaries dominate the
-            # kernel — blocking the row axis keeps every intermediate
-            # cache-resident (measured 386 -> 70 ms at n=2000 driver-side,
-            # 1.6x warm).  Bit-equality unchanged: the per-element
-            # floor/multiply/subtract ops and the per-row int64 sums are
-            # identical regardless of block boundaries (pinned by
-            # test_pq_encode_kernels_bit_equal and the oracle gate).
-            for m in range(PQ_M):
-                seg = v[:, m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]
-                for s in range(0, n, 256):
-                    d = (
-                        seg[s : s + 256, None, :] - cb[m][None, :, :]
-                    )  # (<=256, K, SUBDIM)
-                    terms = np.floor(
-                        d * d * float(FXP_SCALE) + 0.5
-                    ).astype(np.int64)
-                    comp = terms.sum(axis=2) * 128 + kcode
-                    codes[s : s + 256, m] = (comp.min(axis=1) % 128).astype(
-                        np.int32
-                    )
+            v = _unit_rows(pdf["embedding"])
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
-                    **{f"c{m}": codes[:, m] for m in range(PQ_M)},
+                    **{
+                        f"c{m}": _nearest_codes(_subspace(v, m), codebook[m])
+                        for m in range(PQ_M)
+                    },
                 }
             )
 
-    return nv.mapInPandas(encode, schema=out_schema)
+    return emb.select("vec_id", "embedding").mapInPandas(encode, schema=out_schema)
 
 
-def pq_train(nv: DataFrame, cbw: DataFrame | list) -> DataFrame:
-    """One per-subspace Lloyd refinement of the PQ codebook: assign every
+def pq_train(emb: DataFrame, codebook: np.ndarray) -> np.ndarray:
+    """One per-subspace Lloyd refinement of ``codebook``: assign every
     sampled subvector to its nearest codeword, replace each codeword with
     the exact fixed-point mean of its members (empty codewords keep their
     init value, so codes stay DENSE 1..k and ADC tables stay indexable).
+    Returns a new array of the same shape.
 
-    ARCHITECTURE (the FAISS split): codebook training runs DRIVER-SIDE in
-    numpy over the collected training sample; only the corpus passes
-    (encode, ADC scoring) are distributed.  The sample is a deterministic
-    20% hash gate — a pushdown-friendly filter, no RNG — and is bounded
-    by the same contract that bounds every other driver collect here
-    (FAISS trains on ~10^4-10^5 vectors regardless of corpus size; at
-    production scale compose the gate with a hash-order LIMIT, mirrored
-    in the oracle, to cap it).  The previous all-DataFrame formulation
-    spent ~5s of pure job-scheduling overhead per round on
-    kilobyte-scale aggregations; numpy does the same exact integer
-    arithmetic in microseconds and the result is BIT-EQUAL:
+    ARCHITECTURE (the FAISS build/search split): training runs
+    DRIVER-SIDE in numpy over a collected sample of the RAW embeddings;
+    only the corpus passes (encode, ADC scoring) are distributed.  The
+    sample is a deterministic 20% hash gate (a pushdown-friendly filter,
+    no RNG) capped by a hash-order LIMIT of PQ_TRAIN_CAP, mirrored in the
+    oracle.  ``toPandas()`` rides the Arrow channel, so list<double>
+    columns arrive as numpy arrays with exact bits (the Row-based
+    collect() built millions of Python float objects: 70 s at a 51k-row
+    sample).  Sampling the raw column keeps the 64-term normalize
+    expression out of the sample job; :func:`_unit_rows` normalizes the
+    bounded sample bit-equal to the Column form.  The means are
     ``floor(v*MEAN_SCALE+0.5)`` summed in int64, then
-    ``(sum/MEAN_SCALE)/count`` in IEEE doubles — the identical op
-    sequence the DuckDB oracle executes (queries/vector_queries.py
-    ``mu{m}`` CTEs).  Assignment uses the same composite
-    ``dist*128+code`` min as :func:`pq_encode_arrow`.
+    ``(sum/MEAN_SCALE)/count`` in IEEE doubles — the op sequence of the
+    DuckDB oracle's ``mu{m}`` CTEs (queries/vector_queries.py).
+    Assignment is :func:`_nearest_codes`, as in the encode.
 
     Sampled codewords land where single vectors happen to fall;
     per-subspace means drop quantization error the way full k-means does
     for IVF — tests pin the recall improvement.  Iterating = re-calling
     this function."""
-    import numpy as np
-
-    from pyspark.sql import types as T
-
-    spark = nv.sparkSession
-    if isinstance(cbw, DataFrame):
-        cb_schema, cb_rows = cbw.schema, cbw.collect()
-    else:
-        # explicit schema (same StructType as pq_codebook builds) — a None
-        # schema would fall back to deprecated dict-based inference and
-        # type `code` as bigint instead of int
-        cb_schema = T.StructType(
-            [T.StructField("code", T.IntegerType(), False)]
-            + [
-                T.StructField(f"sw{m}", T.ArrayType(T.DoubleType()), False)
-                for m in range(PQ_M)
-            ]
-        )
-        cb_rows = list(cbw)
-    cb_rows.sort(key=lambda r: r["code"])
-    cb = np.array(
-        [[list(r[f"sw{m}"]) for r in cb_rows] for m in range(PQ_M)],
-        dtype=np.float64,
-    )  # (M, K, SUBDIM)
-    # 20% hash gate CAPPED by deterministic hash-order LIMIT (the FAISS
-    # contract: training saturates at ~10^4-10^5 points, so the collect is
-    # bounded at any corpus size). toPandas() rides the Arrow channel —
-    # list<double> columns arrive as numpy arrays with exact bits, where
-    # the Row-based collect() built millions of Python float objects
-    # (measured 70 s at a 51k-row sample).
-    #
-    # Input may be RAW (column ``embedding``) or pre-normalized (column
-    # ``nv``). Prefer raw: sampling the raw column keeps the 64-term
-    # fixed-point normalize expression out of the sample job entirely
-    # (measured ~2 s of py4j plan construction + ~2 s of codegen for a
-    # 435-row sample) and normalizes the BOUNDED sample driver-side with
-    # the identical numpy sequence :func:`pq_codebook` runs — exact int
-    # self-dot, one IEEE sqrt, one divide per element — so codewords are
-    # bit-equal either way (same contract the encode kernel's
-    # ``normalize=True`` path is pinned under).
-    # Bit-equality bound for the raw branch below (round-8 advisor note):
-    # the numpy path sums per-element FLOOR terms in int64, while
-    # norm_expr sums them as float64 and casts the total to BIGINT once.
-    # The two agree exactly while every partial sum stays below 2^53
-    # (where float64 addition is exact and order-free): terms are
-    # x_i^2 * FXP_SCALE, so the self-dot bound is |x|^2 * DIM * 1e12 <
-    # 2^53, i.e. per-element |x| <= ~11.8 at DIM=64.  The embeddings
-    # table stores O(1)-magnitude components (|x| < 2), three orders
-    # inside the bound — and no summation-order fix could extend it:
-    # beyond 2^53 numpy's pairwise float64 sum and the JVM's
-    # left-associated chain diverge from EACH OTHER, so int64 (exact,
-    # order-free) is the more defensible side to keep.
-    raw = "nv" not in nv.columns
-    col = "embedding" if raw else "nv"
     hk = hash48(F.col("vec_id").cast("string"))
-    sample_pd = (
-        nv.where(hk % 5 < 1)
+    sample = (
+        emb.where(hk % 5 < 1)
         .orderBy(hk, "vec_id")
         .limit(PQ_TRAIN_CAP)
-        .select(col)
+        .select("embedding")
         .toPandas()
     )
-    new_cb = cb.copy()
-    if len(sample_pd):
-        v = np.array([np.asarray(x, dtype=np.float64) for x in sample_pd[col]])
-        if raw:
-            sq = (
-                np.floor(v * v * float(FXP_SCALE) + 0.5)
-                .astype(np.int64)
-                .sum(axis=1)
-            )
-            norms = np.sqrt(sq.astype(np.float64) / float(FXP_SCALE))
-            v = v / norms[:, None]
-        n = len(v)
-        sub = v.reshape(n, PQ_M, 1, PQ_SUBDIM)
-        d = sub - cb[None, :, :, :]
-        terms = np.floor(d * d * float(FXP_SCALE) + 0.5).astype(np.int64)
-        comp = terms.sum(axis=3) * 128 + (np.arange(PQ_K, dtype=np.int64) + 1)
-        assign = (comp.min(axis=2) % 128) - 1  # (n, M) 0-based code index
+    new_cb = codebook.copy()
+    if len(sample):
+        v = _unit_rows(sample["embedding"])
         vs = np.floor(v * float(MEAN_SCALE) + 0.5).astype(np.int64)  # (n, DIM)
         for m in range(PQ_M):
-            seg = vs[:, m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]
-            for c in range(PQ_K):
-                mask = assign[:, m] == c
+            assign = _nearest_codes(_subspace(v, m), codebook[m]) - 1
+            seg = _subspace(vs, m)
+            for c in range(codebook.shape[1]):
+                mask = assign == c
                 cnt = int(mask.sum())
                 if cnt:
                     s = seg[mask].sum(axis=0, dtype=np.int64)
                     new_cb[m, c] = s.astype(np.float64) / float(MEAN_SCALE) / cnt
-    out = [
-        {
-            "code": r["code"],
-            **{
-                f"sw{m}": [float(x) for x in new_cb[m, i]]
-                for m in range(PQ_M)
-            },
-        }
-        for i, r in enumerate(cb_rows)
-    ]
-    return local_relation_df(spark, out, cb_schema)
+    return new_cb
 
 
-def pq_adc_topk(
-    emb: DataFrame,
-    k: int = 5,
-    train: bool = True,
-    codebook: list | None = None,
-    q_rows: list | None = None,
+def _adc_topk(
+    emb: DataFrame, codebook: np.ndarray, q_rows: list, k: int, pair
 ) -> DataFrame:
-    """PQ-ADC approximate top-k for the standard query set (vec_id < 3).
+    """Encode the corpus, build the per-query ADC tables driver-side and
+    rank: ``pair(codes, luts)`` returns the scored candidate relation
+    (one row per query x candidate, carrying c0.. and l0..); each
+    candidate's ``adc_dist`` is PQ_M ``element_at`` table lookups + integer
+    adds, and the top ``k`` per query by (adc_dist, vec_id) survive.
 
-    Plan: normalize once (unit-vector L2 ranks identically to cosine);
-    train the codebook (one Lloyd round per subspace); encode the corpus
-    (codes are WIDE-table small — PQ_M small ints per vector); per query,
-    precompute the PQ_M x PQ_K distance lookup tables (a broadcast of
-    queries x k rows); score every candidate with PQ_M ``element_at``
-    lookups + integer adds — zero float math per candidate, fully inside
-    codegen.  ``adc_dist`` is an exact int64 (deterministic
-    cross-engine).  At 100 TB the scored relation reads only the 8-code
-    table, not the embeddings — the I/O win PQ exists for; pair with IVF
-    coarse clustering (ivf_assign) to also shrink the candidate set, and
-    exact-rerank the ADC shortlist where final ordering matters.
-
-    The corpus encode is :func:`pq_encode_arrow` on the raw embeddings,
-    with normalization fused into the numpy kernel (bit-equal, pinned) —
-    it skips the interpreted ``transform()`` normalization lambda."""
-    # codebooks are PQ_K rows by construction (bounded, corpus-size-
-    # independent): collected ONCE here (two tiny jobs — init sample +
-    # one Lloyd round) and turned into driver-side ADC tables.
-    # As lazy plans their corpus-scan subtrees would be RE-EXECUTED by
-    # every consumer (measured 108 parquet scans / 23k plan nodes in the
-    # unmaterialized pq_search plan); binary py4j doubles keep every
-    # codeword bit-identical.  ``codebook`` short-circuits training with
-    # already-trained rows (the deployed shape: the index is built once
-    # and amortizes across every query against the same corpus — see
-    # queries/vector_queries.py's per-corpus memo), making this function
-    # fully lazy: zero eager jobs, one action end-to-end.
-    if codebook is not None:
-        cb_rows = list(codebook)
-    else:
-        cb_rows = pq_codebook(emb).collect()
-        if train:
-            # raw input: pq_train normalizes its bounded sample
-            # driver-side (bit-equal), keeping the 64-term normalize
-            # expression out of the training job
-            cb_rows = pq_train(emb, cb_rows).collect()
-    cw = _cb_lists(cb_rows)
-    codes = pq_encode_arrow(emb.select("vec_id", "embedding"), cb_rows, normalize=True)
-    # Round-13: the per-query ADC tables are computed DRIVER-SIDE (guide
-    # §1.2 — the distributed form was two serial BroadcastNestedLoopJoin
-    # stages whose only input is queries x codebook, both bounded by
-    # construction: the query set is a handful of rows, the codebook
-    # PQ_M x PQ_K codewords).  One tiny pushdown-filtered collect of the
-    # raw query vectors + the SAME numpy op sequence the pinned Arrow
-    # encode kernel uses (np.floor/multiply are the identical IEEE-754
-    # double ops the JVM executes) yields LUTs whose entries are pure
-    # int64 — nothing float ever re-crosses py4j, so the literal luts
-    # relation is bit-identical to the old in-plan projection (pinned in
-    # tests/test_llm_ops.py against the Column-form specification).
-    # ``q_rows`` lets a composing caller (pq_search) collect the bounded
-    # query set ONCE and reuse it for both the LUTs and its own rerank
-    # side (round 14 — one fewer scan + broadcast-build job per run).
-    if q_rows is None:
-        q_rows = (
-            emb.where(F.col("vec_id") < 3).select("vec_id", "embedding").collect()
-        )
+    The ADC tables come from :func:`_luts_driver` over the bounded query
+    rows (guide §1.2 — the distributed form was two serial
+    BroadcastNestedLoopJoin stages whose only input is queries x
+    codebook) and ride in as a literal broadcast relation."""
+    codes = pq_encode_arrow(emb, codebook)
     luts = local_relation_df(
         emb.sparkSession,
-        _luts_driver(q_rows, cw),
-        "query_id bigint, "
-        + ", ".join(f"l{m} array<bigint>" for m in range(PQ_M)),
-    )
-    scored = codes.crossJoin(F.broadcast(luts)).where(
-        F.col("vec_id") != F.col("query_id")
+        _luts_driver(q_rows, codebook),
+        "query_id bigint, " + ", ".join(f"l{m} array<bigint>" for m in range(PQ_M)),
     )
     dist = None
     for m in range(PQ_M):
@@ -1084,17 +894,47 @@ def pq_adc_topk(
         dist = t if dist is None else dist + t
     w = Window.partitionBy("query_id").orderBy(F.col("adc_dist"), "vec_id")
     return (
-        scored.select("query_id", "vec_id", dist.alias("adc_dist"))
+        pair(codes, luts)
+        .select("query_id", "vec_id", dist.alias("adc_dist"))
         .withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= k)
     )
 
 
+def _query_rows(emb: DataFrame) -> list:
+    """The standard query set (vec_id < 3) as raw driver rows."""
+    return emb.where(F.col("vec_id") < 3).select("vec_id", "embedding").collect()
+
+
+def _cross_pairs(codes: DataFrame, luts: DataFrame) -> DataFrame:
+    return codes.crossJoin(F.broadcast(luts)).where(
+        F.col("vec_id") != F.col("query_id")
+    )
+
+
+def pq_adc_topk(emb: DataFrame, codebook: np.ndarray, k: int = 5) -> DataFrame:
+    """PQ-ADC approximate top-k for the standard query set (vec_id < 3)
+    against the trained ``codebook`` (unit-vector L2 ranks identically to
+    cosine).
+
+    Plan: encode the corpus (codes are WIDE-table small — PQ_M small ints
+    per vector); per query, the PQ_M x k distance lookup tables (a
+    broadcast of a handful of rows); score every candidate with PQ_M
+    ``element_at`` lookups + integer adds — zero float math per
+    candidate, fully inside codegen.  ``adc_dist`` is an exact int64
+    (deterministic cross-engine).  At 100 TB the scored relation reads
+    only the 8-code table, not the embeddings — the I/O win PQ exists
+    for; pair with IVF coarse clustering (:func:`ivf_pq_topk`) to also
+    shrink the candidate set, and exact-rerank the ADC shortlist where
+    final ordering matters (:func:`pq_search`).
+
+    The codebook is built once per corpus (see queries/vector_queries.py's
+    memo) and this function is lazy apart from the 3-row query collect."""
+    return _adc_topk(emb, codebook, _query_rows(emb), k, _cross_pairs)
+
+
 def pq_search(
-    emb: DataFrame,
-    k: int = 5,
-    shortlist: int = 50,
-    codebook: list | None = None,
+    emb: DataFrame, codebook: np.ndarray, k: int = 5, shortlist: int = 50
 ) -> DataFrame:
     """Production PQ search shape: ADC shortlist (integer lookups over the
     compressed code table) -> exact cosine rerank of only the shortlist
@@ -1113,12 +953,10 @@ def pq_search(
     # Bit-exactness: array<float> values round-trip exactly through
     # float64 (collect) and back to float32 (Arrow), and _qnrm is
     # computed in-plan over those identical values.
-    q_rows = (
-        emb.where(F.col("vec_id") < 3).select("vec_id", "embedding").collect()
+    q_rows = _query_rows(emb)
+    sl = _adc_topk(emb, codebook, q_rows, shortlist, _cross_pairs).select(
+        "query_id", "vec_id"
     )
-    sl = pq_adc_topk(
-        emb, k=shortlist, codebook=codebook, q_rows=q_rows
-    ).select("query_id", "vec_id")
     base = emb.select("vec_id", "embedding").withColumn(
         "_nrm", norm_expr("embedding")
     )
@@ -1147,7 +985,7 @@ def pq_search(
     )
 
 
-def ivf_pq_topk(emb: DataFrame, k: int = 5) -> DataFrame:
+def ivf_pq_topk(emb: DataFrame, codebook: np.ndarray, k: int = 5) -> DataFrame:
     """IVF-PQ (the FAISS IVFPQ architecture, Jegou TPAMI'11 §V): coarse
     IVF clustering bounds WHICH candidates are scored (the query's
     assigned cluster only, nprobe=1), product quantization bounds WHAT is
@@ -1155,50 +993,29 @@ def ivf_pq_topk(emb: DataFrame, k: int = 5) -> DataFrame:
     two compressions multiply: at 100 TB the scan touches one cluster's
     code table — candidates O(n/K), bytes O(8) each, zero float ops.
 
-    Plan: broadcast coarse codebook -> one corpus assignment pass;
-    trained PQ codebook -> one corpus encode pass; the scored relation is
-    an equi-join on the cluster id (hash shuffle of 8-code rows), never a
-    cross join.  Exact-rerank the survivors where final ordering matters
-    (compose with the pq_search rerank shape)."""
-    spark = emb.sparkSession
+    Plan: broadcast coarse codebook -> one corpus assignment pass; the
+    trained PQ ``codebook`` -> one corpus encode pass; the scored
+    relation is an equi-join on the cluster id (hash shuffle of 8-code
+    rows), never a cross join.  Exact-rerank the survivors where final
+    ordering matters (compose with the pq_search rerank shape)."""
     _c = ivf_centroids(emb)
-    cents = local_relation_df(spark, _c.collect(), _c.schema)
+    cents = local_relation_df(emb.sparkSession, _c.collect(), _c.schema)
     clusters = assign_to_centroids(emb, cents).select("vec_id", "cluster")
 
-    # raw input: pq_train normalizes its sample driver-side (bit-equal)
-    cb_rows = pq_train(emb, pq_codebook(emb).collect()).collect()
-    codes = pq_encode_arrow(
-        emb.select("vec_id", "embedding"), cb_rows, normalize=True
-    ).join(clusters, "vec_id")
+    def pair(codes: DataFrame, luts: DataFrame) -> DataFrame:
+        qprobe = luts.join(
+            clusters.where(F.col("vec_id") < 3).select(
+                F.col("vec_id").alias("query_id"), F.col("cluster").alias("qcluster")
+            ),
+            "query_id",
+        )
+        return codes.join(clusters, "vec_id").join(
+            F.broadcast(qprobe),
+            (F.col("cluster") == F.col("qcluster"))
+            & (F.col("vec_id") != F.col("query_id")),
+        )
 
-    # the ADC tables are built driver-side, as in pq_adc_topk
-    q_rows = emb.where(F.col("vec_id") < 3).select("vec_id", "embedding").collect()
-    luts = local_relation_df(
-        spark,
-        _luts_driver(q_rows, _cb_lists(cb_rows)),
-        "query_id bigint, " + ", ".join(f"l{m} array<bigint>" for m in range(PQ_M)),
-    )
-    qprobe = luts.join(
-        clusters.where(F.col("vec_id") < 3).select(
-            F.col("vec_id").alias("query_id"), F.col("cluster").alias("qcluster")
-        ),
-        "query_id",
-    )
-    j = codes.join(
-        F.broadcast(qprobe),
-        (F.col("cluster") == F.col("qcluster"))
-        & (F.col("vec_id") != F.col("query_id")),
-    )
-    dist = None
-    for m in range(PQ_M):
-        t = F.element_at(F.col(f"l{m}"), F.col(f"c{m}"))
-        dist = t if dist is None else dist + t
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_dist"), "vec_id")
-    return (
-        j.select("query_id", "vec_id", dist.alias("adc_dist"))
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-    )
+    return _adc_topk(emb, codebook, _query_rows(emb), k, pair)
 
 
 def cluster_silhouette(emb: DataFrame, k: int = IVF_K) -> DataFrame:

@@ -272,3 +272,38 @@ def compare_query(
                     f"oracle-only={list((oc - sc).items())[:3]}"
                 )
     return problems
+
+
+def check_specs(spark, con, sf_dir: str, specs: dict) -> dict | None:
+    """The oracle gate over ``specs`` ({name: (fn, sql or None)}): the type
+    lint over every SQL first — any problem is a hard failure, printed as
+    ``LINT`` lines, and the sweep stops there (returns None).  Otherwise
+    each spec runs in name order: :func:`compare_query` where it has SQL,
+    a rows-only run where it has none, printing one ``OK`` / ``FAIL`` /
+    ``NOORA`` line each.  Returns ``{"ok": [...], "rows_only": [...],
+    "fail": {name: problem}}``; a spec that raises is a failure."""
+    lint = lint_oracle_types(
+        con, {name: sql for name, (_, sql) in specs.items() if sql is not None}
+    )
+    for p in lint:
+        print(f"LINT  {p}")
+    if lint:
+        return None
+    ok, rows_only, fail = [], [], {}
+    for name, (fn, sql) in sorted(specs.items()):
+        try:
+            if sql is None:
+                n = fn(spark, sf_dir).count()
+                rows_only.append(name)
+                print(f"NOORA {name}: {n} rows (rows-only check)")
+                continue
+            problems = compare_query(spark, con, fn, sql, sf_dir, name=name)
+        except Exception as e:  # noqa: BLE001 — a crash is a failed check
+            problems = [f"error: {(str(e) or repr(e)).splitlines()[0][:300]}"]
+        if problems:
+            fail[name] = "; ".join(problems)[:400]
+            print(f"FAIL  {name}: {fail[name]}")
+        else:
+            ok.append(name)
+            print(f"OK    {name}")
+    return {"ok": ok, "rows_only": rows_only, "fail": fail}

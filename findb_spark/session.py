@@ -117,8 +117,8 @@ def files_fingerprint(path: str) -> tuple:
 
 class Memo:
     """Bounded memo of driver-side values derived from one parquet table
-    (schemas, PQ codebook rows).  Relations are not kept here: Spark's
-    cache holds them (see :func:`release_caches`).
+    (schemas, trained PQ codebook arrays).  Relations are not kept here:
+    Spark's cache holds them (see :func:`release_caches`).
 
     **Key.** :meth:`key` builds ``(applicationId, files_fingerprint(path),
     *extra)`` from the caller's source parquet ``path``; callers never
@@ -189,8 +189,8 @@ def local_relation_df(spark: SparkSession, rows, schema):
     the resulting relation — including each broadcast build and each
     re-execution under AQE — round-trips those slices through Python
     workers: measured 32 near-empty tasks and ~200 ms of worker latency
-    per evaluation at bench scale (the dominant cost of the PQ codebook
-    / ADC-table relations, whose actual payload is kilobytes).  Routing
+    per evaluation at bench scale (the dominant cost of the PQ ADC-table
+    relation, whose actual payload is kilobytes).  Routing
     the same rows through ``createDataFrame(pandas)`` instead serializes
     them ONCE driver-side over the Arrow channel
     (``spark.sql.execution.arrow.pyspark.enabled`` — on in this

@@ -3,55 +3,34 @@
 
 Usage: python scripts/check_oracle.py [--json OUT.json] [sf_dir] [query ...]
 
-With --json, a machine-readable summary ({"sf_dir", "ok", "noora", "fail",
-"counts"}) is written to OUT.json.
+With --json, a machine-readable summary ({"sf_dir", "ok", "rows_only",
+"fail", "counts"}) is written to OUT.json.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> int:
-    # argparse (round 13, advisor): a bare `--json` used to raise
-    # IndexError on argv[1], and the flag was position-locked
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--json", dest="json_out", metavar="OUT.json",
                     help="write a machine-readable summary to OUT.json")
     ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.001")
     ap.add_argument("query", nargs="*", help="restrict to these query names")
     ns = ap.parse_args()
-    json_out = ns.json_out
     sf_dir = ns.sf_dir
     only = set(ns.query)
 
     import __spark_entry__ as entrymod
-    from findb_spark.oracle import compare_query, duck_connection, lint_oracle_types
+    from findb_spark.oracle import check_specs, duck_connection
     from findb_spark.session import get_spark
-
-    spark = get_spark(app_name="check_oracle", shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    con = duck_connection(sf_dir)
-
-    # Type lint FIRST: a HUGEINT-typed oracle column hash-mismatches at the
-    # driver even when this replica (which fetches native Python ints) would
-    # pass — lint failures are hard failures regardless of value parity.
-    lint = lint_oracle_types(con, entrymod.oracle_sql())
-    for p in lint:
-        print(f"LINT  {p}")
-    if lint:
-        print(f"\nFAIL: {len(lint)} oracle type-lint problem(s)")
-        return 1
-
-    if not only:
-        # the driver's t1 smoke: entry(spark) must run and yield rows
-        smoke = entrymod.entry(spark).collect()
-        print(f"SMOKE entry: {len(smoke)} rows")
-        assert len(smoke) > 0, "entry() returned no rows"
 
     qs = entrymod.queries()
     sqls = entrymod.oracle_sql()
@@ -61,48 +40,43 @@ def main() -> int:
         # that verified nothing
         print(f"FAIL  unknown query name(s): {sorted(unknown)}")
         return 1
-    n_checked = n_failed = n_noora = 0
-    ok_names, noora_names, fail_detail = [], [], {}
-    for name, fn in sorted(qs.items()):
-        if only and name not in only:
-            continue
-        n_checked += 1
-        if name not in sqls:
-            n_noora += 1
-            try:
-                n = fn(spark, sf_dir).count()
-                noora_names.append(name)
-                print(f"NOORA {name}: {n} rows (rows-only check)")
-            except Exception as e:
-                n_failed += 1
-                fail_detail[name] = f"spark error: {str(e).splitlines()[0][:200]}"
-                print(f"FAIL  {name}: {fail_detail[name]}")
-            continue
-        try:
-            problems = compare_query(spark, con, fn, sqls[name], sf_dir, name=name)
-        except Exception as e:
-            problems = [f"error: {str(e).splitlines()[0][:300]}"]
-        if problems:
-            n_failed += 1
-            fail_detail[name] = "; ".join(problems)[:400]
-            print(f"FAIL  {name}: {fail_detail[name]}")
-        else:
-            ok_names.append(name)
-            print(f"OK    {name}")
 
-    print(f"\n{n_checked - n_failed}/{n_checked} ok; {n_noora} rows-only; {n_failed} failures")
-    if json_out:
+    spark = get_spark(app_name="check_oracle", shuffle_partitions=8)
+    spark.sparkContext.setLogLevel("ERROR")
+    con = duck_connection(sf_dir)
+
+    # Type lint FIRST (inside check_specs): a HUGEINT-typed oracle column
+    # hash-mismatches at the driver even when this replica (which fetches
+    # native Python ints) would pass — lint failures are hard failures
+    # regardless of value parity.
+    res = check_specs(
+        spark, con, sf_dir,
+        {n: (fn, sqls.get(n)) for n, fn in qs.items() if not only or n in only},
+    )
+    if res is None:
+        print("\nFAIL: oracle type-lint problem(s)")
+        return 1
+
+    if not only:
+        # the driver's t1 smoke: entry(spark) must run and yield rows
+        smoke = entrymod.entry(spark).collect()
+        print(f"SMOKE entry: {len(smoke)} rows")
+        assert len(smoke) > 0, "entry() returned no rows"
+
+    n_failed = len(res["fail"])
+    n_checked = len(res["ok"]) + len(res["rows_only"]) + n_failed
+    print(f"\n{n_checked - n_failed}/{n_checked} ok; {len(res['rows_only'])} "
+          f"rows-only; {n_failed} failures")
+    if ns.json_out:
         summary = {
             "sf_dir": sf_dir,
             "counts": {"checked": n_checked, "ok": n_checked - n_failed,
-                       "rows_only": n_noora, "fail": n_failed},
-            "ok": ok_names,
-            "rows_only": noora_names,
-            "fail": fail_detail,
+                       "rows_only": len(res["rows_only"]), "fail": n_failed},
+            **res,
         }
-        with open(json_out, "w") as f:
+        with open(ns.json_out, "w") as f:
             json.dump(summary, f, indent=1, sort_keys=True)
-        print(f"wrote {json_out}")
+        print(f"wrote {ns.json_out}")
     return 1 if n_failed else 0
 
 

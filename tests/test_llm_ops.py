@@ -257,7 +257,7 @@ def test_pq_codes_dense_and_complete(spark, sf_dir):
     from findb_spark.ops.vector import (
         PQ_K,
         PQ_M,
-        _normalized,
+        PQ_SUBDIM,
         pq_codebook,
         pq_encode_arrow,
         pq_train,
@@ -265,10 +265,9 @@ def test_pq_codes_dense_and_complete(spark, sf_dir):
     from findb_spark.session import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    nv = _normalized(emb)
-    cbw = pq_train(nv, pq_codebook(emb))
-    assert cbw.count() == PQ_K
-    codes = pq_encode_arrow(nv, cbw)
+    cb = pq_train(emb, pq_codebook(emb))
+    assert cb.shape == (PQ_M, PQ_K, PQ_SUBDIM)
+    codes = pq_encode_arrow(emb, cb)
     assert codes.count() == emb.count()
     bounds = codes.agg(
         *[F.min(f"c{m}").alias(f"lo{m}") for m in range(PQ_M)],
@@ -281,7 +280,7 @@ def test_pq_codes_dense_and_complete(spark, sf_dir):
 def _pq_shortlist_recall(spark, sf_dir, shortlist, train):
     from pyspark.sql import functions as F
 
-    from findb_spark.ops.vector import cosine_topk, pq_adc_topk
+    from findb_spark.ops.vector import cosine_topk, pq_adc_topk, pq_codebook, pq_train
     from findb_spark.session import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -289,9 +288,12 @@ def _pq_shortlist_recall(spark, sf_dir, shortlist, train):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
     exact = {(r.query_id, r.vec_id) for r in cosine_topk(emb, q, k=5).collect()}
+    cb = pq_codebook(emb)
+    if train:
+        cb = pq_train(emb, cb)
     sl = {
         (r.query_id, r.vec_id)
-        for r in pq_adc_topk(emb, k=shortlist, train=train).collect()
+        for r in pq_adc_topk(emb, codebook=cb, k=shortlist).collect()
     }
     assert len(exact) > 0
     return len(exact & sl) / len(exact)
@@ -313,7 +315,7 @@ def test_pq_search_matches_exact_on_shortlist_and_is_deterministic(spark, sf_dir
     fixed-point formula as cosine_topk) and stable under re-execution."""
     from pyspark.sql import functions as F
 
-    from findb_spark.ops.vector import cosine_topk, pq_search
+    from findb_spark.ops.vector import cosine_topk, pq_codebook, pq_search, pq_train
     from findb_spark.session import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -324,8 +326,9 @@ def test_pq_search_matches_exact_on_shortlist_and_is_deterministic(spark, sf_dir
         (r.query_id, r.vec_id): r.cos_sim
         for r in cosine_topk(emb, q, k=500).collect()
     }
-    r1 = sorted(map(tuple, pq_search(emb, k=5).collect()))
-    r2 = sorted(map(tuple, pq_search(emb, k=5).collect()))
+    cb = pq_train(emb, pq_codebook(emb))
+    r1 = sorted(map(tuple, pq_search(emb, cb, k=5).collect()))
+    r2 = sorted(map(tuple, pq_search(emb, cb, k=5).collect()))
     assert r1 == r2
     for query_id, vec_id, cos_sim, _rnk in r1:
         assert cos_sim == exact_sim[(query_id, vec_id)]
@@ -335,7 +338,13 @@ def test_ivf_pq_candidates_stay_in_probed_cluster(spark, sf_dir):
     """IVF-PQ must only surface candidates from the query's own coarse
     cluster (nprobe=1) — the candidate-bounding contract — and be
     deterministic across executions."""
-    from findb_spark.ops.vector import assign_to_centroids, ivf_centroids, ivf_pq_topk
+    from findb_spark.ops.vector import (
+        assign_to_centroids,
+        ivf_centroids,
+        ivf_pq_topk,
+        pq_codebook,
+        pq_train,
+    )
     from findb_spark.session import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -343,11 +352,62 @@ def test_ivf_pq_candidates_stay_in_probed_cluster(spark, sf_dir):
         r.vec_id: r.cluster
         for r in assign_to_centroids(emb, ivf_centroids(emb)).collect()
     }
-    r1 = sorted(map(tuple, ivf_pq_topk(emb, k=5).collect()))
-    r2 = sorted(map(tuple, ivf_pq_topk(emb, k=5).collect()))
+    cb = pq_train(emb, pq_codebook(emb))
+    r1 = sorted(map(tuple, ivf_pq_topk(emb, cb, k=5).collect()))
+    r2 = sorted(map(tuple, ivf_pq_topk(emb, cb, k=5).collect()))
     assert r1 == r2 and len(r1) > 0
     for query_id, vec_id, _adc, _rnk in r1:
         assert clusters[vec_id] == clusters[query_id]
+
+
+def test_pq_on_corpus_smaller_than_pq_k(spark, sf_dir):
+    """On a corpus of fewer than PQ_K vectors the init codebook holds one
+    codeword per vector, so the encode, training and ADC kernels must take
+    the code range from the codebook, not from PQ_K.  With the shortlist
+    covering the whole corpus, pq_search equals the exact top-k."""
+    from findb_spark.ops.vector import (
+        PQ_M,
+        PQ_SUBDIM,
+        ivf_pq_topk,
+        pq_codebook,
+        pq_encode_arrow,
+        pq_search,
+        pq_train,
+    )
+    from findb_spark.session import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 10)
+    cb = pq_train(emb, pq_codebook(emb))
+    assert cb.shape == (PQ_M, 10, PQ_SUBDIM)
+    codes = pq_encode_arrow(emb, cb).collect()
+    assert sorted(r.vec_id for r in codes) == list(range(10))
+    assert all(1 <= r[f"c{m}"] <= 10 for r in codes for m in range(PQ_M))
+    q = emb.where(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    )
+    exact = sorted(map(tuple, cosine_topk(emb, q, k=5).collect()))
+    assert len(exact) == 15
+    assert sorted(map(tuple, pq_search(emb, cb, k=5).collect())) == exact
+    ivf_pq_topk(emb, cb, k=5).collect()
+
+
+def test_pq_specs_train_only_in_the_memo(spark, sf_dir, monkeypatch):
+    """The engine trains a PQ codebook in one place,
+    ``_trained_pq_codebook``: once it is warm, building and running the
+    IVF-PQ and PQ-search specs must not train again."""
+    from findb_spark.ops import vector
+    from findb_spark.queries import vector_queries as vq
+    from findb_spark.registry import all_specs
+
+    vq._trained_pq_codebook(spark, sf_dir)
+
+    def train(*args, **kwargs):
+        raise AssertionError("PQ codebook trained outside _trained_pq_codebook")
+
+    monkeypatch.setattr(vector, "pq_train", train)
+    monkeypatch.setattr(vector, "pq_codebook", train)
+    for name in ("vec_ivf_pq", "vec_pq_search"):
+        assert all_specs()[name].fn(spark, sf_dir).count() > 0, name
 
 
 def test_chunk_dup_stats_tail_and_exact_dup_edges(spark):
@@ -368,30 +428,49 @@ def test_chunk_dup_stats_tail_and_exact_dup_edges(spark):
     assert got[3] == (2, 0, 0.0)
 
 
-def test_pq_train_raw_and_normalized_inputs_bit_equal(spark, sf_dir):
-    """pq_train accepts RAW embeddings (sample normalized driver-side in
-    numpy — exact int self-dot, one IEEE sqrt, one divide per element) or
-    a pre-normalized ``nv`` DataFrame (the JVM fixed-point normalize).
-    Both must yield the BIT-identical codebook: the numpy sequence is the
-    same one pq_codebook runs and the encode kernel's normalize=True path
-    is pinned under — any divergence is a normalization-contract bug."""
-    from findb_spark.ops.vector import _normalized, pq_codebook, pq_train
+def _codebook_df(spark, cb):
+    """The codebook array as the (code, sw0..sw{PQ_M-1}) relation the
+    Column-form specs (fxp_l2_sub) cross-join against."""
+    from findb_spark.ops.vector import PQ_M
+    from findb_spark.session import local_relation_df
+
+    rows = [
+        (code0 + 1, *[cb[m, code0].tolist() for m in range(PQ_M)])
+        for code0 in range(cb.shape[1])
+    ]
+    return local_relation_df(
+        spark,
+        rows,
+        "code int, " + ", ".join(f"sw{m} array<double>" for m in range(PQ_M)),
+    )
+
+
+def test_pq_numpy_normalization_bit_equal_to_column_form(spark, sf_dir):
+    """Every PQ kernel unit-normalizes RAW embeddings in numpy (exact int64
+    self-dot, one IEEE sqrt, one divide per element).  The result must be
+    BIT-identical to the JVM Column form ``_normalized`` for every corpus
+    vector — the codebook, the encode and the ADC tables all rest on it."""
+    import numpy as np
+
+    from findb_spark.ops.vector import _normalized, _unit_rows
     from findb_spark.session import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cb0 = pq_codebook(emb).collect()
-    via_nv = pq_train(_normalized(emb), cb0).collect()
-    via_raw = pq_train(emb, cb0).collect()
-    assert [r.asDict() for r in via_nv] == [r.asDict() for r in via_raw]
+    raw = sorted(emb.select("vec_id", "embedding").collect())
+    spec = sorted(_normalized(emb).collect())
+    assert [r.vec_id for r in raw] == [r.vec_id for r in spec]
+    got = _unit_rows([r.embedding for r in raw])
+    want = np.array([r.nv for r in spec], dtype=np.float64)
+    assert got.view(np.int64).tolist() == want.view(np.int64).tolist()
 
 
 def test_pq_encode_kernels_bit_equal(spark, sf_dir):
-    """The numpy-over-Arrow encode kernel (pq_encode_arrow) must agree
-    BIT-FOR-BIT with the fxp_l2_sub Column form (the executable spec —
-    crossJoin against the broadcast codebook + composite min aggregate),
-    both on normalized input and with normalization fused into the
-    kernel.  Same IEEE-754 double ops + exact int64 sums on both, so any
-    divergence is a kernel bug, not noise."""
+    """The numpy-over-Arrow encode kernel (pq_encode_arrow, which
+    normalizes RAW embeddings inside the kernel) must agree BIT-FOR-BIT
+    with the fxp_l2_sub Column form over the JVM-normalized corpus (the
+    executable spec — crossJoin against the broadcast codebook +
+    composite min aggregate).  Same IEEE-754 double ops + exact int64
+    sums on both, so any divergence is a kernel bug, not noise."""
     from pyspark.sql import functions as F
 
     from findb_spark.ops.vector import (
@@ -406,10 +485,9 @@ def test_pq_encode_kernels_bit_equal(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     nv = _normalized(emb)
-    cbw = pq_train(nv, pq_codebook(emb))
-    cb_rows = cbw.collect()
+    cb = pq_train(emb, pq_codebook(emb))
 
-    j = nv.crossJoin(F.broadcast(cbw))
+    j = nv.crossJoin(F.broadcast(_codebook_df(spark, cb)))
     dists = j.select(
         "vec_id",
         *[
@@ -426,20 +504,11 @@ def test_pq_encode_kernels_bit_equal(spark, sf_dir):
         r["vec_id"]: tuple(r[f"d{m}"] % 128 for m in range(PQ_M))
         for r in agg.collect()
     }
-    arrow_k = {
-        r["vec_id"]: tuple(r[f"c{m}"] for m in range(PQ_M))
-        for r in pq_encode_arrow(nv, cb_rows).collect()
-    }
-    # the fused-normalization variant takes RAW embeddings and must land
-    # on the same codes: its in-kernel numpy norm is the identical fxp
-    # op sequence as the Column-form normalization
     arrow_fused = {
         r["vec_id"]: tuple(r[f"c{m}"] for m in range(PQ_M))
-        for r in pq_encode_arrow(
-            emb.select("vec_id", "embedding"), cb_rows, normalize=True
-        ).collect()
+        for r in pq_encode_arrow(emb, cb).collect()
     }
-    assert spec == arrow_k
+    assert len(spec) == emb.count()
     assert spec == arrow_fused
 
 
@@ -510,7 +579,7 @@ def test_local_relation_df(spark):
     for r, (i, v, s) in zip(got, rows):
         assert r.id == i and r.s == s
         assert [bits(x) for x in r.v] == [bits(x) for x in v]
-    # dict rows (the pq_codebook/pq_train shape)
+    # dict rows, matched to the schema by name
     d2 = local_relation_df(
         spark, [{"code": 2, "w": [1.5]}, {"code": 1, "w": [-2.5]}],
         "code int, w array<double>",
@@ -544,27 +613,24 @@ def test_pq_luts_driver_matches_column_form(spark, sf_dir):
 
     from findb_spark.ops.vector import (
         PQ_M,
-        _cb_lists,
         _luts_driver,
         _normalized,
         fxp_l2_sub,
         pq_codebook,
         pq_train,
     )
-    from findb_spark.session import load_table, local_relation_df
+    from findb_spark.session import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cbw = pq_train(emb, pq_codebook(emb).collect())
-    cb_rows = cbw.collect()
+    cb = pq_train(emb, pq_codebook(emb))
     q_rows = (
         emb.where(F.col("vec_id") < 3).select("vec_id", "embedding").collect()
     )
-    got = sorted(_luts_driver(q_rows, _cb_lists(cb_rows)))
+    got = sorted(_luts_driver(q_rows, cb))
     q = _normalized(emb).where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("nv").alias("qv")
     )
-    cb = local_relation_df(spark, cb_rows, cbw.schema)
-    dists = q.crossJoin(F.broadcast(cb)).select(
+    dists = q.crossJoin(F.broadcast(_codebook_df(spark, cb))).select(
         "query_id",
         "code",
         *[fxp_l2_sub(F.col("qv"), F.col(f"sw{m}"), m).alias(f"d{m}") for m in range(PQ_M)],
