@@ -67,10 +67,11 @@ from __future__ import annotations
 
 import os
 import re
-from urllib.parse import unquote, urlparse
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
+
+from findb_spark.session import local_path, local_relation_df
 
 #: canonical column order of a bitemporal prices table (FIXTURES.md §A1)
 PRICE_COLUMNS = ("asset_id", "date", "ts", "value")
@@ -174,10 +175,9 @@ def _driver_scan(prices: DataFrame, asset_id, start_date, end_date, asof_ts):
         return None
     paths = []
     for uri in rel.inputFiles():
-        u = urlparse(uri)
-        if u.scheme != "file":
+        path = local_path(uri)
+        if path is None:
             return None
-        path = unquote(u.path)
         if by_month:
             month = _DATE_MONTH_DIR.search(path).group(1)
             if not (month.isdigit() and start_date // 100 <= int(month) <= end_date // 100):
@@ -206,8 +206,6 @@ def _driver_asof_range(prices: DataFrame, asset_id, start_date, end_date, asof_t
     when the driver path does not apply (module notes)."""
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
-
-    from findb_spark.session import local_relation_df
 
     scan = _driver_scan(prices, asset_id, start_date, end_date, asof_ts)
     if scan is None:

@@ -8,9 +8,9 @@ has no PIL/ffmpeg): P6 is `b"P6\\n<w> <h>\\n255\\n" + RGB bytes`, WAV is a
 (IHDR/IDAT/IEND with CRC-32) zlib-DEFLATE-compressed scanlines under the
 five RFC 2083 §6 filter types, and mu-law is the ITU-T G.711 logarithmic
 companding codec (the Sun/CCITT integer formulation). The Spark operators
-in ops/multimodal.py wrap these in Arrow-batched mapInPandas; swapping in
-a JPEG/OPUS codec changes only these few dozen lines, none of the Spark
-plumbing.
+in ops/multimodal.py call these from per-row functions that the engine's
+one Arrow row kernel (session.map_rows) runs; swapping in a JPEG/OPUS
+codec changes only these few dozen lines, none of the Spark plumbing.
 
 Synthetic content is a closed-form integer function of (doc_id, position),
 so a DuckDB oracle can recompute features *from the formula* while Spark

@@ -27,16 +27,19 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Mapping
+from collections.abc import Mapping
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from findb_spark.session import local_relation_df
+from findb_spark.session import local_path, local_relation_df, map_rows, read_parquet
 
 
-def _local(uri: str) -> str:
-    return uri[len("file:") :] if uri.startswith("file:") else uri
+def _table_files(spark: SparkSession, path: str) -> list[str]:
+    """The data files of the parquet table at ``path``, as local paths
+    where the URI is a ``file:`` one.  Listed through :func:`read_parquet`,
+    so once its schema memo holds the table's content the listing runs no
+    Spark job."""
+    return [local_path(uri) or uri for uri in read_parquet(spark, path).inputFiles()]
 
 
 def _schema(cols: list[str]) -> str:
@@ -47,60 +50,51 @@ def _schema(cols: list[str]) -> str:
 
 
 def _harvest_files(spark: SparkSession, files: list[str], cols: list[str]) -> DataFrame:
-    """Distributed footer-only stats harvest for an explicit file list."""
+    """Distributed footer-only stats harvest for an explicit file list:
+    one ``file, num_rows, {c}_min, {c}_max`` row per file, folded over
+    its row groups' footer statistics."""
+    import pyarrow.parquet as pq
 
-    def harvest(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
+    def footer_stats(f):
+        md = pq.read_metadata(f)
+        lo: dict[str, float | None] = {c: None for c in cols}
+        hi: dict[str, float | None] = {c: None for c in cols}
+        for rg in range(md.num_row_groups):
+            g = md.row_group(rg)
+            for ci in range(g.num_columns):
+                col = g.column(ci)
+                name = col.path_in_schema
+                if name in lo and col.statistics is not None:
+                    st = col.statistics
+                    if st.has_min_max:
+                        mn, mx = float(st.min), float(st.max)
+                        lo[name] = mn if lo[name] is None else min(lo[name], mn)
+                        hi[name] = mx if hi[name] is None else max(hi[name], mx)
+        return [(f, md.num_rows, *[v for c in cols for v in (lo[c], hi[c])])]
 
-        for b in batches:
-            rows = []
-            for f in b["file"]:
-                md = pq.read_metadata(f)
-                lo: dict[str, float | None] = {c: None for c in cols}
-                hi: dict[str, float | None] = {c: None for c in cols}
-                for rg in range(md.num_row_groups):
-                    g = md.row_group(rg)
-                    for ci in range(g.num_columns):
-                        col = g.column(ci)
-                        name = col.path_in_schema
-                        if name in lo and col.statistics is not None:
-                            st = col.statistics
-                            if st.has_min_max:
-                                mn, mx = float(st.min), float(st.max)
-                                lo[name] = mn if lo[name] is None else min(lo[name], mn)
-                                hi[name] = mx if hi[name] is None else max(hi[name], mx)
-                rows.append(
-                    [f, md.num_rows]
-                    + [v for c in cols for v in (lo[c], hi[c])]
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["file", "num_rows"]
-                + [f"{c}_{s}" for c in cols for s in ("min", "max")],
-            )
-
-    return _map_files(spark, files, harvest, _schema(cols))
+    return _map_files(spark, files, footer_stats, _schema(cols))
 
 
-def _map_files(spark: SparkSession, files: list[str], fn, schema: str) -> DataFrame:
-    """``mapInPandas(fn, schema)`` over a ``file`` column listing
-    ``files``: the list ships as a LocalRelation, spread over at most
-    ``defaultParallelism`` tasks."""
+def _map_files(spark: SparkSession, files: list[str], rows_of, schema: str) -> DataFrame:
+    """:func:`map_rows` ``(rows_of, schema)`` over a ``file`` column
+    listing ``files``: the list ships as a LocalRelation, spread over at
+    most ``defaultParallelism`` tasks."""
     paths = local_relation_df(spark, [(f,) for f in files], "file string")
     n_tasks = max(1, min(len(files), spark.sparkContext.defaultParallelism))
-    return paths.repartition(n_tasks).mapInPandas(fn, schema)
+    return map_rows(paths.repartition(n_tasks), rows_of, schema)
 
 
 def build_manifest(spark: SparkSession, path: str, cols: list[str]) -> DataFrame:
     """Harvest per-file min/max stats for ``cols`` (numeric) from parquet
     footers. Returns a small DataFrame: ``file, num_rows, {c}_min, {c}_max``.
 
-    Distributed and footer-only: file paths are parallelized across the
-    cluster and each task reads just the parquet metadata (pyarrow), so
-    the build touches no data pages.
+    Distributed and footer-only: the file paths ship as a LocalRelation
+    and a :func:`map_rows` stage reads just each file's parquet metadata
+    (pyarrow), so the build touches no data pages.  Building the
+    DataFrame runs no Spark job once :func:`read_parquet` has seen the
+    table's current content.
     """
-    files = [_local(f) for f in spark.read.parquet(path).inputFiles()]
-    return _harvest_files(spark, files, cols)
+    return _harvest_files(spark, _table_files(spark, path), cols)
 
 
 def _overlap_cond(ranges: Mapping[str, tuple[float, float]]):
@@ -168,7 +162,7 @@ def update_manifest(
     maintainable under continuous ingest at 100 TB; rewritten/compacted
     tables should rebuild instead (entries for files no longer present
     are dropped by membership)."""
-    current = {_local(f) for f in spark.read.parquet(path).inputFiles()}
+    current = set(_table_files(spark, path))
     known = {r.file for r in old.select("file").collect()}
     new_files = sorted(current - known)
     kept = old.where(F.col("file").isin(list(current & known)))
@@ -222,29 +216,25 @@ def build_bloom_manifest(spark: SparkSession, path: str, col: str) -> DataFrame:
     """Per-file Bloom bitsets over ``col``: one distributed pass that reads
     ONLY that column's pages per file (the price of a value index — still
     no full-row materialization). Returns (file, num_rows, words:
-    array<bigint> of BLOOM_BITS/64 words)."""
+    array<bigint> of BLOOM_BITS/64 words), one row per file."""
+    import pyarrow.parquet as pq
 
-    def harvest(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
+    nwords = BLOOM_BITS // 64
 
-        nwords = BLOOM_BITS // 64
-        for b in batches:
-            rows = []
-            for f in b["file"]:
-                t = pq.read_table(f, columns=[col])
-                words = [0] * nwords
-                vals = t.column(col).to_pylist()
-                for v in set(vals):
-                    for p in _bloom_positions(v):
-                        words[p // 64] |= 1 << (p % 64)
-                # int64 domain: keep the sign bit arithmetic exact by
-                # wrapping to signed 64-bit
-                words = [w - (1 << 64) if w >= (1 << 63) else w for w in words]
-                rows.append([f, len(vals), words])
-            yield pd.DataFrame(rows, columns=["file", "num_rows", "words"])
+    def bitset(f):
+        t = pq.read_table(f, columns=[col])
+        words = [0] * nwords
+        vals = t.column(col).to_pylist()
+        for v in set(vals):
+            for p in _bloom_positions(v):
+                words[p // 64] |= 1 << (p % 64)
+        # int64 domain: keep the sign bit arithmetic exact by
+        # wrapping to signed 64-bit
+        words = [w - (1 << 64) if w >= (1 << 63) else w for w in words]
+        return [(f, len(vals), words)]
 
-    files = [_local(f) for f in spark.read.parquet(path).inputFiles()]
-    return _map_files(spark, files, harvest, "file string, num_rows bigint, words array<bigint>")
+    files = _table_files(spark, path)
+    return _map_files(spark, files, bitset, "file string, num_rows bigint, words array<bigint>")
 
 
 def _bloom_hit_cond(value):

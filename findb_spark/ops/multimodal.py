@@ -1,6 +1,9 @@
 """Multimodal column plumbing (BASELINE.json mandate): image/audio/video
-payloads as opaque ``binary`` columns with typed metadata, decoded /
-feature-extracted through Arrow-batched ``mapInPandas``.
+payloads as opaque ``binary`` columns with typed metadata, encoded, decoded
+and feature-extracted through the engine's one Arrow row kernel,
+:func:`findb_spark.session.map_rows`.  Each operator below is only its
+per-row function — ``(doc_id, payload) -> [output tuples]`` — and its
+output schema; the kernel owns the batch loop and the frame assembly.
 
 The real media libraries (PIL/ffmpeg/torchaudio) are not in this
 container, so the *decode* step in the first operators below is a
@@ -16,17 +19,17 @@ Scale: payloads at 100 TB dominate row size — the layout rule is to keep
 metadata and payloads in the same row but rely on Parquet column pruning
 (metadata-only queries never deserialize payload pages), and to size
 ``spark.sql.files.maxPartitionBytes`` so one task holds a bounded number
-of payloads. mapInPandas streams Arrow record batches, so executor memory
+of payloads. map_rows streams Arrow record batches, so executor memory
 is bounded by batch size, not partition size.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
+import numpy as np
 
 from pyspark.sql import DataFrame, functions as F
+
+from findb_spark.session import map_rows
 
 #: metadata schema produced by the decode step
 DECODED_SCHEMA = (
@@ -47,6 +50,13 @@ def attach_payload(docs: DataFrame) -> DataFrame:
     ).withColumn("n_bytes", F.octet_length("payload"))
 
 
+def _attach_encoded(docs: DataFrame, encode) -> DataFrame:
+    """``(doc_id, payload)`` with ``payload = encode(doc_id)``."""
+    return map_rows(
+        docs.select("doc_id"), lambda d: [(d, encode(d))], "doc_id BIGINT, payload BINARY"
+    )
+
+
 def _decode_image_bytes(payload: bytes) -> tuple[int, int, int, str]:
     """DETERMINISTIC FAKE of an image decode (no media libs in container).
 
@@ -61,19 +71,12 @@ def _decode_image_bytes(payload: bytes) -> tuple[int, int, int, str]:
 
 
 def decode_metadata(with_payload: DataFrame) -> DataFrame:
-    """Arrow-batched decode: mapInPandas over (doc_id, payload) producing
+    """Arrow-batched decode: map_rows over (doc_id, payload) producing
     typed image metadata. Batch-shape-real; decode itself is the fake."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            decoded = [_decode_image_bytes(p) for p in pdf["payload"]]
-            out = pd.DataFrame(decoded, columns=["width", "height", "channels", "format"])
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            out.insert(1, "n_bytes", pdf["payload"].map(len).astype("int32"))
-            yield out
-
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        batches, schema=DECODED_SCHEMA
+    return map_rows(
+        with_payload.select("doc_id", "payload"),
+        lambda doc_id, payload: [(doc_id, len(payload), *_decode_image_bytes(payload))],
+        DECODED_SCHEMA,
     )
 
 
@@ -89,40 +92,28 @@ def sample_frames(with_payload: DataFrame, every_n: int = 2) -> DataFrame:
     decoder (no ffmpeg in container): the payload is treated as a
     concatenation of 4-byte frames; every ``every_n``-th frame is emitted
     as (doc_id, frame_index, frame_key), a row-expanding (1 -> n_frames)
-    Arrow-batched mapInPandas — the exact batch shape a real
+    Arrow-batched map_rows stage — the exact batch shape a real
     ffmpeg-backed sampler would have (replace the int.from_bytes with a
     frame decode + feature hash).
 
     Scale: expansion happens executor-side inside the Arrow batch; no
     shuffle. Downstream per-frame ops see a normal DataFrame."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, keys = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n_frames = len(payload) // FRAME_BYTES
-                for i in range(0, n_frames, every_n):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    keys.append(
-                        int.from_bytes(
-                            payload[i * FRAME_BYTES : (i + 1) * FRAME_BYTES], "big"
-                        )
-                    )
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_index": pd.array(idxs, dtype="int32"), "frame_key": keys}
-            )
+    def frames(doc_id, payload):
+        n_frames = len(payload) // FRAME_BYTES
+        return [
+            (doc_id, i, int.from_bytes(payload[i * FRAME_BYTES : (i + 1) * FRAME_BYTES], "big"))
+            for i in range(0, n_frames, every_n)
+        ]
 
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        batches, schema=FRAMES_SCHEMA
-    )
+    return map_rows(with_payload.select("doc_id", "payload"), frames, FRAMES_SCHEMA)
 
 
 # --- REAL codecs: PPM images / WAV audio (no media libs required) ---------
 #
 # The fake-decode paths above keep the original contract; the operators
 # below are REAL end-to-end: actual P6/RIFF byte encoding on attach, actual
-# header-parse + pixel/sample decode in the Arrow batches. See
+# header-parse + pixel/sample decode in the row functions. See
 # functions/media_codec.py. (JPEG/OPUS would swap the codec lines only.)
 
 PPM_DECODED_SCHEMA = (
@@ -135,20 +126,7 @@ def attach_ppm_payload(docs: DataFrame) -> DataFrame:
     closed-form function of doc_id (media_codec.image_pixels)."""
     from findb_spark.functions.media_codec import encode_ppm, image_pixels
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [
-                        encode_ppm(image_pixels(int(d))) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="doc_id BIGINT, payload BINARY"
-    )
+    return _attach_encoded(docs, lambda d: encode_ppm(image_pixels(int(d))))
 
 
 def decode_ppm_metadata(with_payload: DataFrame) -> DataFrame:
@@ -156,19 +134,11 @@ def decode_ppm_metadata(with_payload: DataFrame) -> DataFrame:
     the exact integer pixel sum (feature extraction with no float drift)."""
     from findb_spark.functions.media_codec import decode_ppm
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = decode_ppm(bytes(payload))
-                rows.append(
-                    (doc_id, px.shape[1], px.shape[0], px.shape[2], int(px.sum()))
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "channels", "sum_pixels"]
-            )
+    def metadata(doc_id, payload):
+        px = decode_ppm(bytes(payload))
+        return [(doc_id, px.shape[1], px.shape[0], px.shape[2], int(px.sum()))]
 
-    return with_payload.mapInPandas(batches, schema=PPM_DECODED_SCHEMA)
+    return map_rows(with_payload.select("doc_id", "payload"), metadata, PPM_DECODED_SCHEMA)
 
 
 def resize_ppm_images(with_payload: DataFrame, out_w: int, out_h: int) -> DataFrame:
@@ -181,18 +151,14 @@ def resize_ppm_images(with_payload: DataFrame, out_w: int, out_h: int) -> DataFr
         resize_nearest,
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                small = resize_nearest(decode_ppm(bytes(payload)), out_w, out_h)
-                out.append((doc_id, encode_ppm(small), out_w, out_h))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "payload", "width", "height"]
-            )
+    def resized(doc_id, payload):
+        small = resize_nearest(decode_ppm(bytes(payload)), out_w, out_h)
+        return [(doc_id, encode_ppm(small), out_w, out_h)]
 
-    return with_payload.mapInPandas(
-        batches, schema="doc_id BIGINT, payload BINARY, width INT, height INT"
+    return map_rows(
+        with_payload.select("doc_id", "payload"),
+        resized,
+        "doc_id BIGINT, payload BINARY, width INT, height INT",
     )
 
 
@@ -207,20 +173,7 @@ def attach_wav_payload(docs: DataFrame) -> DataFrame:
     (media_codec.audio_samples)."""
     from findb_spark.functions.media_codec import audio_samples, encode_wav
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [
-                        encode_wav(audio_samples(int(d))) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="doc_id BIGINT, payload BINARY"
-    )
+    return _attach_encoded(docs, lambda d: encode_wav(audio_samples(int(d))))
 
 
 def wav_features(with_payload: DataFrame) -> DataFrame:
@@ -228,24 +181,13 @@ def wav_features(with_payload: DataFrame) -> DataFrame:
     decode, exact integer energy (sum of squares) + zero-crossing count."""
     from findb_spark.functions.media_codec import decode_wav
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def features(doc_id, payload):
+        rate, s = decode_wav(bytes(payload))
+        s64 = s.astype("int64")
+        zc = int(np.count_nonzero(np.signbit(s64[1:]) != np.signbit(s64[:-1])))
+        return [(doc_id, rate, len(s), int((s64 * s64).sum()), zc)]
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rate, s = decode_wav(bytes(payload))
-                s64 = s.astype("int64")
-                zc = int(np.count_nonzero(np.signbit(s64[1:]) != np.signbit(s64[:-1])))
-                rows.append((doc_id, rate, len(s), int((s64 * s64).sum()), zc))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_samples", "sum_sq", "zero_crossings",
-                ],
-            )
-
-    return with_payload.mapInPandas(batches, schema=AUDIO_FEATURES_SCHEMA)
+    return map_rows(with_payload.select("doc_id", "payload"), features, AUDIO_FEATURES_SCHEMA)
 
 
 #: aHash output schema: 64-bit perceptual hash split into two 32-bit words
@@ -265,28 +207,22 @@ def image_ahash(with_payload: DataFrame) -> DataFrame:
     This is the multimodal analog of SimHash: near-identical images land
     on identical (or near) hashes, so a plain hash groupBy gives
     perceptual dedup buckets at any corpus size."""
-    import numpy as np
-
     from findb_spark.functions.media_codec import decode_ppm
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = decode_ppm(bytes(payload)).astype(np.int64)
-                h, w = px.shape[0], px.shape[1]
-                gray = px.sum(axis=2) // 3
-                r_idx = (np.arange(8) * h) // 8
-                c_idx = (np.arange(8) * w) // 8
-                g8 = gray[np.ix_(r_idx, c_idx)]
-                mean = int(g8.sum()) // 64
-                bits = (g8 >= mean).flatten()  # i = r*8 + c
-                lo = sum(1 << i for i in range(32) if bits[i])
-                hi = sum(1 << (i - 32) for i in range(32, 64) if bits[i])
-                rows.append((doc_id, hi, lo))
-            yield pd.DataFrame(rows, columns=["doc_id", "ahash_hi", "ahash_lo"])
+    def ahash(doc_id, payload):
+        px = decode_ppm(bytes(payload)).astype(np.int64)
+        h, w = px.shape[0], px.shape[1]
+        gray = px.sum(axis=2) // 3
+        r_idx = (np.arange(8) * h) // 8
+        c_idx = (np.arange(8) * w) // 8
+        g8 = gray[np.ix_(r_idx, c_idx)]
+        mean = int(g8.sum()) // 64
+        bits = (g8 >= mean).flatten()  # i = r*8 + c
+        lo = sum(1 << i for i in range(32) if bits[i])
+        hi = sum(1 << (i - 32) for i in range(32, 64) if bits[i])
+        return [(doc_id, hi, lo)]
 
-    return with_payload.mapInPandas(batches, schema=AHASH_SCHEMA)
+    return map_rows(with_payload.select("doc_id", "payload"), ahash, AHASH_SCHEMA)
 
 
 #: frame-level audio features: one row per 64-sample frame
@@ -302,27 +238,38 @@ def wav_frame_energies(with_payload: DataFrame) -> DataFrame:
     a real spectrogram/VAD pipeline has, with no float drift."""
     from findb_spark.functions.media_codec import decode_wav
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def energies(doc_id, payload):
+        _, s = decode_wav(bytes(payload))
+        s64 = s.astype("int64")
+        n_frames = len(s64) // AUDIO_FRAME_LEN
+        rows = []
+        for fi in range(n_frames):
+            seg = s64[fi * AUDIO_FRAME_LEN : (fi + 1) * AUDIO_FRAME_LEN]
+            rows.append((doc_id, fi, int((seg * seg).sum())))
+        return rows
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _, s = decode_wav(bytes(payload))
-                s64 = s.astype("int64")
-                n_frames = len(s64) // AUDIO_FRAME_LEN
-                for fi in range(n_frames):
-                    seg = s64[fi * AUDIO_FRAME_LEN : (fi + 1) * AUDIO_FRAME_LEN]
-                    rows.append((doc_id, fi, int((seg * seg).sum())))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "frame_energy"]
-            )
-
-    return with_payload.mapInPandas(batches, schema=AUDIO_FRAMES_SCHEMA)
+    return map_rows(with_payload.select("doc_id", "payload"), energies, AUDIO_FRAMES_SCHEMA)
 
 
 #: long-format thumbnail cells: one row per (doc, out-row, out-col)
 THUMB_SCHEMA = "doc_id BIGINT, r INT, c INT, red INT, green INT, blue INT"
+
+
+def _cells(doc_id, img, offset: int = 0) -> list[tuple]:
+    """One :data:`THUMB_SCHEMA` row per cell of the (h, w, 3) integer image
+    ``img``; cell (r, c) is reported at (r + offset, c + offset)."""
+    return [
+        (
+            doc_id,
+            r + offset,
+            c + offset,
+            int(img[r, c, 0]),
+            int(img[r, c, 1]),
+            int(img[r, c, 2]),
+        )
+        for r in range(img.shape[0])
+        for c in range(img.shape[1])
+    ]
 
 
 def image_resize_thumbs(
@@ -338,35 +285,15 @@ def image_resize_thumbs(
     the closed-form pixel formula — the oracle for the registered query
     recomputes the thumbnails without touching bytes.  At corpus scale
     this is the standard decode->resize Arrow stage: one narrow
-    mapInPandas pass, out_h*out_w rows per image regardless of source
+    map_rows pass, out_h*out_w rows per image regardless of source
     resolution."""
-    import numpy as np
-
     from findb_spark.functions.media_codec import decode_ppm, resize_nearest
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = decode_ppm(bytes(payload))
-                th = resize_nearest(px, out_w, out_h).astype(np.int64)
-                for r in range(out_h):
-                    for c in range(out_w):
-                        rows.append(
-                            (
-                                doc_id,
-                                r,
-                                c,
-                                int(th[r, c, 0]),
-                                int(th[r, c, 1]),
-                                int(th[r, c, 2]),
-                            )
-                        )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "r", "c", "red", "green", "blue"]
-            )
+    def thumbs(doc_id, payload):
+        px = decode_ppm(bytes(payload))
+        return _cells(doc_id, resize_nearest(px, out_w, out_h).astype(np.int64))
 
-    return with_payload.mapInPandas(batches, schema=THUMB_SCHEMA)
+    return map_rows(with_payload.select("doc_id", "payload"), thumbs, THUMB_SCHEMA)
 
 
 def image_boxblur_cells(with_payload: DataFrame) -> DataFrame:
@@ -377,49 +304,27 @@ def image_boxblur_cells(with_payload: DataFrame) -> DataFrame:
 
     This is the convolution stage of an image feature pipeline with the
     library dependency removed: separable two-pass numpy sums inside one
-    Arrow mapInPandas batch, all-integer so every output cell is exactly
+    Arrow map_rows batch, all-integer so every output cell is exactly
     the closed-form pixel formula's neighborhood mean — the registered
     oracle recomputes it without touching bytes. At corpus scale the
     kernel is embarrassingly parallel per image; batch shape and schema
     are identical to the resize stage so the two compose."""
-    import numpy as np
-
     from findb_spark.functions.media_codec import decode_ppm
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = decode_ppm(bytes(payload)).astype(np.int64)
-                s = px[:-2, :, :] + px[1:-1, :, :] + px[2:, :, :]
-                s = s[:, :-2, :] + s[:, 1:-1, :] + s[:, 2:, :]
-                blur = s // 9
-                for r in range(blur.shape[0]):
-                    for c in range(blur.shape[1]):
-                        rows.append(
-                            (
-                                doc_id,
-                                r + 1,
-                                c + 1,
-                                int(blur[r, c, 0]),
-                                int(blur[r, c, 1]),
-                                int(blur[r, c, 2]),
-                            )
-                        )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "r", "c", "red", "green", "blue"]
-            )
+    def blurred(doc_id, payload):
+        px = decode_ppm(bytes(payload)).astype(np.int64)
+        s = px[:-2, :, :] + px[1:-1, :, :] + px[2:, :, :]
+        s = s[:, :-2, :] + s[:, 1:-1, :] + s[:, 2:, :]
+        return _cells(doc_id, s // 9, offset=1)
 
-    return with_payload.mapInPandas(
-        batches, schema="doc_id BIGINT, r INT, c INT, red INT, green INT, blue INT"
-    )
+    return map_rows(with_payload.select("doc_id", "payload"), blurred, THUMB_SCHEMA)
 
 
 # --- REAL compressed / companded codecs: PNG images, G.711 mu-law audio ----
 #
 # These close the "compressed-format decode" gap the PPM/WAV codecs leave
 # open: PNG is a real chunked+CRC'd+DEFLATE format (stdlib zlib), mu-law a
-# real ITU-T telephony codec. Same Arrow mapInPandas plumbing as above.
+# real ITU-T telephony codec. Same map_rows plumbing as above.
 
 PNG_DECODED_SCHEMA = (
     "doc_id BIGINT, width INT, height INT, sum_pixels BIGINT, sum_sq BIGINT"
@@ -432,20 +337,7 @@ def attach_png_payload(docs: DataFrame) -> DataFrame:
     content a closed-form function of doc_id (media_codec.png_pixels)."""
     from findb_spark.functions.media_codec import encode_png, png_pixels
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [
-                        encode_png(png_pixels(int(d))) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="doc_id BIGINT, payload BINARY"
-    )
+    return _attach_encoded(docs, lambda d: encode_png(png_pixels(int(d))))
 
 
 def decode_png_metadata(with_payload: DataFrame) -> DataFrame:
@@ -454,28 +346,11 @@ def decode_png_metadata(with_payload: DataFrame) -> DataFrame:
     integer pixel sum and sum of squares (no float drift)."""
     from findb_spark.functions.media_codec import decode_png
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def metadata(doc_id, payload):
+        px = decode_png(bytes(payload)).astype(np.int64)
+        return [(doc_id, px.shape[1], px.shape[0], int(px.sum()), int((px * px).sum()))]
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = decode_png(bytes(payload)).astype(np.int64)
-                rows.append(
-                    (
-                        doc_id,
-                        px.shape[1],
-                        px.shape[0],
-                        int(px.sum()),
-                        int((px * px).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "sum_pixels", "sum_sq"],
-            )
-
-    return with_payload.mapInPandas(batches, schema=PNG_DECODED_SCHEMA)
+    return map_rows(with_payload.select("doc_id", "payload"), metadata, PNG_DECODED_SCHEMA)
 
 
 MULAW_FEATURES_SCHEMA = (
@@ -488,20 +363,7 @@ def attach_mulaw_payload(docs: DataFrame) -> DataFrame:
     synthetic PCM clip (media_codec.audio_samples)."""
     from findb_spark.functions.media_codec import audio_samples, encode_mulaw
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [
-                        encode_mulaw(audio_samples(int(d))) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="doc_id BIGINT, payload BINARY"
-    )
+    return _attach_encoded(docs, lambda d: encode_mulaw(audio_samples(int(d))))
 
 
 def mulaw_roundtrip_features(with_payload: DataFrame) -> DataFrame:
@@ -511,23 +373,12 @@ def mulaw_roundtrip_features(with_payload: DataFrame) -> DataFrame:
     against the original PCM (the codec-quality signal, all int64)."""
     from findb_spark.functions.media_codec import audio_samples, decode_mulaw
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def features(doc_id, payload):
+        y = decode_mulaw(bytes(payload)).astype(np.int64)
+        x = audio_samples(int(doc_id)).astype(np.int64)
+        return [(doc_id, len(y), int(y.sum()), int(np.abs(y - x).sum()))]
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                y = decode_mulaw(bytes(payload)).astype(np.int64)
-                x = audio_samples(int(doc_id)).astype(np.int64)
-                rows.append(
-                    (doc_id, len(y), int(y.sum()), int(np.abs(y - x).sum()))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "sum_decoded", "sum_abs_err"],
-            )
-
-    return with_payload.mapInPandas(batches, schema=MULAW_FEATURES_SCHEMA)
+    return map_rows(with_payload.select("doc_id", "payload"), features, MULAW_FEATURES_SCHEMA)
 
 
 JPEG_FEATURES_SCHEMA = (
@@ -542,20 +393,7 @@ def attach_jpeg_payload(docs: DataFrame) -> DataFrame:
     (jpeg_codec.jpeg_pixels)."""
     from findb_spark.functions.jpeg_codec import encode_jpeg, jpeg_pixels
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [
-                        encode_jpeg(jpeg_pixels(int(d))) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="doc_id BIGINT, payload BINARY"
-    )
+    return _attach_encoded(docs, lambda d: encode_jpeg(jpeg_pixels(int(d))))
 
 
 def jpeg_roundtrip_features(with_payload: DataFrame) -> DataFrame:
@@ -564,26 +402,11 @@ def jpeg_roundtrip_features(with_payload: DataFrame) -> DataFrame:
     sum plus total absolute reconstruction error vs the source pixels."""
     from findb_spark.functions.jpeg_codec import decode_jpeg, jpeg_pixels
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def features(doc_id, payload):
+        dec = decode_jpeg(bytes(payload)).astype(np.int64)
+        src = jpeg_pixels(int(doc_id)).astype(np.int64)
+        return [
+            (doc_id, dec.shape[1], dec.shape[0], int(dec.sum()), int(np.abs(dec - src).sum()))
+        ]
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                dec = decode_jpeg(bytes(payload)).astype(np.int64)
-                src = jpeg_pixels(int(doc_id)).astype(np.int64)
-                rows.append(
-                    (
-                        doc_id,
-                        dec.shape[1],
-                        dec.shape[0],
-                        int(dec.sum()),
-                        int(np.abs(dec - src).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "sum_decoded", "sum_abs_err"],
-            )
-
-    return with_payload.mapInPandas(batches, schema=JPEG_FEATURES_SCHEMA)
+    return map_rows(with_payload.select("doc_id", "payload"), features, JPEG_FEATURES_SCHEMA)

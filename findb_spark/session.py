@@ -17,6 +17,8 @@ from __future__ import annotations
 
 import os
 import threading
+from collections.abc import Callable, Iterable
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -95,20 +97,26 @@ def files_fingerprint(path: str) -> tuple:
     table, sorted by file name.
 
     ``path`` is a single parquet file (driver testdata) or a directory of
-    part files (engine writers); files whose name starts with ``_`` or
-    ``.`` (``_SUCCESS``, checksums) are not data and are skipped.  Any
-    rewrite — Spark's new part-file names, or an in-place overwrite's new
-    mtime and size — changes the fingerprint, so it is the content half
-    of every :class:`Memo` key.  Driver-side stat calls only, no Spark
-    job."""
+    part files (engine writers).  Names Spark's file listing hides are
+    skipped, files and directories alike: those starting with ``.``, and
+    those starting with ``_`` unless they hold ``=`` (a partition
+    directory).  So ``_SUCCESS``, checksums, a version log's ``_log/``, an
+    in-flight writer's ``_temporary/`` and a sink's ``_spark_metadata/``
+    never change the fingerprint.  Any rewrite of the data — Spark's new
+    part-file names, or an in-place overwrite's new mtime and size — does,
+    so it is the content half of every :class:`Memo` key.  Driver-side
+    stat calls only, no Spark job."""
+
+    def hidden(name: str) -> bool:
+        return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
     p = os.path.realpath(path)
     if os.path.isdir(p):
-        files = sorted(
-            os.path.join(r, f)
-            for r, _, fs in os.walk(p)
-            for f in fs
-            if not f.startswith((".", "_"))
-        )
+        files = []
+        for r, ds, fs in os.walk(p):
+            ds[:] = [d for d in ds if not hidden(d)]
+            files.extend(os.path.join(r, f) for f in fs if not hidden(f))
+        files.sort()
     else:
         files = [p]
     stats = [(f, os.stat(f)) for f in files]
@@ -249,6 +257,40 @@ def local_relation_df(spark: SparkSession, rows, schema):
                 "float64 or NULL"
             )
     return spark.createDataFrame(pd.DataFrame(data, columns=names), schema=schema)
+
+
+def map_rows(
+    df: DataFrame, rows_of: Callable[..., Iterable[tuple]], schema: str
+) -> DataFrame:
+    """The Arrow row kernel: a ``mapInPandas`` stage that calls
+    ``rows_of(*row)`` on each row of ``df`` (Python values, in ``df``'s
+    column order) and emits the tuples that call returns as rows of the
+    DDL ``schema``: one tuple for a decode, several for a row-expanding
+    stage, none to drop the row.  Stages whose work is numpy over a whole
+    batch (``ops/vector.py``) keep their own ``mapInPandas``.
+
+    Batches stream through the Python worker, so executor memory is
+    bounded by the Arrow batch size, not by the partition."""
+    import pandas as pd
+
+    from pyspark.sql import types as T
+
+    names = T.StructType.fromDDL(schema).fieldNames()
+
+    def batches(it):
+        for pdf in it:
+            rows = pdf.itertuples(index=False, name=None)
+            yield pd.DataFrame([out for row in rows for out in rows_of(*row)], columns=names)
+
+    return df.mapInPandas(batches, schema)
+
+
+def local_path(uri: str) -> str | None:
+    """The local path a Spark file URI names, or None when its scheme is
+    not ``file``.  ``inputFiles()`` percent-encodes its URIs (a space is
+    ``%20``), so the path is decoded, not just stripped of ``file:``."""
+    u = urlparse(uri)
+    return unquote(u.path) if u.scheme == "file" else None
 
 
 #: Inferred schema per table content.  ``spark.read.parquet`` without a

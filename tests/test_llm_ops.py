@@ -603,6 +603,41 @@ def test_local_relation_df_empty_runs_no_job(spark, count_jobs):
     assert count_jobs(df.collect) == ([], 0)
 
 
+def test_map_rows_emits_zero_one_or_many_rows_per_input(spark):
+    """``map_rows`` calls the row function with Python values in the
+    input's column order and emits every tuple it returns: none drops
+    the row, one is a decode, three expand it.  A ``binary`` column
+    crosses both ways, and an empty input gives an empty relation of the
+    declared schema."""
+    from pyspark.sql.types import StructType
+
+    from findb_spark.session import map_rows
+
+    schema = "k BIGINT, i INT, blob BINARY"
+
+    def rows_of(k, n, blob):
+        assert isinstance(k, int) and isinstance(n, int) and isinstance(blob, bytes)
+        return [(k, i, blob + bytes([i])) for i in range(n)]
+
+    df = spark.createDataFrame(
+        [(1, 0, b"a"), (2, 1, b"bb"), (3, 3, b"\x00\xff")], "k BIGINT, n INT, blob BINARY"
+    )
+    out = map_rows(df, rows_of, schema)
+    assert out.schema == StructType.fromDDL(schema)
+    assert sorted(map(tuple, out.collect())) == [
+        (2, 0, bytearray(b"bb\x00")),
+        (3, 0, bytearray(b"\x00\xff\x00")),
+        (3, 1, bytearray(b"\x00\xff\x01")),
+        (3, 2, bytearray(b"\x00\xff\x02")),
+    ]
+    # every row dropped, and no input rows at all
+    dropped = map_rows(df, lambda *_: [], schema)
+    empty = map_rows(df.where(F.lit(False)), rows_of, schema)
+    for d in (dropped, empty):
+        assert d.schema == StructType.fromDDL(schema)
+        assert d.collect() == []
+
+
 def test_pq_luts_driver_matches_column_form(spark, sf_dir):
     """The ADC-table kernel (_luts_driver — what pq_adc_topk and
     ivf_pq_topk ship as a literal broadcast relation) must be

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from urllib.parse import urlparse
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -123,3 +124,28 @@ def test_read_prices_reopen_runs_no_job(spark, tmp_path, count_jobs):
     assert "date_month" in second.columns
     assert second.schema == first.schema
     assert sorted(second.collect()) == sorted(spark.read.parquet(path).select(*second.columns).collect())
+
+
+def _files(root, rels) -> None:
+    for rel in rels:
+        (root / rel).parent.mkdir(parents=True, exist_ok=True)
+        pq.write_table(pa.table({"a": [1]}), str(root / rel))
+
+
+def test_fingerprint_lists_only_the_files_spark_reads(spark, tmp_path):
+    """``files_fingerprint`` lists the files Spark's listing keeps and no
+    others: hidden directories (a writer's ``_temporary/``, a version
+    log's ``_log/``, ``.staging/``) are pruned like hidden files, while a
+    partition directory (``_`` with ``=``) is kept.  Otherwise an
+    in-flight writer changes the memo key of content Spark never reads."""
+    from findb_spark.session import files_fingerprint
+
+    flat, parted = tmp_path / "flat", tmp_path / "parted"
+    _files(flat, ["part-0.parquet", "_SUCCESS", "_log/1.json",
+                  "_temporary/0/part-9.parquet", ".staging/part-8.parquet"])
+    _files(parted, ["_k=1/part-1.parquet", "_temporary/0/_k=2/part-2.parquet"])
+    for root, kept in ((flat, "part-0.parquet"), (parted, "_k=1/part-1.parquet")):
+        listed = [f for f, _, _ in files_fingerprint(str(root))]
+        assert listed == [os.path.realpath(root / kept)]
+        uris = spark.read.parquet(str(root)).inputFiles()
+        assert [os.path.realpath(urlparse(u).path) for u in uris] == listed

@@ -12,6 +12,8 @@ the multi-dim extension of the reference's clustering contract
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -172,3 +174,41 @@ def test_pruned_read_base_path_keeps_partition_columns(spark, tmp_path):
     )
     assert "date_month" in out.columns
     assert out.count() == golden_prices(spark).where("date <= 20200331").count()
+
+
+def test_manifest_works_under_a_path_that_needs_escaping(spark, sf_dir, tmp_path):
+    """``inputFiles()`` percent-encodes its URIs (a space is ``%20``).  The
+    manifest decodes them the way the driver as-of scan does, so every
+    manifest entry point works on a table under such a directory."""
+    from findb_spark.manifest import build_bloom_manifest, update_manifest
+
+    cols = ["asset_id", "date"]
+    path = str(tmp_path / "dir with space" / "t")
+    prices = prices_from_lineitem(spark, sf_dir)
+    prices.where(F.col("date") < 19970101).repartition(2).write.parquet(path)
+    man = build_manifest(spark, path, cols).cache()
+    assert man.count() == 2
+    assert all(os.path.isfile(r.file) for r in man.collect())
+    prices.where(F.col("date") >= 19970101).repartition(2).write.mode("append").parquet(path)
+    man = update_manifest(spark, path, man, cols)
+    assert man.count() == 4
+    got = pruned_read(spark, man, {"date": (19960101, 19971231)})
+    want = spark.read.parquet(path).where(F.col("date").between(19960101, 19971231))
+    assert sorted(got.collect()) == sorted(want.collect()) and want.count() > 0
+    assert build_bloom_manifest(spark, path, "asset_id").count() == 4
+
+
+def test_manifest_build_runs_no_job_once_the_schema_is_known(spark, layouts, count_jobs):
+    """The manifest lists files through ``read_parquet``: once its schema
+    memo holds the table, building (not running) a manifest runs no
+    Spark job.  ``spark.read.parquet(path).inputFiles()`` inferred the
+    schema with a job on every listing."""
+    from findb_spark.manifest import build_bloom_manifest
+    from findb_spark.session import read_parquet
+
+    zpath = layouts[0]
+    read_parquet(spark, zpath)
+    _, jobs = count_jobs(lambda: build_manifest(spark, zpath, ["asset_id", "date"]))
+    assert jobs == 0
+    _, jobs = count_jobs(lambda: build_bloom_manifest(spark, zpath, "asset_id"))
+    assert jobs == 0
