@@ -38,6 +38,8 @@ def snapshot_diff(
     smaller than either snapshot, so filtering before any downstream
     shuffle is the point of the operator.
     """
+    if not keys:
+        raise ValueError("snapshot_diff needs at least one key: keys is empty")
     # presence flags come from sentinel columns on each join side, not
     # value nullability: a present row with all-null compared values is
     # still present.

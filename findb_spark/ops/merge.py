@@ -62,6 +62,8 @@ def merge_into(
     out into one row per source match — deduplicate the source first
     (e.g. latest-per-key) if that is not intended.
     """
+    if not on:
+        raise ValueError("merge_into needs at least one merge key: on is empty")
     out_cols = target.columns
     missing = [c for c in out_cols if c not in source.columns]
     if insert and missing:

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from findb_spark.ops.finance import daily_series
 from findb_spark.prices import PRICES_ORACLE_CTE, prices_from_lineitem
 from findb_spark.queries.asof_queries import ASOF_2000
 from findb_spark.queries.parity import fxp_sum, fxp_sum_sql
@@ -560,17 +561,9 @@ GROUP BY change_type, bucket
     ),
 )
 def asof_bitemporal_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from findb_spark.asof import _latest_revision
-
     prices = prices_from_lineitem(spark, sf_dir)
-
-    def snap(asof: int) -> DataFrame:
-        return _latest_revision(
-            ["asset_id", "date"], prices.where(F.col("ts") <= asof)
-        ).select("asset_id", "date", "value")
-
-    s0 = snap(_TS0)
-    s1 = snap(ASOF_2000)
+    s0 = daily_series(prices, _TS0)
+    s1 = daily_series(prices, ASOF_2000)
     d = s0.alias("s0").join(
         s1.alias("s1"),
         (F.col("s0.asset_id") == F.col("s1.asset_id"))
@@ -731,23 +724,24 @@ FROM j
     category="asof",
     description=(
         "Nearest-direction as-of join (merge_asof direction='nearest', "
-        "backward on exact ties): ONE union+window pass — last(ignorenulls) "
-        "over the preceding frame gives the backward match, "
-        "first(ignorenulls) over the following frame the forward match, "
-        "the pick is pure projection; one shuffle, no self-join; "
-        "completes the as-of family"
+        "backward on exact ties): asof_join's union+running-scan core run "
+        "in both time orders — last(ignorenulls) over a running frame "
+        "gives the backward match ascending and the forward match "
+        "descending, the pick is pure projection; one shuffle, no "
+        "self-join, no following frame"
     ),
 )
 def q_asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from findb_spark.asof import asof_join_nearest
+    from findb_spark.asof import asof_join
 
     prices = prices_from_lineitem(spark, sf_dir)
     rdedup = prices.groupBy("asset_id", "ts").agg(F.max("value").alias("value"))
     probes = rdedup.select(
         "asset_id", F.col("ts").alias("probe_ts"), (F.col("ts") + 1800).alias("qts")
     )
-    return asof_join_nearest(
-        probes, rdedup, on="asset_id", left_time="qts", right_time="ts"
+    return asof_join(
+        probes, rdedup, on="asset_id", left_time="qts", right_time="ts",
+        direction="nearest",
     )
 
 

@@ -168,6 +168,36 @@ def test_asof_join_forward_matches_pandas(spark, rows, probes):
     assert got == want
 
 
+def nearest_model(rows, probes, tol=None):
+    """``{(asset_id, qts): (matched_ts, matched_value, matched_direction)}``
+    of a nearest as-of join, built from two merge_asof passes with the
+    engine's tie rule spelled out (backward wins exact-distance ties) —
+    independent of pandas' own nearest tie convention.  A match farther
+    than ``tol`` from the probe time is discarded."""
+    rdf = pd.DataFrame(rows, columns=["asset_id", "ts", "value"]).sort_values("ts")
+    ldf = pd.DataFrame(probes, columns=["asset_id", "qts"]).sort_values("qts")
+    back = pd.merge_asof(
+        ldf, rdf, left_on="qts", right_on="ts", by="asset_id", direction="backward"
+    )
+    fwd = pd.merge_asof(
+        ldf, rdf, left_on="qts", right_on="ts", by="asset_id", direction="forward"
+    )
+    want = {}
+    for b, f in zip(back.itertuples(), fwd.itertuples()):
+        key = (int(b.asset_id), int(b.qts))
+        bt = None if pd.isna(b.ts) else int(b.ts)
+        ft = None if pd.isna(f.ts) else int(f.ts)
+        if bt is None and ft is None:
+            want[key] = (None, None, None)
+        elif bt is not None and (ft is None or (b.qts - bt) <= (ft - b.qts)):
+            want[key] = (bt, float(b.value), "backward")
+        else:
+            want[key] = (ft, float(f.value), "forward")
+        if tol is not None and want[key][0] is not None and abs(b.qts - want[key][0]) > tol:
+            want[key] = (None, None, None)
+    return want
+
+
 @pytest.mark.slow
 @settings(
     max_examples=10,
@@ -178,7 +208,9 @@ def test_asof_join_forward_matches_pandas(spark, rows, probes):
 @given(rows=RIGHT_ROWS, probes=PROBES, tol=st.integers(0, 10))
 def test_asof_join_tolerance_matches_pandas(spark, rows, probes, tol):
     """tolerance=t must equal pandas merge_asof(tolerance=t): matches
-    farther than t from the probe time are discarded (nulls)."""
+    farther than t from the probe time are discarded (nulls).  The
+    nearest direction is checked against the two-pass model with the
+    same discard rule."""
     from findb_spark.asof import asof_join
 
     right = spark.createDataFrame(
@@ -204,6 +236,11 @@ def test_asof_join_tolerance_matches_pandas(spark, rows, probes, tol):
         for r in m.itertuples()
     }
     assert got == want
+    got = {
+        (r.asset_id, r.qts): (r.matched_ts, r.matched_value, r.matched_direction)
+        for r in asof_join(left, right, direction="nearest", tolerance=tol).collect()
+    }
+    assert got == nearest_model(rows, probes, tol)
 
 
 def test_asof_join_null_values_not_torn(spark):
@@ -305,7 +342,7 @@ def test_asof_join_nearest_matches_pandas(spark, rows, probes):
     from two merge_asof passes with the engine's tie rule spelled out
     (backward wins exact-distance ties) — independent of pandas' own
     nearest tie convention."""
-    from findb_spark.asof import asof_join_nearest
+    from findb_spark.asof import asof_join
 
     right = spark.createDataFrame(
         [(k, t, float(v)) for k, t, v in rows],
@@ -314,29 +351,9 @@ def test_asof_join_nearest_matches_pandas(spark, rows, probes):
     left = spark.createDataFrame(probes, schema="asset_id BIGINT, qts BIGINT")
     got = {
         (r.asset_id, r.qts): (r.matched_ts, r.matched_value, r.matched_direction)
-        for r in asof_join_nearest(left, right).collect()
+        for r in asof_join(left, right, direction="nearest").collect()
     }
-
-    rdf = pd.DataFrame(rows, columns=["asset_id", "ts", "value"]).sort_values("ts")
-    ldf = pd.DataFrame(probes, columns=["asset_id", "qts"]).sort_values("qts")
-    back = pd.merge_asof(
-        ldf, rdf, left_on="qts", right_on="ts", by="asset_id", direction="backward"
-    )
-    fwd = pd.merge_asof(
-        ldf, rdf, left_on="qts", right_on="ts", by="asset_id", direction="forward"
-    )
-    want = {}
-    for b, f in zip(back.itertuples(), fwd.itertuples()):
-        key = (int(b.asset_id), int(b.qts))
-        bt = None if pd.isna(b.ts) else int(b.ts)
-        ft = None if pd.isna(f.ts) else int(f.ts)
-        if bt is None and ft is None:
-            want[key] = (None, None, None)
-        elif bt is not None and (ft is None or (b.qts - bt) <= (ft - b.qts)):
-            want[key] = (bt, float(b.value), "backward")
-        else:
-            want[key] = (ft, float(f.value), "forward")
-    assert got == want
+    assert got == nearest_model(rows, probes)
 
 
 def test_asof_join_nearest_duplicate_and_null_probes(spark):
@@ -347,7 +364,7 @@ def test_asof_join_nearest_duplicate_and_null_probes(spark):
     one-pass union+window formulation carries every left column through
     the window, so there is no rejoin to get wrong; this test pins the
     behavior regardless of implementation."""
-    from findb_spark.asof import asof_join_nearest
+    from findb_spark.asof import asof_join
 
     right = spark.createDataFrame(
         [(1, 10, 1.0), (1, 20, 2.0)],
@@ -357,7 +374,7 @@ def test_asof_join_nearest_duplicate_and_null_probes(spark):
         [(1, 12, "x"), (1, 12, "x"), (1, 19, None)],
         schema="asset_id BIGINT, qts BIGINT, tag STRING",
     )
-    out = asof_join_nearest(left, right).collect()
+    out = asof_join(left, right, direction="nearest").collect()
     assert len(out) == 3
     dups = [r for r in out if r.qts == 12]
     assert len(dups) == 2
@@ -379,7 +396,7 @@ def test_asof_join_nearest_duplicate_right_rows_tie_to_max_both_sides(spark):
     (last() over an ascending sort).  Before round 7 the forward frame
     ordered _vs ascending, so first() silently picked the MIN — a
     semantics drift between 'nearest' and direction='forward'."""
-    from findb_spark.asof import asof_join_nearest
+    from findb_spark.asof import asof_join
 
     right = spark.createDataFrame(
         [(1, 10, 1.0), (1, 10, 5.0), (1, 30, 2.0), (1, 30, 7.0)],
@@ -390,7 +407,7 @@ def test_asof_join_nearest_duplicate_right_rows_tie_to_max_both_sides(spark):
     )
     got = {
         r.qts: (r.matched_ts, r.matched_value, r.matched_direction)
-        for r in asof_join_nearest(left, right).collect()
+        for r in asof_join(left, right, direction="nearest").collect()
     }
     # backward match at ts=10: max struct -> value 5.0
     assert got[12] == (10, 5.0, "backward")

@@ -7,6 +7,7 @@ null merge keys, and insert=False."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from findb_spark.ops.merge import merge_into
@@ -172,3 +173,28 @@ def test_merge_delete_only_with_keys_only_source(spark):
         for r in merge_into(t, s, on=["k"], delete=F.lit(True), insert=False).collect()
     }
     assert out == {1: "a", 3: "c"}
+
+
+def _merge_no_keys(t, s):
+    return merge_into(t, s, on=[])
+
+
+def _diff_no_keys(t, s):
+    from findb_spark.ops.diff import snapshot_diff
+
+    return snapshot_diff(t, s, keys=[], compare=["v"])
+
+
+@pytest.mark.parametrize(
+    "op, names",
+    [(_merge_no_keys, "on"), (_diff_no_keys, "keys")],
+    ids=["merge_into", "snapshot_diff"],
+)
+def test_empty_key_list_is_rejected(spark, op, names):
+    """An empty key list must raise, naming it: a join on no key is a
+    cartesian product (merge_into returned every target row once per source
+    row) or a bare IndexError from PySpark (snapshot_diff)."""
+    t = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k BIGINT, v STRING")
+    s = spark.createDataFrame([(1, "A"), (4, "d")], "k BIGINT, v STRING")
+    with pytest.raises(ValueError, match=f"{names} is empty"):
+        op(t, s)

@@ -571,3 +571,24 @@ def test_never_broadcast_merge_pins_hold(spark, name):
     # without it Catalyst broadcasts (exactly the mid-scale hazard)
     phys = qe.executedPlan().toString()
     assert phys.count("SortMergeJoin") >= 1, name
+
+
+@_pytest.mark.parametrize(
+    "name, exchanges, windows",
+    [
+        ("asof_join_nearest", 3, 2),
+        ("asof_join_forward", 3, 1),
+        ("asof_join_tolerance", 3, 1),
+    ],
+)
+def test_asof_joins_are_running_scans(spark, name, exchanges, windows):
+    """Every as-of join direction is a running scan over the one key
+    shuffle: no frame runs from the current row to UNBOUNDED FOLLOWING,
+    which Spark re-evaluates per row (quadratic within a key), and nearest
+    adds a second window over the same exchange, never a second shuffle."""
+    import re
+
+    p = _plan(spark, name)
+    assert "specifiedwindowframe(RowFrame, currentrow$(), unboundedfollowing$())" not in p
+    assert len(re.findall(r"^\(\d+\) Exchange", p, flags=re.M)) == exchanges
+    assert len(re.findall(r"^\(\d+\) Window", p, flags=re.M)) == windows
