@@ -365,7 +365,9 @@ def _tag_union(
     """The input of every as-of join window: right rows (``_is_q`` 0) and
     left probe rows (``_is_q`` 1) unioned on ``on`` and one time column
     ``_t``.  Right rows carry their values in the struct ``_vs``; left rows
-    carry their payload columns as ``_l_<c>``.
+    carry their payload columns as ``_l_<c>``.  Right rows with a NULL
+    ``right_time`` are dropped: an unknown time is no position, so such a
+    row never matches (pandas ``merge_asof`` rejects NULL keys).
 
     ALL requested right columns travel in ONE struct: a single
     last(ignorenulls) then selects one whole right row. Independent
@@ -377,7 +379,7 @@ def _tag_union(
     l_cols = [c for c in left.columns if c != on]
     r_types = dict(right.dtypes)
     vs_type = "struct<" + ",".join(f"{c}:{r_types[c]}" for c in value_cols) + ">"
-    tagged_r = right.select(
+    tagged_r = right.where(F.col(right_time).isNotNull()).select(
         F.col(on),
         F.col(right_time).alias("_t"),
         F.lit(0).alias("_is_q"),
@@ -453,12 +455,19 @@ def asof_join(
     matched columns null), in every direction.  Applied as a pure
     post-projection — the plan (one shuffle, running scans) is unchanged,
     so staleness filtering is free at any scale.  Nearest and tolerance
-    need ``right_time`` in ``value_cols``: the matched time must be known.
+    need ``right_time`` in ``value_cols``: the matched time must be known,
+    and a negative tolerance raises ``ValueError``, as in pandas.
+
+    NULL times are no positions: a right row with a NULL ``right_time``
+    never matches, and a left row with a NULL ``left_time`` gets all-NULL
+    ``matched_*`` columns in every direction.
     """
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError("direction must be 'backward', 'forward' or 'nearest'")
     if (direction == "nearest" or tolerance is not None) and right_time not in value_cols:
         raise ValueError("nearest and tolerance require right_time in value_cols")
+    if tolerance is not None and tolerance < 0:
+        raise ValueError(f"tolerance must be >= 0, got {tolerance}")
     l_cols = [c for c in left.columns if c != on]
     unioned = _tag_union(left, right, on, left_time, right_time, value_cols)
     scans = {"backward": F.col("_t"), "forward": F.col("_t").desc()}
@@ -487,9 +496,12 @@ def asof_join(
     else:
         match = F.col(f"_{direction}")
         matched = {c: match[c] for c in value_cols}
+    # a NULL-time probe still sees right rows in the forward scan, where
+    # NULLs sort last
+    unmatched = lt.isNull()
     if tolerance is not None:
-        stale = F.abs(lt - match[right_time]) > tolerance
-        matched = {c: F.when(stale, F.lit(None)).otherwise(m) for c, m in matched.items()}
+        unmatched = unmatched | (F.abs(lt - match[right_time]) > tolerance)
+    matched = {c: F.when(unmatched, F.lit(None)).otherwise(m) for c, m in matched.items()}
     return probes.select(
         on,
         *l_cols,

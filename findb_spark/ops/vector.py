@@ -1,25 +1,36 @@
 """Vector-similarity operators over ``embeddings`` (64-d float arrays):
-brute-force cosine top-k (the exactness baseline) and LSH-bucketed ANN
-(the scale path). BASELINE.json LLM-pipeline mandate.
+exact cosine top-k (the exactness baseline), ANN searches (LSH buckets,
+multiprobe, IVF, PQ) and the IVF/PQ index builders they probe.
+BASELINE.json LLM-pipeline mandate.
 
 Numeric determinism: dot products and norms are fixed-point integer sums
 (per-element ``floor(x*y*1e12 + 0.5)`` — identical IEEE-754 ops on any
 engine, then exact integer accumulation), so cosine values are
 bit-identical between Spark and the DuckDB oracle regardless of
-partitioning. Column expressions are the specification; the numpy
+partitioning. The column expressions :func:`fxp_dot_expr`,
+:func:`norm_expr` and :func:`cosine_expr` are the specification (their
+DuckDB twins are :func:`fxp_dot_sql` and :func:`cosine_sql`); the numpy
 kernels (near-dup tiles, the PQ codebook, encode and ADC tables) run the
 same ops through :func:`_fxp_norm` and :func:`_fxp_l2`, pinned bit-equal
 by tests.
 
-Scale:
-- brute-force top-k against a bounded query set is a broadcast
-  nested-loop: the embedding table streams once, queries live in memory —
-  the right plan up to ~10^3 queries x any corpus size.
-- `lsh_buckets` (random-hyperplane signs) turns ANN into an equi-join on
-  bucket id: corpus bucketed once (one shuffle), each query probes one
-  bucket. Plane matrix is hash-derived (deterministic, no RNG), so bucket
-  assignment is reproducible everywhere. An IVF variant (k-means
-  centroids) would slot into the same probe-join shape.
+Every exact-cosine search is one scorer plus its own candidate join.
+:func:`_cosine_topk` computes each side's norm once per row, scores one
+fixed-point dot per candidate pair and keeps the top ``k`` per query by
+``(cos_sim desc, vec_id)`` as ``rnk``; the searches differ only in the
+``pair(corpus, queries)`` join that generates candidates:
+
+- :func:`cosine_topk` — every corpus row (a broadcast nested-loop join:
+  the corpus streams once, queries live in memory — the right plan up to
+  ~10^3 queries x any corpus size);
+- :func:`ann_lsh_topk` — the query's random-hyperplane bucket
+  (:func:`lsh_buckets`; hash-derived planes, no RNG), plus every
+  hamming-1 bucket with ``multiprobe``: an equi-join on the bucket id;
+- :func:`ivf_topk` — the query's ``nprobe`` best IVF clusters;
+- :func:`pq_search` — the PQ ADC shortlist (:func:`_adc_topk`, the
+  integer-lookup twin of this scorer);
+- the ``vec_truncated_topk`` (16-dim prefix) and ``vec_knn_graph``
+  (corpus against itself within LSH buckets) specs.
 """
 
 from __future__ import annotations
@@ -39,38 +50,8 @@ PROJ_SCALE = 10**9
 N_PLANES = 6
 
 
-def fxp_dot(a: Column, b: Column, dim: int = DIM) -> Column:
-    """Deterministic fixed-point dot product of two float arrays (scaled by
-    FXP_SCALE, exact integer sum).
-
-    Unrolled over the fixed dimension instead of zip_with/aggregate:
-    higher-order array functions are evaluated *interpreted* (off the
-    whole-stage-codegen path) and cost ~50x on all-pairs joins; a 64-term
-    element_at expression stays inside codegen. Integer addition is
-    associative, so the unrolled sum is bit-identical to the fold."""
-    terms = [
-        F.floor(
-            F.element_at(a, i).cast("double")
-            * F.element_at(b, i).cast("double")
-            * FXP_SCALE
-            + F.lit(0.5)
-        )
-        for i in range(1, dim + 1)
-    ]
-    # balanced addition tree (depth log2(dim), not dim): integer addition
-    # is associative so the value is bit-identical to the left-linear fold,
-    # but Catalyst analysis of the expression is ~2x faster at depth 7 vs
-    # depth 64 (driver-side cost that showed up as bench 'build' time)
-    while len(terms) > 1:
-        terms = [
-            terms[i] + terms[i + 1] if i + 1 < len(terms) else terms[i]
-            for i in range(0, len(terms), 2)
-        ]
-    return terms[0].cast("bigint")
-
-
 def fxp_dot_sql(a: str, b: str, dim: int = DIM) -> str:
-    """DuckDB twin of `fxp_dot`."""
+    """DuckDB twin of :func:`fxp_dot_expr`."""
     return (
         f"CAST(list_sum(list_transform(range(1, {dim + 1}), i -> "
         f"CAST(FLOOR(CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE) * {FXP_SCALE}.0 + 0.5)"
@@ -79,13 +60,18 @@ def fxp_dot_sql(a: str, b: str, dim: int = DIM) -> str:
 
 
 def fxp_dot_expr(a: str, b: str, dim: int = DIM) -> Column:
-    """:func:`fxp_dot` over plain column NAMES, built as one
-    server-side-parsed SQL string: the parser produces the identical
-    Floor/Multiply/Add expression tree (integer adds are associative, so
-    the inline sum is bit-equal to the balanced tree), but construction
-    is ONE py4j call instead of ~400 — the Column-DSL form costs ~0.7s
-    of driver round-trip chatter per use, which dominated plan-build
-    time for every vector query."""
+    """Deterministic fixed-point dot product of the first ``dim`` elements
+    of the float-array columns NAMED ``a`` and ``b`` (scaled by
+    FXP_SCALE, exact integer sum).
+
+    Unrolled over the fixed dimension instead of zip_with/aggregate:
+    higher-order array functions are evaluated *interpreted* (off the
+    whole-stage-codegen path) and cost ~50x on all-pairs joins; a 64-term
+    element_at expression stays inside codegen.  Built as one
+    server-side-parsed SQL string: construction is ONE py4j call, where
+    the same tree built through the Column DSL took ~400 (~0.7 s of
+    driver round trips per use).  Integer addition is associative, so
+    the sum is bit-identical to any fold order."""
     terms = [
         f"FLOOR((CAST(element_at({a}, {i}) AS DOUBLE) * "
         f"CAST(element_at({b}, {i}) AS DOUBLE)) * {FXP_SCALE} + 0.5D)"
@@ -95,9 +81,10 @@ def fxp_dot_expr(a: str, b: str, dim: int = DIM) -> Column:
 
 
 def norm_expr(v: str, dim: int = DIM) -> Column:
-    """:func:`norm` over a plain column NAME (see :func:`fxp_dot_expr`
-    for why the string form exists).  Same ops: sqrt of the exact
-    fixed-point self-dot over FXP_SCALE."""
+    """Fixed-point L2 norm of the column NAMED ``v``: sqrt of the exact
+    :func:`fxp_dot_expr` self-dot over FXP_SCALE (one py4j call).  The
+    same float ops as the norm terms inside :func:`cosine_expr`, so
+    precomputing it once per row (not per pair) is bit-identical."""
     terms = [
         f"FLOOR((CAST(element_at({v}, {i}) AS DOUBLE) * "
         f"CAST(element_at({v}, {i}) AS DOUBLE)) * {FXP_SCALE} + 0.5D)"
@@ -110,16 +97,11 @@ def norm_expr(v: str, dim: int = DIM) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    dot = fxp_dot(a, b).cast("double") / FXP_SCALE
-    na = fxp_dot(a, a).cast("double") / FXP_SCALE
-    nb = fxp_dot(b, b).cast("double") / FXP_SCALE
-    return dot / (F.sqrt(na) * F.sqrt(nb))
-
-
 def cosine_expr(a: str, b: str, dim: int = DIM) -> Column:
-    """:func:`cosine` over plain column NAMES (see :func:`fxp_dot_expr`):
-    the identical dot/(sqrt*sqrt) float-op tree, one py4j call."""
+    """Fixed-point cosine of the columns NAMED ``a`` and ``b``:
+    dot/(sqrt*sqrt) over :func:`fxp_dot_expr` terms, three dots per row.
+    Searches score through :func:`_cosine_topk` instead, which evaluates
+    the two norms once per row."""
     return (fxp_dot_expr(a, b, dim).cast("double") / FXP_SCALE) / (
         F.sqrt(fxp_dot_expr(a, a, dim).cast("double") / FXP_SCALE)
         * F.sqrt(fxp_dot_expr(b, b, dim).cast("double") / FXP_SCALE)
@@ -134,39 +116,53 @@ def cosine_sql(a: str, b: str, dim: int = DIM) -> str:
     )
 
 
-def norm(v: Column) -> Column:
-    """Fixed-point L2 norm — same float ops as the norm terms inside
-    :func:`cosine`, so precomputing it per row (not per pair) is
-    bit-identical and saves 128 of the 192 floor-terms per pair."""
-    return F.sqrt(fxp_dot(v, v).cast("double") / FXP_SCALE)
-
-
-def cosine_topk(
-    emb: DataFrame, query: DataFrame, k: int = 10, exclude_self: bool = True
+def _cosine_topk(
+    corpus: DataFrame, queries: DataFrame, k: int, pair, dim: int = DIM
 ) -> DataFrame:
-    """Exact top-k neighbors of each query vector (broadcast NL join +
-    per-query ranking window). ``query``: (query_id, qv array<float>).
+    """The exact-cosine scorer behind every vector search.  ``corpus``
+    carries (vec_id, embedding), ``queries`` (query_id, qv); each gets its
+    fixed-point norm (``_nrm``, ``_qnrm``) once per row over the first
+    ``dim`` elements.  ``pair(corpus, queries)`` returns the candidate
+    relation (one row per query x candidate); each candidate pays one
+    :func:`fxp_dot_expr`, and the top ``k`` per query by
+    ``(cos_sim desc, vec_id)`` survive.  Returns
+    (query_id, vec_id, cos_sim, rnk)."""
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    sim = (fxp_dot_expr("embedding", "qv", dim).cast("double") / FXP_SCALE) / (
+        F.col("_nrm") * F.col("_qnrm")
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "vec_id")
+    return (
+        pair(
+            corpus.withColumn("_nrm", norm_expr("embedding", dim)),
+            queries.withColumn("_qnrm", norm_expr("qv", dim)),
+        )
+        .select("query_id", "vec_id", sim.alias("cos_sim"))
+        .withColumn("rnk", F.row_number().over(w))
+        .where(F.col("rnk") <= k)
+    )
 
-    Norms are computed once per corpus row / query row before the join;
-    only the cross-pair dot product is evaluated per pair.
+
+def _cross_pairs(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Every corpus row against every query but itself (broadcast
+    queries): the candidate join of the exact searches."""
+    return corpus.crossJoin(F.broadcast(queries)).where(
+        F.col("vec_id") != F.col("query_id")
+    )
+
+
+def cosine_topk(emb: DataFrame, query: DataFrame, k: int = 10) -> DataFrame:
+    """Exact top-k neighbors of each query vector other than itself:
+    :func:`_cosine_topk` over every corpus row (broadcast NL join +
+    per-query ranking window).  ``query``: (query_id, qv array<float>).
+    Returns (query_id, vec_id, cos_sim, rnk).
 
     (Scan-parallelism widening of the corpus side was measured and
     REJECTED round 13: at bench scale it bought ~0.2 s of wall but cost
     ~0.6 CPU-s + GC churn in per-task fixed overhead — see
     OPTIMIZATION_r13.md "widening experiment".)"""
-    corpus = emb.withColumn("_nrm", norm_expr("embedding"))
-    q = query.withColumn("_qnrm", norm_expr("qv"))
-    j = corpus.crossJoin(F.broadcast(q))
-    if exclude_self:
-        j = j.where(F.col("vec_id") != F.col("query_id"))
-    sim = (fxp_dot_expr("embedding", "qv").cast("double") / FXP_SCALE) / (
-        F.col("_nrm") * F.col("_qnrm")
-    )
-    scored = j.select("query_id", "vec_id", sim.alias("cos_sim"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "vec_id")
-    return scored.select(
-        "query_id", "vec_id", "cos_sim", F.row_number().over(w).alias("rank")
-    ).where(F.col("rank") <= k)
+    return _cosine_topk(emb, query, k, _cross_pairs)
 
 
 def near_dup_pairs(
@@ -425,11 +421,11 @@ def kmeans_cluster_profile(emb: DataFrame, n_cent: int = IVF_K) -> DataFrame:
 def ivf_topk(
     emb: DataFrame, k: int = 5, n_cent: int = IVF_K, nprobe: int = 1
 ) -> DataFrame:
-    """IVF-style ANN top-k: probe the query's ``nprobe`` best coarse
-    clusters, exact cosine rerank inside them. Queries are the vectors with
-    vec_id < 3 (same convention as the other search specs). Complements
-    `ann_lsh_topk`: same probe-join shape, codebook partitioning instead of
-    hyperplane bucketing.
+    """IVF-style ANN top-k: :func:`_cosine_topk` over the query's
+    ``nprobe`` best coarse clusters.  Queries are the vectors with
+    vec_id < 3 (same convention as the other search specs).  Complements
+    `ann_lsh_topk`: the candidates are a codebook partition instead of a
+    hyperplane bucket, probed through the same broadcast equi-join.
 
     ``nprobe`` is the standard recall/cost dial: candidates grow linearly
     with probes while the probe list itself stays a broadcast (queries x
@@ -444,40 +440,34 @@ def ivf_topk(
     # probe list (two ivf_centroids calls would scan the corpus twice for
     # the same 64 rows)
     cents = ivf_centroids(emb, n_cent)
-    assigned = assign_to_centroids(emb, cents).withColumn(
-        "_nrm", norm_expr("embedding")
-    )
     q = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    ).withColumn("_qnrm", norm_expr("qv"))
+    )
     # per-query probe list: top-nprobe centroids by cosine (ties -> smaller
     # centroid id, matching ivf_assign's tiebreak so nprobe=1 == assignment)
     pw = Window.partitionBy("query_id").orderBy(F.desc("_ccos"), "cent_id")
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "qv",
-            "_qnrm",
-            "cent_id",
-            cosine_expr("qv", "cvec").alias("_ccos"),
+
+    def pair(assigned: DataFrame, queries: DataFrame) -> DataFrame:
+        probes = (
+            queries.crossJoin(F.broadcast(cents))
+            .select(
+                "query_id",
+                "qv",
+                "_qnrm",
+                "cent_id",
+                cosine_expr("qv", "cvec").alias("_ccos"),
+            )
+            .withColumn("_pr", F.row_number().over(pw))
+            .where(F.col("_pr") <= nprobe)
+            .select("query_id", "qv", "_qnrm", F.col("cent_id").alias("qcluster"))
         )
-        .withColumn("_pr", F.row_number().over(pw))
-        .where(F.col("_pr") <= nprobe)
-        .select("query_id", "qv", "_qnrm", F.col("cent_id").alias("qcluster"))
-    )
-    j = assigned.join(
-        F.broadcast(probes),
-        (F.col("cluster") == F.col("qcluster")) & (F.col("vec_id") != F.col("query_id")),
-    )
-    sim = (fxp_dot_expr("embedding", "qv").cast("double") / FXP_SCALE) / (
-        F.col("_nrm") * F.col("_qnrm")
-    )
-    scored = j.select("query_id", "vec_id", sim.alias("cos_sim"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "vec_id")
-    return scored.select(
-        "query_id", "vec_id", "cos_sim", F.row_number().over(w).alias("rank")
-    ).where(F.col("rank") <= k)
+        return assigned.join(
+            F.broadcast(probes),
+            (F.col("cluster") == F.col("qcluster"))
+            & (F.col("vec_id") != F.col("query_id")),
+        )
+
+    return _cosine_topk(assign_to_centroids(emb, cents), q, k, pair)
 
 
 def semantic_dedup_pairs(
@@ -562,44 +552,38 @@ def semantic_dedup_pairs(
 def ann_lsh_topk(
     emb: DataFrame, query: DataFrame, k: int = 5, multiprobe: bool = False
 ) -> DataFrame:
-    """Approximate top-k: probe the query's LSH bucket, rank by exact
-    cosine inside it. ``query``: (query_id, qv) — gets bucketed with the
-    same plane matrix.
+    """Approximate top-k: :func:`_cosine_topk` inside the query's LSH
+    bucket.  ``query``: (query_id, qv) — gets bucketed with the same plane
+    matrix.
 
     ``multiprobe`` additionally probes every bucket at hamming distance 1
     (one flipped hyperplane bit) — the standard recall fix for vectors
     landing near a plane boundary; candidate cost grows ~(n_planes+1)x the
     single-bucket density while the probe list stays broadcast."""
     planes = plane_matrix()
-    corpus = lsh_buckets(emb, planes).withColumn("_nrm", norm_expr("embedding"))
-    qb = (
-        lsh_buckets(query.select(F.col("query_id"), F.col("qv").alias("embedding")), planes)
-        .select("query_id", F.col("embedding").alias("qv"), F.col("bucket").alias("qbucket"))
-        .withColumn("_qnrm", norm_expr("qv"))
-    )
-    if multiprobe:
-        flips = F.array(
-            F.col("qbucket"),
-            *[
-                F.col("qbucket").bitwiseXOR(F.lit(1 << j)).cast("bigint")
-                for j in range(len(planes))
-            ],
+    qb = lsh_buckets(
+        query.select(F.col("query_id"), F.col("qv").alias("embedding")), planes
+    ).select("query_id", F.col("embedding").alias("qv"), F.col("bucket").alias("qbucket"))
+
+    def pair(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+        if multiprobe:
+            flips = F.array(
+                F.col("qbucket"),
+                *[
+                    F.col("qbucket").bitwiseXOR(F.lit(1 << j)).cast("bigint")
+                    for j in range(len(planes))
+                ],
+            )
+            queries = queries.select(
+                "query_id", "qv", "_qnrm", F.explode(flips).alias("qbucket")
+            )
+        return corpus.join(
+            F.broadcast(queries),
+            (F.col("bucket") == F.col("qbucket"))
+            & (F.col("vec_id") != F.col("query_id")),
         )
-        qb = qb.select(
-            "query_id", "qv", "_qnrm", F.explode(flips).alias("qbucket")
-        )
-    j = corpus.join(
-        F.broadcast(qb),
-        (F.col("bucket") == F.col("qbucket")) & (F.col("vec_id") != F.col("query_id")),
-    )
-    sim = (fxp_dot_expr("embedding", "qv").cast("double") / FXP_SCALE) / (
-        F.col("_nrm") * F.col("_qnrm")
-    )
-    scored = j.select("query_id", "vec_id", sim.alias("cos_sim"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "vec_id")
-    return scored.select(
-        "query_id", "vec_id", "cos_sim", F.row_number().over(w).alias("rank")
-    ).where(F.col("rank") <= k)
+
+    return _cosine_topk(lsh_buckets(emb, planes), qb, k, pair)
 
 
 # ---------------------------------------------------------------------------
@@ -650,7 +634,7 @@ def fxp_l2_sub(a: Column, sw: Column, sub: int) -> Column:
     ``sub`` of the full array ``a`` and the PQ_SUBDIM-dim codeword ``sw``:
     per element ``floor((ai-bi)^2 * FXP_SCALE + 0.5)`` (exact IEEE double
     ops on both engines), exact integer sum.  Unrolled like
-    :func:`fxp_dot` to stay inside whole-stage codegen.
+    :func:`fxp_dot_expr` to stay inside whole-stage codegen.
 
     This Column form is the executable SPECIFICATION of the PQ distance
     arithmetic: its numpy twin :func:`_fxp_l2`, which every PQ kernel
@@ -906,12 +890,6 @@ def _query_rows(emb: DataFrame) -> list:
     return emb.where(F.col("vec_id") < 3).select("vec_id", "embedding").collect()
 
 
-def _cross_pairs(codes: DataFrame, luts: DataFrame) -> DataFrame:
-    return codes.crossJoin(F.broadcast(luts)).where(
-        F.col("vec_id") != F.col("query_id")
-    )
-
-
 def pq_adc_topk(emb: DataFrame, codebook: np.ndarray, k: int = 5) -> DataFrame:
     """PQ-ADC approximate top-k for the standard query set (vec_id < 3)
     against the trained ``codebook`` (unit-vector L2 ranks identically to
@@ -937,13 +915,16 @@ def pq_search(
     emb: DataFrame, codebook: np.ndarray, k: int = 5, shortlist: int = 50
 ) -> DataFrame:
     """Production PQ search shape: ADC shortlist (integer lookups over the
-    compressed code table) -> exact cosine rerank of only the shortlist
-    against the original vectors -> top-k.  The expensive exact math runs
-    on ``shortlist`` candidates per query instead of the corpus — at 100
-    TB the corpus pass touches 8-byte codes only, and the rerank is a
-    (queries x shortlist)-row join back to the embedding table.  Recall =
-    P(true top-k inside the ADC shortlist); tests pin the trained-codebook
-    recall floor and the improvement over the untrained sample."""
+    compressed code table) -> :func:`_cosine_topk` rerank of only the
+    shortlist against the original vectors -> top-k.  The expensive exact
+    math runs on ``shortlist`` candidates per query instead of the corpus
+    — at 100 TB the corpus pass touches 8-byte codes only, and the rerank
+    is a (queries x shortlist)-row join back to the embedding table.
+    Recall = P(true top-k inside the ADC shortlist); tests pin the
+    trained-codebook recall floor and the improvement over the untrained
+    sample.  ``shortlist`` below ``k`` raises ``ValueError``."""
+    if shortlist < k:
+        raise ValueError(f"shortlist ({shortlist}) must be >= k ({k})")
     # Collect the bounded query set ONCE (3 rows by construction) and
     # share it between the ADC LUTs and the rerank's query side (round
     # 14, guide §1.2/§4): the rerank used to re-scan the embedding table
@@ -957,14 +938,12 @@ def pq_search(
     sl = _adc_topk(emb, codebook, q_rows, shortlist, _cross_pairs).select(
         "query_id", "vec_id"
     )
-    base = emb.select("vec_id", "embedding").withColumn(
-        "_nrm", norm_expr("embedding")
-    )
     q = local_relation_df(
         emb.sparkSession,
         [(r["vec_id"], r["embedding"]) for r in q_rows],
         "query_id bigint, qv array<float>",
-    ).withColumn("_qnrm", norm_expr("qv"))
+    )
+
     # broadcast the SHORTLIST, not the base table (round 13, guide §3.1):
     # sl is bounded at queries x shortlist rows by construction, while
     # base is the corpus — but sl's size estimate is garbage (it hangs
@@ -973,16 +952,12 @@ def pq_search(
     # would shuffle-join (or worse, broadcast the corpus) at scale.  The
     # hint makes the rerank probe a broadcast-hash join against the
     # embedding scan at every corpus size.
-    j = F.broadcast(sl).join(base, "vec_id").join(F.broadcast(q), "query_id")
-    sim = (fxp_dot_expr("embedding", "qv").cast("double") / FXP_SCALE) / (
-        F.col("_nrm") * F.col("_qnrm")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "vec_id")
-    return (
-        j.select("query_id", "vec_id", sim.alias("cos_sim"))
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-    )
+    def pair(base: DataFrame, queries: DataFrame) -> DataFrame:
+        return (
+            F.broadcast(sl).join(base, "vec_id").join(F.broadcast(queries), "query_id")
+        )
+
+    return _cosine_topk(emb.select("vec_id", "embedding"), q, k, pair)
 
 
 def ivf_pq_topk(emb: DataFrame, codebook: np.ndarray, k: int = 5) -> DataFrame:

@@ -2,9 +2,10 @@
 mandate, extending vector_queries.py): a bucketed kNN graph, MMR diversified
 reranking, an LSH recall curve, and embedding-norm profiling.
 
-All similarity math reuses the fixed-point cosine kernel
-(ops/vector.py fxp_dot_expr / cosine_sql) so every score is bit-identical
-cross-engine; MMR's lambda blend uses CAST(...AS DOUBLE) literals on both
+All similarity math reuses the fixed-point cosine kernel (ops/vector.py:
+the kNN graph ranks through the searches' one scorer ``_cosine_topk``,
+MMR through ``cosine_expr``; the oracles through ``cosine_sql``) so every
+score is bit-identical cross-engine; MMR's lambda blend uses CAST(...AS DOUBLE) literals on both
 engines (Spark ANSI would otherwise type bare decimals as DECIMAL).
 
 Scale notes: the kNN graph joins within LSH buckets (candidate cost
@@ -22,6 +23,7 @@ from findb_spark.functions.hashing import hash48_duck
 from findb_spark.ops.vector import (
     FXP_SCALE,
     IVF_K,
+    _cosine_topk,
     cosine_expr,
     cosine_sql,
     cosine_topk,
@@ -65,27 +67,24 @@ SELECT src, dst, cos_sim, rnk FROM r WHERE rnk <= 3
     ),
 )
 def vec_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = lsh_buckets(emb)
-    a = corpus.select(
-        F.col("vec_id").alias("src"),
-        F.col("embedding").alias("aemb"),
-        "bucket",
+    corpus = lsh_buckets(load_table(spark, sf_dir, "embeddings")).select(
+        "vec_id", "embedding", "bucket"
     )
-    b = corpus.select(
-        F.col("vec_id").alias("dst"),
-        F.col("embedding").alias("bemb"),
-        "bucket",
+    queries = corpus.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qv"),
+        F.col("bucket").alias("qbucket"),
     )
-    p = (
-        a.join(b, "bucket")
-        .where(F.col("src") != F.col("dst"))
-        .select("src", "dst", cosine_expr("aemb", "bemb").alias("cos_sim"))
-    )
-    w = Window.partitionBy("src").orderBy(F.desc("cos_sim"), "dst")
-    return (
-        p.select("src", "dst", "cos_sim", F.row_number().over(w).alias("rnk"))
-        .where(F.col("rnk") <= 3)
+
+    def pair(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+        return corpus.join(
+            queries,
+            (F.col("bucket") == F.col("qbucket"))
+            & (F.col("vec_id") != F.col("query_id")),
+        )
+
+    return _cosine_topk(corpus, queries, 3, pair).select(
+        F.col("query_id").alias("src"), F.col("vec_id").alias("dst"), "cos_sim", "rnk"
     )
 
 
@@ -334,13 +333,11 @@ def vec_lsh_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = _queryset(spark, sf_dir)
-    exact = cosine_topk(emb, q, k=5).select("query_id", "vec_id", F.col("rank").alias("rn"))
+    exact = cosine_topk(emb, q, k=5).select("query_id", "vec_id", "rnk")
     # exact (k x |queries| rows) feeds the query grid AND the hit join;
     # without truncation the full-corpus exact top-k runs twice
     exact = exact.localCheckpoint(eager=False)
-    approx = ann_lsh_topk(emb, q, k=5).select(
-        "query_id", "vec_id", F.col("rank").alias("rn")
-    )
+    approx = ann_lsh_topk(emb, q, k=5).select("query_id", "vec_id", "rnk")
     ks = spark.range(1).select(
         F.explode(F.array(F.lit(1), F.lit(3), F.lit(5))).alias("k")
     )
@@ -353,7 +350,7 @@ def vec_lsh_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("a.vec_id") == F.col("e.vec_id")),
         )
         .crossJoin(F.broadcast(ks))
-        .where("a.rn <= k AND e.rn <= k")
+        .where("a.rnk <= k AND e.rnk <= k")
         .groupBy(F.col("a.query_id").alias("query_id"), "k")
         .agg(F.count("*").alias("n_hit"))
     )

@@ -5,7 +5,7 @@ per-label norm stats."""
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from findb_spark.functions.hashing import hash48_duck
 from findb_spark.ops.vector import (
@@ -13,13 +13,14 @@ from findb_spark.ops.vector import (
     IVF_K,
     N_PLANES,
     PROJ_SCALE,
+    _cosine_topk,
+    _cross_pairs,
     ann_lsh_topk,
-    cosine,
     cosine_sql,
     cosine_topk,
-    fxp_dot,
     fxp_dot_sql,
     near_dup_pairs,
+    norm_expr,
     plane_matrix,
 )
 from findb_spark.registry import register
@@ -76,9 +77,7 @@ SELECT query_id, vec_id, cos_sim, rnk FROM r WHERE rnk <= 10
 )
 def vec_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return cosine_topk(emb, _queryset(spark, sf_dir), k=10).withColumnRenamed(
-        "rank", "rnk"
-    )
+    return cosine_topk(emb, _queryset(spark, sf_dir), k=10)
 
 
 @register(
@@ -142,9 +141,7 @@ SELECT query_id, vec_id, cos_sim, rnk FROM r WHERE rnk <= 5
 )
 def vec_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return ann_lsh_topk(emb, _queryset(spark, sf_dir), k=5).withColumnRenamed(
-        "rank", "rnk"
-    )
+    return ann_lsh_topk(emb, _queryset(spark, sf_dir), k=5)
 
 
 @register(
@@ -183,9 +180,7 @@ SELECT query_id, vec_id, cos_sim, rnk FROM r WHERE rnk <= 5
 def vec_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from findb_spark.ops.vector import ivf_topk
 
-    return ivf_topk(load_table(spark, sf_dir, "embeddings"), k=5).withColumnRenamed(
-        "rank", "rnk"
-    )
+    return ivf_topk(load_table(spark, sf_dir, "embeddings"), k=5)
 
 
 @register(
@@ -303,8 +298,7 @@ FROM n GROUP BY label
 )
 def vec_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    nrm = F.sqrt(fxp_dot(F.col("embedding"), F.col("embedding")).cast("double") / FXP_SCALE)
-    n = emb.select("label", nrm.alias("nrm"))
+    n = emb.select("label", norm_expr("embedding").alias("nrm"))
     return n.groupBy("label").agg(
         F.count("*").alias("n_vecs"),
         (
@@ -409,10 +403,7 @@ SELECT query_id, vec_id, cos_sim, rnk FROM r WHERE rnk <= 5
 )
 def vec_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return (
-        ann_lsh_topk(emb, _queryset(spark, sf_dir), k=5, multiprobe=True)
-        .withColumnRenamed("rank", "rnk")
-    )
+    return ann_lsh_topk(emb, _queryset(spark, sf_dir), k=5, multiprobe=True)
 
 
 _SEM_PAIRS_CTE = f"""
@@ -782,36 +773,12 @@ def vec_truncated_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     for full-precision final ordering (the same shortlist-rerank shape
     as pq_search).  fxp arithmetic restricted to the prefix keeps the
     result bit-identical cross-engine."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = _queryset(spark, sf_dir)
-    corpus = emb.withColumn(
-        "_nrm",
-        F.sqrt(
-            fxp_dot(F.col("embedding"), F.col("embedding"), dim=_TRUNC_DIM).cast(
-                "double"
-            )
-            / FXP_SCALE
-        ),
-    )
-    qn = q.withColumn(
-        "_qnrm",
-        F.sqrt(
-            fxp_dot(F.col("qv"), F.col("qv"), dim=_TRUNC_DIM).cast("double")
-            / FXP_SCALE
-        ),
-    )
-    j = corpus.crossJoin(F.broadcast(qn)).where(
-        F.col("vec_id") != F.col("query_id")
-    )
-    sim = (
-        fxp_dot(F.col("embedding"), F.col("qv"), dim=_TRUNC_DIM).cast("double")
-        / FXP_SCALE
-    ) / (F.col("_nrm") * F.col("_qnrm"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "vec_id")
-    return (
-        j.select("query_id", "vec_id", sim.alias("cos_sim"))
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 5)
+    return _cosine_topk(
+        load_table(spark, sf_dir, "embeddings"),
+        _queryset(spark, sf_dir),
+        5,
+        _cross_pairs,
+        dim=_TRUNC_DIM,
     )
 
 

@@ -260,6 +260,36 @@ def test_asof_join_null_values_not_torn(spark):
     assert (r2.matched_ts, r2.matched_value) == (200, None)
 
 
+
+def test_asof_join_null_times_never_match(spark):
+    """NULL times are no positions: a right row with a NULL time never
+    matches, not even as the backward match of a probe before the key's
+    first timed row, and a NULL-time probe gets all-NULL matched columns
+    in every direction."""
+    from findb_spark.asof import asof_join
+
+    right = spark.createDataFrame(
+        [(1, None, 9.0), (1, 10, 1.0), (1, 20, 2.0)],
+        "asset_id BIGINT, ts BIGINT, value DOUBLE",
+    )
+    left = spark.createDataFrame(
+        [(1, 5), (1, None), (1, 15)], "asset_id BIGINT, qts BIGINT"
+    )
+
+    def run(direction):
+        return {
+            r.qts: tuple(r[c] for c in r.__fields__ if c.startswith("matched_"))
+            for r in asof_join(left, right, direction=direction).collect()
+        }
+
+    assert run("backward") == {5: (None, None), None: (None, None), 15: (10, 1.0)}
+    assert run("forward") == {5: (10, 1.0), None: (None, None), 15: (20, 2.0)}
+    assert run("nearest") == {
+        5: (10, 1.0, "forward"),
+        None: (None, None, None),
+        15: (10, 1.0, "backward"),
+    }
+
 # --- sessionization property (the gap-boundary class, pinned broadly) ---
 
 EVENTS = st.lists(

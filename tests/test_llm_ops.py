@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from findb_spark.asof import asof_join
 from findb_spark.ops.dedup import (
     jaccard_pairs,
     minhash_lsh_pairs,
@@ -13,7 +14,13 @@ from findb_spark.ops.dedup import (
     simhash_pairs,
 )
 from findb_spark.ops.multimodal import attach_payload, decode_metadata
-from findb_spark.ops.vector import ann_lsh_topk, cosine_topk
+from findb_spark.ops.vector import (
+    ann_lsh_topk,
+    cosine_expr,
+    cosine_topk,
+    ivf_topk,
+    pq_search,
+)
 from findb_spark.session import load_table
 
 
@@ -66,9 +73,47 @@ def test_cosine_topk_self_is_nearest(spark, sf_dir):
     q = emb.where(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
-    # include self: rank 1 must be the query vector itself with cos ~ 1
-    top = cosine_topk(emb, q, k=3, exclude_self=False).orderBy("rank").collect()
-    assert top[0].vec_id == 0 and abs(top[0].cos_sim - 1.0) < 1e-9
+    # the fixed-point self-cosine is 1 up to rounding, so the query would
+    # be its own nearest neighbour: the search must leave it out
+    self_cos = q.select(cosine_expr("qv", "qv").alias("c")).first().c
+    assert abs(self_cos - 1.0) < 1e-9
+    top = cosine_topk(emb, q, k=3).orderBy("rnk").collect()
+    assert [r.rnk for r in top] == [1, 2, 3]
+    assert all(r.vec_id != 0 for r in top)
+
+
+_BAD_ARGUMENTS = {
+    "cosine_topk_k0": lambda emb, q: cosine_topk(emb, q, k=0),
+    "ann_lsh_topk_k0": lambda emb, q: ann_lsh_topk(emb, q, k=0),
+    "ann_lsh_multiprobe_k-1": lambda emb, q: ann_lsh_topk(
+        emb, q, k=-1, multiprobe=True
+    ),
+    "ivf_topk_k0": lambda emb, q: ivf_topk(emb, k=0),
+    # the check comes before the codebook is read
+    "pq_search_shortlist_below_k": lambda emb, q: pq_search(
+        emb, None, k=5, shortlist=4
+    ),
+    "asof_join_negative_tolerance": lambda emb, q: asof_join(
+        emb.sparkSession.createDataFrame([(1, 5)], "asset_id BIGINT, qts BIGINT"),
+        emb.sparkSession.createDataFrame(
+            [(1, 1, 1.0)], "asset_id BIGINT, ts BIGINT, value DOUBLE"
+        ),
+        tolerance=-1,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_BAD_ARGUMENTS))
+def test_bad_arguments_raise_value_error(spark, sf_dir, case):
+    """Arguments no search or join can answer (a top-k with k < 1, a PQ
+    shortlist shorter than k, a negative as-of tolerance) raise
+    ``ValueError`` when the call is made, before any Spark job runs."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = emb.where(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    )
+    with pytest.raises(ValueError):
+        _BAD_ARGUMENTS[case](emb, q)
 
 
 def test_ann_lsh_subset_of_bucket(spark, sf_dir):
@@ -77,7 +122,7 @@ def test_ann_lsh_subset_of_bucket(spark, sf_dir):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
     rows = ann_lsh_topk(emb, q, k=5).collect()
-    assert all(r.rank <= 5 for r in rows)
+    assert all(r.rnk <= 5 for r in rows)
     assert all(r.vec_id != r.query_id for r in rows)
 
 
@@ -205,7 +250,6 @@ def test_kmeans_lloyd_improves_mean_cosine(spark, sf_dir):
 
     from findb_spark.ops.vector import (
         assign_to_centroids,
-        cosine,
         ivf_centroids,
         kmeans_refine_centroids,
     )
@@ -218,7 +262,7 @@ def test_kmeans_lloyd_improves_mean_cosine(spark, sf_dir):
     try:
         def mean_cos(asg, cents):
             j = asg.join(cents, asg.cluster == cents.cent_id).select(
-                cosine(F.col("embedding"), F.col("cvec")).alias("c")
+                cosine_expr("embedding", "cvec").alias("c")
             )
             return j.agg(F.avg("c")).collect()[0][0]
 
@@ -512,46 +556,48 @@ def test_pq_encode_kernels_bit_equal(spark, sf_dir):
     assert spec == arrow_fused
 
 
-def test_string_built_fxp_kernels_bit_equal_to_dsl(spark, sf_dir):
-    """fxp_dot_expr / norm_expr / cosine_expr (server-side-parsed string
-    forms, one py4j call) must be BIT-EQUAL to the Column-DSL spec forms
-    on real embeddings — same Floor/Multiply/Add tree, only the
-    construction path differs."""
-    from pyspark.sql import functions as F
+def test_cosine_topk_bit_equal_to_numpy_model(spark, sf_dir):
+    """The one exact-cosine scorer (every vector search ranks through it)
+    against a numpy fixed-point model: the dot is the int64 sum of
+    ``floor(x*y*1e12 + 0.5)``, the norms come from ``_fxp_norm``, and
+    ``cos_sim`` is ``(dot/1e12) / (n_corpus * n_query)``.  Scores must be
+    bit-equal and ranks identical, over all 64 dims and over the 16-dim
+    prefix ``vec_truncated_topk`` scores."""
+    import numpy as np
 
     from findb_spark.ops.vector import (
         FXP_SCALE,
-        cosine,
-        cosine_expr,
-        fxp_dot,
-        fxp_dot_expr,
-        norm,
-        norm_expr,
+        _cosine_topk,
+        _cross_pairs,
+        _fxp_norm,
     )
-    from findb_spark.session import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
-    j = emb.crossJoin(F.broadcast(q))
-    rows = j.select(
-        "vec_id",
-        "qid",
-        (fxp_dot(F.col("embedding"), F.col("qv")) - fxp_dot_expr("embedding", "qv")).alias("d_dot"),
-        (norm(F.col("embedding")) - norm_expr("embedding")).alias("d_norm"),
-        (
-            cosine(F.col("embedding"), F.col("qv"))
-            - cosine_expr("embedding", "qv")
-        ).alias("d_cos"),
-    ).agg(
-        F.max(F.abs("d_dot")).alias("dot"),
-        F.max(F.abs("d_norm")).alias("nrm"),
-        F.max(F.abs("d_cos")).alias("cos"),
-    ).first()
-    assert rows.dot == 0
-    assert rows.nrm == 0.0
-    assert rows.cos == 0.0
+    rows = emb.select("vec_id", "embedding").collect()
+    ids = np.array([r.vec_id for r in rows], dtype=np.int64)
+    mat = np.array([r.embedding for r in rows], dtype=np.float64)
+    scale, k = float(FXP_SCALE), 7
+    for dim in (64, 16):
+        m = mat[:, :dim]
+        nrm = _fxp_norm(m)
+        want = set()
+        for qid in (0, 1, 2):
+            (i,) = np.nonzero(ids == qid)[0]
+            dots = np.floor(m * m[i] * scale + 0.5).astype(np.int64).sum(axis=1)
+            cos = (dots.astype(np.float64) / scale) / (nrm * nrm[i])
+            cand = sorted(
+                (-c, int(v)) for c, v in zip(cos.tolist(), ids.tolist()) if v != qid
+            )[:k]
+            want |= {(qid, v, -c, r) for r, (c, v) in enumerate(cand, start=1)}
+        got = {
+            tuple(r)
+            for r in _cosine_topk(emb, q, k, _cross_pairs, dim=dim).collect()
+        }
+        assert len(want) == 3 * k
+        assert got == want, dim
 
 
 def test_local_relation_df(spark):

@@ -296,6 +296,18 @@ def test_pq_corpus_pass_has_no_interpreted_normalization(spark):
     assert "embedding" in m.group(1) and "nv" not in m.group(1), m.group(1)
 
 
+
+def test_knn_graph_norms_below_bucket_join(spark):
+    """The kNN graph scores each candidate pair with one fixed-point dot:
+    both norms are computed once per row below the bucket self-join, so
+    no SQRT is evaluated above it."""
+    df = all_specs()["vec_knn_graph"].fn(spark, SF_DIR)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    above, join, below = plan.partition("Join Inner")
+    assert join, plan
+    assert "SQRT" not in above
+    assert below.count("SQRT") == 2
+
 def test_market_basket_no_self_join(spark):
     """Pair generation is basket-local (explode of in-array combinations)
     — no order-key self-join, no cartesian; the only non-equi join is
